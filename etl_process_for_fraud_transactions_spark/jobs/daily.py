@@ -162,9 +162,6 @@ class DailyFraudJob:
             return PartitionedScd2(self.wh, f"dim_{name}", keys, attrs).history()
         return self.wh.read(f"dim_{name}_hist")
 
-    # backwards-compatible private alias (pre-round-5 callers)
-    _read_dim_history = read_dim_history
-
     # -- per-date pipeline --------------------------------------------------
 
     def run_batch(self, date: str) -> DataFrame:
@@ -228,7 +225,7 @@ class DailyFraudJob:
 
         # five-rule report over the full fact vs current dims (lazy
         # current∪closed union in partitioned mode — never materialized)
-        dims = {name: self._read_dim_history(name) for name in DIMENSIONS}
+        dims = {name: self.read_dim_history(name) for name in DIMENSIONS}
         fact = self.wh.read("fact_transactions")
         report = assemble_report(
             fact.drop("batch_dt"),

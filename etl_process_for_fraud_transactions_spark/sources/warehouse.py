@@ -15,12 +15,14 @@ engine dependency-free.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def atomic_overwrite(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -31,15 +33,73 @@ def atomic_overwrite(df: DataFrame, path: str, partition_by: list[str] | None = 
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(tmp)
+    _swap_in(tmp, path)
+    # drop Spark's cached file listing for the swapped path, or the next
+    # read resolves the pre-swap part files and fails
+    df.sparkSession.catalog.refreshByPath(path)
+
+
+def _swap_in(tmp: str, path: str) -> None:
+    """Replace the directory `path` with `tmp` by two renames, deleting
+    the old table last: a crash leaves `path` either the old or the new
+    table, plus `__tmp_`/`__old_` leftovers that `gc_orphans` sweeps."""
     old = f"{path}__old_{uuid.uuid4().hex[:8]}"
     if os.path.exists(path):
         os.rename(path, old)
     os.rename(tmp, path)
     if os.path.exists(old):
         shutil.rmtree(old)
-    # drop Spark's cached file listing for the swapped path, or the next
-    # read resolves the pre-swap part files and fails
-    df.sparkSession.catalog.refreshByPath(path)
+
+
+#: footer key under which Spark's parquet writer stores the row schema
+#: (as StructType JSON) of every file it writes
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule: names starting with '.', and names
+    starting with '_' that are not partition directories, are not
+    table data (`_SUCCESS`, `_temporary`, `.crc` files)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def footer_schema_path(path: str) -> StructType | None:
+    """The data schema Spark's writer stored in the footer of the first
+    data file under `path` (directories walked in sorted order), or
+    None when there is no data file or its footer carries no Spark
+    schema (pyarrow-written tables). Spark's own inference reads the
+    same key from one footer too (schema merging is off), but through
+    a one-task job; this reads it on the driver. Partition columns are
+    not in the footer — the reader still discovers them from the
+    directory names."""
+    import pyarrow.parquet as pq
+
+    for root_, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
+        for f in sorted(files):
+            if _hidden(f):
+                continue
+            try:
+                meta = pq.read_metadata(os.path.join(root_, f)).metadata or {}
+                raw = meta.get(SPARK_SCHEMA_KEY)
+                return StructType.fromJson(json.loads(raw)) if raw else None
+            except (OSError, ValueError, KeyError, TypeError):
+                return None
+    return None
+
+
+def _write_empty_table(path: str, schema: StructType) -> None:
+    """A zero-row part file carrying `schema` in Spark's footer key:
+    the file Spark's writer leaves for an empty unpartitioned write,
+    so the table exists and reads with its schema."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema).with_metadata({SPARK_SCHEMA_KEY: schema.json()})
+    os.makedirs(path)
+    pq.write_table(
+        arrow.empty_table(), os.path.join(path, "part-00000.parquet"), compression="snappy"
+    )
 
 
 #: DDL scalar type -> pyarrow type, for the driver-side metadata I/O
@@ -132,12 +192,7 @@ def write_rows_atomic(spark: SparkSession, path: str, rows, ddl: str) -> None:
         os.path.join(tmp, "part-00000.parquet"),
         compression="snappy",
     )
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    _swap_in(tmp, path)
     spark.catalog.refreshByPath(path)
 
 
@@ -186,12 +241,7 @@ def copy_table_atomic(spark: SparkSession, src: str, dst: str) -> None:
     rename crash semantics as `atomic_overwrite`."""
     tmp = f"{dst}__tmp_{uuid.uuid4().hex[:8]}"
     shutil.copytree(src, tmp)
-    old = f"{dst}__old_{uuid.uuid4().hex[:8]}"
-    if os.path.exists(dst):
-        os.rename(dst, old)
-    os.rename(tmp, dst)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    _swap_in(tmp, dst)
     spark.catalog.refreshByPath(dst)
 
 
@@ -399,7 +449,12 @@ class Warehouse:
         )
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        """A Spark-written table reads with the schema from one data
+        file's footer (`footer_schema_path`), so the read starts no
+        schema-inference job; other tables fall back to inference."""
+        schema = footer_schema_path(self.path(table))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.path(table))
 
     def overwrite(self, table: str, df: DataFrame) -> None:
         atomic_overwrite(df, self.path(table))
@@ -450,6 +505,47 @@ class Warehouse:
 
     def append(self, table: str, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.path(table))
+
+    def append_then_overwrite(
+        self, df: DataFrame, split_col: str, append_table: str, overwrite_table: str
+    ) -> None:
+        """Write `df` in ONE Spark job and split it by table: rows whose
+        boolean `split_col` is true are appended to `append_table`, the
+        rows where it is false atomically replace `overwrite_table`.
+        `split_col` itself is not stored.
+
+        The job writes a staging directory partitioned by `split_col`;
+        the driver then commits it in a fixed order. First the append
+        part files move into `append_table` (a plain append: readers
+        see the old files plus the new ones). Then the overwrite part
+        is swapped in as `overwrite_table` with `atomic_overwrite`'s
+        rename semantics. No appended rows leave `append_table` as it
+        was (absent if it never existed); no kept rows still leave a
+        readable empty `overwrite_table`. A crash between the two steps
+        leaves the append done and the old `overwrite_table` in place,
+        the window of an `append` followed by an `overwrite`."""
+        target = self.path(overwrite_table)
+        stage = f"{target}__tmp_{uuid.uuid4().hex[:8]}"
+        df.write.partitionBy(split_col).parquet(stage)
+        if os.path.exists(os.path.join(stage, f"{split_col}=__HIVE_DEFAULT_PARTITION__")):
+            shutil.rmtree(stage)
+            raise ValueError(f"append_then_overwrite: null {split_col!r} rows belong to neither table")
+        appended = os.path.join(stage, f"{split_col}=true")
+        if os.path.isdir(appended):
+            dst = self.path(append_table)
+            if not os.path.exists(dst):
+                os.rename(appended, dst)
+            else:
+                # part-file names carry the writing job's id: no clash
+                for f in os.listdir(appended):
+                    os.rename(os.path.join(appended, f), os.path.join(dst, f))
+            self.spark.catalog.refreshByPath(dst)
+        kept = os.path.join(stage, f"{split_col}=false")
+        if not os.path.isdir(kept):
+            _write_empty_table(kept, StructType([f for f in df.schema if f.name != split_col]))
+        _swap_in(kept, target)
+        shutil.rmtree(stage)
+        self.spark.catalog.refreshByPath(target)
 
     def append_partitioned(
         self, table: str, df: DataFrame, partition_col: str | list[str]

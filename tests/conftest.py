@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -37,6 +39,24 @@ def register_views(con, sf_dir: str) -> None:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Collects into the yielded list the ids of the Spark jobs started
+    inside the block (a job group unique to the block; the listener bus
+    is drained before the ids are read)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "counted block")
+    jobs: list[int] = []
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def compare_with_oracle(spark, con, fn, sql, sf_dir, float_rel=1e-12):
@@ -99,6 +119,9 @@ CORE_TESTS = {
     "test_filter_new_matches_union_near_dedup",
     # sources: the atomic-overwrite contract everything sits on
     "test_atomic_overwrite_same_path",
+    # the daily job's SCD2 apply: semantics against a model, job count
+    "test_partitioned_matches_driver_model",
+    "test_warm_apply_batch_runs_at_most_two_jobs",
 }
 
 

@@ -94,7 +94,7 @@ def test_two_batch_pipeline(spark, fixture_dirs):
     )
     job.run()
 
-    hist = job._read_dim_history("clients")
+    hist = job.read_dim_history("clients")
     # no attribute changed between batches -> still exactly one version per client
     assert hist.count() == 3
 
@@ -134,7 +134,7 @@ def test_partitioned_scd2_mode_equivalent_report(spark, fixture_dirs):
     shutil.move(tmp, os.path.join(source_dir, "clients.parquet"))
     write_batch("02012024", ["tx8;2024-01-02 09:00:00;card1;PAY;5,00;SUCCESS;t1"], [])
     job.run()
-    hist = job._read_dim_history("clients")
+    hist = job.read_dim_history("clients")
     c1 = sorted((r.phone, str(r.effective_to), r.deleted_flg) for r in hist.filter("client_id='c1'").collect())
     assert c1 == [("+71", "2024-01-02", True), ("+71P", "3000-01-01", False)]
 
@@ -181,7 +181,7 @@ def test_scd2_change_across_batches(spark, fixture_dirs, tmp_path):
     write_batch("02012024", ["tx9;2024-01-02 09:00:00;card1;PAY;5,00;SUCCESS;t1"], [])
     job.run()
 
-    hist = job._read_dim_history("clients")
+    hist = job.read_dim_history("clients")
     c1 = sorted(
         (r.phone, str(r.effective_from), str(r.effective_to), r.deleted_flg)
         for r in hist.filter("client_id = 'c1'").collect()
@@ -190,3 +190,24 @@ def test_scd2_change_across_batches(spark, fixture_dirs, tmp_path):
         ("+71", "2024-01-01", "2024-01-02", True),
         ("+71NEW", "2024-01-02", "3000-01-01", False),
     ]
+
+
+def test_warehouse_read_schema_matches_inference(spark, fixture_dirs):
+    """After a 2-date run, every table the job wrote reads through
+    `Warehouse.read` (footer schema, no inference job) with the schema
+    Spark's own inference gives, partition columns included."""
+    from pyspark.sql import types as T
+
+    input_dir, source_dir, wh_dir, write_batch = fixture_dirs
+    job = DailyFraudJob(spark, input_dir, source_dir, wh_dir)
+    job.run()
+    write_batch("02012024", ["tx4;2024-01-02 09:00:00;card3;PAY;10,00;SUCCESS;t1"], [])
+    job.run()
+    tables = sorted(os.listdir(wh_dir))
+    assert {"fact_transactions", "rep_fraud", "fact_passport_blacklist"} <= set(tables)
+    assert {f"dim_{d}_current" for d in ("clients", "accounts", "cards", "terminals")} <= set(tables)
+    for t in tables:
+        got = job.wh.read(t).schema
+        assert got == spark.read.parquet(os.path.join(wh_dir, t)).schema, t
+    assert job.wh.read("fact_transactions").schema["batch_dt"].dataType == T.DateType()
+    assert job.wh.read("rep_fraud").schema["report_dt"].dataType == T.DateType()

@@ -153,12 +153,12 @@ def test_five_batch_daily_job_modes_equivalent(spark, tmp_path):
         part.run_batch(date)
 
     assert _hist_rows(snap.wh.read("dim_clients_hist")) == _hist_rows(
-        part._read_dim_history("clients")
+        part.read_dim_history("clients")
     )
     # every dim agrees, not just clients
     for name in DIMENSIONS:
         s_rows = sorted(map(tuple, snap.wh.read(f"dim_{name}_hist").collect()))
-        p_rows = sorted(map(tuple, part._read_dim_history(name).collect()))
+        p_rows = sorted(map(tuple, part.read_dim_history(name).collect()))
         assert s_rows == p_rows, name
 
     rep_s = sorted(map(tuple, snap.wh.read("rep_fraud").collect()))
@@ -206,3 +206,119 @@ def test_tuple_repeat_divergence_documented(spark, tmp_path):
         ("c1", "C", "2024-01-04", "3000-01-01", False),
     ]
     assert part_hist != snap_hist
+
+
+# --- PartitionedScd2 against a driver-side model ---------------------------
+
+OPEN = dt.date(3000, 1, 1)
+MODEL_DDL = "k long, a string, b long"
+
+
+def _model_batch(cur, closed, staged, day):
+    """One apply_batch on plain lists of (k, a, b, effective_from,
+    effective_to, deleted_flg) rows. `cur` is None before the first
+    batch (bootstrap). Keys match null-unsafely (a null key never
+    matches), an attribute counts as changed only when both sides are
+    non-null and differ (the `<>` OR-chain), and a staged row yields
+    one fresh version per matching current row it differs from (the
+    left join's multiplicity) or one when nothing matches."""
+    if cur is None:
+        return [(*s, day, OPEN, False) for s in staged], closed
+
+    def match(d, s):
+        return d[0] is not None and d[0] == s[0]
+
+    def differs(d, s):
+        return any(x is not None and y is not None and x != y for x, y in zip(d[1:3], s[1:3]))
+
+    changed = {d[0] for d in cur for s in staged if match(d, s) and differs(d, s)}
+    closing = [(*d[:4], day, True) for d in cur if d[0] in changed]
+    fresh = []
+    for s in staged:
+        hits = [d for d in cur if match(d, s)]
+        fresh += [(*s, day, OPEN, False)] * (sum(differs(d, s) for d in hits) if hits else 1)
+    return [d for d in cur if d[0] not in changed] + fresh, closed + closing
+
+
+def _random_history(rng, n_batches):
+    """Small key and value domains (nulls included) so that matches,
+    null comparisons, duplicate keys, vanishing and reappearing keys
+    and repeated (no-op) batches all occur."""
+    batches = []
+    for _ in range(n_batches):
+        if batches and rng.random() < 0.25:
+            batches.append(list(batches[-1]))  # no-op batch
+            continue
+        batches.append([
+            (rng.choice([None, 0, 1, 2, 3]), rng.choice([None, "x", "y"]), rng.choice([None, 0, 1]))
+            for _ in range(rng.randint(0, 6))
+        ])
+    return batches
+
+
+#: a fixed history covering what the random ones may miss: an empty
+#: bootstrap and an empty batch on it (an empty current table), then
+#: null keys, null attributes, duplicate staged keys, a no-op batch
+#: (no closing rows), a new key staged twice (two current rows) that
+#: then changes against both, and keys that vanish and reappear changed
+FIXED_HISTORY = [
+    [],
+    [],
+    [(1, "x", 0), (2, "x", None), (None, "x", 0)],
+    [(1, "x", 0), (2, "x", None), (None, "x", 0)],
+    [(1, "y", 0), (1, "x", 0), (2, "x", 1), (2, None, None), (None, "y", 1)],
+    [(3, None, 0), (3, "y", 0)],
+    [(1, "x", 1), (2, "x", None), (3, "x", 1)],
+]
+
+
+def _counter(rows):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in rows)
+
+
+def test_partitioned_matches_driver_model(spark, tmp_path):
+    import random
+
+    rng = random.Random(20241017)
+    histories = [FIXED_HISTORY] + [_random_history(rng, 5) for _ in range(3)]
+    cols = ["k", "a", "b", "effective_from", "effective_to", "deleted_flg"]
+    empty_current = no_closing = 0
+    for i, batches in enumerate(histories):
+        part = PartitionedScd2(Warehouse(spark, str(tmp_path / f"h{i}")), "dim", ["k"], ["a", "b"])
+        cur, closed = None, []
+        for j, staged in enumerate(batches):
+            day = dt.date(2024, 1, 1) + dt.timedelta(days=j)
+            n_closed = len(closed)
+            bootstrap = cur is None
+            cur, closed = _model_batch(cur, closed, staged, day)
+            part.apply_batch(spark.createDataFrame(staged, MODEL_DDL), F.lit(day))
+            empty_current += not cur
+            no_closing += not bootstrap and len(closed) == n_closed
+            got_cur = part.current().select(*cols).collect()
+            got_hist = part.history().select(*cols).collect()
+            assert _counter(got_cur) == _counter(cur), (i, j)
+            assert _counter(got_hist) == _counter(cur + closed), (i, j)
+    # both empty-output commits were exercised
+    assert empty_current and no_closing
+
+
+def test_warm_apply_batch_runs_at_most_two_jobs(spark, tmp_path):
+    """A warm batch is one shuffle and one write: the current table's
+    schema comes from its footer and the plan has no broadcasts."""
+    from .conftest import spark_jobs
+
+    part = PartitionedScd2(Warehouse(spark, str(tmp_path)), "dim", ["k"], ["a", "b"])
+    history = [
+        [(1, "x", 0), (2, "x", 0)],
+        [(1, "y", 0), (2, "x", 0), (3, "z", 1)],
+        [(1, "z", 0), (3, "z", 1), (None, "x", 0)],
+    ]
+    for j, staged in enumerate(history):
+        stg = spark.createDataFrame(staged, MODEL_DDL)
+        with spark_jobs(spark) as jobs:
+            part.apply_batch(stg, F.lit(dt.date(2024, 1, 1) + dt.timedelta(days=j)))
+        if j:
+            assert 1 <= len(jobs) <= 2, (j, jobs)
+    assert part.history().count() == 6

@@ -279,3 +279,62 @@ def test_remove_table_and_table_bytes(spark, tmp_path):
     assert shutil_total == committed + 4096
     assert wh.remove_table("t") is True
     assert not os.path.exists(wh.path("t"))
+
+
+def test_read_takes_the_footer_schema_without_a_job(spark, tmp_path):
+    """`Warehouse.read` of a Spark-written table, flat or partitioned,
+    starts no Spark job and returns the schema inference would; a
+    pyarrow-written table (no Spark schema in its footer) still reads
+    correctly through inference."""
+    from .conftest import spark_jobs
+
+    wh = Warehouse(spark, str(tmp_path))
+    df = spark.range(10).select(
+        "id",
+        F.col("id").cast("string").alias("s"),
+        F.to_date(F.lit("2024-01-02")).alias("d"),
+        (F.col("id") % 2 == 0).alias("even"),
+    )
+    wh.overwrite("flat", df)
+    df.write.partitionBy("d").parquet(wh.path("parted"))
+    for t in ("flat", "parted"):
+        with spark_jobs(spark) as jobs:
+            got = wh.read(t)
+        assert jobs == [], t
+        assert got.schema == spark.read.parquet(wh.path(t)).schema, t
+    assert sorted(map(tuple, wh.read("parted").select(*df.columns).collect())) == sorted(
+        map(tuple, df.collect())
+    )
+    wh.overwrite_rows("ptr", [(3, "bigint", None)], PTR_DDL)
+    ptr = wh.read("ptr")
+    assert ptr.schema == spark.read.parquet(wh.path("ptr")).schema
+    assert [tuple(r) for r in ptr.collect()] == [(3, "bigint", None)]
+
+
+def test_append_then_overwrite_splits_in_one_job(spark, tmp_path):
+    """One Spark job writes both sides; true rows append, false rows
+    replace the target; an empty side leaves a readable empty target;
+    a null split value refuses before anything is committed."""
+    from .conftest import spark_jobs
+
+    wh = Warehouse(spark, str(tmp_path))
+    wh.overwrite("cur", spark.createDataFrame([(0, "old")], "id long, v string"))
+    rows = spark.createDataFrame(
+        [(1, "a", True), (2, "b", False), (3, "c", True)], "id long, v string, out boolean"
+    )
+    with spark_jobs(spark) as jobs:
+        wh.append_then_overwrite(rows, "out", "hist", "cur")
+    assert len(jobs) == 1
+    assert sorted(map(tuple, wh.read("hist").collect())) == [(1, "a"), (3, "c")]
+    assert [tuple(r) for r in wh.read("cur").collect()] == [(2, "b")]
+    wh.append_then_overwrite(rows.filter("out"), "out", "hist", "cur")
+    assert wh.read("hist").count() == 4
+    assert wh.read("cur").count() == 0
+    assert wh.read("cur").columns == ["id", "v"]
+    with pytest.raises(ValueError):
+        wh.append_then_overwrite(
+            spark.createDataFrame([(9, "z", None)], "id long, v string, out boolean"),
+            "out", "hist", "cur",
+        )
+    assert wh.read("hist").count() == 4
+    assert [d for d in os.listdir(str(tmp_path)) if "__tmp_" in d] == []

@@ -66,7 +66,8 @@ def main() -> None:
         )
         return base.select("k", F.concat(F.lit("p"), F.col("k"), F.lit("_"), ver).alias("phone"))
 
-    snap_times, part_times = [], []
+    sc = spark.sparkContext
+    snap_times, part_times, part_jobs = [], [], []
     for b in range(batches):
         # materialize staging OUTSIDE the timed section: the version
         # expression grows with batch number and would otherwise pollute
@@ -82,8 +83,12 @@ def main() -> None:
         snap_times.append(round(time.perf_counter() - t0, 2))
 
         t0 = time.perf_counter()
+        sc.setJobGroup(f"scd2-part-{b}", "partitioned apply")
         part.apply_batch(stg, batch_date)
         part_times.append(round(time.perf_counter() - t0, 2))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        part_jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"scd2-part-{b}")))
 
     n_hist = wh_snap.read("dim_hist").count()
     n_part = part.history().count()
@@ -94,6 +99,7 @@ def main() -> None:
         "final_history_rows": n_hist,
         "snapshot_per_batch_sec": snap_times,
         "partitioned_per_batch_sec": part_times,
+        "partitioned_jobs_per_batch": part_jobs,
         "snapshot_last3_avg": round(sum(snap_times[-3:]) / 3, 2),
         "partitioned_last3_avg": round(sum(part_times[-3:]) / 3, 2),
     }))
