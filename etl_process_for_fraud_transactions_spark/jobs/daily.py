@@ -242,20 +242,13 @@ class DailyFraudJob:
                 if self.incremental_report
                 else None
             ),
-            # production job: measure before hinting — an unattended
-            # daily run must degrade to a shuffle join on a
-            # pathological day, not abort on a forced broadcast (the
-            # ~2x single-shot cost of the gate's persist barriers is
-            # the right trade here, unlike the interactive/bench path
-            # which keeps the single-tree True default)
-            broadcast_rule_hits=None,
         )
         self.wh.append_partitioned("rep_fraud", report, "report_dt")
-        # the measured hint gate persisted the two rule-hit frames;
+        # a tripped celebrity-key gate persisted its hot-key frames;
         # release them now that the report is materialized — a
-        # multi-date run would otherwise accumulate one cached pair
-        # per batch until LRU pressure (re-collecting the returned
-        # report recomputes the rules, correctly, just uncached)
+        # multi-date run would otherwise accumulate them per batch
+        # until LRU pressure (re-collecting the returned report
+        # recomputes the rules, correctly, just uncached)
         for frame in getattr(report, "_rule_hit_frames", ()):
             frame.unpersist()
         return report

@@ -3,6 +3,13 @@
 Left-joins the fact to the dimension chain, the passport blacklist and
 the rule-4/rule-5 outputs, applies the prioritized CASE, filters to
 rows firing at least one rule, and stamps report_dt.
+
+One path: each rule has one implementation (the range-frame window
+forms in operators.rules), and the rule-hit join-backs carry no
+broadcast hint. The hit sets are a fraction of the fact and grow with
+it, so AQE picks the join strategy from runtime stats: broadcast while
+they are small, a shuffle join on a day whose hits outgrow the
+threshold, where a forced hint would abort instead.
 """
 
 from __future__ import annotations
@@ -20,9 +27,7 @@ from .rules import (
     EV_INVALID_CONTRACT,
     attach_terminal_city,
     resolve_transactions,
-    rule_brute_force_20min,
     rule_brute_force_20min_window,
-    rule_diff_city_1h,
     rule_diff_city_1h_window,
 )
 
@@ -36,37 +41,14 @@ def assemble_report(
     blacklist: DataFrame,
     report_dt: Column,
     report_trans: DataFrame | None = None,
-    cache_resolved: bool = False,
-    broadcast_rule_hits: bool | None = True,
-    broadcast_max_rows: int = 4_000_000,
-    diff_city_impl: str = "window",
-    brute_impl: str = "window",
     hot_key_max_rows: int | None = HOT_KEY_MAX_ROWS,
 ) -> DataFrame:
     """The full five-rule report (main.py:414-560) as one DataFrame.
 
-    `broadcast_rule_hits` — the hit sets are a FRACTION of the fact
-    (they grow with it), so the join-back hint has three modes:
-
-    - True (default): always hint. One plan, zero extra jobs, the
-      whole report optimizes as a single tree (rule subtrees share
-      the dim-chain exchanges with the final assembly — measured
-      ~2x faster single-shot than the gated mode, which must
-      materialize the rules behind persist barriers). Failure mode:
-      a pathological day whose hit sets exceed the broadcast limit /
-      driver memory fails outright rather than degrading.
-    - None: MEASURED hint (the cap_per_domain precedent) — persist +
-      count each rule's hit set at plan-construction time and
-      broadcast only when provably <= broadcast_max_rows. Costs the
-      single-plan subtree sharing; buys the no-abort guarantee. The
-      production default in jobs/daily.py.
-    - False: never hint; AQE decides from runtime stats after the
-      fact-side shuffle materializes.
-
     The reference builds the same dim chain twice (CTEs at 415-427 and
     437-443 — a missed reuse its own planner can't fix); here the
-    terminal-resolved chain is built once, cached, and feeds both
-    self-join rules and the final assembly.
+    client-resolved chain is built once and feeds both self-join rules
+    (rule 4 adds the terminal city on top).
 
     `report_trans` (incremental mode): the final assembly scans this
     frame (e.g. just the batch-date partition) while the self-join
@@ -74,101 +56,32 @@ def assemble_report(
     full-fact daily rescan is O(total history) per day and not viable
     at scale.
 
-    `diff_city_impl` / `brute_impl` (round 10, both default 'window'):
-    the self-join rules re-expressed as range-frame windows — rule 4
-    becomes one card_num shuffle (min/max city over a +/-1h frame,
-    no candidate pairs at all), rule 5's candidate stage becomes a
-    forward frame (pairs survive only as the sparse candidate member
-    fetch). Same verdicts (property-pinned + fixture-parity-pinned +
-    driver-hashed), measured ~25% faster end-to-end at sf0.1, and
-    O(k log k) instead of O(k^2) on a hot card/client — the
-    celebrity-key failure mode at 100 TB. 'pairs' keeps the
-    reference-shaped bucketed θ-self-joins (still the operators the
-    diff_city_short_time / brute_force_hits demos exercise).
+    `hot_key_max_rows`: the rules' measured celebrity-key gate
+    (rules.HOT_KEY_MAX_ROWS; None skips the probe and its two
+    plan-construction count() jobs, so building the report runs no
+    Spark job). A tripped probe persists its hot-key frame; those
+    frames ride on the result as `_rule_hit_frames` (empty when
+    nothing tripped) for the caller to unpersist once the report is
+    materialized.
     """
-    # The 3-hop chain feeds rule 4, rule 5 and (separately) the final
-    # left assembly. Caching it is a trade-off: at test scale the
-    # broadcast joins recompute faster than the cache materializes
-    # (measured 0.9s vs 1.2-1.8s at sf0.1), so default off; when the
-    # fact scan itself is the dominant cost (very large inputs, remote
-    # storage), pass cache_resolved=True to scan it once.
-    resolved = resolve_transactions(
-        trans, cards, accounts, clients, terminals=None, how="inner"
-    )
-    if cache_resolved:
-        resolved = resolved.persist()
+    resolved = resolve_transactions(trans, cards, accounts, clients, how="inner")
 
     # Rule 4 needs the terminal city (city_of_transactions CTE,
     # main.py:415-427); rule 5 deliberately does not join terminals
     # (req_start_for_4_rule, main.py:437-443) — an inner terminal join
     # there would drop transactions at unknown terminals from the
     # brute-force scan, changing its semantics.
-    # Rule outputs are fraud *hits* — typically orders of magnitude
-    # smaller than the fact — so the join-backs broadcast them instead
-    # of shuffling the full fact on (trans_id, client_id). Mode
-    # trade-offs in the docstring; in the measured mode (None) the
-    # persisted frames stay referenced by the final join-backs (no
-    # recompute; LRU-evictable) and the count is an eager action at
-    # plan-construction time (the cap_per_domain contract).
-    # diff_city_impl: 'window' (default, round 10) computes rule 4 as
-    # a range-frame window — one card_num shuffle, no candidate-pair
-    # materialization (per-card frame work is still O(k*w) — Spark
-    # re-aggregates sliding min/max frames — but nothing is joined or
-    # re-shuffled, and a measured density gate routes celebrity cards
-    # to the salted pair join, rules.HOT_KEY_MAX_ROWS); 'pairs' keeps
-    # the bucketed θ-self-join
-    # (the reference-shaped form the diff_city_short_time demo pins).
-    # Equivalence is property-pinned; both hash-match the oracle.
-    if diff_city_impl not in ("window", "pairs"):
-        raise ValueError(
-            f"diff_city_impl must be window|pairs, got {diff_city_impl!r}"
-        )
-    from functools import partial
-
-    # tripped celebrity-key probes persist their hot-key frames; the
-    # registry joins _rule_hit_frames below so jobs/daily.py's
-    # per-batch release covers them too (no cache accumulation across
-    # a multi-date loop)
-    _gate_persists: list = []
-    diff_city_rule = (
-        partial(
-            rule_diff_city_1h_window,
-            hot_key_max_rows=hot_key_max_rows,
-            persist_registry=_gate_persists,
-        )
-        if diff_city_impl == "window"
-        else rule_diff_city_1h  # the pair form has no window partition to gate
-    )
-    # brute_impl mirrors diff_city_impl: 'window' computes the rule-5
-    # CANDIDATE stage as a forward range frame (pairs only for the
-    # sparse candidate member fetch); 'pairs' keeps the full interval
-    # self-join (the brute_force_hits demo's operator).
-    if brute_impl not in ("window", "pairs"):
-        raise ValueError(
-            f"brute_impl must be window|pairs, got {brute_impl!r}"
-        )
-    brute_rule = (
-        partial(
-            rule_brute_force_20min_window,
-            hot_key_max_rows=hot_key_max_rows,
-            persist_registry=_gate_persists,
-        )
-        if brute_impl == "window"
-        else rule_brute_force_20min
-    )
-    diff_city_raw = diff_city_rule(attach_terminal_city(resolved, terminals))
-    brute_raw = brute_rule(resolved)
-    if broadcast_rule_hits is None:
-        diff_city_raw = diff_city_raw.persist()
-        brute_raw = brute_raw.persist()
-        hint_dc = diff_city_raw.count() <= broadcast_max_rows
-        hint_bf = brute_raw.count() <= broadcast_max_rows
-    else:
-        hint_dc = hint_bf = broadcast_rule_hits
-    diff_city = (
-        F.broadcast(diff_city_raw) if hint_dc else diff_city_raw
+    gate_persists: list = []
+    diff_city = rule_diff_city_1h_window(
+        attach_terminal_city(resolved, terminals),
+        hot_key_max_rows=hot_key_max_rows,
+        persist_registry=gate_persists,
     ).alias("h")
-    brute = (F.broadcast(brute_raw) if hint_bf else brute_raw).alias("r")
+    brute = rule_brute_force_20min_window(
+        resolved,
+        hot_key_max_rows=hot_key_max_rows,
+        persist_registry=gate_persists,
+    ).alias("r")
 
     # Final assembly uses LEFT joins (main.py:544-550): a transaction
     # that misses the dim chain still reaches the rule-1 probe.
@@ -177,7 +90,6 @@ def assemble_report(
         cards,
         accounts,
         clients,
-        terminals=None,
         how="left",
     ).alias("t")
     b = F.broadcast(blacklist.select("passport_num").distinct().alias("b"))
@@ -225,12 +137,5 @@ def assemble_report(
             report_dt.alias("report_dt"),
         )
     )
-    # measured mode persists the two hit frames; expose them so a
-    # long-running caller (jobs/daily.py, one report per batch date)
-    # can unpersist after materializing instead of relying on LRU —
-    # empty tuple in the hinted/unhinted modes, so callers can always
-    # iterate it unconditionally
-    result._rule_hit_frames = (
-        (diff_city_raw, brute_raw) if broadcast_rule_hits is None else ()
-    ) + tuple(_gate_persists)
+    result._rule_hit_frames = tuple(gate_persists)
     return result

@@ -23,8 +23,14 @@ Determinism deviations from the reference (documented, SURVEY.md §5.2):
 - event_type labels are stable ASCII constants instead of the
   reference's localized strings.
 
-Scale notes: dimension chains broadcast (dims ≪ fact); the two
-self-joins use the bucketed rewrite from operators.rangejoin; the
+One implementation per rule. The reference's two self-joins become
+range-frame windows: rule 4 is min/max city over a +/-1h frame per
+card (`rule_diff_city_1h_window`), rule 5's candidate stage a forward
+[t, t+20min] frame per client (`brute_force_candidates`). Pairs from
+the bucketed rewrite in operators.rangejoin remain only where a window
+cannot serve: rule 5's sparse member fetch, and the salted legs for
+celebrity keys past HOT_KEY_MAX_ROWS (one window partition is one
+task). Dimension chains broadcast (dims ≪ fact); the
 HAVING-membership test uses a conditional-aggregation decomposition
 (max(CASE)) rather than materializing array_agg per group — same truth
 value, no array buffers at scale (SURVEY.md §2.5 A2).
@@ -61,11 +67,11 @@ def resolve_transactions(
     cards: DataFrame,
     accounts: DataFrame,
     clients: DataFrame,
-    terminals: DataFrame | None = None,
     how: str = "inner",
 ) -> DataFrame:
-    """4-hop snowflake resolution fact -> cards -> accounts -> clients
-    (-> terminals), the J1/J2 join chain (main.py:415-427, 437-443).
+    """3-hop snowflake resolution fact -> cards -> accounts -> clients,
+    the J1/J2 join chain (main.py:415-427, 437-443); rule 4 adds the
+    terminal city with `attach_terminal_city`.
 
     Dims are broadcast — they are orders of magnitude smaller than the
     fact at any scale where this schema makes sense, so the fact never
@@ -98,10 +104,6 @@ def resolve_transactions(
         F.col("cl.last_name").alias("last_name"),
         F.col("cl.phone").alias("phone"),
     ]
-    if terminals is not None:
-        term = F.broadcast(_current(terminals).alias("term"))
-        out = out.join(term, F.col("t.terminal") == F.col("term.terminal_id"), how)
-        cols.append(F.col("term.terminal_city").alias("terminal_city"))
     return out.select(*cols)
 
 
@@ -126,18 +128,22 @@ def attach_terminal_city(resolved: DataFrame, terminals: DataFrame, how: str = "
 #: plan-construction count() job).
 HOT_KEY_MAX_ROWS = 100_000
 
+#: the hot-key frame is broadcast only when the probe's count proves
+#: it at most this many keys; a larger one is left unhinted for AQE
+_HOT_KEY_BROADCAST_MAX_ROWS = 4_000_000
+
 
 def _hot_keys(
     base: DataFrame,
     key_col: str,
     max_rows: int | None,
-    broadcast_max_rows: int = 4_000_000,
     persist_registry: list | None = None,
 ) -> DataFrame | None:
     """Measured per-key density probe (the small_graph_max_edges /
     cap_per_domain gate pattern): one bounded aggregate counts rows
     per key; keys above `max_rows` come back as a frame (broadcast
-    only when the measured count proves it small, unhinted otherwise),
+    only when the measured count is at most
+    _HOT_KEY_BROADCAST_MAX_ROWS, unhinted otherwise),
     None when no key trips. The count() is an eager action at
     plan-construction time — the measurement is the point; a route
     decided without data is the trap this gate replaces. The persisted
@@ -164,7 +170,7 @@ def _hot_keys(
         return None
     if persist_registry is not None:
         persist_registry.append(hot)
-    return F.broadcast(hot) if n <= broadcast_max_rows else hot
+    return F.broadcast(hot) if n <= _HOT_KEY_BROADCAST_MAX_ROWS else hot
 
 
 def _diff_city_pair_hits(base: DataFrame, salt=None) -> DataFrame:
@@ -183,19 +189,11 @@ def _diff_city_pair_hits(base: DataFrame, salt=None) -> DataFrame:
     ).distinct()
 
 
-def rule_diff_city_1h(resolved: DataFrame) -> DataFrame:
-    """Rule 4: same card, two cities, within one hour (main.py:428-436).
-    Input must be the terminal-resolved chain. Returns distinct
-    (trans_id, client_id)."""
-    base = resolved.select("card_num", "trans_id", "trans_date", "terminal_city", "client_id")
-    return _diff_city_pair_hits(base)
-
-
 def _diff_city_window_hits(base: DataFrame) -> DataFrame:
     """Range-frame window form of rule 4 over a pre-selected base.
 
     Rows with a null card/timestamp/city are dropped up front: they
-    can be neither hits (the pair form's equi/theta predicates are
+    can be neither hits (the reference's equi/theta predicates are
     null-unsafe) nor witnesses (min/max ignore null cities; a null
     timestamp never lands inside a finite range frame) — and, left
     in, every null-card row of the corpus would pile into ONE window
@@ -257,15 +255,15 @@ def rule_diff_city_1h_window(
     cards above the threshold through the salted bucketed pair join
     (salt='auto' scatters the hot card across reducers,
     rangejoin._salt_sides) and everything else through the window;
-    the union is byte-identical to either pure form (planted hot-card
-    test, tests/test_rules.py).
+    the union is byte-identical to the pure window form (planted
+    hot-card test, tests/test_rules.py).
 
-    Equivalence with `rule_diff_city_1h` is property-pinned on
-    randomized card/time/city data (tests/test_properties.py) and
-    rides the fraud_report driver hash against the reference's pair
-    SQL. Null semantics match the pair join exactly — see
-    _diff_city_window_hits. The trailing distinct shuffles hit ids
-    only, not candidates.
+    Equivalence with the reference's pair SQL (main.py:428-436) is
+    property-pinned against DuckDB on randomized card/time/city data
+    (tests/test_properties.py) and rides the diff_city_short_time and
+    fraud_report driver hashes. Null semantics match the SQL join
+    exactly — see _diff_city_window_hits. The trailing distinct
+    shuffles hit ids only, not candidates.
 
     Release contract (round 12, ADVICE r11): when the probe trips,
     the persisted hot-key frame needs a deterministic release. Loop
@@ -301,68 +299,10 @@ def rule_diff_city_1h_window(
     return _diff_city_window_hits(base)
 
 
-def brute_force_windows(resolved: DataFrame) -> DataFrame:
-    """`joined_req` (main.py:444-457): per client, every pair of
-    transactions within [start, start + 20 min]."""
-    base = resolved.select(
-        "client_id", "passport_num", "trans_id", "amt", "trans_date", "oper_result"
-    )
-    pairs = bucketed_interval_self_join(
-        base, key_cols=["client_id"], ts_col="trans_date", window_us=TWENTY_MIN_US
-    )
-    return pairs.select(
-        F.col("r1.client_id").alias("client_id"),
-        F.col("r1.passport_num").alias("passport_num"),
-        F.col("r1.trans_id").alias("trans_id_start"),
-        F.col("r2.trans_id").alias("trans_id_20min"),
-        F.col("r1.amt").alias("amt_start"),
-        F.col("r2.amt").alias("amt_20min"),
-        F.col("r1.trans_date").alias("trans_date_start"),
-        F.col("r2.trans_date").alias("trans_date_20min"),
-        F.col("r2.oper_result").alias("oper_result"),
-    )
-
-
-def brute_force_candidates(joined_req: DataFrame) -> DataFrame:
-    """selected_req (main.py:458-467): windows with >3 attempts and
-    both outcomes present — the candidate stage of rule 5."""
-    return (
-        joined_req.groupBy("client_id", "trans_id_start")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.max(F.when(F.col("oper_result") == "SUCCESS", 1).otherwise(0)).alias("has_success"),
-            F.max(F.when(F.col("oper_result") == "REJECT", 1).otherwise(0)).alias("has_reject"),
-        )
-        .filter((F.col("cnt") > 3) & (F.col("has_success") == 1) & (F.col("has_reject") == 1))
-        .select("client_id", "trans_id_start")
-    )
-
-
-def rule_brute_force_20min(
-    resolved: DataFrame,
-    windows: DataFrame | None = None,
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Rule 5 (main.py:444-530). Returns (client_id, trans_id) where
-    trans_id is the window-starting transaction.
-
-    `windows` / `candidates` let a caller that also consumes those
-    intermediates pass the SAME DataFrames, so the physical planner's
-    ReuseExchange dedupes the expensive interval self-join instead of
-    rebuilding it per branch."""
-    joined_req = windows if windows is not None else brute_force_windows(resolved)
-    selected_req = (
-        candidates if candidates is not None else brute_force_candidates(joined_req)
-    )
-    return _brute_force_verdicts(
-        joined_req.join(selected_req, ["client_id", "trans_id_start"], "inner")
-    )
-
-
-def _brute_force_window_candidates(base: DataFrame) -> DataFrame:
+def brute_force_candidates(base: DataFrame) -> DataFrame:
     """Forward-range-frame candidate stage of rule 5 over a
     pre-selected base. Null client/timestamp rows are dropped up
-    front: the pair form's equi/BETWEEN predicates are null-unsafe,
+    front: the reference's equi/BETWEEN predicates are null-unsafe,
     so they are neither candidates nor window members there — and a
     corpus-wide null-client pile-up would otherwise become one
     single-task window partition."""
@@ -465,14 +405,16 @@ def rule_brute_force_20min_window(
     O(k log k) sort — the pair stage's asymptotics, minus its row
     materialization, second shuffle and join. Each client is one
     task, so `hot_key_max_rows` (measured probe, see _hot_keys)
-    routes celebrity clients through the salted pair-join candidate
-    stage (salt='auto') and unions the two disjoint candidate sets
-    before the shared member fetch; output is byte-identical to
-    either pure form (planted hot-client test, tests/test_rules.py).
+    routes celebrity clients through one salted interval self-join
+    (salt='auto', _brute_force_pair_members) whose pairs are their
+    members, and unions those with the cold clients' fetched members
+    ahead of the shared verdicts tail; output is byte-identical to the
+    pure window form (planted hot-client test, tests/test_rules.py).
 
-    The ranking/aggregation tail is shared code with the pair
-    implementation, and equivalence is property-pinned on randomized
-    client/time/amount/outcome data (tests/test_properties.py).
+    Equivalence with the reference's SQL chain (main.py:444-530) is
+    property-pinned against DuckDB on randomized
+    client/time/amount/outcome data (tests/test_properties.py) and
+    rides the brute_force_hits* and fraud_report driver hashes.
 
     Release contract (round 12, ADVICE r11): same as
     rule_diff_city_1h_window — a tripped probe's persisted frame is
@@ -489,11 +431,11 @@ def rule_brute_force_20min_window(
         base, "client_id", hot_key_max_rows, persist_registry=local_registry
     )
     if hot is not None:
-        cand = _brute_force_window_candidates(
+        cand = brute_force_candidates(
             base.join(hot, "client_id", "left_anti")
         )
     else:
-        cand = _brute_force_window_candidates(base)
+        cand = brute_force_candidates(base)
     members = bucketed_interval_join(
         cand,
         base,
@@ -524,7 +466,7 @@ def rule_brute_force_20min_window(
 
 
 def _brute_force_verdicts(selected_members: DataFrame) -> DataFrame:
-    """Shared tail of both rule-5 implementations. Input: the member
+    """Shared tail of rule 5's cold and hot legs. Input: the member
     rows of CANDIDATE windows (client_id, trans_id_start,
     trans_id_20min, amt_20min, trans_date_20min, oper_result)."""
     # sorted_req (main.py:468-474): rank attempts by time.

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import math
 import random
-from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -100,19 +99,15 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
 
 def rp_signature(
     vec_col: Column,
-    planes: Sequence[Sequence[float]] | Column,
+    planes: Column,
     round_proj: int | None = None,
 ) -> Column:
     """Random-projection sign bits as an array<int> of 0/1.
 
-    planes may be a driver-side list-of-lists (inlined as literals —
-    fine for tiny plane sets, but the plan grows one expression node
-    per component: 64 planes x 1536 dims is ~100k nodes and minutes of
-    Catalyst analysis) or a Column of array<array<double>> (a single
-    value, e.g. from a broadcast one-row frame — constant plan size at
-    any dim; what `lsh_near_neighbors` uses). Either way the signature
-    is the same sequential zip_with/aggregate fold, so the two forms
-    are bit-identical.
+    planes is a Column of array<array<double>> (a single value, e.g.
+    from a broadcast one-row frame — constant plan size at any dim;
+    what `lsh_near_neighbors` uses). The signature is a sequential
+    zip_with/aggregate fold per plane.
 
     round_proj: round each projection to this many decimals BEFORE the
     sign test. A projection within an ulp of 0 would otherwise take a
@@ -126,11 +121,7 @@ def rp_signature(
             d = F.round(d, round_proj)
         return F.when(d >= 0, 1).otherwise(0)
 
-    if isinstance(planes, Column):
-        return F.transform(planes, sign_bit)
-    return F.array(
-        *[sign_bit(F.array(*[F.lit(float(x)) for x in p])) for p in planes]
-    )
+    return F.transform(planes, sign_bit)
 
 
 def rp_band_buckets(

@@ -54,14 +54,9 @@ def flagship_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         dims["terminals"],
         d["blacklist"],
         report_dt=batch,
-        # fact-scaled hit frames: let AQE pick the join-back strategy
-        # from runtime stats (no persist barrier, no abort at 100x);
-        # jobs/daily.py keeps the measured-gate None default.
-        broadcast_rule_hits=False,
         # the celebrity-key probe is two plan-construction count()
         # jobs (~1s at sf0.1); the driver fixture provably has no key
-        # near HOT_KEY_MAX_ROWS, so the registered row opts out — the
-        # broadcast_rule_hits=False precedent. Production keeps the
-        # measured default (jobs/daily.py).
+        # near HOT_KEY_MAX_ROWS, so the registered row opts out.
+        # Production keeps the measured default (jobs/daily.py).
         hot_key_max_rows=None,
     )

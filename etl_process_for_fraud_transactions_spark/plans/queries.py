@@ -433,27 +433,32 @@ reassembly_of_amounts AS (
 """.strip()
 
 
-@query(
-    "diff_city_short_time",
-    analog.oracle_with_domain(
-        """
+# rule 4 over city_of_transactions (main.py:428-436)
+_DIFF_CITY_SQL = """
         SELECT DISTINCT a.trans_id AS trans_id, a.client_id AS client_id
         FROM city_of_transactions a
         JOIN city_of_transactions b ON a.card_num = b.card_num
         WHERE a.terminal_city <> b.terminal_city
           AND abs(epoch(a.trans_date - b.trans_date)) <= 60*60
-        """,
-        extra_ctes=_CITY_CTE,
-    ),
+        """
+
+
+@query(
+    "diff_city_short_time",
+    analog.oracle_with_domain(_DIFF_CITY_SQL, extra_ctes=_CITY_CTE),
 )
 def diff_city_short_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rule 4 (J5 theta self-join, main.py:428-436) via the bucketed
-    1-hour rewrite."""
+    """Rule 4 (J5 theta self-join, main.py:428-436) through the
+    report's own implementation: min/max city over a +/-1h range
+    frame per card. The fixture has no card near HOT_KEY_MAX_ROWS, so
+    the row skips the celebrity-key probe, as fraud_report does."""
     d = analog.domain_frames(spark, sf_dir)
     resolved = R.resolve_transactions(
-        d["transactions"], d["cards"], d["accounts"], d["clients"], d["terminals"]
+        d["transactions"], d["cards"], d["accounts"], d["clients"]
     )
-    return R.rule_diff_city_1h(resolved)
+    return R.rule_diff_city_1h_window(
+        R.attach_terminal_city(resolved, d["terminals"]), hot_key_max_rows=None
+    )
 
 
 @query(
@@ -470,12 +475,15 @@ def diff_city_short_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def brute_force_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full rule 5 (main.py:444-530): interval self-join -> HAVING ->
-    double row_number -> 4-way INTERSECT -> reassembly. Output is one
-    row per candidate window (the J6+A1/A2 candidate stage — the former
-    `brute_force_candidates` entry, folded in round 3 for the driver's
-    50-query cap) with `is_hit` marking the windows the full chain
-    confirms, so both stages are hash-checked in one query.
+    """Full rule 5 (main.py:444-530) through the report's own
+    implementation: a forward 20-minute range frame selects the
+    candidate windows (the reference's interval self-join -> HAVING),
+    the candidates' members are fetched by a bucketed interval join,
+    then double row_number -> 4-way INTERSECT -> reassembly. Output is
+    one row per candidate window (the J6+A1/A2 candidate stage — the
+    former `brute_force_candidates` entry, folded in round 3 for the
+    driver's 50-query cap) with `is_hit` marking the windows the full
+    chain confirms, so both stages are hash-checked in one query.
 
     No broadcast hint on the hits frame (round 9): hits are derived from
     the transaction fact table — the confirmed-fraud set grows with the
@@ -486,13 +494,8 @@ def brute_force_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolved = R.resolve_transactions(
         d["transactions"], d["cards"], d["accounts"], d["clients"]
     )
-    # share the window join + candidate frames with the full chain so
-    # ReuseExchange dedupes the interval self-join across both branches
-    joined = R.brute_force_windows(resolved)
-    candidates = R.brute_force_candidates(joined)
-    hits = R.rule_brute_force_20min(
-        resolved, windows=joined, candidates=candidates
-    ).select(
+    candidates = R.brute_force_candidates(resolved)
+    hits = R.rule_brute_force_20min_window(resolved, hot_key_max_rows=None).select(
         F.col("client_id").alias("__hit_client"),
         F.col("trans_id").alias("__hit_trans"),
     )
@@ -779,16 +782,9 @@ def fraud_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         d["blacklist"],
         # string, not DATE: see date_arithmetic_probe docstring
         report_dt=F.lit("2024-01-31"),
-        # AQE decides the rule-hit join-backs from runtime stats: the
-        # hit frames scale with the fact, so a forced hint aborts on a
-        # hot-fraud day while AQE degrades to shuffle. jobs/daily.py
-        # keeps the measured gate (None); the always-hint True is for
-        # interactive single-shot use only.
-        broadcast_rule_hits=False,
         # the celebrity-key probe is two plan-construction count()
         # jobs (~1s at sf0.1); the driver fixture provably has no key
-        # near HOT_KEY_MAX_ROWS, so the registered row opts out — the
-        # broadcast_rule_hits=False precedent. Production keeps the
-        # measured default (jobs/daily.py).
+        # near HOT_KEY_MAX_ROWS, so the registered row opts out.
+        # Production keeps the measured default (jobs/daily.py).
         hot_key_max_rows=None,
     )

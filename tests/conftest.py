@@ -122,6 +122,8 @@ CORE_TESTS = {
     # the daily job's SCD2 apply: semantics against a model, job count
     "test_partitioned_matches_driver_model",
     "test_warm_apply_batch_runs_at_most_two_jobs",
+    # cap_per_domain releases its private-API checkpoint handle
+    "test_cap_per_domain_return_persisted_tuple",
 }
 
 
@@ -250,9 +252,9 @@ SLOW_TESTS = {
     "test_prefix_filter_jaccard_matches_bruteforce",
     "test_rrf_fuse_matches_python_replay",
     "test_rule_brute_force_gate_routing_matches_ungated",
-    "test_rule_brute_force_window_matches_pairs",
+    "test_rule_brute_force_window_matches_sql_oracle",
     "test_rule_diff_city_gate_routing_matches_ungated",
-    "test_rule_diff_city_window_matches_pairs",
+    "test_rule_diff_city_window_matches_sql_oracle",
     "test_scd2_matches_model",
     "test_scrub_pii_is_identity_without_digits_or_at",
     # tests/test_quality_model.py
@@ -283,8 +285,6 @@ SLOW_TESTS = {
     # tests/test_rules.py
     "TestCelebrityKeyGate::test_brute_force_gate_routes_and_output_identical",
     "TestCelebrityKeyGate::test_diff_city_gate_routes_and_output_identical",
-    "TestWindowedImplsMatchPairsOnFixtures::test_brute_force_window_matches_pairs_on_fixtures",
-    "TestWindowedImplsMatchPairsOnFixtures::test_diff_city_window_matches_pairs_on_fixtures",
     "test_hot_key_gate_direct_caller_gets_release_handle",
     "test_hot_key_gate_persist_registry_releases_deterministically",
     # tests/test_sampling.py

@@ -209,13 +209,17 @@ def test_global_top_orders_takeordered(spark):
 
 
 def test_bucketed_self_joins_are_equi_joins(spark):
-    """The 1h/20min self-joins must plan as hash equi-joins on the
-    (bucket, key) composite — the O(n^2)-per-key theta join shape
-    (nested loop / cartesian) must not come back."""
-    for name in ("diff_city_short_time", "brute_force_hits"):
-        plan = _plan(spark, name)
-        assert ("ShuffledHashJoin" in plan) or ("SortMergeJoin" in plan), name
-        assert "__bucket" in plan, name
+    """The reference's 1h/20min theta self-joins must never plan as
+    O(n^2)-per-key joins. Rule 4 has no self-join left: one range-frame
+    window, and its only joins are the broadcast dim lookups. Rule 5's
+    member fetch plans as a hash equi-join on the (bucket, key)
+    composite."""
+    plan = _plan(spark, "diff_city_short_time")
+    assert "Window" in plan
+    assert "ShuffledHashJoin" not in plan and "SortMergeJoin" not in plan
+    plan = _plan(spark, "brute_force_hits")
+    assert ("ShuffledHashJoin" in plan) or ("SortMergeJoin" in plan)
+    assert "__bucket" in plan
 
 
 def test_asof_join_has_no_pair_explosion(spark):
@@ -458,11 +462,10 @@ def test_every_broadcast_hint_roots_at_a_bounded_frame(spark):
 
 
 def test_fraud_report_demo_hints_only_bounded_dims(spark):
-    """Round 10 directive 1: the registered fraud_report row and the
-    flagship entry() pass broadcast_rule_hits=False — the rule-hit
-    join-backs (fact-scaled) carry NO hint; every remaining hint roots
-    at a spark.range dim / blacklist frame. AQE still broadcasts the
-    runtime-small hit sets at test scale."""
+    """The registered fraud_report row and the flagship entry(): the
+    rule-hit join-backs (fact-scaled) carry NO hint; every remaining
+    hint roots at a spark.range dim / blacklist frame. AQE still
+    broadcasts the runtime-small hit sets at test scale."""
     from etl_process_for_fraud_transactions_spark.plans.flagship import (
         flagship_report,
     )
@@ -501,11 +504,11 @@ def test_fraud_report_demo_hints_only_bounded_dims(spark):
 
 
 def test_fraud_report_aqe_converts_rule_hit_joins(spark):
-    """Round 10: with broadcast_rule_hits=False the rule-hit
-    join-backs start as sort-merge in the STATIC plan and AQE must
-    convert them from runtime stats — the no-abort degrade the hint
-    drop bought may cost a shuffle at the 100x framing, but at test
-    scale no SortMergeJoin survives the final plan. (Read through the
+    """The unhinted rule-hit join-backs start as sort-merge in the
+    STATIC plan and AQE must convert them from runtime stats — the
+    no-abort degrade the missing hint buys may cost a shuffle at the
+    100x framing, but at test scale no SortMergeJoin survives the
+    final plan. (Read through the
     DataFrame's OWN QueryExecution after collect(): a noop write
     builds a separate one and silently reports the initial plan.)"""
     df = QUERIES["fraud_report"](spark, SF_SMALL)
@@ -517,42 +520,31 @@ def test_fraud_report_aqe_converts_rule_hit_joins(spark):
     assert "BroadcastHashJoin" in final
 
 
-def test_fraud_report_rule_hit_hints_are_measured(spark):
-    """assemble_report's measured mode (broadcast_rule_hits=None, the
-    jobs/daily.py production default — late round 9, the
-    cap_per_domain precedent) gates the rule-hit broadcasts on a
-    counted size: at test scale the hits fit and both hints fire;
-    with broadcast_max_rows=-1 (unsatisfiable — at sf0.001 one rule
-    has ZERO hits, and an empty frame provably fits any cap >= 0) the
-    SAME plan drops exactly those two hints (dim hints stay) and the
-    result is unchanged."""
+def test_fraud_report_builds_without_spark_jobs(spark):
+    """Building the report is lazy. With the celebrity-key probe off
+    (hot_key_max_rows=None, the driver rows' setting) assemble_report
+    runs no Spark job: the rule-hit join-backs are left to AQE, with
+    no persist or count() ahead of the report. The gated default's
+    eager work is the probe's count(), so the counter sees jobs there."""
     from etl_process_for_fraud_transactions_spark.operators.report import (
         assemble_report,
     )
     from etl_process_for_fraud_transactions_spark.plans import analog
     from pyspark.sql import functions as F
 
+    from .conftest import spark_jobs
+
     d = analog.domain_frames(spark, SF_SMALL)
     args = (d["transactions"], d["cards"], d["accounts"], d["clients"],
             d["terminals"], d["blacklist"])
-
-    hinted = assemble_report(
-        *args, report_dt=F.lit("2024-01-31"), broadcast_rule_hits=None
-    )
-    unhinted = assemble_report(
-        *args, report_dt=F.lit("2024-01-31"), broadcast_rule_hits=None,
-        broadcast_max_rows=-1,
-    )
-    n_hints = lambda df: (
-        df._jdf.queryExecution().optimizedPlan().toString()
-        .count("strategy=broadcast")
-    )
-    # exactly the two rule-hit hints are measurement-dependent
-    assert n_hints(hinted) - n_hints(unhinted) == 2
-    key = lambda r: tuple(str(v) for v in r)
-    assert sorted(map(key, hinted.collect())) == sorted(
-        map(key, unhinted.collect())
-    )
+    with spark_jobs(spark) as ungated:
+        assemble_report(*args, report_dt=F.lit("2024-01-31"), hot_key_max_rows=None)
+    assert ungated == []
+    with spark_jobs(spark) as gated:
+        report = assemble_report(*args, report_dt=F.lit("2024-01-31"))
+    assert gated
+    for frame in report._rule_hit_frames:
+        frame.unpersist()
 
 
 def test_zscore_stats_back_join_broadcasts_via_aqe(spark):

@@ -9,14 +9,16 @@ against brute-force reference models on randomized inputs.
 - pack_chunks(shard_col) ≡ a per-shard running-sum fold (the greedy
   contract the document_chunks oracle replays);
 - scrub_pii ≡ identity on digit-free/@-free text (the soundness half
-  of the doc_fingerprints PII-probe design).
+  of the doc_fingerprints PII-probe design);
+- fraud rules 4 and 5 ≡ the reference's own SQL, run by DuckDB on the
+  same random rows.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -367,12 +369,13 @@ def test_langid_normalization_invariance(s):
     assert noisy == base
 
 
-# --- rule 4 window-vs-pairs equivalence (round 10) -----------------------
+# --- rules 4/5 vs the reference's SQL on DuckDB ---------------------------
 
 diff_city_rows = st.lists(
     st.tuples(
         st.integers(min_value=0, max_value=2),                 # card
         st.integers(min_value=0, max_value=9_000),             # offset s
+        st.sampled_from([0, 1]),                               # + offset µs
         st.sampled_from(["A", "B", "C", None]),                # city
         st.integers(min_value=0, max_value=3),                 # client
     ),
@@ -380,32 +383,18 @@ diff_city_rows = st.lists(
     max_size=25,
 )
 
+#: rule 4's closed +/-1h bound to the microsecond: card 0's pair sits
+#: exactly 1h apart (both hit), card 1's 1h + 1 µs apart (neither)
+DIFF_CITY_EDGE = [
+    (0, 0, 0, "A", 0), (0, 3_600, 0, "B", 1),
+    (1, 0, 0, "A", 2), (1, 3_600, 1, "B", 3),
+]
 
-@given(rows=diff_city_rows)
-@settings(
-    max_examples=40,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_rule_diff_city_window_matches_pairs(spark, rows):
-    """The round-10 range-frame rewrite of rule 4 must equal the
-    bucketed pair join on randomized card/time/city data — including
-    null cities (neither hits nor witnesses), boundary-exact +/-1h
-    offsets and duplicate rows."""
-    from etl_process_for_fraud_transactions_spark.operators.rules import (
-        rule_diff_city_1h,
-        rule_diff_city_1h_window,
-    )
 
+def _diff_city_frame(spark, rows):
     data = [
-        (
-            i,
-            card,
-            T0 + dt.timedelta(seconds=off),
-            city,
-            client,
-        )
-        for i, (card, off, city, client) in enumerate(rows)
+        (i, card, T0 + dt.timedelta(seconds=off, microseconds=us), city, client)
+        for i, (card, off, us, city, client) in enumerate(rows)
     ]
     schema = T.StructType(
         [
@@ -416,17 +405,56 @@ def test_rule_diff_city_window_matches_pairs(spark, rows):
             T.StructField("client_id", T.LongType()),
         ]
     )
-    df = spark.createDataFrame(data, schema)
-    key = lambda out: sorted(
-        (r["trans_id"], r["client_id"]) for r in out.collect()
+    return spark.createDataFrame(data, schema), data
+
+
+def _duck_rows(con, columns, data):
+    """(Re)create the DuckDB table `prop_rows` holding `data`."""
+    con.execute(f"CREATE OR REPLACE TABLE prop_rows ({columns})")
+    if data:
+        marks = ", ".join("?" * len(data[0]))
+        con.executemany(f"INSERT INTO prop_rows VALUES ({marks})", data)
+
+
+@given(rows=diff_city_rows)
+@example(rows=DIFF_CITY_EDGE)
+@settings(
+    max_examples=40,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_rule_diff_city_window_matches_sql_oracle(spark, duck, rows):
+    """Rule 4's range-frame window equals the reference's SQL self-join
+    (the diff_city_short_time oracle's SELECT) run by DuckDB on the
+    same randomized card/time/city rows — including null cities
+    (neither hits nor witnesses), the closed 1h bound to the
+    microsecond and duplicate rows."""
+    from etl_process_for_fraud_transactions_spark.operators.rules import (
+        rule_diff_city_1h_window,
     )
-    assert key(rule_diff_city_1h_window(df)) == key(rule_diff_city_1h(df))
+    from etl_process_for_fraud_transactions_spark.plans.queries import (
+        _DIFF_CITY_SQL,
+    )
+
+    df, data = _diff_city_frame(spark, rows)
+    _duck_rows(
+        duck,
+        "trans_id BIGINT, card_num BIGINT, trans_date TIMESTAMP, "
+        "terminal_city VARCHAR, client_id BIGINT",
+        data,
+    )
+    want = duck.execute(
+        f"WITH city_of_transactions AS (SELECT * FROM prop_rows) {_DIFF_CITY_SQL}"
+    ).fetchall()
+    got = [(r["trans_id"], r["client_id"]) for r in rule_diff_city_1h_window(df).collect()]
+    assert sorted(got) == sorted(want)
 
 
 brute_rows = st.lists(
     st.tuples(
         st.integers(min_value=0, max_value=1),      # client
         st.integers(min_value=0, max_value=4_000),  # offset s (~3 windows)
+        st.sampled_from([0, 1]),                    # + offset µs
         st.integers(min_value=1, max_value=5),      # amt (ties likely)
         st.sampled_from(["REJECT", "SUCCESS"]),
     ),
@@ -434,33 +462,29 @@ brute_rows = st.lists(
     max_size=18,
 )
 
-
-@given(rows=brute_rows)
-@settings(
-    max_examples=40,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_rule_brute_force_window_matches_pairs(spark, rows):
-    """The round-10 windowed candidate stage of rule 5 must equal the
-    all-pairs implementation on randomized client/time/amount/outcome
-    data — dense REJECT bursts, amount ties (broken by trans_id in
-    both), exact 20-min boundaries and multi-window overlaps."""
-    from etl_process_for_fraud_transactions_spark.operators.rules import (
-        rule_brute_force_20min,
-        rule_brute_force_20min_window,
+#: rule 5's closed 20-min window to the microsecond: client 0's fourth
+#: attempt lands exactly 20 min after the first (fires), client 1's
+#: 20 min + 1 µs after (only three attempts in the window)
+BRUTE_EDGE = [
+    (c, off, us if off == 1_200 else 0, amt, res)
+    for c, us in ((0, 0), (1, 1))
+    for off, amt, res in (
+        (0, 4, "REJECT"), (300, 3, "REJECT"), (600, 2, "REJECT"), (1_200, 1, "SUCCESS"),
     )
+]
 
+
+def _brute_frame(spark, rows):
     data = [
         (
             i,
             client,
             float(amt),
-            T0 + dt.timedelta(seconds=off),
+            T0 + dt.timedelta(seconds=off, microseconds=us),
             result,
             f"P{client}",
         )
-        for i, (client, off, amt, result) in enumerate(rows)
+        for i, (client, off, us, amt, result) in enumerate(rows)
     ]
     schema = T.StructType(
         [
@@ -472,13 +496,54 @@ def test_rule_brute_force_window_matches_pairs(spark, rows):
             T.StructField("passport_num", T.StringType()),
         ]
     )
-    df = spark.createDataFrame(data, schema)
-    key = lambda out: sorted(
-        (r["client_id"], r["trans_id"]) for r in out.collect()
+    return spark.createDataFrame(data, schema), data
+
+
+@given(rows=brute_rows)
+@example(rows=BRUTE_EDGE)
+@settings(
+    max_examples=40,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_rule_brute_force_window_matches_sql_oracle(spark, duck, rows):
+    """Rule 5 (windowed candidate stage, member fetch, verdicts tail)
+    equals the reference's SQL chain run by DuckDB on the same
+    randomized client/time/amount/outcome rows: the oracle's own
+    joined_req interval self-join over the rows, then `_RULE5_TAIL`
+    (HAVING -> double row_number -> 4-way INTERSECT -> reassembly).
+    Covers dense REJECT bursts, amount ties (broken by trans_id in
+    both), the closed 20-min bound to the microsecond and overlapping
+    windows."""
+    from etl_process_for_fraud_transactions_spark.operators.rules import (
+        rule_brute_force_20min_window,
     )
-    assert key(rule_brute_force_20min_window(df)) == key(
-        rule_brute_force_20min(df)
+    from etl_process_for_fraud_transactions_spark.plans.queries import (
+        _REQ_CTES,
+        _RULE5_TAIL,
     )
+
+    df, data = _brute_frame(spark, rows)
+    _duck_rows(
+        duck,
+        "trans_id BIGINT, client_id BIGINT, amt DOUBLE, trans_date TIMESTAMP, "
+        "oper_result VARCHAR, passport_num VARCHAR",
+        data,
+    )
+    joined_req = _REQ_CTES[
+        _REQ_CTES.index("joined_req AS (") : _REQ_CTES.index("selected_req AS (")
+    ]
+    want = duck.execute(
+        "WITH req_start_for_4_rule AS (SELECT * FROM prop_rows),\n"
+        + joined_req
+        + _RULE5_TAIL
+        + "\nSELECT client_id, trans_id FROM reassembly_of_amounts"
+    ).fetchall()
+    got = [
+        (r["client_id"], r["trans_id"])
+        for r in rule_brute_force_20min_window(df).collect()
+    ]
+    assert sorted(got) == sorted(want)
 
 
 # --- celebrity-key gate routing equivalence (round 11) --------------------
@@ -500,20 +565,7 @@ def test_rule_diff_city_gate_routing_matches_ungated(spark, rows):
         rule_diff_city_1h_window,
     )
 
-    data = [
-        (i, card, T0 + dt.timedelta(seconds=off), city, client)
-        for i, (card, off, city, client) in enumerate(rows)
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("trans_id", T.LongType()),
-            T.StructField("card_num", T.LongType()),
-            T.StructField("trans_date", T.TimestampNTZType()),
-            T.StructField("terminal_city", T.StringType()),
-            T.StructField("client_id", T.LongType()),
-        ]
-    )
-    df = spark.createDataFrame(data, schema)
+    df, _ = _diff_city_frame(spark, rows)
     key = lambda out: sorted(
         (r["trans_id"], r["client_id"]) for r in out.collect()
     )
@@ -529,36 +581,14 @@ def test_rule_diff_city_gate_routing_matches_ungated(spark, rows):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_rule_brute_force_gate_routing_matches_ungated(spark, rows):
-    """Rule 5's gated candidate union (window candidates for cold
-    clients + pair candidates for hot ones, shared member fetch) must
-    equal the pure windowed form on arbitrary dense/tied/boundary
-    data."""
+    """Rule 5's gated member union (window candidates + member fetch
+    for cold clients, salted pair members for hot ones) must equal the
+    pure windowed form on arbitrary dense/tied/boundary data."""
     from etl_process_for_fraud_transactions_spark.operators.rules import (
         rule_brute_force_20min_window,
     )
 
-    data = [
-        (
-            i,
-            client,
-            float(amt),
-            T0 + dt.timedelta(seconds=off),
-            result,
-            f"P{client}",
-        )
-        for i, (client, off, amt, result) in enumerate(rows)
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("trans_id", T.LongType()),
-            T.StructField("client_id", T.LongType()),
-            T.StructField("amt", T.DoubleType()),
-            T.StructField("trans_date", T.TimestampNTZType()),
-            T.StructField("oper_result", T.StringType()),
-            T.StructField("passport_num", T.StringType()),
-        ]
-    )
-    df = spark.createDataFrame(data, schema)
+    df, _ = _brute_frame(spark, rows)
     key = lambda out: sorted(
         (r["client_id"], r["trans_id"]) for r in out.collect()
     )

@@ -8,8 +8,8 @@ import datetime as dt
 from pyspark.sql import types as T
 
 from etl_process_for_fraud_transactions_spark.operators.rules import (
-    rule_brute_force_20min,
-    rule_diff_city_1h,
+    rule_brute_force_20min_window,
+    rule_diff_city_1h_window,
 )
 
 T0 = dt.datetime(2024, 1, 1, 12, 0, 0)
@@ -52,7 +52,7 @@ class TestDiffCity:
             spark,
             [(1, 10, _mins(0), "CITY_A", 7), (1, 11, _mins(59), "CITY_B", 7)],
         )
-        hits = {(r.trans_id, r.client_id) for r in rule_diff_city_1h(df).collect()}
+        hits = {(r.trans_id, r.client_id) for r in rule_diff_city_1h_window(df).collect()}
         assert hits == {(10, 7), (11, 7)}  # both directions (abs diff)
 
     def test_negative_61min(self, spark):
@@ -60,14 +60,14 @@ class TestDiffCity:
             spark,
             [(1, 10, _mins(0), "CITY_A", 7), (1, 11, _mins(61), "CITY_B", 7)],
         )
-        assert rule_diff_city_1h(df).count() == 0
+        assert rule_diff_city_1h_window(df).count() == 0
 
     def test_negative_same_city(self, spark):
         df = _city_df(
             spark,
             [(1, 10, _mins(0), "CITY_A", 7), (1, 11, _mins(30), "CITY_A", 7)],
         )
-        assert rule_diff_city_1h(df).count() == 0
+        assert rule_diff_city_1h_window(df).count() == 0
 
     def test_boundary_exactly_1h_included(self, spark):
         """abs(epoch diff) <= 3600 is a closed bound (main.py:435)."""
@@ -75,14 +75,14 @@ class TestDiffCity:
             spark,
             [(1, 10, _mins(0), "CITY_A", 7), (1, 11, _mins(60), "CITY_B", 7)],
         )
-        assert rule_diff_city_1h(df).count() == 2
+        assert rule_diff_city_1h_window(df).count() == 2
 
     def test_different_cards_never_pair(self, spark):
         df = _city_df(
             spark,
             [(1, 10, _mins(0), "CITY_A", 7), (2, 11, _mins(10), "CITY_B", 8)],
         )
-        assert rule_diff_city_1h(df).count() == 0
+        assert rule_diff_city_1h_window(df).count() == 0
 
     def test_bucket_boundary_pairing(self, spark):
         """Pairs straddling a 1-hour bucket edge must still be found
@@ -95,7 +95,7 @@ class TestDiffCity:
                 (1, 11, edge + dt.timedelta(seconds=30), "CITY_B", 7),
             ],
         )
-        assert rule_diff_city_1h(df).count() == 2
+        assert rule_diff_city_1h_window(df).count() == 2
 
 
 def _bf_rows(amounts_results, start_min=0, step_min=5, client=1, first_id=100):
@@ -110,119 +110,44 @@ class TestBruteForce:
 
     def test_positive_fires_on_start_txn(self, spark):
         df = _bf_df(spark, _bf_rows(self.POSITIVE))
-        hits = {(r.client_id, r.trans_id) for r in rule_brute_force_20min(df).collect()}
+        hits = {(r.client_id, r.trans_id) for r in rule_brute_force_20min_window(df).collect()}
         assert hits == {(1, 100)}  # the window-starting transaction
 
     def test_three_attempts_insufficient(self, spark):
         df = _bf_df(spark, _bf_rows(self.POSITIVE[:3]))
-        assert rule_brute_force_20min(df).count() == 0
+        assert rule_brute_force_20min_window(df).count() == 0
 
     def test_non_decreasing_amounts(self, spark):
         rows = _bf_rows(
             [(400.0, "REJECT"), (450.0, "REJECT"), (200.0, "REJECT"), (100.0, "SUCCESS")]
         )
-        assert rule_brute_force_20min(_bf_df(spark, rows)).count() == 0
+        assert rule_brute_force_20min_window(_bf_df(spark, rows)).count() == 0
 
     def test_all_reject_never_fires(self, spark):
         rows = _bf_rows([(4.0, "REJECT"), (3.0, "REJECT"), (2.0, "REJECT"), (1.0, "REJECT")])
-        assert rule_brute_force_20min(_bf_df(spark, rows)).count() == 0
+        assert rule_brute_force_20min_window(_bf_df(spark, rows)).count() == 0
 
     def test_success_first_never_fires(self, spark):
         rows = _bf_rows([(4.0, "SUCCESS"), (3.0, "REJECT"), (2.0, "REJECT"), (1.0, "REJECT")])
-        assert rule_brute_force_20min(_bf_df(spark, rows)).count() == 0
+        assert rule_brute_force_20min_window(_bf_df(spark, rows)).count() == 0
 
     def test_spread_beyond_20min_insufficient(self, spark):
         # 4 attempts but 25 min apart -> no window holds >3
         df = _bf_df(spark, _bf_rows(self.POSITIVE, step_min=25))
-        assert rule_brute_force_20min(df).count() == 0
+        assert rule_brute_force_20min_window(df).count() == 0
 
     def test_window_straddles_bucket_edge(self, spark):
         # all 4 attempts inside 20 min but crossing a 20-min epoch bucket
         rows = _bf_rows(self.POSITIVE, start_min=55, step_min=4)  # 12:55..13:07
         df = _bf_df(spark, rows)
-        hits = {(r.client_id, r.trans_id) for r in rule_brute_force_20min(df).collect()}
+        hits = {(r.client_id, r.trans_id) for r in rule_brute_force_20min_window(df).collect()}
         assert (1, rows[0][2]) in hits
 
     def test_different_clients_never_combine(self, spark):
         rows = _bf_rows(self.POSITIVE[:2], client=1) + _bf_rows(
             self.POSITIVE[2:], client=2, first_id=200
         )
-        assert rule_brute_force_20min(_bf_df(spark, rows)).count() == 0
-
-
-class TestWindowedImplsMatchPairsOnFixtures:
-    """Round 10: every hand-labeled micro-fixture above must produce
-    the SAME verdicts through the pair-free window implementations —
-    including a demonstrably FIRING positive (non-vacuous)."""
-
-    def _bf_fixtures(self):
-        P = TestBruteForce.POSITIVE
-        return [
-            _bf_rows(P),
-            _bf_rows(P[:3]),
-            _bf_rows([(400.0, "REJECT"), (450.0, "REJECT"),
-                      (200.0, "REJECT"), (100.0, "SUCCESS")]),
-            _bf_rows([(4.0, "REJECT"), (3.0, "REJECT"),
-                      (2.0, "REJECT"), (1.0, "REJECT")]),
-            _bf_rows([(4.0, "SUCCESS"), (3.0, "REJECT"),
-                      (2.0, "REJECT"), (1.0, "REJECT")]),
-            _bf_rows(P, step_min=25),
-            _bf_rows(P, start_min=55, step_min=4),
-            _bf_rows(P[:2], client=1)
-            + _bf_rows(P[2:], client=2, first_id=200),
-        ]
-
-    def test_brute_force_window_matches_pairs_on_fixtures(self, spark):
-        from etl_process_for_fraud_transactions_spark.operators.rules import (
-            rule_brute_force_20min_window,
-        )
-
-        fired = 0
-        for rows in self._bf_fixtures():
-            df = _bf_df(spark, rows)
-            want = sorted(
-                (r.client_id, r.trans_id)
-                for r in rule_brute_force_20min(df).collect()
-            )
-            got = sorted(
-                (r.client_id, r.trans_id)
-                for r in rule_brute_force_20min_window(df).collect()
-            )
-            assert got == want, rows
-            fired += len(got)
-        assert fired > 0  # the positive fixture fires in BOTH impls
-
-    def test_diff_city_window_matches_pairs_on_fixtures(self, spark):
-        from etl_process_for_fraud_transactions_spark.operators.rules import (
-            rule_diff_city_1h_window,
-        )
-
-        edge = dt.datetime(2024, 1, 1, 13, 0, 0)
-        fixtures = [
-            [(1, 10, _mins(0), "CITY_A", 7), (1, 11, _mins(59), "CITY_B", 7)],
-            [(1, 10, _mins(0), "CITY_A", 7), (1, 11, _mins(61), "CITY_B", 7)],
-            [(1, 10, _mins(0), "CITY_A", 7), (1, 11, _mins(30), "CITY_A", 7)],
-            [(1, 10, _mins(0), "CITY_A", 7), (1, 11, _mins(60), "CITY_B", 7)],
-            [(1, 10, _mins(0), "CITY_A", 7), (2, 11, _mins(5), "CITY_B", 8)],
-            [
-                (1, 10, edge - dt.timedelta(seconds=30), "CITY_A", 7),
-                (1, 11, edge + dt.timedelta(seconds=30), "CITY_B", 7),
-            ],
-        ]
-        fired = 0
-        for rows in fixtures:
-            df = _city_df(spark, rows)
-            want = sorted(
-                (r.trans_id, r.client_id)
-                for r in rule_diff_city_1h(df).collect()
-            )
-            got = sorted(
-                (r.trans_id, r.client_id)
-                for r in rule_diff_city_1h_window(df).collect()
-            )
-            assert got == want, rows
-            fired += len(got)
-        assert fired > 0
+        assert rule_brute_force_20min_window(_bf_df(spark, rows)).count() == 0
 
 
 class TestCelebrityKeyGate:
@@ -230,7 +155,7 @@ class TestCelebrityKeyGate:
     density probe (rules._hot_keys) that routes celebrity keys through
     the salted bucketed pair join — a window partition is one task, so
     a hot key would otherwise serialize on one core. The routed output
-    must be byte-identical to both pure forms."""
+    must equal the pure window form and the hand-labelled hits."""
 
     def _hot_city_rows(self):
         # hot card 1: 100 rows, city alternating every minute -> every
@@ -251,8 +176,6 @@ class TestCelebrityKeyGate:
     def test_diff_city_gate_routes_and_output_identical(self, spark):
         from etl_process_for_fraud_transactions_spark.operators.rules import (
             _hot_keys,
-            rule_diff_city_1h,
-            rule_diff_city_1h_window,
         )
 
         df = _city_df(spark, self._hot_city_rows())
@@ -275,15 +198,11 @@ class TestCelebrityKeyGate:
 
         key = lambda d: sorted((r.trans_id, r.client_id) for r in d.collect())
         got = key(routed)
-        assert got == key(pure_window) == key(rule_diff_city_1h(df))
-        assert len(got) == 102  # hot card's 100 + cold card 2's pair
+        # hot card 1's 100 rows (client 7) + cold card 2's pair (client 8)
+        want = sorted([(1000 + i, 7) for i in range(100)] + [(2000, 8), (2001, 8)])
+        assert got == key(pure_window) == want
 
     def test_brute_force_gate_routes_and_output_identical(self, spark):
-        from etl_process_for_fraud_transactions_spark.operators.rules import (
-            rule_brute_force_20min,
-            rule_brute_force_20min_window,
-        )
-
         # hot client 1 (60 rows > threshold 50): one firing 20-min run
         # (decreasing amounts, R,R,R,S) then sparse 30-min-spaced noise;
         # cold client 2: the canonical positive fixture
@@ -304,14 +223,12 @@ class TestCelebrityKeyGate:
 
         key = lambda d: sorted((r.client_id, r.trans_id) for r in d.collect())
         got = key(routed)
-        assert (
-            got
-            == key(rule_brute_force_20min_window(df, hot_key_max_rows=None))
-            == key(rule_brute_force_20min(df))
+        assert got == key(
+            rule_brute_force_20min_window(df, hot_key_max_rows=None)
         )
         # non-vacuous on BOTH legs: hot client fired via the pair leg,
-        # cold client via the window leg
-        assert {c for c, _ in got} == {1, 2}
+        # cold client via the window leg, each on its run's first attempt
+        assert got == [(1, 100), (2, 9000)]
 
 
 def test_hot_key_gate_persist_registry_releases_deterministically(spark):
@@ -411,25 +328,28 @@ def test_hot_key_gate_direct_caller_gets_release_handle(spark):
     assert not _live(out_bf._gate_persists[0])
 
 
-def test_dense_driver_row_routes_mixed_legs_at_sf0001(spark):
+def test_dense_driver_row_routes_mixed_legs_at_sf0001(spark, duck):
     """Round 12 (VERDICT r11 item 6): the registered
     brute_force_hits_dense row's gate (hot_key_max_rows=200)
     DEMONSTRABLY trips on driver data — at sf0.001 the measured probe
     routes dense clients {2, 4} (216/226 rows) through the salted
     pair leg while {0, 1, 3} stay on the window leg, and the mixed
-    union equals the pure pair form byte-for-byte (the same equality
-    the DuckDB oracle hashes)."""
+    union equals the pure window form and the row's DuckDB oracle
+    (the reference's SQL chain) row for row."""
     from pyspark.sql import functions as F
 
     from etl_process_for_fraud_transactions_spark.operators import rules as R
     from etl_process_for_fraud_transactions_spark.operators.rules import (
         _hot_keys,
     )
+    from etl_process_for_fraud_transactions_spark.plans import ORACLE
     from etl_process_for_fraud_transactions_spark.sources.testdata import (
         load_events,
     )
 
-    ev = load_events(spark, "/root/testdata/sf0.001")
+    from .conftest import SF_SMALL, register_views
+
+    ev = load_events(spark, SF_SMALL)
     resolved = ev.select(
         (F.col("user_id") % 5).alias("client_id"),
         F.concat(
@@ -452,6 +372,10 @@ def test_dense_driver_row_routes_mixed_legs_at_sf0001(spark):
 
     key = lambda out: sorted(tuple(r) for r in out.collect())
     mixed = R.rule_brute_force_20min_window(resolved, hot_key_max_rows=200)
-    assert key(mixed) == key(R.rule_brute_force_20min(resolved))
-    for f in registry:
+    got = key(mixed)
+    assert got == key(R.rule_brute_force_20min_window(resolved, hot_key_max_rows=None))
+    register_views(duck, SF_SMALL)
+    oracle = duck.execute(ORACLE["brute_force_hits_dense"]).fetchall()
+    assert got == sorted((int(c), int(t)) for c, t in oracle)
+    for f in registry + list(mixed._gate_persists):
         f.unpersist(blocking=True)
