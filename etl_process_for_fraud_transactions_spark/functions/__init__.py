@@ -5,5 +5,4 @@ from .core import (  # noqa: F401
     epoch_us,
     null_safe_concat_ws,
     open_ended_date,
-    ts_bucket,
 )

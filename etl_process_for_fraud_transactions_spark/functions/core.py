@@ -65,12 +65,6 @@ def epoch_us(col: Column | str) -> Column:
     return F.unix_micros(c.cast("timestamp"))
 
 
-def ts_bucket(col: Column | str, width_us: int) -> Column:
-    """Time bucket index (floor of epoch-us / width) used by the
-    bucketed range-join rewrite (SURVEY.md §4.3.1)."""
-    return F.floor(epoch_us(col) / F.lit(width_us))
-
-
 def any_attr_differs(left_prefix: str, right_prefix: str, attrs: Iterable[str]) -> Column:
     """OR-chain of null-unsafe `<>` over tracked attributes, exactly as
     the reference's SCD2 change predicate (main.py:151-157). A NULL on

@@ -4,7 +4,8 @@ SCD2 x4 -> facts -> five-rule report), per SURVEY.md §3.1.
 
 Differences by design (SURVEY.md §1.3, §2.12):
 - staging is ephemeral DataFrames (no truncate/reload dance);
-- dims are snapshot-rewritten atomically; facts are appended with
+- dims keep SCD2 history as append-only closed rows plus a rewritten
+  current table (operators.scd2_partitioned); facts are appended with
   dynamic partition overwrite on the batch date, so re-running a date
   is idempotent instead of silently duplicating (reference T1/T2);
 - errors fail fast (the reference swallows staging-cleanup errors and
@@ -21,7 +22,7 @@ from pyspark.sql import functions as F
 from ..functions.core import ddmmyyyy_to_date
 from ..functions.observability import observed_counts
 from ..operators.report import assemble_report
-from ..operators.scd2 import scd2_apply
+from ..operators.scd2_partitioned import PartitionedScd2
 from ..schemas import DIMENSIONS
 from ..sources.files import archive_batch_files, discover_batch_dates
 from ..sources.ingest import read_excel_sheet, read_semicolon_csv
@@ -41,7 +42,6 @@ class DailyFraudJob:
         warehouse_root: str,
         archive: bool = True,
         incremental_report: bool = False,
-        scd2_mode: str = "partitioned",
     ):
         self.spark = spark
         self.input_dir = input_dir
@@ -50,17 +50,6 @@ class DailyFraudJob:
         self.archive = archive
         #: per-batch write metrics keyed by '<table>_<date>' (observe-based)
         self.metrics: dict[str, dict] = {}
-        # "partitioned" (default): append-only closed partition +
-        # bounded current rewrite (operators.scd2_partitioned) — the
-        # at-scale mode where the per-batch cost stops growing with
-        # history depth (BASELINE.md growth table: flat vs snapshot's
-        # linear climb; 5-batch equivalence proven in
-        # test_scd2_partitioned.py). "snapshot": full-history rewrite
-        # per batch (reference-exact tuple-IN semantics,
-        # operators.scd2) — kept for reference-faithful replay.
-        if scd2_mode not in ("snapshot", "partitioned"):
-            raise ValueError(f"scd2_mode must be snapshot|partitioned, got {scd2_mode!r}")
-        self.scd2_mode = scd2_mode
         # The reference re-scans the FULL transaction fact for every
         # daily report (main.py:544), re-flagging all history into each
         # new report_dt partition — O(total history) per day. The
@@ -145,22 +134,16 @@ class DailyFraudJob:
             return df.select("card_num", F.col("account").alias("account_num"))
         raise ValueError(name)
 
-    def read_dim_history(self, name: str) -> DataFrame:
-        """The stable, layout-independent read API for dimension
-        history. Since the default flipped to scd2_mode='partitioned'
-        (round 4), the on-disk layout differs by mode — snapshot mode
-        keeps the single `dim_<name>_hist` table, partitioned mode
-        stores append-only closed partitions plus a current table —
-        so external consumers should read through this method (or pin
-        scd2_mode='snapshot') instead of wh.read('dim_<name>_hist').
-        Identical rows either way (5-batch equivalence,
-        test_scd2_partitioned.py)."""
-        if self.scd2_mode == "partitioned":
-            from ..operators.scd2_partitioned import PartitionedScd2
+    def _dim(self, name: str) -> PartitionedScd2:
+        keys, attrs = DIMENSIONS[name]
+        return PartitionedScd2(self.wh, f"dim_{name}", keys, attrs)
 
-            keys, attrs = DIMENSIONS[name]
-            return PartitionedScd2(self.wh, f"dim_{name}", keys, attrs).history()
-        return self.wh.read(f"dim_{name}_hist")
+    def read_dim_history(self, name: str) -> DataFrame:
+        """A dimension's full SCD2 history: the append-only closed rows
+        plus the current table (operators.scd2_partitioned). Equal to
+        the reference's single-table history replayed with scd2_apply
+        (tests/test_scd2_partitioned.py)."""
+        return self._dim(name).history()
 
     # -- per-date pipeline --------------------------------------------------
 
@@ -182,21 +165,8 @@ class DailyFraudJob:
         # every write below has actually consumed the input files.
 
         # SCD2 x4 (main.py:121-379)
-        for name, (keys, attrs) in DIMENSIONS.items():
-            if self.scd2_mode == "partitioned":
-                from ..operators.scd2_partitioned import PartitionedScd2
-
-                PartitionedScd2(self.wh, f"dim_{name}", keys, attrs).apply_batch(
-                    staging[name], batch
-                )
-            else:
-                dim = (
-                    self.wh.read(f"dim_{name}_hist")
-                    if self.wh.exists(f"dim_{name}_hist")
-                    else None
-                )
-                hist = scd2_apply(dim, staging[name], keys, attrs, batch)
-                self.wh.overwrite(f"dim_{name}_hist", hist)
+        for name in DIMENSIONS:
+            self._dim(name).apply_batch(staging[name], batch)
 
         # blacklist fact: insert-if-absent (J9, main.py:382-394)
         if self.wh.exists("fact_passport_blacklist"):
@@ -224,7 +194,7 @@ class DailyFraudJob:
             archive_batch_files(self.input_dir, date)
 
         # five-rule report over the full fact vs current dims (lazy
-        # current∪closed union in partitioned mode — never materialized)
+        # current∪closed union — never materialized)
         dims = {name: self.read_dim_history(name) for name in DIMENSIONS}
         fact = self.wh.read("fact_transactions")
         report = assemble_report(
@@ -244,13 +214,6 @@ class DailyFraudJob:
             ),
         )
         self.wh.append_partitioned("rep_fraud", report, "report_dt")
-        # a tripped celebrity-key gate persisted its hot-key frames;
-        # release them now that the report is materialized — a
-        # multi-date run would otherwise accumulate them per batch
-        # until LRU pressure (re-collecting the returned report
-        # recomputes the rules, correctly, just uncached)
-        for frame in getattr(report, "_rule_hit_frames", ()):
-            frame.unpersist()
         return report
 
     def run(self) -> list[str]:

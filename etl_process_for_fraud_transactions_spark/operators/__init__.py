@@ -1,2 +1,1 @@
 from .scd2 import scd2_bootstrap, scd2_apply  # noqa: F401
-from .rangejoin import bucketed_interval_self_join, bucketed_abs_window_self_join  # noqa: F401

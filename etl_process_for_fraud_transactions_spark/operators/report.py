@@ -4,12 +4,13 @@ Left-joins the fact to the dimension chain, the passport blacklist and
 the rule-4/rule-5 outputs, applies the prioritized CASE, filters to
 rows firing at least one rule, and stamps report_dt.
 
-One path: each rule has one implementation (the range-frame window
-forms in operators.rules), and the rule-hit join-backs carry no
-broadcast hint. The hit sets are a fraction of the fact and grow with
-it, so AQE picks the join strategy from runtime stats: broadcast while
-they are small, a shuffle join on a day whose hits outgrow the
-threshold, where a forced hint would abort instead.
+One path: each rule has one implementation (the sort-once window
+forms in operators.rules), and building the report runs no Spark job.
+The rule-hit join-backs carry no broadcast hint. The hit sets are a
+fraction of the fact and grow with it, so AQE picks the join strategy
+from runtime stats: broadcast while they are small, a shuffle join on
+a day whose hits outgrow the threshold, where a forced hint would
+abort instead.
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ from pyspark.sql import functions as F
 from ..functions.core import null_safe_concat_ws
 from .rules import (
     EV_BLOCKED_PASSPORT,
-    HOT_KEY_MAX_ROWS,
     EV_BRUTE_FORCE,
     EV_DIFF_CITY,
     EV_EXPIRED_PASSPORT,
@@ -41,7 +41,6 @@ def assemble_report(
     blacklist: DataFrame,
     report_dt: Column,
     report_trans: DataFrame | None = None,
-    hot_key_max_rows: int | None = HOT_KEY_MAX_ROWS,
 ) -> DataFrame:
     """The full five-rule report (main.py:414-560) as one DataFrame.
 
@@ -55,14 +54,6 @@ def assemble_report(
     rules keep the full `trans` for window context — the reference's
     full-fact daily rescan is O(total history) per day and not viable
     at scale.
-
-    `hot_key_max_rows`: the rules' measured celebrity-key gate
-    (rules.HOT_KEY_MAX_ROWS; None skips the probe and its two
-    plan-construction count() jobs, so building the report runs no
-    Spark job). A tripped probe persists its hot-key frame; those
-    frames ride on the result as `_rule_hit_frames` (empty when
-    nothing tripped) for the caller to unpersist once the report is
-    materialized.
     """
     resolved = resolve_transactions(trans, cards, accounts, clients, how="inner")
 
@@ -71,17 +62,10 @@ def assemble_report(
     # (req_start_for_4_rule, main.py:437-443) — an inner terminal join
     # there would drop transactions at unknown terminals from the
     # brute-force scan, changing its semantics.
-    gate_persists: list = []
     diff_city = rule_diff_city_1h_window(
-        attach_terminal_city(resolved, terminals),
-        hot_key_max_rows=hot_key_max_rows,
-        persist_registry=gate_persists,
+        attach_terminal_city(resolved, terminals)
     ).alias("h")
-    brute = rule_brute_force_20min_window(
-        resolved,
-        hot_key_max_rows=hot_key_max_rows,
-        persist_registry=gate_persists,
-    ).alias("r")
+    brute = rule_brute_force_20min_window(resolved).alias("r")
 
     # Final assembly uses LEFT joins (main.py:544-550): a transaction
     # that misses the dim chain still reaches the rule-1 probe.
@@ -124,7 +108,7 @@ def assemble_report(
         .when(brute_hit, F.lit(EV_BRUTE_FORCE))
     )  # no otherwise -> NULL, matching the CASE with no ELSE (main.py:542)
 
-    result = (
+    return (
         out.filter(blocked | expired | invalid | diff_city_hit | brute_hit)
         .select(
             F.col("t.trans_date").alias("event_dt"),
@@ -137,5 +121,3 @@ def assemble_report(
             report_dt.alias("report_dt"),
         )
     )
-    result._rule_hit_frames = tuple(gate_persists)
-    return result

@@ -1002,8 +1002,8 @@ def mask_frequent_spans_multi(
     `persist_registry`: the tokenized base is persisted (memory-and-
     disk, spill-safe) so every subtree reads the materialized arrays,
     and the frame is appended to the registry for deterministic
-    release after the result materializes — the _hot_keys /
-    cap_per_domain release convention; without a registry nothing is
+    release after the result materializes — the cap_per_domain
+    release convention; without a registry nothing is
     cached (an operator must not leak pinned storage to callers with
     no release handle)."""
     if not rungs:

@@ -384,8 +384,7 @@ def cap_per_domain(
     `for f in persisted: f.unpersist()` (ADVICE r10: this is the
     reliable handle for batch loops).
 
-    `over_cap_rows_hint` (round 14 — the fraud_report
-    hot_key_max_rows=None precedent): a CALLER-ASSERTED upper bound
+    `over_cap_rows_hint` (round 14): a CALLER-ASSERTED upper bound
     on the over-cap domain count that skips the plan-time count()
     probe and decides both hint gates from the bound instead. Use it
     only when the bound is provable without data — a corpus whose
@@ -395,13 +394,11 @@ def cap_per_domain(
     high side forces a broadcast the gate exists to prevent — when in
     doubt, keep the measured default (None). The over-cap aggregate
     still persists either way (three downstream joins reference it).
-    For back-compat the frames are
-    ALSO exposed on the result as `_persisted_frames` (the report.py
-    `_rule_hit_frames` precedent), but that attribute lives on THIS
-    DataFrame object only: any further transformation
-    (select/filter/withColumn) returns a new DataFrame without it, so
-    capture it before wrapping the result — or use the tuple return,
-    which has no such footgun.
+    For back-compat the frames are ALSO exposed on the result as
+    `_persisted_frames`, but that attribute lives on THIS DataFrame
+    object only: any further transformation (select/filter/withColumn)
+    returns a new DataFrame without it, so capture it before wrapping
+    the result — or use the tuple return, which has no such footgun.
 
     `materialize_ids` (r17, VERDICT r16 item 1 — guide §8 step 1 /
     §3.3 plan truncation): the slim (id, domain) proxy is

@@ -54,9 +54,4 @@ def flagship_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         dims["terminals"],
         d["blacklist"],
         report_dt=batch,
-        # the celebrity-key probe is two plan-construction count()
-        # jobs (~1s at sf0.1); the driver fixture provably has no key
-        # near HOT_KEY_MAX_ROWS, so the registered row opts out.
-        # Production keeps the measured default (jobs/daily.py).
-        hot_key_max_rows=None,
     )

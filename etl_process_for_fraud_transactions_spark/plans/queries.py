@@ -449,16 +449,13 @@ _DIFF_CITY_SQL = """
 )
 def diff_city_short_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rule 4 (J5 theta self-join, main.py:428-436) through the
-    report's own implementation: min/max city over a +/-1h range
-    frame per card. The fixture has no card near HOT_KEY_MAX_ROWS, so
-    the row skips the celebrity-key probe, as fraud_report does."""
+    report's own implementation: one sort per card, each row checked
+    against the nearest rows in another city before and after it."""
     d = analog.domain_frames(spark, sf_dir)
     resolved = R.resolve_transactions(
         d["transactions"], d["cards"], d["accounts"], d["clients"]
     )
-    return R.rule_diff_city_1h_window(
-        R.attach_terminal_city(resolved, d["terminals"]), hot_key_max_rows=None
-    )
+    return R.rule_diff_city_1h_window(R.attach_terminal_city(resolved, d["terminals"]))
 
 
 @query(
@@ -476,42 +473,18 @@ def diff_city_short_time(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def brute_force_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full rule 5 (main.py:444-530) through the report's own
-    implementation: a forward 20-minute range frame selects the
-    candidate windows (the reference's interval self-join -> HAVING),
-    the candidates' members are fetched by a bucketed interval join,
-    then double row_number -> 4-way INTERSECT -> reassembly. Output is
-    one row per candidate window (the J6+A1/A2 candidate stage — the
+    implementation: one row per candidate window (the reference's
+    interval self-join -> HAVING) with `is_hit` marking the windows
+    the full chain confirms (double row_number -> 4-way INTERSECT ->
+    reassembly), so both stages are hash-checked in one query (the
     former `brute_force_candidates` entry, folded in round 3 for the
-    driver's 50-query cap) with `is_hit` marking the windows the full
-    chain confirms, so both stages are hash-checked in one query.
-
-    No broadcast hint on the hits frame (round 9): hits are derived from
-    the transaction fact table — the confirmed-fraud set grows with the
-    data, so a forced broadcast cannot fall back if a bad day produces
-    millions of hits. AQE broadcasts it at runtime when it is small
-    (the common case), shuffles when it isn't."""
+    driver's 50-query cap). Both flags come from the same sort per
+    client, so no join brings the hits back to the candidates."""
     d = analog.domain_frames(spark, sf_dir)
     resolved = R.resolve_transactions(
         d["transactions"], d["cards"], d["accounts"], d["clients"]
     )
-    candidates = R.brute_force_candidates(resolved)
-    hits = R.rule_brute_force_20min_window(resolved, hot_key_max_rows=None).select(
-        F.col("client_id").alias("__hit_client"),
-        F.col("trans_id").alias("__hit_trans"),
-    )
-    return (
-        candidates.join(
-            hits,
-            (F.col("client_id") == F.col("__hit_client"))
-            & (F.col("trans_id_start") == F.col("__hit_trans")),
-            "left",
-        )
-        .select(
-            "client_id",
-            "trans_id_start",
-            F.col("__hit_client").isNotNull().alias("is_hit"),
-        )
-    )
+    return R.brute_force_candidates(resolved)
 
 
 _DENSE_REQ = """
@@ -552,36 +525,21 @@ def brute_force_hits_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits at sf0.01), exercising every stage of the chain with
     non-empty intermediates.
 
-    Round 12 (VERDICT r11 item 6): the row runs the GATED windowed
-    form with hot_key_max_rows=200, so the celebrity-key escape hatch
-    itself executes under the DuckDB hash instead of only under
-    planted pytests. The five dense clients carry ~n/5 rows each, so
-    the measured probe demonstrably trips on driver data: at sf0.001
-    clients 2 and 4 (216/226 rows) route through the SALTED PAIR leg
-    while 0/1/3 (<=193) stay on the window leg — the mixed union
-    under one hash — and at sf0.01+ every client routes hot. The
-    oracle is unchanged: both legs are byte-identical to the pair SQL
-    (the planted-hot-key pins), which is the point — routing is a
-    physical decision, never a semantic one."""
+    The five dense clients carry ~n/5 rows each, so this row is the
+    dense-key proof of the sort-once rule form: every client is one
+    window partition of thousands of rows, all checked against the
+    reference's SQL chain under the DuckDB hash."""
     ev = load_events(spark, sf_dir)
     resolved = ev.select(
         (F.col("user_id") % 5).alias("client_id"),
-        F.concat(F.lit("PX"), (F.col("user_id") % 5).cast("string")).alias(
-            "passport_num"
-        ),
         F.col("event_id").alias("trans_id"),
         F.col("value").alias("amt"),
         F.col("ts").alias("trans_date"),
         F.when(F.col("event_type") == "purchase", F.lit("SUCCESS"))
         .otherwise(F.lit("REJECT"))
         .alias("oper_result"),
-    ).localCheckpoint()  # round 13 (VERDICT r12 item 6): the gate's
-    # eager probe count, BOTH candidate legs and the member fetch all
-    # consume this frame — one materialization instead of 4-5
-    # re-derivations of the events scan (the ivf_cosine_topk lesson;
-    # a demo-scale decision: at production scale the resolved frame
-    # is a persisted staging table, not an in-plan projection)
-    return R.rule_brute_force_20min_window(resolved, hot_key_max_rows=200)
+    )
+    return R.rule_brute_force_20min_window(resolved)
 
 
 #: clients erased through the REAL Warehouse.erase_keys after the
@@ -782,9 +740,4 @@ def fraud_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         d["blacklist"],
         # string, not DATE: see date_arithmetic_probe docstring
         report_dt=F.lit("2024-01-31"),
-        # the celebrity-key probe is two plan-construction count()
-        # jobs (~1s at sf0.1); the driver fixture provably has no key
-        # near HOT_KEY_MAX_ROWS, so the registered row opts out.
-        # Production keeps the measured default (jobs/daily.py).
-        hot_key_max_rows=None,
     )

@@ -1522,8 +1522,7 @@ def url_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~2.5-3 s per driver call here (it re-evaluates the dedup chain),
     # which was MOST of this row's 5.2-5.5 s budget cost. Production
     # callers without a provable bound keep the measured default
-    # (jobs/training_data.py) — the fraud_report hot_key_max_rows
-    # opt-out precedent.
+    # (jobs/training_data.py).
     capped = cap_per_domain(filtered, max_docs=8, over_cap_rows_hint=64)
     probe_url = F.concat(
         F.lit("https://"),

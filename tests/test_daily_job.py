@@ -108,15 +108,25 @@ def test_two_batch_pipeline(spark, fixture_dirs):
     assert fact.count() == 4
 
 
-def test_partitioned_scd2_mode_equivalent_report(spark, fixture_dirs):
+def test_partitioned_scd2_matches_scd2_apply_replay(spark, fixture_dirs):
+    """The job's SCD2 histories and reports equal scd2_apply (the
+    reference's single-table rewrite) replayed per date on the same
+    staged inputs, across a batch that changes a source row."""
+    from etl_process_for_fraud_transactions_spark.schemas import DIMENSIONS
+    from etl_process_for_fraud_transactions_spark.sources.warehouse import Warehouse
+
+    from .conftest import scd2_apply_replay, written_and_replayed_report
+
     input_dir, source_dir, wh_dir, write_batch = fixture_dirs
     # archive must stay on: with unconsumed batch-1 files still in the
     # inbox, run() would re-discover and re-apply 01012024 against the
     # mutated source before reaching batch 2
-    job = DailyFraudJob(
-        spark, input_dir, source_dir, wh_dir + "_p", scd2_mode="partitioned"
-    )
+    job = DailyFraudJob(spark, input_dir, source_dir, wh_dir + "_p")
+    model = Warehouse(spark, wh_dir + "_model")
+    dims = scd2_apply_replay(job, model, "01012024")
     job.run()
+    written, replayed = written_and_replayed_report(job, dims, "01012024")
+    assert written == replayed
     rep = {(r.passport, r.event_type) for r in job.wh.read("rep_fraud").collect()}
     assert ("P200", "EXPIRED_PASSPORT") in rep
     assert ("P100", "DIFF_CITY_SHORT_TIME") in rep
@@ -133,10 +143,16 @@ def test_partitioned_scd2_mode_equivalent_report(spark, fixture_dirs):
     shutil.rmtree(os.path.join(source_dir, "clients.parquet"))
     shutil.move(tmp, os.path.join(source_dir, "clients.parquet"))
     write_batch("02012024", ["tx8;2024-01-02 09:00:00;card1;PAY;5,00;SUCCESS;t1"], [])
+    dims = scd2_apply_replay(job, model, "02012024")
     job.run()
+    written, replayed = written_and_replayed_report(job, dims, "02012024")
+    assert written == replayed
     hist = job.read_dim_history("clients")
     c1 = sorted((r.phone, str(r.effective_to), r.deleted_flg) for r in hist.filter("client_id='c1'").collect())
     assert c1 == [("+71", "2024-01-02", True), ("+71P", "3000-01-01", False)]
+    for name in DIMENSIONS:
+        got = sorted(map(tuple, job.read_dim_history(name).collect()))
+        assert got == sorted(map(tuple, dims[name].collect())), name
 
 
 def test_incremental_report_only_batch_rows(spark, fixture_dirs):

@@ -208,18 +208,16 @@ def test_global_top_orders_takeordered(spark):
     assert "Exchange rangepartitioning" not in plan
 
 
-def test_bucketed_self_joins_are_equi_joins(spark):
-    """The reference's 1h/20min theta self-joins must never plan as
-    O(n^2)-per-key joins. Rule 4 has no self-join left: one range-frame
-    window, and its only joins are the broadcast dim lookups. Rule 5's
-    member fetch plans as a hash equi-join on the (bucket, key)
-    composite."""
-    plan = _plan(spark, "diff_city_short_time")
-    assert "Window" in plan
-    assert "ShuffledHashJoin" not in plan and "SortMergeJoin" not in plan
-    plan = _plan(spark, "brute_force_hits")
-    assert ("ShuffledHashJoin" in plan) or ("SortMergeJoin" in plan)
-    assert "__bucket" in plan
+def test_sequence_rules_plan_windows_not_self_joins(spark):
+    """The reference's 1h/20min theta self-joins plan as windows over
+    one exchange per key: each rule row plans a Window, no time bucket
+    and no join beyond the broadcast dimension lookups."""
+    for name in ("diff_city_short_time", "brute_force_hits"):
+        plan = _plan(spark, name)
+        assert "Window" in plan, name
+        assert "__bucket" not in plan, name
+        joins = re.findall(r"\b(\w*Join)\b", plan)
+        assert joins and set(joins) == {"BroadcastHashJoin"}, (name, joins)
 
 
 def test_asof_join_has_no_pair_explosion(spark):
@@ -521,11 +519,9 @@ def test_fraud_report_aqe_converts_rule_hit_joins(spark):
 
 
 def test_fraud_report_builds_without_spark_jobs(spark):
-    """Building the report is lazy. With the celebrity-key probe off
-    (hot_key_max_rows=None, the driver rows' setting) assemble_report
-    runs no Spark job: the rule-hit join-backs are left to AQE, with
-    no persist or count() ahead of the report. The gated default's
-    eager work is the probe's count(), so the counter sees jobs there."""
+    """Building the report is lazy: assemble_report runs no Spark job.
+    No rule probes its keys ahead of the report, and the rule-hit
+    join-backs are left to AQE, with no persist or count()."""
     from etl_process_for_fraud_transactions_spark.operators.report import (
         assemble_report,
     )
@@ -537,14 +533,9 @@ def test_fraud_report_builds_without_spark_jobs(spark):
     d = analog.domain_frames(spark, SF_SMALL)
     args = (d["transactions"], d["cards"], d["accounts"], d["clients"],
             d["terminals"], d["blacklist"])
-    with spark_jobs(spark) as ungated:
-        assemble_report(*args, report_dt=F.lit("2024-01-31"), hot_key_max_rows=None)
-    assert ungated == []
-    with spark_jobs(spark) as gated:
-        report = assemble_report(*args, report_dt=F.lit("2024-01-31"))
-    assert gated
-    for frame in report._rule_hit_frames:
-        frame.unpersist()
+    with spark_jobs(spark) as jobs:
+        assemble_report(*args, report_dt=F.lit("2024-01-31"))
+    assert jobs == []
 
 
 def test_zscore_stats_back_join_broadcasts_via_aqe(spark):

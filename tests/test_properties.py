@@ -1,8 +1,6 @@
 """Property-based tests (hypothesis): custom operators are checked
 against brute-force reference models on randomized inputs.
 
-- bucketed range joins ≡ naive join + residual filter (catches bucket
-  boundary/tagging mistakes no example test would);
 - SCD2 ≡ a driver-side dict model of close-out/insert semantics over
   random multi-batch histories;
 - prefix-filtered Jaccard ≡ all-pairs brute force;
@@ -24,10 +22,6 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_process_for_fraud_transactions_spark.operators.rangejoin import (
-    bucketed_abs_window_self_join,
-    bucketed_interval_self_join,
-)
 from etl_process_for_fraud_transactions_spark.operators.scd2 import scd2_apply
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
@@ -57,44 +51,6 @@ def _df(spark, rows):
         for i, (k, s, us) in enumerate(rows)
     ]
     return spark.createDataFrame(data, schema), data
-
-
-@settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
-@given(events_strategy)
-def test_interval_join_matches_naive(spark, rows):
-    df, data = _df(spark, rows)
-    got = {
-        (r[0], r[1])
-        for r in bucketed_interval_self_join(df, ["k"], "ts", WINDOW_US)
-        .select(F.col("r1.id"), F.col("r2.id"))
-        .collect()
-    }
-    want = {
-        (i1, i2)
-        for i1, k1, t1 in data
-        for i2, k2, t2 in data
-        if k1 == k2 and t1 <= t2 <= t1 + dt.timedelta(microseconds=WINDOW_US)
-    }
-    assert got == want
-
-
-@settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
-@given(events_strategy)
-def test_abs_window_join_matches_naive(spark, rows):
-    df, data = _df(spark, rows)
-    got = {
-        (r[0], r[1])
-        for r in bucketed_abs_window_self_join(df, ["k"], "ts", WINDOW_US)
-        .select(F.col("a.id"), F.col("b.id"))
-        .collect()
-    }
-    want = {
-        (i1, i2)
-        for i1, k1, t1 in data
-        for i2, k2, t2 in data
-        if k1 == k2 and abs((t1 - t2).total_seconds()) * 1_000_000 <= WINDOW_US
-    }
-    assert got == want
 
 
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
@@ -390,6 +346,17 @@ DIFF_CITY_EDGE = [
     (1, 0, 0, "A", 2), (1, 3_600, 1, "B", 3),
 ]
 
+#: equal-timestamp peers in different cities: card 0's two peers hit
+#: each other; card 1's same-city peers hit nothing (their other city
+#: is 1h + 1 µs later); card 2's three peers straddle two cities and
+#: also reach the C row exactly 1h later, which hits back
+DIFF_CITY_PEERS = [
+    (0, 0, 0, "A", 0), (0, 0, 0, "B", 1),
+    (1, 0, 0, "A", 2), (1, 0, 0, "A", 3), (1, 3_600, 1, "B", 2),
+    (2, 100, 0, "B", 0), (2, 100, 0, "A", 1), (2, 100, 0, "B", 2),
+    (2, 100, 0, None, 3), (2, 3_700, 0, "C", 3),
+]
+
 
 def _diff_city_frame(spark, rows):
     data = [
@@ -418,17 +385,18 @@ def _duck_rows(con, columns, data):
 
 @given(rows=diff_city_rows)
 @example(rows=DIFF_CITY_EDGE)
+@example(rows=DIFF_CITY_PEERS)
 @settings(
     max_examples=40,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_rule_diff_city_window_matches_sql_oracle(spark, duck, rows):
-    """Rule 4's range-frame window equals the reference's SQL self-join
-    (the diff_city_short_time oracle's SELECT) run by DuckDB on the
-    same randomized card/time/city rows — including null cities
-    (neither hits nor witnesses), the closed 1h bound to the
-    microsecond and duplicate rows."""
+    """Rule 4's sort-once window form equals the reference's SQL
+    self-join (the diff_city_short_time oracle's SELECT) run by DuckDB
+    on the same randomized card/time/city rows — including null
+    cities (neither hits nor witnesses), the closed 1h bound to the
+    microsecond, equal-timestamp peers and duplicate rows."""
     from etl_process_for_fraud_transactions_spark.operators.rules import (
         rule_diff_city_1h_window,
     )
@@ -473,6 +441,18 @@ BRUTE_EDGE = [
     )
 ]
 
+#: equal-timestamp peers share one frame, and equal amounts sit on
+#: both sides of an anchor (trans_id breaks the tie). Client 0's two
+#: peers at 0 s both hit: the later peer's frame also starts at the
+#: earlier one. Client 1's peers at 600 s carry the amount of the rows
+#: before and after them.
+BRUTE_PEERS = [
+    (0, 0, 0, 4, "REJECT"), (0, 0, 0, 4, "REJECT"),
+    (0, 300, 0, 3, "REJECT"), (0, 600, 0, 2, "SUCCESS"),
+    (1, 0, 0, 3, "REJECT"), (1, 600, 0, 3, "REJECT"), (1, 600, 0, 3, "REJECT"),
+    (1, 900, 0, 3, "REJECT"), (1, 1_200, 0, 1, "SUCCESS"), (1, 1_800, 0, 3, "SUCCESS"),
+]
+
 
 def _brute_frame(spark, rows):
     data = [
@@ -501,22 +481,24 @@ def _brute_frame(spark, rows):
 
 @given(rows=brute_rows)
 @example(rows=BRUTE_EDGE)
+@example(rows=BRUTE_PEERS)
 @settings(
     max_examples=40,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_rule_brute_force_window_matches_sql_oracle(spark, duck, rows):
-    """Rule 5 (windowed candidate stage, member fetch, verdicts tail)
+    """Rule 5's sort-once form (candidates and hits from one pass)
     equals the reference's SQL chain run by DuckDB on the same
     randomized client/time/amount/outcome rows: the oracle's own
     joined_req interval self-join over the rows, then `_RULE5_TAIL`
     (HAVING -> double row_number -> 4-way INTERSECT -> reassembly).
-    Covers dense REJECT bursts, amount ties (broken by trans_id in
-    both), the closed 20-min bound to the microsecond and overlapping
-    windows."""
+    Both stages are compared: every candidate window with its hit
+    flag. Covers dense REJECT bursts, amount ties (broken by trans_id
+    in both), equal-timestamp peers, the closed 20-min bound to the
+    microsecond and overlapping windows."""
     from etl_process_for_fraud_transactions_spark.operators.rules import (
-        rule_brute_force_20min_window,
+        brute_force_candidates,
     )
     from etl_process_for_fraud_transactions_spark.plans.queries import (
         _REQ_CTES,
@@ -537,64 +519,12 @@ def test_rule_brute_force_window_matches_sql_oracle(spark, duck, rows):
         "WITH req_start_for_4_rule AS (SELECT * FROM prop_rows),\n"
         + joined_req
         + _RULE5_TAIL
-        + "\nSELECT client_id, trans_id FROM reassembly_of_amounts"
+        + "\nSELECT s.client_id, s.trans_id_start, r.trans_id IS NOT NULL"
+        " FROM selected_req s LEFT JOIN reassembly_of_amounts r"
+        " ON r.client_id = s.client_id AND r.trans_id = s.trans_id_start"
     ).fetchall()
-    got = [
-        (r["client_id"], r["trans_id"])
-        for r in rule_brute_force_20min_window(df).collect()
-    ]
+    got = [tuple(r) for r in brute_force_candidates(df).collect()]
     assert sorted(got) == sorted(want)
-
-
-# --- celebrity-key gate routing equivalence (round 11) --------------------
-
-@given(rows=diff_city_rows)
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_rule_diff_city_gate_routing_matches_ungated(spark, rows):
-    """The measured celebrity-key gate must be output-invariant on
-    ARBITRARY data, not just the planted fixture: with a tiny
-    threshold (hot cards trip constantly on these densities, including
-    the duplicate-(trans_id, client_id)-across-legs corner the outer
-    distinct exists for), the routed hot/cold union equals the pure
-    window form."""
-    from etl_process_for_fraud_transactions_spark.operators.rules import (
-        rule_diff_city_1h_window,
-    )
-
-    df, _ = _diff_city_frame(spark, rows)
-    key = lambda out: sorted(
-        (r["trans_id"], r["client_id"]) for r in out.collect()
-    )
-    assert key(rule_diff_city_1h_window(df, hot_key_max_rows=3)) == key(
-        rule_diff_city_1h_window(df, hot_key_max_rows=None)
-    )
-
-
-@given(rows=brute_rows)
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_rule_brute_force_gate_routing_matches_ungated(spark, rows):
-    """Rule 5's gated member union (window candidates + member fetch
-    for cold clients, salted pair members for hot ones) must equal the
-    pure windowed form on arbitrary dense/tied/boundary data."""
-    from etl_process_for_fraud_transactions_spark.operators.rules import (
-        rule_brute_force_20min_window,
-    )
-
-    df, _ = _brute_frame(spark, rows)
-    key = lambda out: sorted(
-        (r["client_id"], r["trans_id"]) for r in out.collect()
-    )
-    assert key(rule_brute_force_20min_window(df, hot_key_max_rows=3)) == key(
-        rule_brute_force_20min_window(df, hot_key_max_rows=None)
-    )
 
 
 # --- RRF fusion vs pure-python replay (round 11) --------------------------

@@ -150,17 +150,14 @@ class TestBruteForce:
         assert rule_brute_force_20min_window(_bf_df(spark, rows)).count() == 0
 
 
-class TestCelebrityKeyGate:
-    """Round 11: the windowed rule forms carry a measured per-key
-    density probe (rules._hot_keys) that routes celebrity keys through
-    the salted bucketed pair join — a window partition is one task, so
-    a hot key would otherwise serialize on one core. The routed output
-    must equal the pure window form and the hand-labelled hits."""
+class TestDenseKey:
+    """A dense key is one window partition of many rows, checked with
+    one sort; the hits must equal the hand-labelled sets."""
 
-    def _hot_city_rows(self):
-        # hot card 1: 100 rows, city alternating every minute -> every
-        # row has a differing witness inside +/-1h; cold card 2 fires
-        # once; cold card 3 never fires
+    def test_diff_city_dense_card(self, spark):
+        # dense card 1: 100 rows, city alternating every minute -> every
+        # row has a differing witness inside +/-1h; card 2 fires once;
+        # card 3 never fires
         rows = [
             (1, 1000 + i, _mins(i), "CITY_A" if i % 2 == 0 else "CITY_B", 7)
             for i in range(100)
@@ -171,190 +168,59 @@ class TestCelebrityKeyGate:
             (3, 3000, _mins(0), "CITY_A", 9),
             (3, 3001, _mins(10), "CITY_A", 9),
         ]
-        return rows
-
-    def test_diff_city_gate_routes_and_output_identical(self, spark):
-        from etl_process_for_fraud_transactions_spark.operators.rules import (
-            _hot_keys,
+        got = sorted(
+            (r.trans_id, r.client_id)
+            for r in rule_diff_city_1h_window(_city_df(spark, rows)).collect()
         )
-
-        df = _city_df(spark, self._hot_city_rows())
-        base = df.select(
-            "card_num", "trans_id", "trans_date", "terminal_city", "client_id"
-        )
-        # the probe trips on exactly the planted hot card
-        hot = _hot_keys(base, "card_num", 50)
-        assert [r.card_num for r in hot.collect()] == [1]
-        assert _hot_keys(base, "card_num", 1000) is None  # below density
-
-        routed = rule_diff_city_1h_window(df, hot_key_max_rows=50)
-        # the gate visibly split the plan: window leg UNION pair leg
-        assert "Union" in routed._jdf.queryExecution().analyzed().toString()
-        pure_window = rule_diff_city_1h_window(df, hot_key_max_rows=None)
-        assert (
-            "Union"
-            not in pure_window._jdf.queryExecution().analyzed().toString()
-        )
-
-        key = lambda d: sorted((r.trans_id, r.client_id) for r in d.collect())
-        got = key(routed)
-        # hot card 1's 100 rows (client 7) + cold card 2's pair (client 8)
+        # dense card 1's 100 rows (client 7) + card 2's pair (client 8)
         want = sorted([(1000 + i, 7) for i in range(100)] + [(2000, 8), (2001, 8)])
-        assert got == key(pure_window) == want
+        assert got == want
 
-    def test_brute_force_gate_routes_and_output_identical(self, spark):
-        # hot client 1 (60 rows > threshold 50): one firing 20-min run
-        # (decreasing amounts, R,R,R,S) then sparse 30-min-spaced noise;
-        # cold client 2: the canonical positive fixture
-        hot = _bf_rows(
+    def test_brute_force_dense_client(self, spark):
+        # dense client 1 (60 rows): one firing 20-min run (decreasing
+        # amounts, R,R,R,S) then sparse 30-min-spaced noise; client 2:
+        # the canonical positive fixture
+        dense = _bf_rows(
             [(400.0, "REJECT"), (300.0, "REJECT"),
              (200.0, "REJECT"), (100.0, "SUCCESS")],
             client=1, first_id=100,
         )
-        hot += _bf_rows(
+        dense += _bf_rows(
             [(50.0, "SUCCESS")] * 56,
             start_min=60, step_min=30, client=1, first_id=500,
         )
-        cold = _bf_rows(TestBruteForce.POSITIVE, client=2, first_id=9000)
-        df = _bf_df(spark, hot + cold)
-
-        routed = rule_brute_force_20min_window(df, hot_key_max_rows=50)
-        assert "Union" in routed._jdf.queryExecution().analyzed().toString()
-
-        key = lambda d: sorted((r.client_id, r.trans_id) for r in d.collect())
-        got = key(routed)
-        assert got == key(
-            rule_brute_force_20min_window(df, hot_key_max_rows=None)
+        sparse = _bf_rows(TestBruteForce.POSITIVE, client=2, first_id=9000)
+        df = _bf_df(spark, dense + sparse)
+        got = sorted(
+            (r.client_id, r.trans_id)
+            for r in rule_brute_force_20min_window(df).collect()
         )
-        # non-vacuous on BOTH legs: hot client fired via the pair leg,
-        # cold client via the window leg, each on its run's first attempt
+        # each client fires on its run's first attempt
         assert got == [(1, 100), (2, 9000)]
 
 
-def test_hot_key_gate_persist_registry_releases_deterministically(spark):
-    """A tripped probe's persisted hot-key frame lands in the caller's
-    persist_registry (and, through assemble_report, in
-    _rule_hit_frames) so a per-date loop releases it instead of
-    accumulating cache until LRU pressure — the cap_per_domain
-    deterministic-release lesson applied to the gate."""
-    from etl_process_for_fraud_transactions_spark.operators.rules import (
-        rule_diff_city_1h_window,
-    )
-
-    # assert the registered frame's OWN storage level, not a global
-    # persistent-RDD count delta — the async ContextCleaner shrinks
-    # the global set mid-test (the flake class fixed in r12/r13's
-    # cache-release tests; this test carried the last instance)
-    def _live(frame):
-        lvl = frame.storageLevel
-        return lvl.useMemory or lvl.useDisk
-
-    rows = [
-        (1, 1000 + i, _mins(i), "CITY_A" if i % 2 == 0 else "CITY_B", 7)
-        for i in range(60)
-    ]
-    df = _city_df(spark, rows)
-    registry: list = []
-    out = rule_diff_city_1h_window(
-        df, hot_key_max_rows=50, persist_registry=registry
-    )
-    out.collect()
-    assert len(registry) == 1
-    assert all(_live(f) for f in registry)
-    for f in registry:
-        f.unpersist(blocking=True)
-    assert not any(_live(f) for f in registry)
-    # an untripped probe registers nothing (and unpersists internally)
-    registry2: list = []
-    rule_diff_city_1h_window(
-        df, hot_key_max_rows=1000, persist_registry=registry2
-    ).collect()
-    assert registry2 == []
-
-
-def test_hot_key_gate_direct_caller_gets_release_handle(spark):
-    """Round 12 (ADVICE r11): a DIRECT call without a persist_registry
-    must still surface the tripped probe's persisted frame —
-    `result._gate_persists` — so repeated direct calls have a
-    deterministic unpersist handle instead of leaking cache until LRU
-    pressure."""
-    from etl_process_for_fraud_transactions_spark.operators.rules import (
-        rule_brute_force_20min_window,
-        rule_diff_city_1h_window,
-    )
-
-    def _live(frame):
-        lvl = frame.storageLevel
-        return lvl.useMemory or lvl.useDisk
-
-    rows = [
-        (1, 1000 + i, _mins(i), "CITY_A" if i % 2 == 0 else "CITY_B", 7)
-        for i in range(60)
-    ]
-    df = _city_df(spark, rows)
-    out = rule_diff_city_1h_window(df, hot_key_max_rows=50)
-    out.collect()
-    handles = out._gate_persists
-    assert len(handles) == 1
-    # assertions ride the handle's OWN storage level, not a global
-    # persistent-RDD count — Spark's async ContextCleaner can shrink
-    # the global count mid-test in a full-suite session
-    assert _live(handles[0])
-    for f in handles:
-        f.unpersist(blocking=True)
-    assert not _live(handles[0])
-
-    # untripped probe: no attribute (nothing persisted to release)
-    cold = rule_diff_city_1h_window(df, hot_key_max_rows=1000)
-    cold.collect()
-    assert not hasattr(cold, "_gate_persists")
-
-    # the brute-force wrapper carries the same contract
-    bf_rows = [
-        (7, 2000 + i, 100.0 - i, _mins(i % 19), "REJECT")
-        for i in range(60)
-    ]
-    bf = spark.createDataFrame(
-        bf_rows,
-        "client_id: int, trans_id: long, amt: double, "
-        "trans_date: timestamp, oper_result: string",
-    )
-    out_bf = rule_brute_force_20min_window(bf, hot_key_max_rows=50)
-    out_bf.collect()
-    assert len(out_bf._gate_persists) == 1
-    assert _live(out_bf._gate_persists[0])
-    for f in out_bf._gate_persists:
-        f.unpersist(blocking=True)
-    assert not _live(out_bf._gate_persists[0])
-
-
-def test_dense_driver_row_routes_mixed_legs_at_sf0001(spark, duck):
-    """Round 12 (VERDICT r11 item 6): the registered
-    brute_force_hits_dense row's gate (hot_key_max_rows=200)
-    DEMONSTRABLY trips on driver data — at sf0.001 the measured probe
-    routes dense clients {2, 4} (216/226 rows) through the salted
-    pair leg while {0, 1, 3} stay on the window leg, and the mixed
-    union equals the pure window form and the row's DuckDB oracle
-    (the reference's SQL chain) row for row."""
+def test_dense_driver_row_matches_sql_oracle_at_sf001(spark, duck):
+    """The brute_force_hits_dense row's mapping at sf0.01: five
+    clients of ~2,000 rows each, every one a single window partition
+    (at sf0.001 no window holds four attempts, so both stages would
+    be empty there).
+    Both rule-5 stages equal the reference's SQL chain on DuckDB row
+    for row: every candidate window with its hit flag, and the row's
+    hits against its registered oracle."""
     from pyspark.sql import functions as F
 
     from etl_process_for_fraud_transactions_spark.operators import rules as R
-    from etl_process_for_fraud_transactions_spark.operators.rules import (
-        _hot_keys,
-    )
-    from etl_process_for_fraud_transactions_spark.plans import ORACLE
+    from etl_process_for_fraud_transactions_spark.plans import ORACLE, QUERIES
+    from etl_process_for_fraud_transactions_spark.plans.queries import _DENSE_CHAIN
     from etl_process_for_fraud_transactions_spark.sources.testdata import (
         load_events,
     )
 
-    from .conftest import SF_SMALL, register_views
+    from .conftest import SF_ORACLE, register_views
 
-    ev = load_events(spark, SF_SMALL)
+    ev = load_events(spark, SF_ORACLE)
     resolved = ev.select(
         (F.col("user_id") % 5).alias("client_id"),
-        F.concat(
-            F.lit("PX"), (F.col("user_id") % 5).cast("string")
-        ).alias("passport_num"),
         F.col("event_id").alias("trans_id"),
         F.col("value").alias("amt"),
         F.col("ts").alias("trans_date"),
@@ -362,20 +228,19 @@ def test_dense_driver_row_routes_mixed_legs_at_sf0001(spark, duck):
         .otherwise(F.lit("REJECT"))
         .alias("oper_result"),
     )
-    base = resolved.select(
-        "client_id", "trans_id", "amt", "trans_date", "oper_result"
-    )
-    registry: list = []
-    hot = _hot_keys(base, "client_id", 200, persist_registry=registry)
-    assert hot is not None
-    assert {r.client_id for r in hot.collect()} == {2, 4}
+    register_views(duck, SF_ORACLE)
+    want = duck.execute(
+        f"WITH {_DENSE_CHAIN}\n"
+        "SELECT s.client_id, s.trans_id_start, r.trans_id IS NOT NULL"
+        " FROM selected_req s LEFT JOIN reassembly_of_amounts r"
+        " ON r.client_id = s.client_id AND r.trans_id = s.trans_id_start"
+    ).fetchall()
+    got = [tuple(r) for r in R.brute_force_candidates(resolved).collect()]
+    assert want  # non-vacuous: the dense clients hold candidate windows
+    assert sorted(got) == sorted((int(c), int(t), h) for c, t, h in want)
 
-    key = lambda out: sorted(tuple(r) for r in out.collect())
-    mixed = R.rule_brute_force_20min_window(resolved, hot_key_max_rows=200)
-    got = key(mixed)
-    assert got == key(R.rule_brute_force_20min_window(resolved, hot_key_max_rows=None))
-    register_views(duck, SF_SMALL)
+    row = QUERIES["brute_force_hits_dense"](spark, SF_ORACLE)
     oracle = duck.execute(ORACLE["brute_force_hits_dense"]).fetchall()
-    assert got == sorted((int(c), int(t)) for c, t in oracle)
-    for f in registry + list(mixed._gate_persists):
-        f.unpersist(blocking=True)
+    assert sorted(tuple(r) for r in row.collect()) == sorted(
+        (int(c), int(t)) for c, t in oracle
+    )

@@ -71,10 +71,10 @@ def _hist_rows(df):
     )
 
 
-def test_five_batch_daily_job_modes_equivalent(spark, tmp_path):
-    """Full daily job over 5 batch dates in BOTH SCD2 modes (snapshot =
-    reference-exact full rewrite; partitioned = append-only closed +
-    bounded current): dim histories and fraud reports must agree row
+def test_five_batch_daily_job_matches_scd2_apply_replay(spark, tmp_path):
+    """Full daily job over 5 batch dates against scd2_apply (the
+    reference-exact full rewrite) replayed per date on the same staged
+    inputs: dim histories and each date's fraud report must agree row
     for row when attribute tuples don't repeat across versions."""
     import shutil
 
@@ -82,6 +82,8 @@ def test_five_batch_daily_job_modes_equivalent(spark, tmp_path):
 
     from etl_process_for_fraud_transactions_spark.jobs.daily import DailyFraudJob
     from etl_process_for_fraud_transactions_spark.schemas import DIMENSIONS
+
+    from .conftest import scd2_apply_replay, written_and_replayed_report
 
     input_dir = tmp_path / "incoming"
     source_dir = tmp_path / "sourcedb"
@@ -126,12 +128,9 @@ def test_five_batch_daily_job_modes_equivalent(spark, tmp_path):
         )
         (input_dir / f"passport_blacklist_{date}.csv").write_text("passport,date\n")
 
-    snap = DailyFraudJob(spark, str(input_dir), str(source_dir),
-                         str(tmp_path / "wh_snap"), archive=False,
-                         scd2_mode="snapshot")
     part = DailyFraudJob(spark, str(input_dir), str(source_dir),
-                         str(tmp_path / "wh_part"), archive=False,
-                         scd2_mode="partitioned")
+                         str(tmp_path / "wh_part"), archive=False)
+    model = Warehouse(spark, str(tmp_path / "wh_model"))
 
     # phone histories never repeat a prior value per client, so the
     # documented tuple-IN divergence cannot trigger here
@@ -149,23 +148,19 @@ def test_five_batch_daily_job_modes_equivalent(spark, tmp_path):
             f"tx{i}a;2024-01-{i + 1:02d} 10:00:00;card0;PAY;10,00;SUCCESS;t1",
             f"tx{i}b;2024-01-{i + 1:02d} 10:30:00;card0;PAY;20,00;SUCCESS;t2",
         ])
-        snap.run_batch(date)
+        dims = scd2_apply_replay(part, model, date)
         part.run_batch(date)
+        written, replayed = written_and_replayed_report(part, dims, date)
+        assert written == replayed, date
+        # c0's diff-city pair fires every day
+        assert written, date
 
-    assert _hist_rows(snap.wh.read("dim_clients_hist")) == _hist_rows(
-        part.read_dim_history("clients")
-    )
+    assert _hist_rows(dims["clients"]) == _hist_rows(part.read_dim_history("clients"))
     # every dim agrees, not just clients
     for name in DIMENSIONS:
-        s_rows = sorted(map(tuple, snap.wh.read(f"dim_{name}_hist").collect()))
+        s_rows = sorted(map(tuple, dims[name].collect()))
         p_rows = sorted(map(tuple, part.read_dim_history(name).collect()))
         assert s_rows == p_rows, name
-
-    rep_s = sorted(map(tuple, snap.wh.read("rep_fraud").collect()))
-    rep_p = sorted(map(tuple, part.wh.read("rep_fraud").collect()))
-    assert rep_s == rep_p
-    # c0's diff-city pairs fire every day in both modes
-    assert len(rep_s) > 0
 
 
 def test_tuple_repeat_divergence_documented(spark, tmp_path):

@@ -53,239 +53,3 @@ def test_salted_join_left_outer(spark):
     )
     assert out == [(1, "one"), (99, None)]
 
-
-# --- hot-key stress for the bucketed self-joins ---------------------------
-
-def _hot_key_events(spark):
-    """One pathological card (~2000 events inside one hour — the
-    single-(key,bucket) straggler shape) plus 50 normal cards."""
-    import random
-    from datetime import datetime, timedelta
-
-    rng = random.Random(7)
-    base = datetime(2024, 1, 1, 10, 0, 0)
-    rows = [
-        (111, base + timedelta(seconds=rng.randint(0, 3600)), i)
-        for i in range(2000)
-    ]
-    rows += [
-        (1000 + c, base + timedelta(seconds=rng.randint(0, 3600)), 100_000 + c * 100 + j)
-        for c in range(1, 51)
-        for j in range(20)
-    ]
-    return rows, spark.createDataFrame(rows, "card_num long, ts timestamp, trans_id long")
-
-
-def _model_interval_pairs(rows, window_s):
-    """Ground truth: per card, ordered pairs with r2.ts in
-    [r1.ts, r1.ts + window] (closed), self-pair included."""
-    import bisect
-    from collections import defaultdict
-    from datetime import timedelta
-
-    per_card = defaultdict(list)
-    for card, ts, _ in rows:
-        per_card[card].append(ts)
-    total = 0
-    for ts_list in per_card.values():
-        ts_list.sort()
-        for t in ts_list:
-            lo = bisect.bisect_left(ts_list, t)
-            hi = bisect.bisect_right(ts_list, t + timedelta(seconds=window_s))
-            total += hi - lo
-    return total
-
-
-def test_hot_key_interval_join_salted_equivalence(spark):
-    """The 20-min bucketed interval self-join on a hot-key fixture:
-    unsalted (AQE-split path) and salted (explicit scatter) plans must
-    both match the exact pair count. ~1.3M pairs from the hot card —
-    the shape that becomes a single-reducer straggler at 100 TB."""
-    from etl_process_for_fraud_transactions_spark.operators.rangejoin import (
-        bucketed_interval_self_join,
-    )
-
-    rows, df = _hot_key_events(spark)
-    window_us = 20 * 60 * 1_000_000
-    expected = _model_interval_pairs(rows, 20 * 60)
-
-    plain = bucketed_interval_self_join(df, ["card_num"], "ts", window_us)
-    salted = bucketed_interval_self_join(df, ["card_num"], "ts", window_us, salt=8)
-
-    assert plain.count() == expected
-    assert salted.count() == expected
-    # salting is internal: the output schema is unchanged
-    assert plain.columns == salted.columns
-
-
-def test_hot_key_abs_window_join_salted_equivalence(spark):
-    from etl_process_for_fraud_transactions_spark.operators.rangejoin import (
-        bucketed_abs_window_self_join,
-    )
-
-    rows, df = _hot_key_events(spark)
-    # small window keeps the pair count modest for the abs variant
-    window_us = 5 * 60 * 1_000_000
-
-    plain = bucketed_abs_window_self_join(df, ["card_num"], "ts", window_us)
-    salted = bucketed_abs_window_self_join(df, ["card_num"], "ts", window_us, salt=8)
-    n_plain, n_salted = plain.count(), salted.count()
-    assert n_plain == n_salted > 0
-
-
-def test_salted_join_spreads_hot_group(spark):
-    """The point of the salt: the hot (card, bucket) group's rows land
-    in `salt` distinct sub-groups, not one."""
-    from pyspark.sql import functions as F
-    from etl_process_for_fraud_transactions_spark.operators.rangejoin import (
-        _salt_sides,
-    )
-
-    _, df = _hot_key_events(spark)
-    left, _, salted = _salt_sides(df, df, 8)
-    assert salted
-    spread = (
-        left.filter(F.col("card_num") == 111)
-        .select("__salt")
-        .distinct()
-        .count()
-    )
-    assert spread == 8
-
-
-def test_auto_salt_picks_factor_from_density_and_matches_unsalted(spark):
-    """salt='auto' on a planted hot key must (a) derive a factor > 1
-    from the measured per-(key,bucket) density and (b) produce exactly
-    the unsalted result. Budget is shrunk so the ~2000-dense fixture
-    crosses the threshold the way a 10^4-dense window would at the
-    production default (d^2/budget: 2000^2/5e5 = 8 here, 10^8/4e6 = 25
-    there)."""
-    from etl_process_for_fraud_transactions_spark.operators.rangejoin import (
-        _resolve_salt,
-        bucketed_interval_self_join,
-    )
-    from pyspark.sql import functions as F
-
-    rows, df = _hot_key_events(spark)
-    window_us = 20 * 60 * 1_000_000
-    budget = 500_000
-
-    left = df.withColumn(
-        "__bucket", F.floor((F.unix_timestamp("ts") * 1_000_000) / F.lit(window_us))
-    )
-    factor = _resolve_salt(left, ["card_num"], "auto", budget)
-    assert factor > 1
-
-    expected = _model_interval_pairs(rows, 20 * 60)
-    auto = bucketed_interval_self_join(
-        df, ["card_num"], "ts", window_us, salt="auto", auto_salt_pair_budget=budget
-    )
-    assert auto.count() == expected
-
-
-def test_auto_salt_is_lazy(spark):
-    """salt='auto' must not run any Spark job at plan-build time: the
-    density probe is folded into the plan as a broadcast one-row
-    aggregate and executes with the job. Tracked via a job group —
-    an eager .first() during construction would land a job in it."""
-    from etl_process_for_fraud_transactions_spark.operators.rangejoin import (
-        bucketed_interval_self_join,
-    )
-
-    rows, df = _hot_key_events(spark)
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group = "auto-salt-lazy-probe"
-    sc.setJobGroup(group, "plan construction must not run jobs")
-    try:
-        out = bucketed_interval_self_join(
-            df,
-            ["card_num"],
-            "ts",
-            20 * 60 * 1_000_000,
-            salt="auto",
-            auto_salt_pair_budget=500_000,
-        )
-        out.schema  # force analysis too — still no job allowed
-        assert list(tracker.getJobIdsForGroup(group)) == []
-        assert out.count() == _model_interval_pairs(rows, 20 * 60)
-        assert len(tracker.getJobIdsForGroup(group)) > 0
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-
-
-def test_auto_salt_spreads_hot_group_at_runtime(spark):
-    """The runtime-derived factor actually scatters the hot (card,
-    bucket) group: with budget 500k and density ~2000 the derived
-    factor is ceil(2000^2/5e5)=8, so the hot card's rows must land in
-    8 distinct __salt sub-groups."""
-    from pyspark.sql import functions as F
-    from etl_process_for_fraud_transactions_spark.operators.rangejoin import (
-        _auto_salt_factor,
-        _salt_sides,
-    )
-
-    _, df = _hot_key_events(spark)
-    left = df.withColumn("__bucket", F.lit(0))
-    factor_df = _auto_salt_factor(left, ["card_num"], 500_000)
-    salted_left, _, salted = _salt_sides(left, left, "auto", factor_df)
-    assert salted
-    spread = (
-        salted_left.filter(F.col("card_num") == 111)
-        .select("__salt")
-        .distinct()
-        .count()
-    )
-    assert spread == 8
-
-
-def test_auto_salt_bounds_straggler_partition(spark):
-    """The whole point of the scatter: after salting, the hot (card,
-    bucket) group's largest (card, bucket, salt) sub-group — the unit
-    a reducer partition actually processes — is ~d/s, not d. With
-    d~2000 and derived s=8, bound it at 1.5x the ideal split; xxhash64
-    scatter over 8 buckets on 2000 rows concentrates far less than
-    that."""
-    from pyspark.sql import functions as F
-    from etl_process_for_fraud_transactions_spark.operators.rangejoin import (
-        _auto_salt_factor,
-        _salt_sides,
-    )
-
-    _, df = _hot_key_events(spark)
-    left = df.withColumn("__bucket", F.lit(0))
-    factor_df = _auto_salt_factor(left, ["card_num"], 500_000)
-    salted_left, _, _ = _salt_sides(left, left, "auto", factor_df)
-    worst = (
-        salted_left.groupBy("card_num", "__bucket", "__salt")
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-    )
-    assert worst <= (2000 / 8) * 1.5, worst
-
-
-def test_auto_salt_stays_unsalted_below_budget(spark):
-    from etl_process_for_fraud_transactions_spark.operators.rangejoin import (
-        _resolve_salt,
-    )
-    from pyspark.sql import functions as F
-
-    _, df = _hot_key_events(spark)
-    left = df.withColumn("__bucket", F.lit(0))
-    # default budget: 2000^2 / 4e6 = 1 -> no scatter
-    assert _resolve_salt(left, ["card_num"], "auto") == 1
-
-
-def test_reserved_column_guard(spark):
-    import pytest
-    from etl_process_for_fraud_transactions_spark.operators.rangejoin import (
-        bucketed_interval_self_join,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "2024-01-01 10:00:00", 0)], "card_num long, ts string, __salt int"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    with pytest.raises(ValueError, match="__salt"):
-        bucketed_interval_self_join(df, ["card_num"], "ts", 60_000_000)
