@@ -3,7 +3,8 @@ daily-ingest shape every growing training corpus needs (SURVEY §7.6):
 "drop new documents that near-duplicate the existing corpus" WITHOUT
 re-running LSH over corpus ∪ batch each day.
 
-The store persists, via sources/warehouse.py:
+The store persists, via sources/warehouse.py and the shared
+`VersionedStore` lifecycle (operators/store.py; unversioned here):
 
 - `<name>_buckets`  : (id, band_id, band_hash) — minhash_band_buckets
   output, the candidate index. 8 bytes/band/doc regardless of text
@@ -77,6 +78,7 @@ from .dedup import (
     shingles,
 )
 from .graph import dedup_components
+from .store import VersionedStore
 
 
 #: Partition column carrying the epoch/batch stamp in partitioned mode.
@@ -151,25 +153,28 @@ class NearDupIndex:
         self.num_hashes = num_hashes
         self.bands = bands
         self.portable = portable
-        self.store = store
+        self.shingle_store = store
         self.partitioned = partitioned
         self.broadcast_max_rows = broadcast_max_rows
+        self.store = VersionedStore(
+            wh, "NearDupIndex", name, ("buckets", "shingles"), False
+        )
 
     @property
     def buckets_table(self) -> str:
-        return f"{self.name}_buckets"
+        return self.store.tables()[0]
 
     @property
     def shingles_table(self) -> str:
-        return f"{self.name}_shingles"
+        return self.store.tables()[1]
 
     @property
     def meta_table(self) -> str:
-        return f"{self.name}_meta"
+        return self.store.meta_table
 
     @property
     def tombstones_table(self) -> str:
-        return f"{self.name}_tombstones"
+        return self.store.tombstones()
 
     def _params(self) -> dict:
         return {
@@ -177,38 +182,21 @@ class NearDupIndex:
             "num_hashes": self.num_hashes,
             "bands": self.bands,
             "portable": self.portable,
-            "store": self.store,
+            "store": self.shingle_store,
             "partitioned": self.partitioned,
         }
 
     def _write_meta(self, compacted_through: int | None = None) -> None:
-        # compacted_through (round 13, operators/epochs.py) is the
-        # replay watermark — persisted BEFORE compact()'s data swap;
-        # bootstrap() writes the default None, resetting the lineage
-        # (a re-bootstrap starts a fresh epoch history)
-        row = [
-            tuple(self._params().values())
-            + (
-                None
-                if compacted_through is None
-                else int(compacted_through),
-            )
-        ]
+        # compacted_through is the replay watermark (operators/epochs.py)
+        # — persisted BEFORE compact()'s data swap; bootstrap() writes
+        # the default None, resetting the lineage
         self.wh.overwrite_rows(
             self.meta_table,
-            row,
+            [tuple(self._params().values()) + (compacted_through,)],
             "k int, num_hashes int, bands int, portable boolean, "
             "store string, partitioned boolean, "
             "compacted_through long",
         )
-
-    def _watermark(self) -> int | None:
-        """The replay watermark (None = never compacted); legacy metas
-        lack the column — such stores were never compacted."""
-        if not self.wh.exists(self.meta_table):
-            return None
-        wm = self.wh.read_rows(self.meta_table)[0].get("compacted_through")
-        return None if wm is None else int(wm)
 
     def _validate_params(self) -> None:
         """Candidates from mismatched hash families silently vanish, so
@@ -216,22 +204,12 @@ class NearDupIndex:
         correctness bug, not a tuning choice — fail loudly."""
         if getattr(self, "_params_ok", False):
             return
-        if not self.wh.exists(self.meta_table):
-            # pre-meta store (or external writer): nothing to check
-            self._params_ok = True
-            return
-        stored = self.wh.read_rows(self.meta_table)[0]
-        # metas written before these parameters existed take defaults;
-        # the compaction watermark is layout metadata, not identity
-        stored = {"store": "raw", "partitioned": False, **stored}
-        stored.pop("compacted_through", None)
-        mine = self._params()
-        if stored != mine:
-            raise ValueError(
-                f"NearDupIndex '{self.name}' was built with {stored}, "
-                f"but this instance uses {mine} — candidates from "
-                "mismatched hash families silently vanish; rebuild the "
-                "index or match its parameters"
+        stored = self.store.read_meta()
+        if stored is not None:
+            self.store.check_identity(
+                stored, self._params(),
+                "candidates from mismatched hash families silently "
+                "vanish; rebuild the index or match its parameters",
             )
         self._params_ok = True
 
@@ -248,7 +226,7 @@ class NearDupIndex:
 
     def _shingles(self, docs: DataFrame) -> DataFrame:
         sh = shingles(self.text_col, self.k)
-        if self.store == "hashed":
+        if self.shingle_store == "hashed":
             sh = F.transform(sh, lambda s: F.xxhash64(s))
         return docs.select(F.col(self.id_col), sh.alias("sh"))
 
@@ -317,39 +295,29 @@ class NearDupIndex:
         """(Re)build the index from the full corpus — run once; the
         daily path is absorb(). In partitioned mode the corpus lands
         under the `batch` stamp (default 'bootstrap')."""
-        from ..sources.warehouse import atomic_overwrite
-
         from ..session import run_concurrently
+        from ..sources.warehouse import atomic_overwrite
 
         b = self._buckets(corpus)
         s = self._shingles(corpus)
-        # the two index tables derive independently from `corpus` —
-        # overlap their writes (guide §2.6)
+        stamp = None
         if self.partitioned:
-            run_concurrently(
-                lambda: atomic_overwrite(
-                    self._stamp(b, batch),
-                    self.wh.path(self.buckets_table),
-                    partition_by=[BATCH_COL],
-                ),
-                lambda: atomic_overwrite(
-                    self._stamp(s, batch),
-                    self.wh.path(self.shingles_table),
-                    partition_by=[BATCH_COL],
-                ),
-            )
-        else:
-            run_concurrently(
-                lambda: self.wh.overwrite(self.buckets_table, b),
-                lambda: self.wh.overwrite(self.shingles_table, s),
-            )
-        self._write_meta()
-        # a re-bootstrap's corpus is the caller's statement of record:
-        # stale tombstones must not filter it. Removed LAST — a crash
-        # beforehand leaves the new corpus OVER-filtered (safe for
-        # takedowns, converges on re-run), never an un-filtered window
-        # for deleted docs.
-        self.wh.remove_table(self.tombstones_table)
+            b, s = self._stamp(b, batch), self._stamp(s, batch)
+            stamp = [BATCH_COL]
+        # the two index tables derive independently from `corpus` —
+        # overlap their writes (guide §2.6). The meta lands after both
+        # and a re-bootstrap drops stale tombstones LAST: the new
+        # corpus is the caller's statement of record
+        self.store.commit(
+            self.store.begin(f"NearDupIndex('{self.name}').bootstrap"),
+            lambda: run_concurrently(*[
+                lambda t=t, df=df: atomic_overwrite(
+                    df, self.wh.path(t), partition_by=stamp
+                )
+                for t, df in ((self.buckets_table, b), (self.shingles_table, s))
+            ]),
+            meta=self._write_meta,
+        )
         self._params_ok = True
 
     def absorb(self, accepted: DataFrame, batch=None) -> None:
@@ -383,7 +351,7 @@ class NearDupIndex:
         if batch is not None:
             guard_sentinel_batch(batch)
             if self.partitioned and replay_skippable(
-                batch, self._watermark()
+                batch, self.store.watermark()
             ):
                 return
         from .tombstones import anti_join_tombstones
@@ -448,37 +416,11 @@ class NearDupIndex:
         if not self.wh.exists(self.buckets_table):
             # day-zero store: nothing indexed, nothing to tombstone
             return {"deleted_ids": 0}
-        new_tombs = (
-            self.wh.read(self.buckets_table)
-            .select(self.id_col)
-            .join(
-                # hint-free: a mass delete must not force-broadcast
-                # an unbounded caller frame (the erase_keys convention)
-                ids.select(self.id_col).distinct(),
-                self.id_col,
-                "left_semi",
-            )
-            .distinct()
+        got = self.store.delete(
+            self.wh.read(self.buckets_table).select(self.id_col), ids,
+            self.id_col, self.tombstones_table,
         )
-        if self.wh.exists(self.tombstones_table):
-            new_tombs = new_tombs.join(
-                self.wh.read(self.tombstones_table).select(self.id_col),
-                self.id_col,
-                "left_anti",
-            )
-        # r17 (VERDICT r16 item 5): gate count as an observed metric on
-        # the checkpoint materialization — the separate count() job is
-        # gone; see Bm25Index.delete for the full rationale.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        new_tombs = new_tombs.observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint()
-        n = obs.get["n"]
-        if n:
-            self.wh.append(self.tombstones_table, new_tombs)
-        return {"deleted_ids": int(n)}
+        return {"deleted_ids": got["n"]}
 
     def compact(
         self,
@@ -512,10 +454,10 @@ class NearDupIndex:
         "files_before", "files_after"}."""
         from ..sources.warehouse import atomic_overwrite
         from .epochs import (
-            SENTINEL_STAMPS,
             collapse_epochs,
-            epoch_watermark,
+            hive_partition_values,
             parquet_file_count,
+            plan_merge,
         )
 
         self._validate_params()
@@ -530,7 +472,6 @@ class NearDupIndex:
                 f"NearDupIndex '{self.name}': no meta marker — run "
                 "bootstrap()"
             )
-        prev_wm = self._watermark()
         frames = {}
         stamps: set = set()
         for table in (self.buckets_table, self.shingles_table):
@@ -539,81 +480,58 @@ class NearDupIndex:
             # cast up front: partition-type inference reads an
             # all-numeric-epoch store's __batch as int, and the
             # restamp-to-__compacted__ union must not mix types
-            df = self.wh.read(table).withColumn(
+            frames[table] = self.wh.read(table).withColumn(
                 BATCH_COL, F.col(BATCH_COL).cast("string")
             )
-            frames[table] = df
-            # stamp enumeration from the hive directory names (r16):
-            # the same distinct set, driver-side
-            from .epochs import hive_partition_values
-
             stamps |= hive_partition_values(self.wh.path(table), BATCH_COL)
-        # integer-orderability over ALL stamps first (loud failure on
-        # ad-hoc bootstrap stamps), then the merge subset
-        epoch_watermark(stamps)
-        if live:
-            # live-stream mode: derive the bound from the scanned
-            # stamps — merge everything below the NEWEST integer
-            # epoch, which is the only one a crashed absorb may have
-            # left partially written (epochs.py)
-            if through is not None:
-                raise ValueError(
-                    "compact(live=True) derives its own bound — pass "
-                    "through= or live=True, not both"
-                )
-            ints = [int(s) for s in stamps if s not in SENTINEL_STAMPS]
-            through = max(ints) - 1 if ints else None
-        merged = sorted(
-            s
-            for s in stamps
-            if s in SENTINEL_STAMPS
-            or through is None
-            or int(s) <= int(through)
-        )
-        wm = epoch_watermark(merged, prev_wm)
-        # physical deletion (round 13): a FULL merge applies the
-        # tombstones — sound here WITHOUT a version flip because no
-        # derived statistic subtracts them (see delete()): after the
-        # purged rewrite, a still-live tombstone filters rows that no
-        # longer exist (a no-op), so any crash ordering converges by
+        merged, wm = plan_merge(stamps, through, live, self.store.watermark())
+        # physical deletion: a FULL merge applies the tombstones —
+        # sound here WITHOUT a version flip because no derived
+        # statistic subtracts them (see delete()): after the purged
+        # rewrite, a still-live tombstone filters rows that no longer
+        # exist (a no-op), so any crash ordering converges by
         # re-running compact(). The tombstone table itself is removed
-        # LAST. A bounded merge keeps un-merged epochs' raw rows and
-        # leaves the tombstones live.
-        full = set(merged) == stamps
-        tombs = (
-            self.wh.read(self.tombstones_table)
-            if self.wh.exists(self.tombstones_table)
-            else None
+        # LAST. A bounded merge leaves the tombstones live.
+        purge = set(merged) == stamps and self.wh.exists(
+            self.tombstones_table
         )
-        purge = full and tombs is not None
         files_before = sum(
             parquet_file_count(self.wh.path(t)) for t in frames
         )
-        # watermark FIRST (epochs.py crash ordering)
-        self._write_meta(compacted_through=wm)
-        for table, df in frames.items():
-            collapsed = collapse_epochs(
+
+        def _collapsed(df):
+            out = collapse_epochs(
                 df.filter(F.col(BATCH_COL).isin(merged)),
                 BATCH_COL,
                 [BATCH_COL],
                 self.id_col,
                 files_per_partition,
             ).unionByName(df.filter(~F.col(BATCH_COL).isin(merged)))
-            if purge:
-                # size-gated, like serving (ADVICE r13): a mass
-                # takedown followed by a full compaction must degrade
-                # to a shuffle anti-join, never a forced broadcast
-                from .tombstones import anti_join_tombstones
+            if not purge:
+                return out
+            # size-gated, like serving: a mass takedown followed by a
+            # full compaction degrades to a shuffle anti-join
+            from .tombstones import anti_join_tombstones
 
-                collapsed = anti_join_tombstones(
-                    collapsed, self.wh, self.tombstones_table,
-                    self.id_col,
-                )
-            atomic_overwrite(
-                collapsed, self.wh.path(table), partition_by=[BATCH_COL]
+            return anti_join_tombstones(
+                out, self.wh, self.tombstones_table, self.id_col
             )
-        if purge:
-            self.wh.remove_table(self.tombstones_table)
+
+        def _write():
+            for table, df in frames.items():
+                atomic_overwrite(
+                    _collapsed(df), self.wh.path(table),
+                    partition_by=[BATCH_COL],
+                )
+
+        # watermark FIRST (epochs.py crash ordering)
+        self.store.commit(
+            self.store.begin(f"NearDupIndex('{self.name}').compact"),
+            _write,
+            meta=lambda: self._write_meta(compacted_through=wm),
+            carry_tombstones=not purge,
+            meta_first=True,
+        )
         return {
             "stamps_merged": len(merged),
             "compacted_through": wm,
@@ -664,7 +582,7 @@ class NearDupIndex:
         if exclude_batch is not None:
             from .epochs import replay_skippable
 
-            if replay_skippable(exclude_batch, self._watermark()):
+            if replay_skippable(exclude_batch, self.store.watermark()):
                 raise ValueError(
                     f"NearDupIndex '{self.name}': epoch "
                     f"{exclude_batch!r} was merged by compaction "

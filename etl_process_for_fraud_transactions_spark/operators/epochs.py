@@ -76,7 +76,7 @@ COMPACTED_STAMP = "__compacted__"
 #: caller-supplied ad-hoc bootstrap stamp makes the store
 #: non-compactable — re-bootstrap under the default instead)
 SENTINEL_STAMPS = frozenset(
-    {"__build__", COMPACTED_STAMP, "__legacy__", "bootstrap"}
+    {"__build__", COMPACTED_STAMP, "bootstrap"}
 )
 
 
@@ -130,6 +130,34 @@ def guard_sentinel_batch(batch) -> None:
             f"absorb batch {batch!r} collides with a reserved "
             "maintenance stamp — pass the stream's integer epoch id"
         )
+
+
+def plan_merge(
+    stamps, through: int | None = None, live: bool = False,
+    prev: int | None = None,
+) -> tuple[list[str], int | None]:
+    """(stamps to merge, new watermark) for a compaction over the
+    stored `stamps`. Every stamp must be orderable first (raises on
+    an ad-hoc id). `through` bounds the merge to integer epochs
+    <= through (maintenance stamps always merge); `live=True` derives
+    `through = newest epoch - 1`, since the newest epoch is the only
+    one a crashed absorb may have left partially written. The new
+    watermark folds the merged epochs over `prev`."""
+    epoch_watermark(stamps)
+    if live:
+        if through is not None:
+            raise ValueError(
+                "compact(live=True) derives its own bound — pass "
+                "through= or live=True, not both"
+            )
+        ints = [int(s) for s in stamps if s not in SENTINEL_STAMPS]
+        through = max(ints) - 1 if ints else None
+    merged = sorted(
+        s
+        for s in stamps
+        if s in SENTINEL_STAMPS or through is None or int(s) <= int(through)
+    )
+    return merged, epoch_watermark(merged, prev)
 
 
 def collapse_epochs(

@@ -1,5 +1,5 @@
 """Product quantization (PQ) — the published next compression rung
-after int8 scalar quantization (VERDICT r11 item 4).
+after int8 scalar quantization.
 
 Reference surface: none — LLM-training-data extension (SURVEY.md §2
 "beyond the reference"); the method is Jégou, Douze & Schmid 2011,
@@ -33,14 +33,13 @@ Scale shape: the codes table is the ONLY corpus-sized artifact and
 it is ~32x smaller than the float store — the 10^9-vector scan/IO
 bill shrinks with it; scoring is map-only against a broadcast
 (query, LUT) frame + one top-k window (the cosine_topk shape).
-`PqIndex` persists codes behind the repo's index conventions: a
-meta-frozen layout (mismatched readers fail loudly), codebooks in a
-warehouse table (servers never retrain to read), and an optional
-one-row version pointer whose row carries the LAYOUT FIELDS
-committed atomically with each pointer flip (round 13 — see the
-class docstring). The IVF-PQ composition (cells for pruning + codes
-for compression) is implemented (round 12), residual encoding and
-sample-based codebook training on top of it (round 13).
+`PqIndex` persists codes on the shared `VersionedStore` lifecycle
+(operators/store.py): a meta-frozen layout (mismatched readers fail
+loudly), codebooks in a warehouse table (servers never retrain to
+read), and an optional one-row version pointer whose row carries the
+LAYOUT FIELDS committed atomically with each pointer flip. On top:
+the IVF-PQ composition (cells for pruning + codes for compression),
+residual encoding, sample-based codebook training and OPQ.
 
 Determinism: codebooks come from MLlib KMeans (seeded, deterministic
 given the corpus) and are FROZEN at build; encode is a deterministic
@@ -48,7 +47,7 @@ argmin with index-ASC tie-break; ADC sums fold in fixed j order
 inside one expression. Correctness is pinned two ways: pytest
 (exact-reconstruction corpora recall 100% — raw AND residual — a
 measured recall floor vs exact cosine on a random corpus, and the
-encode round-trip), and since round 13 the DRIVER HASH — the
+encode round-trip), and the DRIVER HASH — the
 `pq_adc` leg of `ivf_cosine_topk` runs the real encode argmin /
 LUT / decimal fold / rerank against a frozen dyadic literal codebook
 that DuckDB replays exactly (plans/queries_llm.py::_PQ_BOOKS).
@@ -63,6 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .epochs import guard_sentinel_batch, replay_skippable
+from .store import VersionedStore
 
 __all__ = [
     "PqModel",
@@ -886,88 +886,39 @@ class PqIndex:
         #: rewrites exactly the same rows (the IvfIndex/Bm25Index
         #: exactly-once convention; pq_absorb_sink requires it)
         self.partitioned = partitioned
+        self.store = VersionedStore(
+            wh, "PqIndex", name, ("codes", "codebooks", "cells"),
+            versioned, self._POINTER_SCHEMA,
+        )
 
     @property
     def version_table(self) -> str:
-        return f"{self.name}_version"
+        return self.store.version_table
 
     @property
     def meta_table(self) -> str:
-        return f"{self.name}_meta"
+        return self.store.meta_table
 
     #: layout-affecting fields committed ATOMICALLY with the version
-    #: pointer (ADVICE r12: a reader pairing one version's tables with
-    #: another version's layout metadata — e.g. n_cells from a
-    #: mid-rebuild meta overwrite — would be silently wrong)
+    #: pointer: a reader pairing one version's tables with another
+    #: version's layout metadata (e.g. n_cells from a mid-rebuild meta
+    #: overwrite) would be silently wrong
     _LAYOUT_FIELDS = (
         "n_cells", "cell_col", "m", "n_codes", "dim", "residual",
         "partitioned", "default_nprobe", "compacted_through", "opq",
     )
 
-    def _version_row(self) -> tuple[int, dict | None]:
-        """(version, layout) from ONE read of the one-row pointer —
-        the Bm25Index._version_row pattern. `layout` is the dict of
-        layout-affecting fields committed with the flip, or None for
-        a legacy pre-round-13 pointer (version only), whose layout
-        falls back to the shared meta table."""
-        if not self.wh.exists(self.version_table):
-            raise ValueError(
-                f"PqIndex '{self.name}' is versioned but has no "
-                "version pointer — run build()"
-            )
-        # driver-side one-row read (r16): no Spark job — warehouse.read_rows
-        row = self.wh.read_rows(self.version_table)[0]
-        if "n_cells" not in row:
-            return int(row["version"]), None
-        # only keys PRESENT in the row enter the layout overlay —
-        # fields that joined the pointer later (partitioned r13,
-        # default_nprobe r13) must not clobber a meta value with None
-        # when read against an older pointer; 'partitioned' is the
-        # exception: an explicit None there means "fall back to the
-        # instance flag" in absorb, so it is always surfaced
-        layout = {k: row[k] for k in self._LAYOUT_FIELDS if k in row}
-        layout["residual"] = bool(layout.get("residual"))
-        if "partitioned" not in row:
-            layout["partitioned"] = None
-        return int(row["version"]), layout
-
-    def _current_version(self) -> int:
-        return self._version_row()[0]
-
-    def _version_or_none(self) -> int | None:
-        """Current pointer version, or None when no pointer exists —
-        the pre-flip maintenance-race probe (guard_pointer_unmoved)."""
-        if not self.wh.exists(self.version_table):
-            return None
-        return self._current_version()
-
-    def _table_names(
-        self, version: int | None = None
-    ) -> tuple[str, str, str]:
-        if not self.versioned:
-            return (
-                f"{self.name}_codes",
-                f"{self.name}_codebooks",
-                f"{self.name}_cells",
-            )
-        v = version if version is not None else self._current_version()
-        return (
-            f"{self.name}_codes_v{v}",
-            f"{self.name}_codebooks_v{v}",
-            f"{self.name}_cells_v{v}",
-        )
-
     @property
     def codes_table(self) -> str:
-        return self._table_names()[0]
+        return self.store.tables()[0]
 
     @property
     def codebooks_table(self) -> str:
-        return self._table_names()[1]
+        return self.store.tables()[1]
 
     @property
     def cells_table(self) -> str:
-        return self._table_names()[2]
+        return self.store.tables()[2]
 
     def _params(
         self,
@@ -995,46 +946,22 @@ class PqIndex:
         )
 
     def _validate(self) -> dict:
-        if not self.wh.exists(self.meta_table):
+        stored = self.store.read_meta()
+        if stored is None:
             raise ValueError(
                 f"PqIndex '{self.name}': no meta marker — run build()"
             )
-        stored = self.wh.read_rows(self.meta_table)[0]
         mine = {
             "id_col": self.id_col,
             "vec_col": self.vec_col,
             "versioned": self.versioned,
-            # legacy metas (pre-round-13) lack the key: treated as an
-            # unpartitioned layout, which is what they were
             "partitioned": self.partitioned,
         }
-        # cell_col matters only on a celled (IVF-PQ) store; flat
-        # metas written before round 12's composition lack the key
+        # cell_col matters only on a celled (IVF-PQ) store
         if stored.get("n_cells") is not None:
             mine["cell_col"] = self.cell_col
-        diff = {
-            k: (stored.get(k) or False, v)
-            for k, v in mine.items()
-            if (stored.get(k) or False) != (v or False)
-        }
-        if diff:
-            raise ValueError(
-                f"PqIndex '{self.name}' was built with "
-                f"{ {k: s for k, (s, _) in diff.items()} }, this "
-                f"instance uses { {k: v for k, (_, v) in diff.items()} }"
-                " — rebuild or match the layout"
-            )
+        self.store.check_identity(stored, mine, "rebuild or match the layout")
         return stored
-
-    def _tombstones_table(self, version: int | None = None) -> str:
-        """Deletion tombstones (round 13): one id per deleted vector.
-        Per-version in versioned mode — a rebuild's fresh version
-        starts clean, and a purging compaction commits 'tombstones
-        applied' by not creating the table for the new version."""
-        if not self.versioned:
-            return f"{self.name}_tombstones"
-        v = version if version is not None else self._current_version()
-        return f"{self.name}_tombstones_v{v}"
 
     def _resolve(self) -> tuple[dict, tuple[str, str, str], str]:
         """Identity-validate against the shared meta, then resolve the
@@ -1043,28 +970,26 @@ class PqIndex:
         ONCE and its layout fields override the shared meta — so the
         tables AND the layout that interprets them (n_cells,
         residual, ...) are mutually consistent even across a
-        concurrent rebuild flip (ADVICE r12: the old _table_names()
-        + _model() pair read the pointer twice)."""
+        concurrent rebuild flip."""
         stored = self._validate()
         if not self.versioned:
-            return stored, self._table_names(), self._tombstones_table()
-        v, layout = self._version_row()
-        if layout is not None:
-            stored = {**stored, **layout}
-            if (
-                stored.get("n_cells") is not None
-                and stored.get("cell_col") != self.cell_col
-            ):
-                raise ValueError(
-                    f"PqIndex '{self.name}' version {v} was built "
-                    f"with cell_col={stored.get('cell_col')!r}, this "
-                    f"instance uses {self.cell_col!r}"
-                )
-        return stored, self._table_names(v), self._tombstones_table(v)
+            return stored, self.store.tables(), self.store.tombstones()
+        v, layout = self.store.version_row()
+        stored = {**stored, **layout}
+        if (
+            stored.get("n_cells") is not None
+            and stored.get("cell_col") != self.cell_col
+        ):
+            raise ValueError(
+                f"PqIndex '{self.name}' version {v} was built "
+                f"with cell_col={stored.get('cell_col')!r}, this "
+                f"instance uses {self.cell_col!r}"
+            )
+        return stored, self.store.tables(v), self.store.tombstones(v)
 
     def _model(self, books_table: str | None = None) -> PqModel:
         if books_table is None:
-            _, books_table, _ = self._table_names()
+            books_table = self.store.tables()[1]
         # bounded m x n_codes rows: driver-side read, no Spark job
         return PqModel.from_rows(self.wh.read_rows(books_table))
 
@@ -1079,7 +1004,7 @@ class PqIndex:
     def _rotation(self, books_table: str | None = None) -> tuple:
         """Load the frozen d x d OPQ rotation (bounded: d rows)."""
         if books_table is None:
-            _, books_table, _ = self._table_names()
+            books_table = self.store.tables()[1]
         rows = self.wh.read_rows(self._rotation_table_for(books_table))
         return tuple(
             tuple(float(x) for x in r["r"])
@@ -1095,9 +1020,7 @@ class PqIndex:
         "default_nprobe int, compacted_through long, opq boolean"
     )
 
-    #: one-row version-pointer schema — every pointer write (build,
-    #: calibrate_nprobe, compact) goes through _write_pointer so the
-    #: positional row can never drift from it
+    #: one-row version-pointer schema (VersionedStore.write_pointer)
     _POINTER_SCHEMA = (
         "version int, n_cells int, cell_col string, "
         "m int, n_codes int, dim int, residual boolean, "
@@ -1105,32 +1028,13 @@ class PqIndex:
         "compacted_through long, opq boolean"
     )
 
-    def _write_pointer(self, version: int, layout: dict) -> None:
-        """Overwrite the one-row version pointer: the version AND the
-        layout that interprets its tables (plus the replay watermark)
-        commit in this single row (ADVICE r12)."""
-        dn = layout.get("default_nprobe")
-        wm = layout.get("compacted_through")
+    def _write_meta(self, meta: dict) -> None:
+        """Overwrite the shared meta row from a dict keyed by the
+        `_META_SCHEMA` columns."""
+        cols = [c.split()[0] for c in self._META_SCHEMA.split(",")]
         self.wh.overwrite_rows(
-            self.version_table,
-            [(
-                int(version),
-                (
-                    None
-                    if layout.get("n_cells") is None
-                    else int(layout["n_cells"])
-                ),
-                layout.get("cell_col"),
-                int(layout["m"]),
-                int(layout["n_codes"]),
-                int(layout["dim"]),
-                bool(layout.get("residual")),
-                layout.get("partitioned"),
-                None if dn is None else int(dn),
-                None if wm is None else int(wm),
-                bool(layout.get("opq")),
-            )],
-            self._POINTER_SCHEMA,
+            self.meta_table, [tuple(meta.get(c) for c in cols)],
+            self._META_SCHEMA,
         )
 
     def build(
@@ -1210,19 +1114,20 @@ class PqIndex:
         non-orthogonal matrix silently breaks the norm-invariance
         serving relies on.
 
-        Versioned-mode write order (ADVICE r12): per-version tables
-        first, then the POINTER FLIP — which carries the layout
-        fields — is the commit point, and the shared meta is
-        refreshed only AFTER the flip. A crash or concurrent read
-        between flip and meta-refresh pairs the new version with the
-        old meta's layout only for legacy (pre-layout-pointer)
-        stores; new pointers carry their own layout."""
+        Versioned: the per-version tables are written first, the
+        POINTER FLIP — which carries the layout fields — is the
+        commit point, and the shared meta is refreshed after it."""
         from ..sources.warehouse import atomic_overwrite
 
         if residual and n_cells is None:
             raise ValueError(
                 "PqIndex.build: residual=True needs n_cells (residuals "
                 "are taken against the IVF cell centroids)"
+            )
+        if nprobe_recall_target is not None and n_cells is None:
+            raise ValueError(
+                "PqIndex.build: nprobe_recall_target needs n_cells "
+                "(a flat store has no probe width to calibrate)"
             )
         if opq_iters is not None and books is not None:
             raise ValueError(
@@ -1336,31 +1241,10 @@ class PqIndex:
                 train_fraction=train_fraction, train_rows=train_rows,
                 sample_id_col=self.id_col,
             )
-        if self.versioned:
-            new_v = (
-                self._current_version() + 1
-                if self.wh.exists(self.version_table)
-                else 1
-            )
-            codes_t, books_t, cells_t = self._table_names(new_v)
-            # snapshot the CURRENT version's file inventory — the
-            # pre-flip guard below refuses if a concurrent
-            # absorb/delete lands in v(new_v-1) mid-rebuild
-            # (VERDICT r15 #1)
-            from ..sources.warehouse import table_inventory
-
-            cur_guard_tables = (
-                (
-                    self._table_names(new_v - 1)[0],
-                    self._tombstones_table(new_v - 1),
-                )
-                if new_v > 1
-                else ()
-            )
-            pre_inv = table_inventory(self.wh, cur_guard_tables)
-        else:
-            new_v = None
-            codes_t, books_t, cells_t = self._table_names()
+        flip = self.store.begin(
+            f"PqIndex('{self.name}').build", self.store.version_or_none()
+        )
+        codes_t, books_t, cells_t = self.store.tables(flip.version)
         encode_src = (
             corpus.drop(train_col) if residual else corpus
         )
@@ -1372,127 +1256,84 @@ class PqIndex:
         if self.partitioned:
             encoded = encoded.withColumn("__batch", F.lit("__build__"))
             parts.append("__batch")
-        if self.versioned:
-            # EARLY maintenance-race check before the first write into
-            # the shared v(new_v) paths (see guard_pointer_unmoved)
-            from ..sources.warehouse import guard_pointer_unmoved
+        # the pointer layout; calibration fills in default_nprobe
+        out = {
+            "n_cells": n_cells,
+            "cell_col": self.cell_col,
+            "m": model.m,
+            "n_codes": model.n_codes,
+            "dim": model.dim,
+            "residual": bool(residual),
+            "partitioned": bool(self.partitioned),
+            "default_nprobe": None,
+            "compacted_through": None,
+            "opq": rotation is not None,
+        }
 
-            guard_pointer_unmoved(
-                self._version_or_none(), new_v - 1 if new_v > 1 else None,
-                f"PqIndex('{self.name}').build",
+        def _write():
+            atomic_overwrite(
+                encoded,
+                self.wh.path(codes_t),
+                partition_by=parts or None,
             )
-        atomic_overwrite(
-            encoded,
-            self.wh.path(codes_t),
-            partition_by=parts or None,
-        )
-        # bounded literal table (m x n_codes rows): driver-side write
-        self.wh.overwrite_rows(
-            books_t,
-            model.rows(),
-            "sub_space int, code int, centroid array<double>",
-        )
-        if rotation is not None:
+            # bounded literal table (m x n_codes rows): driver-side write
             self.wh.overwrite_rows(
-                self._rotation_table_for(books_t),
+                books_t,
+                model.rows(),
+                "sub_space int, code int, centroid array<double>",
+            )
+            if rotation is not None:
+                self.wh.overwrite_rows(
+                    self._rotation_table_for(books_t),
+                    [
+                        (i, [float(x) for x in row])
+                        for i, row in enumerate(rotation)
+                    ],
+                    "i int, r array<double>",
+                )
+            elif not self.versioned:
+                # a non-OPQ rebuild of a store that previously carried
+                # a rotation must not leave the stale table behind
+                self.wh.remove_table(self._rotation_table_for(books_t))
+            if n_cells is not None:
+                self.wh.overwrite(cells_t, cents)
+            if nprobe_recall_target is not None:
+                # measured on the freshly written tables, BEFORE the
+                # flip — the committed version carries the default
+                # measured on its own geometry
+                out["default_nprobe"] = self.calibrate_nprobe(
+                    corpus.drop(
+                        *(
+                            c
+                            for c in ("__pq_res", "__pq_center")
+                            if c in corpus.columns
+                        )
+                    ),
+                    recall_target=nprobe_recall_target,
+                    seed=seed,
+                    _tables=(codes_t, books_t, cells_t),
+                    _layout={"residual": bool(residual)},
+                )["default_nprobe"]
+
+        # the replay watermark RESETS: a rebuild indexes a fresh corpus
+        # under a fresh __build__ stamp (operators/epochs.py)
+        self.store.commit(
+            flip,
+            _write,
+            meta=lambda: self.wh.overwrite_rows(
+                self.meta_table,
                 [
-                    (i, [float(x) for x in row])
-                    for i, row in enumerate(rotation)
-                ],
-                "i int, r array<double>",
-            )
-        elif not self.versioned:
-            # a non-OPQ rebuild of a store that previously carried a
-            # rotation must not leave the stale table behind (the
-            # layout flag is the authority, but a half-truth on disk
-            # invites an external reader to misuse it)
-            self.wh.remove_table(self._rotation_table_for(books_t))
-        if n_cells is not None:
-            self.wh.overwrite(cells_t, cents)
-        default_nprobe = None
-        if nprobe_recall_target is not None:
-            if n_cells is None:
-                raise ValueError(
-                    "PqIndex.build: nprobe_recall_target needs n_cells "
-                    "(a flat store has no probe width to calibrate)"
-                )
-            # measured on the freshly written tables, BEFORE the flip
-            # (versioned) — the committed version carries the default
-            # measured on its own geometry
-            default_nprobe = self.calibrate_nprobe(
-                corpus.drop(
-                    *(
-                        c
-                        for c in ("__pq_res", "__pq_center")
-                        if c in corpus.columns
+                    self._params(
+                        model.m, model.n_codes, model.dim, n_cells,
+                        residual=residual, train_spec=train_spec,
+                        default_nprobe=out["default_nprobe"],
+                        opq=rotation is not None,
                     )
-                ),
-                recall_target=nprobe_recall_target,
-                seed=seed,
-                _tables=(codes_t, books_t, cells_t),
-                _layout={"residual": bool(residual)},
-            )["default_nprobe"]
-        if self.versioned:
-            # pre-flip re-check: refuse (loudly, pointer untouched) if
-            # a concurrent absorb/delete landed in the current version
-            # after the snapshot above (VERDICT r15 #1)
-            from ..sources.warehouse import guard_concurrent_writes
-
-            guard_concurrent_writes(
-                self.wh, cur_guard_tables, pre_inv,
-                f"PqIndex('{self.name}').build",
-            )
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), new_v - 1 if new_v > 1 else None,
-                f"PqIndex('{self.name}').build",
-            )
-            # the commit point: the new version AND the layout that
-            # interprets its tables become visible in ONE row. The
-            # replay watermark RESETS — a rebuild indexes a fresh
-            # corpus under a fresh __build__ stamp, so the old epoch
-            # lineage is meaningless (epochs.py: restart the stream
-            # from a fresh checkpoint after a rebuild)
-            self._write_pointer(
-                new_v,
-                {
-                    "n_cells": n_cells,
-                    "cell_col": self.cell_col,
-                    "m": model.m,
-                    "n_codes": model.n_codes,
-                    "dim": model.dim,
-                    "residual": residual,
-                    "partitioned": bool(self.partitioned),
-                    "default_nprobe": default_nprobe,
-                    "compacted_through": None,
-                    "opq": rotation is not None,
-                },
-            )
-        # shared meta LAST in versioned mode (pre-flip readers keep a
-        # consistent old-version view; the meta is the commit marker
-        # only for the non-versioned layout)
-        self.wh.overwrite_rows(
-            self.meta_table,
-            [
-                self._params(
-                    model.m, model.n_codes, model.dim, n_cells,
-                    residual=residual, train_spec=train_spec,
-                    default_nprobe=default_nprobe,
-                    opq=rotation is not None,
-                )
-            ],
-            self._META_SCHEMA,
+                ],
+                self._META_SCHEMA,
+            ),
+            layout=out,
         )
-        if not self.versioned:
-            # a rebuild's corpus is the caller's statement of record:
-            # stale tombstones must not filter it. Removed LAST — a
-            # crash beforehand leaves the new corpus OVER-filtered
-            # (safe for takedowns, converges on re-run), never an
-            # un-filtered window for deleted vectors. Versioned
-            # rebuilds get this atomically: the new version has no
-            # tombstone table at all.
-            self.wh.remove_table(self._tombstones_table())
         return model
 
     def absorb(self, new_vectors: DataFrame, batch=None) -> None:
@@ -1521,12 +1362,8 @@ class PqIndex:
         # write mode follows the RESOLVED layout (atomic with the
         # version in versioned mode — a rebuild that changed
         # `partitioned` must not get epoch directories appended into a
-        # flat layout, or vice versa); legacy pointers without the
-        # field fall back to the instance flag
-        partitioned = stored.get("partitioned")
-        partitioned = (
-            self.partitioned if partitioned is None else bool(partitioned)
-        )
+        # flat layout, or vice versa)
+        partitioned = stored["partitioned"]
         if batch is not None:
             guard_sentinel_batch(batch)
             if partitioned and replay_skippable(
@@ -1623,38 +1460,12 @@ class PqIndex:
 
         Returns {"deleted_ids": n} — ids actually tombstoned by THIS
         call."""
-        stored, (codes_t, _, _), tomb_t = self._resolve()
-        new_tombs = (
-            self.wh.read(codes_t)
-            .select(self.id_col)
-            .join(
-                # hint-free: a mass delete must not force-broadcast
-                # an unbounded caller frame (the erase_keys convention)
-                ids.select(self.id_col).distinct(),
-                self.id_col,
-                "left_semi",
-            )
-            .distinct()
+        _, (codes_t, _, _), tomb_t = self._resolve()
+        got = self.store.delete(
+            self.wh.read(codes_t).select(self.id_col), ids, self.id_col,
+            tomb_t,
         )
-        if self.wh.exists(tomb_t):
-            new_tombs = new_tombs.join(
-                self.wh.read(tomb_t).select(self.id_col),
-                self.id_col,
-                "left_anti",
-            )
-        # r17 (VERDICT r16 item 5): gate count as an observed metric on
-        # the checkpoint materialization — the separate count() job is
-        # gone; see Bm25Index.delete for the full rationale.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        new_tombs = new_tombs.observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint()
-        n = obs.get["n"]
-        if n:
-            self.wh.append(tomb_t, new_tombs)
-        return {"deleted_ids": int(n)}
+        return {"deleted_ids": got["n"]}
 
     def compact(
         self,
@@ -1662,127 +1473,62 @@ class PqIndex:
         through: int | None = None,
         live: bool = False,
     ) -> dict:
-        """Epoch-partition maintenance (round 13, operators/epochs.py
-        has the full semantics): collapse the codes table's `__batch`
+        """Epoch-partition maintenance (operators/epochs.py has the
+        full semantics): collapse the codes table's `__batch`
         partitions into one `__compacted__` stamp, preserving the
         cell level in IVF-PQ mode — probe pruning is unchanged, and
         the codes are rewritten byte-identical (a pure LAYOUT rewrite:
-        nothing is re-encoded, codebooks and centroids are untouched).
-        Records the `compacted_through` replay watermark that
-        absorb() skips against.
-
-        Why it matters at scale: the codes table is the ONLY
-        corpus-sized artifact of the PQ store — its whole point is a
-        dense 20x-smaller scan, and a 1-minute trigger shredding it
-        into ~1,440 epoch directories a day under every cell turns
-        that scan into file-open overhead (epochs.py has the
-        arithmetic).
+        nothing is re-encoded, codebooks and centroids are carried
+        unchanged). Records the `compacted_through` replay watermark
+        that absorb() skips against.
 
         `through` bounds WHICH epochs merge (ids <= through;
-        maintenance stamps always merge) so a LIVE stream's newest —
-        possibly still uncommitted — epoch keeps its own replayable
-        partition; the default merges everything and is for a
-        quiesced stream.
+        maintenance stamps always merge); `live=True` derives
+        `through = newest epoch - 1` for a LIVE stream; the default
+        merges everything and is for a quiesced stream. A FULL merge
+        on a versioned store also purges tombstoned codes.
 
-        Non-versioned stores persist the watermark (in the shared
-        meta) BEFORE the data swap — either crash side is correct
-        (epochs.py); versioned stores write the collapsed codes off
-        to the side and commit watermark + layout in the one pointer
-        flip.
-
-        Returns {"stamps_merged", "compacted_through",
+        Returns {"stamps_merged", "compacted_through", "purged",
         "files_before", "files_after"}."""
         from ..sources.warehouse import atomic_overwrite
         from .epochs import (
-            SENTINEL_STAMPS,
             collapse_epochs,
-            epoch_watermark,
+            hive_partition_values,
             parquet_file_count,
+            plan_merge,
         )
 
         meta = self._validate()
-        stored = meta
-        layout = None
-        if self.versioned:
-            # ONE pointer read drives the whole compaction: the tables
-            # rewritten, the layout republished, and the previous
-            # watermark all come from this row
-            v, layout = self._version_row()
-            if layout is not None:
-                stored = {**stored, **layout}
-            cur_codes, cur_books, cur_cells = self._table_names(v)
-            new_codes, new_books, new_cells = self._table_names(v + 1)
-            cur_tomb = self._tombstones_table(v)
-            new_tomb = self._tombstones_table(v + 1)
-            # snapshot the current version's file inventory before any
-            # reads — the pre-flip guard refuses if a concurrent
-            # absorb/delete lands mid-compaction (VERDICT r15 #1)
-            from ..sources.warehouse import table_inventory
-
-            cur_guard_tables = (cur_codes, cur_tomb)
-            pre_inv = table_inventory(self.wh, cur_guard_tables)
-        else:
-            cur_codes = new_codes = self._table_names()[0]
-            cur_books = new_books = self._table_names()[1]
-            cur_cells = new_cells = self._table_names()[2]
-            cur_tomb = new_tomb = self._tombstones_table()
-        tombs = (
-            self.wh.read(cur_tomb) if self.wh.exists(cur_tomb) else None
-        )
-        partitioned = stored.get("partitioned")
-        partitioned = (
-            self.partitioned if partitioned is None else bool(partitioned)
-        )
-        if not partitioned:
+        # ONE pointer (or meta) read drives the whole compaction: the
+        # tables rewritten, the layout republished, and the previous
+        # watermark all come from this row
+        v, layout = self.store.resolve()
+        stored = {**meta, **layout}
+        if not stored["partitioned"]:
             raise ValueError(
                 f"PqIndex '{self.name}': compact() is epoch-partition "
                 "maintenance — only a partitioned=True store "
                 "accumulates __batch partitions"
             )
-        prev_wm = stored.get("compacted_through")
-        prev_wm = None if prev_wm is None else int(prev_wm)
+        flip = self.store.begin(f"PqIndex('{self.name}').compact", v)
+        cur_codes, cur_books, cur_cells = self.store.tables(v)
+        new_codes, new_books, new_cells = self.store.tables(flip.version)
+        cur_tomb = self.store.tombstones(v)
         # partition-type inference reads an all-numeric-epoch store's
         # __batch as int; cast up front so the restamp union can't mix
         # types (and collected stamps compare as strings)
         codes = self.wh.read(cur_codes).withColumn(
             "__batch", F.col("__batch").cast("string")
         )
-        # stamp enumeration from the hive directory names (r16): the
-        # same distinct set, driver-side — epochs.hive_partition_values
-        from .epochs import hive_partition_values
-
         stamps = hive_partition_values(self.wh.path(cur_codes), "__batch")
-        # integer-orderability over ALL stamps first (loud failure on
-        # ad-hoc ids), then the merge subset and its watermark
-        epoch_watermark(stamps)
-        if live:
-            # live-stream mode: derive the bound from the scanned
-            # stamps — merge everything below the NEWEST integer
-            # epoch, which is the only one a crashed absorb may have
-            # left partially written (epochs.py)
-            if through is not None:
-                raise ValueError(
-                    "compact(live=True) derives its own bound — pass "
-                    "through= or live=True, not both"
-                )
-            ints = [int(s) for s in stamps if s not in SENTINEL_STAMPS]
-            through = max(ints) - 1 if ints else None
-        merged = sorted(
-            s
-            for s in stamps
-            if s in SENTINEL_STAMPS
-            or through is None
-            or int(s) <= int(through)
+        merged, wm = plan_merge(
+            stamps, through, live, stored.get("compacted_through")
         )
-        wm = epoch_watermark(merged, prev_wm)
-        # physical deletion (round 13): a FULL merge on a VERSIONED
-        # store applies the tombstones — codes purged, and the new
-        # version has no tombstone table, so 'tombstones applied'
-        # commits atomically inside the pointer flip. A bounded merge
-        # carries them live; a non-versioned store cannot purge
-        # atomically and keeps filtering at serve time.
-        full = set(merged) == stamps
-        purge = self.versioned and full and tombs is not None
+        purge = (
+            self.versioned
+            and set(merged) == stamps
+            and self.wh.exists(cur_tomb)
+        )
         files_before = parquet_file_count(self.wh.path(cur_codes))
         parts = (
             [] if stored.get("n_cells") is None else [self.cell_col]
@@ -1795,88 +1541,52 @@ class PqIndex:
             files_per_partition,
         ).unionByName(codes.filter(~F.col("__batch").isin(merged)))
         if purge:
-            # size-gated, like serving (ADVICE r13): a mass takedown
-            # followed by a full compaction must degrade to a shuffle
-            # anti-join, never a forced unbounded broadcast
+            # size-gated, like serving: a mass takedown followed by a
+            # full compaction degrades to a shuffle anti-join
             from .tombstones import anti_join_tombstones
 
             collapsed = anti_join_tombstones(
                 collapsed, self.wh, cur_tomb, self.id_col
             )
-        if self.versioned:
-            # EARLY maintenance-race check before the first write into
-            # the shared v(cur+1) paths (see guard_pointer_unmoved)
-            from ..sources.warehouse import guard_pointer_unmoved
 
-            guard_pointer_unmoved(
-                self._version_or_none(), v,
-                f"PqIndex('{self.name}').compact",
-            )
+        def _write():
             atomic_overwrite(
                 collapsed, self.wh.path(new_codes), partition_by=parts
             )
+            if not self.versioned:
+                return
             # version-carries: byte-identical file copies, no Spark jobs
-            self.wh.copy_table(cur_books, new_books)
-            cur_rot = self._rotation_table_for(cur_books)
-            if self.wh.exists(cur_rot):
-                # OPQ stores: the rotation rides the version exactly
-                # like the codebooks it belongs to
-                self.wh.copy_table(
-                    cur_rot, self._rotation_table_for(new_books)
+            # (an OPQ rotation rides the version like its codebooks)
+            for cur_t, new_t in (
+                (cur_books, new_books),
+                (
+                    self._rotation_table_for(cur_books),
+                    self._rotation_table_for(new_books),
+                ),
+                (cur_cells, new_cells),
+            ):
+                if self.wh.exists(cur_t):
+                    self.wh.copy_table(cur_t, new_t)
+
+        # versioned: the shared meta is untouched (no identity field
+        # changed, and the watermark's source of truth is the pointer)
+        self.store.commit(
+            flip,
+            _write,
+            meta=(
+                None
+                if self.versioned
+                else lambda: self._write_meta(
+                    {**meta, "compacted_through": wm}
                 )
-            if self.wh.exists(cur_cells):
-                self.wh.copy_table(cur_cells, new_cells)
-            if tombs is not None and not purge:
-                # bounded merge: tombstones stay live on the new version
-                self.wh.overwrite(new_tomb, tombs)
-            # pre-flip re-check: a concurrent absorb/delete that landed
-            # in version `v` after the snapshot would be abandoned by
-            # the flip — refuse loudly instead (VERDICT r15 #1)
-            from ..sources.warehouse import guard_concurrent_writes
-
-            guard_concurrent_writes(
-                self.wh, cur_guard_tables, pre_inv,
-                f"PqIndex('{self.name}').compact",
-            )
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), v,
-                f"PqIndex('{self.name}').compact",
-            )
-            # the commit point: collapsed codes + watermark + the
-            # unchanged layout flip together; the shared meta is
-            # untouched (no identity field changed, and the versioned
-            # watermark's source of truth is the pointer row)
-            self._write_pointer(
-                v + 1,
-                {
-                    **{
-                        k: stored.get(k)
-                        for k in self._LAYOUT_FIELDS
-                    },
-                    "partitioned": True,
-                    "compacted_through": wm,
-                },
-            )
-        else:
-            # watermark FIRST (epochs.py crash ordering): a crash after
-            # it leaves replays skipping partitions that still exist
-            # with identical rows; re-running compact() converges
-            row = (
-                meta["id_col"], meta["vec_col"], meta["m"],
-                meta["n_codes"], meta["dim"], meta["versioned"],
-                meta.get("n_cells"), meta.get("cell_col"),
-                bool(meta.get("residual")), meta.get("train_spec"),
-                bool(meta.get("partitioned")),
-                meta.get("default_nprobe"),
-                int(wm) if wm is not None else None,
-                bool(meta.get("opq")),
-            )
-            self.wh.overwrite_rows(self.meta_table, [row], self._META_SCHEMA)
-            atomic_overwrite(
-                collapsed, self.wh.path(cur_codes), partition_by=parts
-            )
+            ),
+            layout={
+                **{k: stored.get(k) for k in self._LAYOUT_FIELDS},
+                "compacted_through": wm,
+            },
+            carry_tombstones=not purge,
+            meta_first=True,
+        )
         return {
             "stamps_merged": len(merged),
             "compacted_through": wm,
@@ -1922,12 +1632,10 @@ class PqIndex:
         full trace returned either way).
 
         Persistence: called directly (post-build), the measured
-        default lands in the meta AND — when the current pointer row
-        carries layout fields — in the pointer row, atomic with the
-        version it was measured on; legacy layoutless pointers leave
-        the meta as the default's source (the _version_row overlay
-        drops absent keys, so the meta value serves). Called from
-        build() the default commits with the version instead."""
+        default lands in the meta AND, in versioned mode, in the
+        pointer row, atomic with the version it was measured on.
+        Called from build() the default commits with the version
+        instead."""
         from .similarity import cosine
 
         persist = _tables is None
@@ -2007,29 +1715,17 @@ class PqIndex:
                 break
             nprobe = min(nprobe * 2, int(n_cells))
         if persist:
-            meta = self.wh.read_rows(self.meta_table)[0]
-            # legacy metas lack the r13 fields: absent means the store
-            # predates them — unpartitioned, raw codes, no sample spec
-            wm = meta.get("compacted_through")
-            row = (
-                meta["id_col"], meta["vec_col"], meta["m"],
-                meta["n_codes"], meta["dim"], meta["versioned"],
-                meta.get("n_cells"), meta.get("cell_col"),
-                bool(meta.get("residual")), meta.get("train_spec"),
-                bool(meta.get("partitioned")), int(nprobe),
-                None if wm is None else int(wm),
-                bool(meta.get("opq")),
+            self._write_meta(
+                {**self.store.read_meta(), "default_nprobe": int(nprobe)}
             )
-            self.wh.overwrite_rows(self.meta_table, [row], self._META_SCHEMA)
             if self.versioned:
-                v, layout = self._version_row()
-                if layout is not None:
-                    # a calibration is NOT a compaction or rebuild:
-                    # the layout (watermark included) carries through
-                    # unchanged, only default_nprobe updates
-                    self._write_pointer(
-                        v, {**layout, "default_nprobe": int(nprobe)}
-                    )
+                # a calibration is NOT a compaction or rebuild: the
+                # layout (watermark included) carries through
+                # unchanged, only default_nprobe updates
+                v, layout = self.store.version_row()
+                self.store.write_pointer(
+                    v, {**layout, "default_nprobe": int(nprobe)}
+                )
         return {
             "default_nprobe": int(nprobe),
             "recall": trace[nprobe],
@@ -2124,29 +1820,9 @@ class PqIndex:
                 f"PqIndex '{self.name}': cell_skew needs an IVF-PQ "
                 "store (n_cells) — a flat store has no cells"
             )
-        counts = (
-            self.wh.read(codes_t)
-            .groupBy(self.cell_col)
-            .agg(F.count(F.lit(1)).alias("__n"))
+        return self.store.cell_skew(
+            codes_t, self.cell_col, int(stored["n_cells"])
         )
-        row = counts.agg(
-            F.sum("__n").alias("total"),
-            F.count(F.lit(1)).alias("occupied"),
-            F.max("__n").alias("max_cell"),
-        ).first()
-        n_cells = int(stored["n_cells"])
-        total = row["total"] or 0
-        max_cell = row["max_cell"] or 0
-        skew = (
-            max_cell / (total / n_cells) if total and n_cells else 0.0
-        )
-        return {
-            "n_vectors": total,
-            "n_cells_stored": n_cells,
-            "n_cells_occupied": row["occupied"],
-            "max_cell_rows": max_cell,
-            "skew": skew,
-        }
 
     def needs_retrain(self, max_skew: float = 4.0) -> bool:
         """True when the measured cell skew exceeds `max_skew` — the
@@ -2166,21 +1842,6 @@ class PqIndex:
         return self.cell_skew()["skew"] > max_skew
 
     def prune_versions(self, keep: int = 1) -> list[str]:
-        """Delete old versions (keep = how many most-recent versions
-        to retain; see Bm25Index.prune_versions for the in-flight
-        contract)."""
-        if not self.versioned:
-            return []
-        if keep < 1:
-            raise ValueError("prune_versions keep must be >= 1")
-        cur = self._current_version()
-        removed = []
-        for v in range(1, cur - keep + 1):
-            names = self._table_names(v)
-            for t in names + (
-                self._tombstones_table(v),
-                self._rotation_table_for(names[1]),
-            ):
-                if self.wh.remove_table(t):
-                    removed.append(t)
-        return removed
+        """Delete the tables (OPQ rotation included) of every version
+        but the newest `keep` (see VersionedStore.prune_versions)."""
+        return self.store.prune_versions(keep, extra=("rotation",))

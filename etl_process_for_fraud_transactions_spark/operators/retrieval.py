@@ -31,11 +31,12 @@ Scale design (the 100 TB framing):
   its exchange at <=|query vocab| rows per task, and terms above the
   threshold are dropped BEFORE the postings shuffle ever sees them.
 - df / N / avgdl are bounded rollups: |query vocab| rows and one
-  global pair, rejoined by broadcast. On the PERSISTED index (round
-  12) N / avgdl no longer re-aggregate the doclens table at query
-  time at all: build/absorb maintain per-batch (n_docs, sum_dl)
-  stats partitions, and serving sums <= #batches one-row stats — the
-  last O(corpus) step on the serving path is gone (plan-pinned).
+  global pair, rejoined by broadcast. The PERSISTED index
+  (`Bm25Index`) never re-aggregates its doclens table at query time:
+  build/absorb maintain per-batch (n_docs, sum_dl) stats partitions,
+  and serving sums <= #batches one-row stats (plan-pinned). Its
+  version pointer, tombstones and maintenance flips are the shared
+  `VersionedStore` lifecycle (operators/store.py).
 - No Python in the plan: tokenization, tf, idf and the score are all
   built-in expressions inside whole-stage codegen.
 
@@ -58,6 +59,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .epochs import guard_sentinel_batch, replay_skippable
+from .store import VersionedStore
 from .text import tokens
 
 __all__ = [
@@ -381,10 +383,10 @@ def _rank_topk(scored: DataFrame, id_col: str, topk: int) -> DataFrame:
 
 
 class Bm25Index:
-    """Persisted BM25 index — the serving shape of the retrieval tier,
-    completing the index family (NearDupIndex for dedup, IvfIndex for
-    vectors): build once, query many times, absorb new documents in
-    O(batch).
+    """Persisted BM25 index — the serving shape of the retrieval tier:
+    build once, query many times, absorb new documents in O(batch).
+    The version pointer, tombstones, pruning and the flip commit live
+    in the composed `VersionedStore` (operators/store.py).
 
     Layout (via sources/warehouse.py):
 
@@ -396,31 +398,25 @@ class Bm25Index:
       joins a doc-length relation (no doc-keyed shuffle anywhere in
       the query path).
     - `<name>_doclens`  : (<id_col>, dl) — one narrow row per doc;
-      the per-doc record (rebuild provenance, future deletion
-      propagation). NOT on the query path since round 12.
+      the per-doc record delete() reads. Not on the query path.
     - `<name>_stats`    : one (n_docs, sum_dl) row per build/absorb
-      batch (round 12, VERDICT r11 item 1). N and avgdl sum from
-      these <= #batches rows at query time instead of re-aggregating
-      the full doclens table per query batch — the one O(corpus)
-      step left on the serving path is gone. The sums are exact
-      integers, so N = sum(n_docs) and avgdl = sum(sum_dl)/N are
-      BIT-IDENTICAL to the full doclens aggregate (one IEEE double
-      division either way); absorb stays a blind per-batch append
-      (no read-modify-write of a global stats row, hence no
-      lost-update window between concurrent absorbs), and idf/avgdl
-      still shift automatically with every absorbed batch. In
-      partitioned mode the stats row is hive-partitioned by the same
-      `__batch` stamp, so a re-offered streaming epoch OVERWRITES
-      its own stats partition exactly like its postings/doclens
-      partitions — stats can never double-count a replay.
+      batch. N and avgdl sum from these <= #batches rows at query
+      time instead of re-aggregating the doclens table. The sums are
+      exact integers, so N = sum(n_docs) and avgdl = sum(sum_dl)/N are
+      BIT-IDENTICAL to the full doclens aggregate; absorb stays a
+      blind per-batch append (no read-modify-write of a global stats
+      row, hence no lost-update window between concurrent absorbs).
+      In partitioned mode the stats row is hive-partitioned by the
+      same `__batch` stamp, so a re-offered streaming epoch
+      OVERWRITES its own stats partition exactly like its
+      postings/doclens partitions — stats never double-count a replay.
     - `<name>_meta`     : frozen (text_col, id_col, n_buckets, k1, b)
       — a reader with a different tokenizer column or bucket count
       would prune the wrong partitions or score the wrong field;
-      mismatches fail loudly (the NearDupIndex/IvfIndex guard).
+      mismatches fail loudly.
 
     Query path: bucket ids for the BOUNDED query-term set are computed
-    with one tiny Spark job (same xxhash64 the writer used — never
-    reimplemented driver-side), the postings scan carries
+    with the same xxhash64 the writer used, the postings scan carries
     `__tb IN (...)` as a PartitionFilter plus a broadcast term join,
     df comes from the pruned postings themselves (exact after any
     number of absorbs, no separately-maintained df table to drift),
@@ -451,120 +447,45 @@ class Bm25Index:
         self.k1 = k1
         self.b = b
         #: partitioned=True sub-partitions postings by a `__batch`
-        #: epoch stamp under each term bucket (and doclens by the
+        #: epoch stamp under each term bucket (and doclens/stats by the
         #: stamp): absorb(batch=...) then becomes a dynamic partition
         #: overwrite of that epoch's partitions, so a re-offered
         #: streaming epoch REPLACES its own rows instead of
-        #: duplicating them — the same exactly-once contract as
-        #: NearDupIndex/IvfIndex(partitioned=True); serving is
-        #: unchanged (term-bucket pruning still hits the first
-        #: directory level).
+        #: duplicating them; serving is unchanged (term-bucket pruning
+        #: still hits the first directory level).
         self.partitioned = partitioned
-        #: versioned=True (round 11, the IvfIndex(versioned=True)
-        #: pattern): postings/doclens live in per-version tables
-        #: behind a one-row `<name>_version` pointer, and build() on
-        #: an already-built index becomes an ATOMIC FULL REBUILD —
-        #: new version written off to the side, committed with one
-        #: pointer flip (new analyzer conventions, compaction after
-        #: absorb churn, deletion propagation) while serving stays on
-        #: the old version; in-flight queries keep their resolved
-        #: paths until prune_versions(). topk resolves the pointer
-        #: ONCE per query, so postings and doclens always come from
-        #: the same version.
+        #: versioned=True: postings/doclens/stats live in per-version
+        #: tables behind a one-row `<name>_version` pointer that also
+        #: carries id_type and the replay watermark, and build() on an
+        #: already-built index becomes an ATOMIC FULL REBUILD — the new
+        #: version is written off to the side and committed with one
+        #: pointer flip while serving stays on the old version.
         self.versioned = versioned
+        self.store = VersionedStore(
+            wh, "Bm25Index", name, ("postings", "doclens", "stats"),
+            versioned,
+            "version int, id_type string, compacted_through long",
+        )
 
     @property
     def version_table(self) -> str:
-        return f"{self.name}_version"
-
-    def _version_row(self) -> tuple[int, str | None, int | None]:
-        """(version, id_type, compacted_through) from ONE read of the
-        one-row pointer table — every versioned decision in a call
-        derives from this single row, so a concurrent rebuild flip can
-        never pair one version's layout with another's metadata (the
-        ADVICE-r11 cell_skew lesson, applied here from the start).
-        id_type rides in the pointer row (round 12) so it commits
-        ATOMICALLY with the version it describes — the shared meta
-        table is refreshed only after the flip and is never the source
-        of truth for a versioned index's id column type.
-        compacted_through (round 13, operators/epochs.py) is the
-        replay watermark: it commits with the compaction flip the same
-        way, so absorb's skip decision and the tables it would write
-        always come from one version."""
-        if not self.wh.exists(self.version_table):
-            raise ValueError(
-                f"Bm25Index '{self.name}' is versioned but has no "
-                "version pointer — run build() (it commits v1 and "
-                "writes the pointer) or fix the warehouse root"
-            )
-        # driver-side one-row read (r16): the pointer read costs a file
-        # read, not a Spark job — see warehouse.read_rows
-        row = self.wh.read_rows(self.version_table)[0]
-        # pointer rows written before round 12 carry only `version`;
-        # pre-round-13 rows lack the watermark (never compacted)
-        wm = row.get("compacted_through")
-        return (
-            int(row["version"]),
-            row.get("id_type"),
-            None if wm is None else int(wm),
-        )
-
-    def _current_version(self) -> int:
-        return self._version_row()[0]
-
-    def _version_or_none(self) -> int | None:
-        """Current pointer version, or None when no pointer exists —
-        the pre-flip maintenance-race probe (guard_pointer_unmoved)."""
-        if not self.wh.exists(self.version_table):
-            return None
-        return self._current_version()
-
-    def _table_names(
-        self, version: int | None = None
-    ) -> tuple[str, str, str]:
-        '''(postings, doclens, stats) names — one pointer read in
-        versioned mode, so a caller using several gets a jointly
-        consistent set across a concurrent rebuild flip.'''
-        if not self.versioned:
-            return (
-                f"{self.name}_postings",
-                f"{self.name}_doclens",
-                f"{self.name}_stats",
-            )
-        v = version if version is not None else self._current_version()
-        return (
-            f"{self.name}_postings_v{v}",
-            f"{self.name}_doclens_v{v}",
-            f"{self.name}_stats_v{v}",
-        )
+        return self.store.version_table
 
     @property
     def postings_table(self) -> str:
-        return self._table_names()[0]
+        return self.store.tables()[0]
 
     @property
     def doclens_table(self) -> str:
-        return self._table_names()[1]
+        return self.store.tables()[1]
 
     @property
     def stats_table(self) -> str:
-        return self._table_names()[2]
+        return self.store.tables()[2]
 
     @property
     def meta_table(self) -> str:
-        return f"{self.name}_meta"
-
-    def _tombstones_table(self, version: int | None = None) -> str:
-        """Deletion tombstones (round 13): (id_col, dl) rows, one per
-        deleted DOCUMENT OCCURRENCE. Per-version in versioned mode —
-        a rebuild's fresh version starts with no tombstones (the new
-        corpus is the caller's statement of record), and a purging
-        compaction commits 'tombstones applied' atomically by simply
-        not creating the table for the new version."""
-        if not self.versioned:
-            return f"{self.name}_tombstones"
-        v = version if version is not None else self._current_version()
-        return f"{self.name}_tombstones_v{v}"
+        return self.store.meta_table
 
     def _params(self) -> dict:
         return {
@@ -582,14 +503,10 @@ class Bm25Index:
         id_type: str = "bigint",
         compacted_through: int | None = None,
     ) -> None:
-        # id_type rides along (outside the _params equality check) so
-        # topk's day-zero empty frame matches the populated-index id
-        # column type — a string-keyed corpus must not lock a bigint
-        # schema into a downstream unionByName/writer (ADVICE r10).
-        # compacted_through (round 13) is the replay watermark for the
-        # NON-versioned layout — persisted BEFORE compact()'s data
-        # swap (epochs.py crash ordering); versioned stores carry it
-        # in the pointer row instead.
+        # id_type rides along (outside the identity check) so topk's
+        # day-zero empty frame matches the populated-index id column
+        # type; compacted_through is the unversioned store's replay
+        # watermark (versioned stores carry it in the pointer row)
         self.wh.overwrite_rows(
             self.meta_table,
             [tuple(self._params().values()) + (id_type, compacted_through)],
@@ -599,36 +516,16 @@ class Bm25Index:
             "compacted_through long",
         )
 
-    def _watermark(self) -> int | None:
-        """The replay watermark (None = never compacted): pointer row
-        for versioned stores, meta row otherwise. Legacy rows lack the
-        column — such stores were never compacted."""
-        if self.versioned:
-            return self._version_row()[2]
-        if not self.wh.exists(self.meta_table):
-            return None
-        wm = self.wh.read_rows(self.meta_table)[0].get("compacted_through")
-        return None if wm is None else int(wm)
-
     def _validate(self) -> None:
         if getattr(self, "_params_ok", False):
             return
-        if not self.wh.exists(self.meta_table):
-            self._params_ok = True
-            return
-        stored = self.wh.read_rows(self.meta_table)[0]
-        # metas written before the partitioned/versioned flags take
-        # their defaults; id_type and the compaction watermark are
-        # layout metadata, not identity
-        stored = {"partitioned": False, "versioned": False, **stored}
-        stored.pop("id_type", None)
-        stored.pop("compacted_through", None)
-        if stored != self._params():
-            raise ValueError(
-                f"Bm25Index '{self.name}' was built with {stored}, but "
-                f"this instance uses {self._params()} — a mismatched "
-                "reader prunes the wrong partitions or scores the "
-                "wrong column; rebuild the index or match its layout"
+        stored = self.store.read_meta()
+        if stored is not None:
+            self.store.check_identity(
+                stored, self._params(),
+                "a mismatched reader prunes the wrong partitions or "
+                "scores the wrong column; rebuild the index or match "
+                "its layout",
             )
         self._params_ok = True
 
@@ -734,161 +631,61 @@ class Bm25Index:
         )
 
     def build(self, docs: DataFrame, batch="__build__") -> None:
-        """Full (re)build. Versioned mode (round 11): on an
-        already-built index this writes the NEXT version entirely off
-        to the side and commits it with one atomic pointer flip — the
-        atomic-full-rebuild path (new analyzer conventions, compaction
-        after absorb churn, deletion propagation) while serving keeps
-        reading the old version; prune_versions() garbage-collects it
-        afterwards. Round 12: the (version, id_type) pointer row is
-        the ONLY commit point — postings, doclens, the stats snapshot
-        AND the id column type all become visible in that one flip, so
-        a crash anywhere before it leaves the old version serving with
-        its own consistent metadata (ADVICE r11: meta used to be
-        overwritten pre-flip); the shared meta table is refreshed
-        after the flip purely as the layout-guard record."""
-        from ..sources.warehouse import (
-            atomic_overwrite,
-            guard_concurrent_writes,
-            guard_pointer_unmoved,
-            table_inventory,
-        )
+        """Full (re)build. Versioned: on an already-built index the
+        NEXT version is written off to the side and committed with
+        one pointer flip that also carries the id column type, while
+        serving keeps reading the old version; prune_versions()
+        garbage-collects it afterwards. The new version starts with no
+        tombstones: the new corpus is the caller's statement of
+        record."""
+        from ..session import run_concurrently
+        from ..sources.warehouse import atomic_overwrite
 
-        if self.versioned:
-            new_v = (
-                self._current_version() + 1
-                if self.wh.exists(self.version_table)
-                else 1
-            )
-            post_t, dl_t, stats_t = self._table_names(new_v)
-            # snapshot the CURRENT version's file inventory before any
-            # reads: an absorb/delete landing in v(new_v-1) while this
-            # rebuild runs writes rows the pointer flip would abandon —
-            # the pre-flip guard below refuses loudly instead
-            # (VERDICT r15 #1; tombstones included so a concurrent
-            # takedown can't be silently dropped by the fresh version)
-            cur_tables = (
-                self._table_names(new_v - 1)
-                + (self._tombstones_table(new_v - 1),)
-                if new_v > 1
-                else ()
-            )
-            pre_inv = table_inventory(self.wh, cur_tables)
-        else:
-            new_v = None
-            post_t, dl_t, stats_t = self._table_names()
-        if self.versioned:
-            # EARLY maintenance-race check before the first write into
-            # the shared v(new_v) paths: a competing compact that
-            # already flipped to new_v would have its committed tables
-            # clobbered below (see guard_pointer_unmoved)
-            guard_pointer_unmoved(
-                self._version_or_none(), new_v - 1 if new_v > 1 else None,
-                f"Bm25Index('{self.name}').build",
-            )
+        flip = self.store.begin(
+            f"Bm25Index('{self.name}').build",
+            self.store.version_or_none(),
+        )
+        post_t, dl_t, stats_t = self.store.tables(flip.version)
         post, dl = self._postings(docs), self._doclens(docs)
         post_parts = ["__tb"]
+        stamp = None
         if self.partitioned:
             post = post.withColumn(_BATCH_COL, F.lit(str(batch)))
             dl = dl.withColumn(_BATCH_COL, F.lit(str(batch)))
             post_parts.append(_BATCH_COL)
-            # postings and doclens derive independently from `docs`;
+            stamp = [_BATCH_COL]
+
+        def _dl_then_stats():
             # stats reads the PERSISTED doclens (its stated contract),
-            # so it nests after the doclens write — the whole
-            # doclens->stats chain then overlaps the heavier postings
-            # write (guide §2.6: postings ∥ (doclens -> stats))
-            from ..session import run_concurrently
-
-            def _dl_then_stats():
-                atomic_overwrite(
-                    dl, self.wh.path(dl_t),
-                    partition_by=[_BATCH_COL],
-                )
-                atomic_overwrite(
-                    self._batch_stats(dl_t, batch),
-                    self.wh.path(stats_t),
-                    partition_by=[_BATCH_COL],
-                )
-
-            run_concurrently(
-                lambda: atomic_overwrite(
-                    post, self.wh.path(post_t),
-                    partition_by=post_parts,
-                ),
-                _dl_then_stats,
+            # so it nests after the doclens write; the whole chain then
+            # overlaps the heavier postings write (guide §2.6)
+            atomic_overwrite(dl, self.wh.path(dl_t), partition_by=stamp)
+            atomic_overwrite(
+                self._batch_stats(dl_t, batch),
+                self.wh.path(stats_t),
+                partition_by=stamp,
             )
-        else:
-            from ..session import run_concurrently
 
-            def _dl_then_stats():
-                self.wh.overwrite(dl_t, dl)
-                self.wh.overwrite(stats_t, self._batch_stats(dl_t, batch))
-
-            run_concurrently(
-                lambda: atomic_overwrite(
-                    post, self.wh.path(post_t),
-                    partition_by=post_parts,
-                ),
-                _dl_then_stats,
-            )
         id_type = docs.schema[self.id_col].dataType.simpleString()
-        if self.versioned:
-            # pre-flip re-check: refuse (loudly, pointer untouched) if
-            # a concurrent absorb/delete landed in the current version
-            # after the snapshot above — see guard_concurrent_writes
-            guard_concurrent_writes(
-                self.wh, cur_tables, pre_inv,
-                f"Bm25Index('{self.name}').build",
-            )
-            # and the maintenance-vs-maintenance check: the pointer
-            # must still be where this rebuild resolved it
-            guard_pointer_unmoved(
-                self._version_or_none(), new_v - 1 if new_v > 1 else None,
-                f"Bm25Index('{self.name}').build",
-            )
-            # the commit point: the new version AND its id_type become
-            # visible in this one atomic pointer flip. The replay
-            # watermark RESETS to None — a rebuild indexes a
-            # caller-supplied corpus under a fresh __build__ stamp, so
-            # the old epoch lineage is meaningless (epochs.py: restart
-            # the stream from a fresh checkpoint after a rebuild)
-            self.wh.overwrite_rows(
-                self.version_table,
-                [(int(new_v), id_type, None)],
-                "version int, id_type string, compacted_through long",
-            )
-        self._write_meta(id_type=id_type)
-        if not self.versioned:
-            # a rebuild's corpus is the caller's statement of record:
-            # stale tombstones must not filter it. Removed LAST — a
-            # crash beforehand leaves the new corpus OVER-filtered
-            # (safe for takedowns, converges on re-run), never an
-            # un-filtered window for deleted docs. Versioned rebuilds
-            # get this atomically: the new version has no tombstone
-            # table at all.
-            self.wh.remove_table(self._tombstones_table())
+        # the replay watermark RESETS: a rebuild indexes a fresh corpus
+        # under a fresh __build__ stamp (operators/epochs.py)
+        self.store.commit(
+            flip,
+            lambda: run_concurrently(
+                lambda: atomic_overwrite(
+                    post, self.wh.path(post_t), partition_by=post_parts
+                ),
+                _dl_then_stats,
+            ),
+            meta=lambda: self._write_meta(id_type=id_type),
+            layout={"id_type": id_type, "compacted_through": None},
+        )
         self._params_ok = True
 
     def prune_versions(self, keep: int = 1) -> list[str]:
-        """Delete old versions' table directories (the versioned-
-        rebuild garbage collector). `keep` retains the most recent
-        `keep` versions (default 1 = current only); pass keep=2 while
-        lagging readers may still hold plans resolved against the
-        previous version — a lazy DataFrame pins its resolved paths at
-        plan time, so only prune a version after queries planned
-        against it drain (ADVICE r11: the guard is now a caller knob,
-        not only a docstring)."""
-        if not self.versioned:
-            return []
-        if keep < 1:
-            raise ValueError("prune_versions keep must be >= 1")
-        cur = self._current_version()
-        removed = []
-        for v in range(1, cur - keep + 1):
-            for t in self._table_names(v) + (self._tombstones_table(v),):
-                if self.wh.remove_table(t):
-                    removed.append(t)
-        return removed
+        """Delete the table directories of every version but the
+        newest `keep` (see VersionedStore.prune_versions)."""
+        return self.store.prune_versions(keep)
 
     def absorb(self, new_docs: DataFrame, batch=None) -> None:
         """Index a new document batch — O(batch); idf/avgdl shift
@@ -900,104 +697,54 @@ class Bm25Index:
         dynamic partition overwrite of that epoch's partitions, so a
         re-offered epoch rewrites exactly its own rows.
 
-        Compacted stores (round 13, operators/epochs.py): an epoch
-        <= the recorded `compacted_through` watermark is a REPLAY of
-        rows already merged into the `__compacted__` partitions —
-        absorb no-ops instead of duplicating them. A batch id that
-        collides with a maintenance stamp is always refused: writing
-        a caller batch under `__build__` would dynamic-overwrite the
-        build partition itself.
+        Compacted stores (operators/epochs.py): an epoch <= the
+        recorded `compacted_through` watermark is a REPLAY of rows
+        already merged into the `__compacted__` partitions — absorb
+        no-ops instead of duplicating them. A batch id that collides
+        with a maintenance stamp is always refused: writing a caller
+        batch under `__build__` would dynamic-overwrite the build
+        partition itself.
 
-        Partial-failure contract (ADVICE r16): the postings and
-        doclens/stats appends run CONCURRENTLY (§2.6), so a failed
-        absorb can leave ANY subset of the three tables holding the
-        batch — including stats without postings, a state the old
-        sequential order never produced. The caller MUST re-run the
-        same batch after a failure: each table's write is a dynamic
-        partition overwrite of the batch's own partitions, so the
-        replay rewrites exactly the partial rows and converges. A
-        failed partitioned absorb that is never replayed leaves
-        N/avgdl skewed in whichever direction the surviving subset
-        implies — the stats row is NOT a commit marker."""
+        Partial-failure contract: the postings and doclens/stats
+        appends run CONCURRENTLY (§2.6), so a failed absorb can leave
+        ANY subset of the three tables holding the batch. The caller
+        MUST re-run the same batch after a failure: each table's write
+        is a dynamic partition overwrite of the batch's own
+        partitions, so the replay rewrites exactly the partial rows
+        and converges. The stats row is NOT a commit marker."""
         self._validate()
         if batch is not None:
             guard_sentinel_batch(batch)
-        if self.versioned:
-            # ONE pointer read: the skip decision (watermark) and the
-            # tables a non-skipped absorb writes come from the same row
-            v, _, wm = self._version_row()
-            post_t, dl_t, stats_t = self._table_names(v)
-            tomb_t = self._tombstones_table(v)
-        else:
-            post_t, dl_t, stats_t = self._table_names()
-            tomb_t = self._tombstones_table()
-            # one fresh one-row meta read per call — noise next to the
-            # tokenize/aggregate work (the IvfIndex.absorb precedent)
-            wm = self._watermark() if self.partitioned else None
+        # ONE pointer read: the skip decision (watermark) and the
+        # tables a non-skipped absorb writes come from the same row
+        v, layout = self.store.resolve()
         if (
             self.partitioned
             and batch is not None
-            and replay_skippable(batch, wm)
+            and replay_skippable(batch, layout.get("compacted_through"))
         ):
             return
-        if self.wh.exists(tomb_t):
-            # a deleted id stays deleted until a purging compaction:
-            # re-absorbing it would re-admit a taken-down document AND
-            # double-count it in the stats (its tombstone subtracts
-            # exactly the occurrences indexed BEFORE the delete). The
-            # ban is a size-gated anti-join against the tombstone id
-            # set — deterministic, so replays converge.
-            from .tombstones import anti_join_tombstones
+        post_t, dl_t, stats_t = self.store.tables(v)
+        from .tombstones import anti_join_tombstones
 
-            new_docs = anti_join_tombstones(
-                new_docs, self.wh, tomb_t, self.id_col
-            )
-        # legacy upgrade (round 12 self-review): an index BUILT before
-        # the stats table existed must not let this absorb create a
-        # stats table holding ONLY the new batch — topk would prefer
-        # it over the doclens fallback and serve a batch-sized N
-        # (silently wrong idf). Backfill the pre-append corpus first:
-        # partitioned doclens reconstructs per-batch rows exactly; an
-        # unpartitioned legacy corpus becomes one '__legacy__' row.
-        if not self.wh.exists(stats_t) and self.wh.exists(dl_t):
-            from ..sources.warehouse import atomic_overwrite
-
-            legacy_dl = self.wh.read(dl_t)
-            if self.partitioned:
-                backfill = legacy_dl.groupBy(_BATCH_COL).agg(
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.coalesce(F.sum("dl"), F.lit(0))
-                    .cast("bigint")
-                    .alias("sum_dl"),
-                )
-                atomic_overwrite(
-                    backfill, self.wh.path(stats_t),
-                    partition_by=[_BATCH_COL],
-                )
-            else:
-                self.wh.overwrite(
-                    stats_t,
-                    legacy_dl.agg(
-                        F.lit("__legacy__").alias(_BATCH_COL),
-                        F.count(F.lit(1)).alias("n_docs"),
-                        F.coalesce(F.sum("dl"), F.lit(0))
-                        .cast("bigint")
-                        .alias("sum_dl"),
-                    ),
-                )
+        # a deleted id stays deleted until a purging compaction:
+        # re-absorbing it would re-admit a taken-down document AND
+        # double-count it in the stats (its tombstone subtracts
+        # exactly the occurrences indexed BEFORE the delete)
+        new_docs = anti_join_tombstones(
+            new_docs, self.wh, self.store.tombstones(v), self.id_col
+        )
         post, dl = self._postings(new_docs), self._doclens(new_docs)
+        from ..session import run_concurrently
+
         if self.partitioned:
             if batch is None:
                 raise ValueError(
                     "a partitioned index requires a batch id for absorb()"
                 )
-            from ..session import run_concurrently
 
-            # the postings and doclens epoch writes are independent;
             # the batch's one stats row lands as a dynamic partition
-            # overwrite of ITS OWN __batch partition (a re-offered
-            # epoch rewrites its stats exactly like its postings, so
-            # replay can never double-count N/avgdl) and reads the
+            # overwrite of ITS OWN __batch partition and reads the
             # PERSISTED doclens partition, so it nests after that
             # write — postings ∥ (doclens -> stats), guide §2.6
             def _dl_then_stats():
@@ -1024,14 +771,11 @@ class Bm25Index:
                     "batch stamps need a partitioned index "
                     "(Bm25Index(partitioned=True))"
                 )
-            from ..session import run_concurrently
-
             # all three appends are independent here: the stats row
             # aggregates the BATCH frame (an unpartitioned doclens
-            # read-back could not isolate the new rows from the old
-            # corpus) — one O(batch) pass, never O(corpus), and a
-            # blind O(1)-row append with the same duplicate-on-replay
-            # contract as the postings append. Overlap them (§2.6).
+            # read-back could not isolate the new rows) — one O(batch)
+            # pass and a blind O(1)-row append with the same
+            # duplicate-on-replay contract as the postings append
             run_concurrently(
                 lambda: post.write.mode("append")
                 .partitionBy("__tb")
@@ -1050,10 +794,9 @@ class Bm25Index:
             )
 
     def delete(self, ids: DataFrame) -> dict:
-        """Tombstone documents (round 13 — deletion propagation, the
-        doclens table's stated purpose): takedowns and
-        contaminated-doc removals on an immutable parquet layout.
-        `ids` is a frame holding `self.id_col`.
+        """Tombstone documents (takedowns, contaminated-doc removals)
+        on an immutable parquet layout. `ids` is a frame holding
+        `self.id_col`.
 
         What lands: one (id, dl) tombstone row per indexed OCCURRENCE
         of each id, with dl read from the per-doc doclens record — so
@@ -1061,76 +804,32 @@ class Bm25Index:
         the stats fold and N/avgdl/idf are bit-identical to a store
         that never held the docs. Ids not currently indexed tombstone
         nothing; ids already tombstoned are skipped (never
-        double-subtracted) — delete() is idempotent.
-
-        Cost model: serving stays O(postings-pruned + tombstones)
-        per query — the tombstone set broadcasts, bounded between
-        compactions. delete() itself scans doclens once (a narrow
-        2-column table) — maintenance-time cost, like compact().
+        double-subtracted) — delete() is idempotent. Cost: one scan of
+        the narrow doclens table.
 
         A deleted id stays deleted (absorb filters it) until a FULL
         versioned compaction physically purges rows and tombstones
         behind one pointer flip; non-versioned stores keep filtering
-        at serve time (the honest non-atomic-rebuild layout). A
-        rebuild starts the new version with no tombstones — the new
-        corpus is the caller's statement of record.
+        at serve time. A rebuild starts the new version with no
+        tombstones.
 
         Returns {"deleted_docs", "deleted_dl"} (occurrences actually
         tombstoned by THIS call)."""
         self._validate()
-        if self.versioned:
-            v, _, _ = self._version_row()
-            _, dl_t, _ = self._table_names(v)
-            tomb_t = self._tombstones_table(v)
-        else:
-            dl_t = self._table_names()[1]
-            tomb_t = self._tombstones_table()
+        v = self.store.version_or_none()
+        dl_t = self.store.tables(v)[1]
         if not self.wh.exists(dl_t):
             # day-zero store (empty build writes no doclens files):
             # nothing indexed, nothing to tombstone
             return {"deleted_docs": 0, "deleted_dl": 0}
-        dl = self.wh.read(dl_t)
-        if self.partitioned:
-            dl = dl.drop(_BATCH_COL)
-        # hint-free joins (the erase_keys convention): a handful of
-        # takedown ids auto-broadcasts under Spark's own threshold, a
-        # MASS delete degrades to a shuffle join instead of a forced
-        # broadcast of an unbounded caller frame
-        new_tombs = dl.join(
-            ids.select(self.id_col).distinct(), self.id_col, "left_semi"
-        )
-        if self.wh.exists(tomb_t):
-            new_tombs = new_tombs.join(
-                self.wh.read(tomb_t).select(self.id_col).distinct(),
-                self.id_col,
-                "left_anti",
-            )
-        # r17 (VERDICT r16 item 5, §1/§2.6): the gate stats ride the
-        # checkpoint materialization itself via observed metrics
-        # (CollectMetrics is computed inside the action with
-        # exactly-once delivery, unlike accumulators), so the separate
-        # agg().first() job is gone — 3 sequential jobs become 2
-        # (checkpoint, conditional append), and a no-op delete is ONE
-        # job. Values are the same exact integer arithmetic, now
-        # collected during the pass that was already running.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        new_tombs = (
-            new_tombs.select(
+        got = self.store.delete(
+            self.wh.read(dl_t).select(
                 self.id_col, F.col("dl").cast("bigint").alias("dl")
-            )
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("d"),
-            )
-            .localCheckpoint()
+            ),
+            ids, self.id_col, self.store.tombstones(v),
+            occurrences=True, sums=("dl",),
         )
-        row = obs.get
-        if row["n"]:
-            self.wh.append(tomb_t, new_tombs)
-        return {"deleted_docs": int(row["n"]), "deleted_dl": int(row["d"])}
+        return {"deleted_docs": got["n"], "deleted_dl": got["dl"]}
 
     def compact(
         self,
@@ -1138,51 +837,37 @@ class Bm25Index:
         through: int | None = None,
         live: bool = False,
     ) -> dict:
-        """Epoch-partition maintenance (round 13, operators/epochs.py
-        has the full semantics): collapse `__batch` partitions into
-        one `__compacted__` stamp — postings keep the `__tb`
-        term-bucket level (query pruning is unchanged), doclens
-        collapse to one partition, and the merged epochs' stats rows
-        SUM into a single (`__compacted__`, n_docs, sum_dl) row, so
-        serving's N/avgdl read shrinks back to O(1) rows no matter
-        how many epochs were absorbed. The sums are exact integers —
-        post-compaction scores are bit-identical. A pure LAYOUT
-        rewrite: nothing is retokenized (unlike build()).
-
-        Why it matters at scale: a 1-minute trigger writes ~1,440
-        epoch directories a day under EVERY term bucket — after a
-        month a 64-bucket store lists ~2.7M partition directories and
-        a 3-term query opens ~130k tiny files; bucket pruning is only
-        file-level pruning when each bucket is a handful of
-        well-sized files.
+        """Epoch-partition maintenance (operators/epochs.py has the
+        full semantics): collapse `__batch` partitions into one
+        `__compacted__` stamp — postings keep the `__tb` term-bucket
+        level (query pruning is unchanged), doclens collapse to one
+        partition, and the merged epochs' stats rows SUM into a single
+        (`__compacted__`, n_docs, sum_dl) row, so serving's N/avgdl
+        read shrinks back to O(1) rows no matter how many epochs were
+        absorbed. The sums are exact integers — post-compaction scores
+        are bit-identical. A pure LAYOUT rewrite: nothing is
+        retokenized (unlike build()).
 
         `through` bounds WHICH epochs merge (integer epoch ids
-        <= through; maintenance stamps always merge): epochs above it
-        keep their own partitions and stay individually replayable.
-        Structured Streaming processes epochs serially, so every
-        epoch below the latest is fully committed — pass
-        `through = latest_epoch - 1` to compact under a LIVE stream.
-        The default (None, merge everything) is for a quiesced
-        stream: the newest epoch might be a partially-written crash
-        victim, and merging it bakes the partial rows in where the
-        replay can no longer repair them (epochs.py has the full
-        argument).
+        <= through; maintenance stamps always merge); `live=True`
+        derives `through = newest epoch - 1` for a LIVE stream. The
+        default (merge everything) is for a quiesced stream.
 
-        Non-versioned stores persist the watermark BEFORE the data
-        swap (either crash side is correct — see epochs.py);
-        versioned stores write the collapsed tables off to the side
-        and commit watermark + layout in the one pointer flip.
+        A FULL merge on a versioned store also purges tombstoned docs:
+        postings and doclens lose their rows, the stats fold down by
+        the exact tombstone totals, and the new version has no
+        tombstone table, all in the one pointer flip.
 
-        Returns {"stamps_merged", "compacted_through",
+        Returns {"stamps_merged", "compacted_through", "purged",
         "files_before", "files_after"}."""
+        from ..session import run_concurrently
         from ..sources.warehouse import atomic_overwrite
         from .epochs import (
             COMPACTED_STAMP,
-            SENTINEL_STAMPS,
             collapse_epochs,
-            epoch_watermark,
             hive_partition_values,
             parquet_file_count,
+            plan_merge,
         )
 
         self._validate()
@@ -1196,38 +881,22 @@ class Bm25Index:
             raise ValueError(
                 f"Bm25Index '{self.name}': no meta marker — run build()"
             )
-        meta = self.wh.read_rows(self.meta_table)[0]
-        if self.versioned:
-            cur, id_type, prev_wm = self._version_row()
-            if id_type is None:  # legacy pre-r12 pointer
-                id_type = meta.get("id_type") or "bigint"
-            cur_post, cur_dl, cur_stats = self._table_names(cur)
-            new_post, new_dl, new_stats = self._table_names(cur + 1)
-            cur_tomb = self._tombstones_table(cur)
-            new_tomb = self._tombstones_table(cur + 1)
-            # snapshot the current version's file inventory before any
-            # reads — the pre-flip guard refuses if a concurrent
-            # absorb/delete lands mid-compaction (VERDICT r15 #1)
-            from ..sources.warehouse import table_inventory
-
-            cur_tables = (cur_post, cur_dl, cur_stats, cur_tomb)
-            pre_inv = table_inventory(self.wh, cur_tables)
-        else:
-            id_type = meta.get("id_type") or "bigint"
-            prev_wm = meta.get("compacted_through")
-            prev_wm = None if prev_wm is None else int(prev_wm)
-            cur_post = new_post = self._table_names()[0]
-            cur_dl = new_dl = self._table_names()[1]
-            cur_stats = new_stats = self._table_names()[2]
-            cur_tomb = new_tomb = self._tombstones_table()
+        # ONE pointer (or meta) read: tables, id_type and the previous
+        # watermark all come from this row
+        v, layout = self.store.resolve()
+        flip = self.store.begin(f"Bm25Index('{self.name}').compact", v)
+        id_type = layout["id_type"]
+        cur_post, cur_dl, cur_stats = self.store.tables(v)
+        new_post, new_dl, new_stats = self.store.tables(flip.version)
+        cur_tomb = self.store.tombstones(v)
         tombs = (
             self.wh.read(cur_tomb) if self.wh.exists(cur_tomb) else None
         )
+
         # stats is the COMPLETE epoch record — an empty epoch writes a
         # (0, 0) stats row but no postings/doclens files, and its stamp
-        # must still advance the watermark or its replay would append a
-        # duplicate stats row after compaction. The stamp column is
-        # cast to string up front: partition-type inference reads an
+        # must still advance the watermark. The stamp column is cast to
+        # string up front: partition-type inference reads an
         # all-numeric-epoch store's __batch as int, and the
         # restamp-to-__compacted__ union must not mix types.
         def _stamped(table):
@@ -1235,23 +904,7 @@ class Bm25Index:
                 _BATCH_COL, F.col(_BATCH_COL).cast("string")
             )
 
-        # legacy pre-stats store (ADVICE r13): topk and absorb both
-        # handle the missing-stats layout explicitly, so compact()
-        # must fail GUIDED, not with a raw AnalysisException — one
-        # absorb() backfills the stats table from the doclens record
-        # (the round-12 legacy-upgrade path), after which compact()
-        # has the complete epoch record it folds.
-        if not self.wh.exists(cur_stats):
-            raise ValueError(
-                f"Bm25Index '{self.name}': no stats table — this is a "
-                "legacy pre-stats store. Run one absorb() first (it "
-                "backfills per-epoch stats from the doclens record), "
-                "then compact()."
-            )
         stats = _stamped(cur_stats)
-        # stamp enumeration from the hive directory names (r16): the
-        # same distinct set, read driver-side instead of two Spark
-        # jobs — see epochs.hive_partition_values
         stamps = hive_partition_values(self.wh.path(cur_stats), _BATCH_COL)
         post = dl = None
         if self.wh.exists(cur_post):
@@ -1261,93 +914,34 @@ class Bm25Index:
             )
         if self.wh.exists(cur_dl):
             dl = _stamped(cur_dl)
-        # integer-orderability check over ALL stamps first (raises on
-        # ad-hoc ids — they cannot be ordered against `through` or the
-        # watermark), then the merge subset and its watermark
-        epoch_watermark(stamps)
-        if live:
-            # live-stream mode: derive the bound from the scanned
-            # stamps — merge everything below the NEWEST integer
-            # epoch, which is the only one a crashed absorb may have
-            # left partially written (epochs.py)
-            if through is not None:
-                raise ValueError(
-                    "compact(live=True) derives its own bound — pass "
-                    "through= or live=True, not both"
-                )
-            ints = [int(s) for s in stamps if s not in SENTINEL_STAMPS]
-            through = max(ints) - 1 if ints else None
-        merged = sorted(
-            s
-            for s in stamps
-            if s in SENTINEL_STAMPS
-            or through is None
-            or int(s) <= int(through)
+        merged, wm = plan_merge(
+            stamps, through, live, layout.get("compacted_through")
         )
-        wm = epoch_watermark(merged, prev_wm)
-        # physical deletion (round 13): a FULL merge on a VERSIONED
-        # store applies the tombstones for real — purged postings and
-        # doclens, stats folded down by the exact tombstone totals,
-        # and the new version simply has NO tombstone table, so
-        # "tombstones applied" commits atomically inside the pointer
-        # flip (a crash pre-flip leaves the old version serving with
-        # its tombstones intact). A bounded merge keeps un-merged
-        # epochs' raw rows, so tombstones carry to the new version
-        # un-applied; a non-versioned store cannot purge atomically
-        # and keeps filtering at serve time — delete() documents this.
-        full = set(merged) == stamps
-        purge = self.versioned and full and tombs is not None
+        purge = self.versioned and set(merged) == stamps and tombs is not None
         files_before = (
             parquet_file_count(self.wh.path(cur_post))
             if post is not None
             else 0
         )
 
-        def _split(df):
-            return (
+        def _collapsed(df, parts):
+            out = collapse_epochs(
                 df.filter(F.col(_BATCH_COL).isin(merged)),
-                df.filter(~F.col(_BATCH_COL).isin(merged)),
-            )
-
-        def _purged(df):
-            if not purge or df is None:
-                return df
-            # size-gated, like serving (ADVICE r13): a mass takedown
-            # followed by a full compaction must degrade to a shuffle
-            # anti-join, never a forced unbounded broadcast
+                _BATCH_COL, parts, self.id_col, files_per_partition,
+            ).unionByName(df.filter(~F.col(_BATCH_COL).isin(merged)))
+            if not purge:
+                return out
             from .tombstones import anti_join_tombstones
 
-            return anti_join_tombstones(df, self.wh, cur_tomb, self.id_col)
+            return anti_join_tombstones(out, self.wh, cur_tomb, self.id_col)
 
         writes = []
         if post is not None:
-            merge_p, keep_p = _split(post)
-            writes.append((
-                new_post,
-                _purged(
-                    collapse_epochs(
-                        merge_p, _BATCH_COL, ["__tb", _BATCH_COL],
-                        self.id_col, files_per_partition,
-                    ).unionByName(keep_p)
-                ),
-                ["__tb", _BATCH_COL],
-            ))
-        elif self.versioned:
-            writes.append((new_post, post, None))  # nothing to carry
+            parts = ["__tb", _BATCH_COL]
+            writes.append((new_post, _collapsed(post, parts), parts))
         if dl is not None:
-            merge_d, keep_d = _split(dl)
-            writes.append((
-                new_dl,
-                _purged(
-                    collapse_epochs(
-                        merge_d, _BATCH_COL, [_BATCH_COL],
-                        self.id_col, files_per_partition,
-                    ).unionByName(keep_d)
-                ),
-                [_BATCH_COL],
-            ))
-        merge_s, keep_s = _split(stats)
-        stats_src = merge_s.select(
+            writes.append((new_dl, _collapsed(dl, [_BATCH_COL]), [_BATCH_COL]))
+        stats_src = stats.filter(F.col(_BATCH_COL).isin(merged)).select(
             F.col("n_docs").cast("bigint").alias("n_docs"),
             F.col("sum_dl").cast("bigint").alias("sum_dl"),
         )
@@ -1374,81 +968,30 @@ class Bm25Index:
         writes.append((
             new_stats,
             compacted_stats.unionByName(
-                keep_s.select(_BATCH_COL, "n_docs", "sum_dl")
+                stats.filter(~F.col(_BATCH_COL).isin(merged)).select(
+                    _BATCH_COL, "n_docs", "sum_dl"
+                )
             ),
             [_BATCH_COL],
         ))
-        if self.versioned:
-            # EARLY maintenance-race check before the first write into
-            # the shared v(cur+1) paths: a competing maintainer that
-            # already flipped would have its committed tables clobbered
-            # by the writes below — refuse while they're intact (the
-            # pre-flip re-check covers the later window; see
-            # guard_pointer_unmoved for the residual caveat)
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), cur,
-                f"Bm25Index('{self.name}').compact",
-            )
-            from ..session import run_concurrently
-
-            # the collapsed tables are independent of one another —
-            # overlap their writes (guide §2.6)
-            run_concurrently(*[
+        # the collapsed tables are independent of one another —
+        # overlap their writes (guide §2.6)
+        self.store.commit(
+            flip,
+            lambda: run_concurrently(*[
                 lambda t=table, f=frame, p=parts: atomic_overwrite(
                     f, self.wh.path(t), partition_by=p
                 )
                 for table, frame, parts in writes
-                if frame is not None
-            ])
-            if tombs is not None and not purge:
-                # bounded merge: tombstones stay live on the new
-                # version — a byte-identical file copy, no Spark job
-                from ..sources.warehouse import copy_table_atomic
-
-                copy_table_atomic(
-                    self.wh.spark,
-                    self.wh.path(cur_tomb),
-                    self.wh.path(new_tomb),
-                )
-            # pre-flip re-check: a concurrent absorb/delete that landed
-            # in version `cur` after the snapshot would be abandoned by
-            # the flip — refuse loudly instead (VERDICT r15 #1)
-            from ..sources.warehouse import guard_concurrent_writes
-
-            guard_concurrent_writes(
-                self.wh, cur_tables, pre_inv,
-                f"Bm25Index('{self.name}').compact",
-            )
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), cur,
-                f"Bm25Index('{self.name}').compact",
-            )
-            # the commit point: collapsed tables + watermark + id_type
-            # become visible in one pointer flip
-            self.wh.overwrite_rows(
-                self.version_table,
-                [(int(cur + 1), id_type, wm)],
-                "version int, id_type string, compacted_through long",
-            )
-            self._write_meta(id_type=id_type)
-        else:
-            # watermark FIRST: a crash after it leaves replays skipping
-            # partitions that still exist with identical rows, and
-            # re-running compact() converges (epochs.py crash ordering)
-            self._write_meta(id_type=id_type, compacted_through=wm)
-            from ..session import run_concurrently
-
-            run_concurrently(*[
-                lambda t=table, f=frame, p=parts: atomic_overwrite(
-                    f, self.wh.path(t), partition_by=p
-                )
-                for table, frame, parts in writes
-                if frame is not None
-            ])
+            ]),
+            meta=lambda: self._write_meta(
+                id_type=id_type,
+                compacted_through=None if self.versioned else wm,
+            ),
+            layout={"id_type": id_type, "compacted_through": wm},
+            carry_tombstones=not purge,
+            meta_first=True,
+        )
         return {
             "stamps_merged": len(merged),
             "compacted_through": wm,
@@ -1473,26 +1016,18 @@ class Bm25Index:
         CURRENT corpus size (df from the pruned postings, N from the
         per-batch stats rows).
 
-        Scale shape (round 12): the plan reads (a) the query terms'
-        postings partitions — file-level pruned — and (b) the
-        <= #batches one-row stats table. The doclens table is NOT on
-        this path anymore (plan-pinned in tests/test_retrieval.py):
-        'a query reads only its term buckets' now holds with no
-        O(corpus) footnote."""
+        Scale shape: the plan reads (a) the query terms' postings
+        partitions — file-level pruned — and (b) the <= #batches
+        one-row stats table. The doclens table is not on this path
+        (plan-pinned in tests/test_retrieval.py)."""
         self._validate()
         spark = self.wh.spark
-        # one pointer resolution for the whole query: postings, stats,
-        # tombstones (and the legacy-fallback doclens) always come
-        # from the SAME version, even across a concurrent versioned
-        # rebuild flip
-        if self.versioned:
-            _v, _ptr_id_type, _ = self._version_row()
-            post_t, dl_t, stats_t = self._table_names(_v)
-            tomb_t = self._tombstones_table(_v)
-        else:
-            _ptr_id_type = None
-            post_t, dl_t, stats_t = self._table_names()
-            tomb_t = self._tombstones_table()
+        # one pointer (or meta) read for the whole query: postings,
+        # stats, tombstones and the id type always come from the SAME
+        # version, even across a concurrent versioned rebuild flip
+        v, layout = self.store.resolve()
+        post_t, _, stats_t = self.store.tables(v)
+        tomb_t = self.store.tombstones(v)
         q = (
             queries
             if isinstance(queries, DataFrame)
@@ -1501,8 +1036,8 @@ class Bm25Index:
         qterms = q.select("term").distinct()
         # day-zero: building an EMPTY corpus (or a stream's first
         # epoch) writes no parquet files, and schema inference over a
-        # file-less directory raises. Accepted ONLY when the meta
-        # marker proves a build completed (the NearDupIndex guard):
+        # file-less directory raises. Accepted ONLY when the pointer or
+        # meta row proves a build completed (the NearDupIndex guard):
         # an index unreadable for an environmental reason must not
         # silently serve zero results.
         from pyspark.errors import AnalysisException
@@ -1513,19 +1048,7 @@ class Bm25Index:
             cond = e.getCondition() if hasattr(e, "getCondition") else None
             if cond not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
                 raise
-            if self.versioned:
-                # the pointer row IS the commit marker, and its
-                # id_type is atomic with the version it describes (the
-                # row was already read once above); a pre-round-12
-                # pointer (no id_type column) falls back to the meta
-                # table — which may record the real type — before the
-                # 'bigint' default (ADVICE r12)
-                id_type = _ptr_id_type
-                if id_type is None and self.wh.exists(self.meta_table):
-                    meta = self.wh.read_rows(self.meta_table)[0]
-                    id_type = meta.get("id_type")
-                id_type = id_type or "bigint"
-            elif not self.wh.exists(self.meta_table):
+            if not layout:
                 raise ValueError(
                     f"Bm25Index '{self.name}': '{post_t}' "
                     "has no readable data and no meta marker — the "
@@ -1533,13 +1056,11 @@ class Bm25Index:
                     "wrong; run build() (it writes the marker even for "
                     "an empty corpus) or fix the root"
                 ) from e
-            else:
-                meta = self.wh.read_rows(self.meta_table)[0]
-                id_type = meta.get("id_type") or "bigint"
             return spark.createDataFrame(
                 [],
-                f"query_id string, rank int, {self.id_col} {id_type}, "
-                "n_terms_matched bigint, score double",
+                f"query_id string, rank int, {self.id_col} "
+                f"{layout['id_type']}, n_terms_matched bigint, "
+                "score double",
             )
         # partition pruning: bucket ids of the bounded term set via the
         # SAME xxhash64 the writer used. Mapping input (r16): the terms
@@ -1587,60 +1108,34 @@ class Bm25Index:
             post = anti_join_tombstones(
                 post, self.wh, tomb_t, self.id_col, tombs=tombs
             )
-        if self.wh.exists(stats_t):
-            # <= #batches rows; integer sums are exact, so this is
-            # bit-identical to the full doclens aggregate it replaces
-            base = self.wh.read(stats_t).select(
-                F.col("n_docs").cast("bigint").alias("n_docs"),
-                F.col("sum_dl").cast("bigint").alias("sum_dl"),
-            )
-            if tombs is not None:
-                base = base.unionByName(
-                    tombs.agg(
-                        (-F.count(F.lit(1)))
-                        .cast("bigint")
-                        .alias("n_docs"),
-                        (-F.coalesce(F.sum("dl"), F.lit(0)))
-                        .cast("bigint")
-                        .alias("sum_dl"),
-                    )
+        # <= #batches rows; integer sums are exact, so this is
+        # bit-identical to the full doclens aggregate it replaces
+        base = self.wh.read(stats_t).select(
+            F.col("n_docs").cast("bigint").alias("n_docs"),
+            F.col("sum_dl").cast("bigint").alias("sum_dl"),
+        )
+        if tombs is not None:
+            base = base.unionByName(
+                tombs.agg(
+                    (-F.count(F.lit(1))).cast("bigint").alias("n_docs"),
+                    (-F.coalesce(F.sum("dl"), F.lit(0)))
+                    .cast("bigint")
+                    .alias("sum_dl"),
                 )
-            # N can legitimately reach 0 on a live store: delete()
-            # tombstoning EVERY doc leaves postings files on disk (so
-            # the day-zero fallback above does not fire) with all rows
-            # filtered — avgdl goes NULL instead of dividing by zero
-            # (no posting survives to consume it; the hypothesis pin
-            # in tests/test_deletes.py found this corner under ANSI)
-            stats = base.agg(
-                F.sum("n_docs").alias("__n"),
-                (
-                    F.sum("sum_dl").cast("double")
-                    / F.nullif(
-                        F.sum("n_docs").cast("double"), F.lit(0.0)
-                    )
-                ).alias("__avgdl"),
             )
-        else:
-            # legacy pre-round-12 layout (no stats table persisted):
-            # the old full-doclens aggregate, kept so an existing
-            # store keeps serving without a rebuild (tombstones
-            # filter the doclens rows directly, same arithmetic)
-            dl = self.wh.read(dl_t)
-            if self.partitioned:
-                dl = dl.drop(_BATCH_COL)
-            if tombs is not None:
-                dl = anti_join_tombstones(
-                    dl, self.wh, tomb_t, self.id_col, tombs=tombs
-                )
-            stats = dl.select(
-                F.count(F.lit(1)).alias("__n"),
-                (
-                    F.sum("dl").cast("double")
-                    / F.nullif(
-                        F.count(F.lit(1)).cast("double"), F.lit(0.0)
-                    )
-                ).alias("__avgdl"),
-            )
+        # N can legitimately reach 0 on a live store: delete()
+        # tombstoning EVERY doc leaves postings files on disk (so the
+        # day-zero fallback above does not fire) with all rows
+        # filtered — avgdl goes NULL instead of dividing by zero (no
+        # posting survives to consume it; the hypothesis pin in
+        # tests/test_deletes.py found this corner under ANSI)
+        stats = base.agg(
+            F.sum("n_docs").alias("__n"),
+            (
+                F.sum("sum_dl").cast("double")
+                / F.nullif(F.sum("n_docs").cast("double"), F.lit(0.0))
+            ).alias("__avgdl"),
+        )
         dfreq = post.groupBy("term").agg(
             F.count(F.lit(1)).alias("__df")
         )

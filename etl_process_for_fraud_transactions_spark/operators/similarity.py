@@ -15,8 +15,11 @@ Three tiers, all DataFrame-native:
   table's `label`) or from `ivf_build` (MLlib KMeans trained in
   place); centroids are a groupBy mean over the assignment.
 
-At 100 TB the corpus side stays partitioned; only centroids/queries
-broadcast. Nothing here collects the corpus to the driver.
+`IvfIndex` persists the IVF tier (cell-partitioned vectors + stored
+centroids) on the shared `VersionedStore` lifecycle
+(operators/store.py). At 100 TB the corpus side stays partitioned;
+only centroids/queries broadcast. Nothing here collects the corpus to
+the driver.
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .epochs import guard_sentinel_batch, replay_skippable
+from .store import VersionedStore
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -412,6 +416,8 @@ def ivf_topk(
 class IvfIndex:
     """Persisted IVF index — the serving shape of the similarity tier,
     mirroring NearDupIndex for dedup: build once, query many times.
+    The version pointer, tombstones, pruning and the flip commit live
+    in the composed `VersionedStore` (operators/store.py).
 
     - `<name>_vectors`   : the assigned corpus, hive-PARTITIONED BY the
       cell id, so a probe of nprobe cells reads nprobe directories —
@@ -420,25 +426,19 @@ class IvfIndex:
     - `<name>_centroids` : (cell, centroid) — tiny; serving never
       re-aggregates the corpus to recover the quantizer.
 
-    Rebuild cadence: centroids drift as the corpus grows; rebuild when
-    the fraction of vectors closer to a different centroid than their
-    assigned one exceeds tolerance (or simply with each major corpus
-    version). Appending new vectors assigned to existing cells
-    (`absorb`) is always safe for correctness — recall degrades
-    gracefully, never silently.
+    Rebuild cadence: centroids drift as the corpus grows; `cell_skew`
+    measures it and `retrain` re-shards. Appending new vectors
+    assigned to existing cells (`absorb`) is always safe for
+    correctness — recall degrades gracefully, never silently.
 
-    Parameter guard (mirrors NearDupIndex._validate_params): build()
-    persists (id_col, vec_col, cell_col, n_cells, dim) in
-    `<name>_meta`; absorb()/topk() validate the instance's column
-    layout against it AND probe the incoming frame's vector length
-    against the stored dim — zip_with silently truncates to the
-    shorter array, so a dim-mismatched absorb or query would DEGRADE
-    RECALL SILENTLY (every dot product computed over a prefix) rather
-    than error. The dim probe is one small aggregate per call: absorb
-    is a daily batch op and query frames are broadcast-small, so the
-    cost is noise next to silent wrong answers. Pre-meta stores (built
-    before the guard existed, or by an external writer) skip
-    validation."""
+    Parameter guard: build() persists (id_col, vec_col, cell_col,
+    n_cells, dim) in `<name>_meta`; absorb()/topk() validate the
+    instance's column layout against it AND probe the incoming
+    frame's vector length against the stored dim — zip_with silently
+    truncates to the shorter array, so a dim-mismatched absorb or
+    query would DEGRADE RECALL SILENTLY rather than error. The dim
+    probe is one small aggregate per call. A store without a meta row
+    (an external writer) skips validation."""
 
     def __init__(
         self,
@@ -458,108 +458,48 @@ class IvfIndex:
         self.cell_col = cell_col
         #: quantized=True stores int8 codes + one float32 scale per
         #: vector instead of the float array — ~4x less at rest and
-        #: through every scan (the 10^9-vector storage/IO bill is the
-        #: dominant serving cost; int8 symmetric quantization is the
-        #: standard first 4x). Serving DEQUANTIZES IN-EXPRESSION
+        #: through every scan. Serving DEQUANTIZES IN-EXPRESSION
         #: (codes * scale inside the probe scan, still map-side and
         #: partition-pruned), so ranking runs in dequantized space —
         #: recall loss is bounded by the rounding error (pinned by
-        #: test) and the shortlist can be re-ranked in float upstream
-        #: when exactness matters. The flag freezes into meta: a
-        #: float reader on a quantized store (or vice versa) fails
-        #: loudly instead of mis-reading the layout.
+        #: test). The flag freezes into meta: a float reader on a
+        #: quantized store (or vice versa) fails loudly.
         self.quantized = quantized
         #: partitioned=True sub-partitions the vectors table by a
         #: `__batch` stamp under each cell dir; absorb(batch=...) is
         #: then a dynamic partition overwrite of that epoch's
         #: partitions — a replayed streaming epoch REPLACES its own
-        #: rows instead of appending duplicates (same contract as
-        #: NearDupIndex(partitioned=True)). Serving is unchanged:
+        #: rows instead of appending duplicates. Serving is unchanged:
         #: cell-level pruning still hits the first directory level.
         self.partitioned = partitioned
-        #: versioned=True (round 11) stores vectors/centroids as
+        #: versioned=True stores vectors/centroids as
         #: `<name>_vectors_v<N>` / `<name>_centroids_v<N>` behind a
-        #: one-row `<name>_version` pointer table. retrain() then
-        #: builds version N+1 COMPLETELY off to the side and commits
-        #: it with a single atomic pointer flip — the
-        #: versioned-manifest upgrade path retrain()'s consistency
-        #: note documents: serving resolves the pointer once per
-        #: query and reads a jointly consistent (vectors, centroids)
-        #: pair; a crash mid-retrain leaves the pointer (and thus
-        #: serving) on the old version untouched. Old versions stay
-        #: on disk until prune_versions() — in-flight queries hold
-        #: path references, so prune only after they drain.
+        #: one-row `<name>_version` pointer (version, n_cells,
+        #: watermark). build/retrain/compact write version N+1 off to
+        #: the side and commit it with one atomic pointer flip:
+        #: serving resolves the pointer once per query and reads a
+        #: jointly consistent (vectors, centroids) pair.
         self.versioned = versioned
+        self.store = VersionedStore(
+            wh, "IvfIndex", name, ("vectors", "centroids"), versioned,
+            "version int, n_cells int, compacted_through long",
+        )
 
     @property
     def version_table(self) -> str:
-        return f"{self.name}_version"
-
-    def _version_row(self) -> tuple[int, int | None]:
-        """(version, compacted_through) from ONE pointer-row read.
-
-        Callers that make a replay-skip decision AND act on the
-        version's tables must take both from the same read (the
-        Bm25Index._version_row pattern): reading the watermark and
-        the version separately lets a concurrent compact(live=True)
-        flip land between the two reads, pairing a STALE watermark
-        with the NEW version's tables — a crash-replayed epoch
-        already merged into __compacted__ would not be skipped and
-        would write duplicate rows (ADVICE r13)."""
-        if not self.wh.exists(self.version_table):
-            raise ValueError(
-                f"IvfIndex '{self.name}' is versioned but has no "
-                "version pointer — run build() (it commits v1 and "
-                "writes the pointer) or fix the warehouse root"
-            )
-        # driver-side one-row read (r16): no Spark job — warehouse.read_rows
-        row = self.wh.read_rows(self.version_table)[0]
-        wm = row.get("compacted_through")
-        return int(row["version"]), (None if wm is None else int(wm))
-
-    def _current_version(self) -> int:
-        return self._version_row()[0]
-
-    def _version_or_none(self) -> int | None:
-        """Current pointer version, or None when no pointer exists —
-        the pre-flip maintenance-race probe (guard_pointer_unmoved)."""
-        if not self.wh.exists(self.version_table):
-            return None
-        return self._current_version()
-
-    def _table_names(self, version: int | None = None) -> tuple[str, str]:
-        '''(vectors, centroids) names — resolved from ONE pointer
-        read in versioned mode, so a caller that uses both gets a
-        jointly consistent pair even across a concurrent retrain
-        flip.'''
-        if not self.versioned:
-            return f"{self.name}_vectors", f"{self.name}_centroids"
-        v = version if version is not None else self._current_version()
-        return f"{self.name}_vectors_v{v}", f"{self.name}_centroids_v{v}"
+        return self.store.version_table
 
     @property
     def vectors_table(self) -> str:
-        return self._table_names()[0]
+        return self.store.tables()[0]
 
     @property
     def centroids_table(self) -> str:
-        return self._table_names()[1]
+        return self.store.tables()[1]
 
     @property
     def meta_table(self) -> str:
-        return f"{self.name}_meta"
-
-    def _tombstones_table(self, version: int | None = None) -> str:
-        """Deletion tombstones (round 13): one id per deleted
-        document. Per-version in versioned mode — a build's fresh
-        lineage starts clean, and a purging compaction commits
-        'tombstones applied' by not creating the table for the new
-        version (retrain CARRIES them: it preserves rows, so the
-        filter must survive the re-shard)."""
-        if not self.versioned:
-            return f"{self.name}_tombstones"
-        v = version if version is not None else self._current_version()
-        return f"{self.name}_tombstones_v{v}"
+        return self.store.meta_table
 
     def _frame_dim(self, frame: DataFrame, vec_col: str) -> int:
         """min/max vector length in one aggregate; raises on ragged."""
@@ -582,14 +522,12 @@ class IvfIndex:
         default_nprobe: int | None = None,
         compacted_through: int | None = None,
     ) -> None:
-        # default_nprobe: the MEASURED serving default written by
-        # calibrate_nprobe (round 12) — NULL until a calibration runs,
-        # and reset to NULL by build/retrain (new geometry invalidates
-        # the old measurement) unless they re-calibrate. Extra meta
-        # columns are layout-safe: _validate compares only the
-        # identity keys. compacted_through (round 13): the replay
-        # watermark compact() records — build resets it, retrain
-        # carries it (see operators/epochs.py).
+        # default_nprobe: the MEASURED serving default calibrate_nprobe
+        # writes — NULL until a calibration runs, reset by
+        # build/retrain (new geometry invalidates the old measurement)
+        # unless they re-calibrate. compacted_through: the unversioned
+        # store's replay watermark (build resets it, retrain carries
+        # it — operators/epochs.py)
         self.wh.overwrite_rows(
             self.meta_table,
             [
@@ -611,25 +549,7 @@ class IvfIndex:
             "quantized boolean, versioned boolean, "
             "default_nprobe int, compacted_through long",
         )
-        self._stored_meta = self.wh.read_rows(self.meta_table)[0]
-
-    def _watermark(self) -> int | None:
-        """The compaction replay watermark, read FRESH per call (the
-        cached `_stored_meta` may predate a concurrent compact): from
-        the version pointer row in versioned mode (it commits with
-        the flip), else from the meta table. None = never compacted
-        (legacy rows simply lack the column)."""
-        if self.versioned:
-            if not self.wh.exists(self.version_table):
-                return None
-            row = self.wh.read_rows(self.version_table)[0]
-            wm = row.get("compacted_through")
-        else:
-            if not self.wh.exists(self.meta_table):
-                return None
-            row = self.wh.read_rows(self.meta_table)[0]
-            wm = row.get("compacted_through")
-        return None if wm is None else int(wm)
+        self._stored_meta = self.store.read_meta()
 
     def _store_cols(self, assigned: DataFrame) -> DataFrame:
         """Project the frame to its at-rest layout: float arrays, or
@@ -653,40 +573,33 @@ class IvfIndex:
             self.vec_col, dequantize(F.col("qvec"), F.col("qvec_scale"))
         ).drop("qvec", "qvec_scale")
 
+    def _meta(self) -> dict | None:
+        """The meta row, cached once it exists."""
+        if getattr(self, "_stored_meta", None) is None:
+            self._stored_meta = self.store.read_meta()
+        return self._stored_meta
+
     def _validate(
         self, frame: DataFrame | None = None, vec_col: str | None = None
     ) -> None:
         """Fail loudly on a column-layout mismatch with the persisted
         store, and on a vector-length mismatch in `frame` — both would
         otherwise degrade recall silently (see class docstring)."""
-        if not self.wh.exists(self.meta_table):
-            return  # pre-meta store: nothing to check
-        if not hasattr(self, "_stored_meta"):
-            self._stored_meta = self.wh.read_rows(self.meta_table)[0]
-        # metas written before the partitioned/quantized flags existed
-        # take the defaults they were built under
-        stored = {
-            "partitioned": False,
-            "quantized": False,
-            "versioned": False,
-            **self._stored_meta,
-        }
-        mine = {
-            "id_col": self.id_col,
-            "vec_col": self.vec_col,
-            "cell_col": self.cell_col,
-            "partitioned": self.partitioned,
-            "quantized": self.quantized,
-            "versioned": self.versioned,
-        }
-        diff = {k: (stored[k], v) for k, v in mine.items() if stored[k] != v}
-        if diff:
-            raise ValueError(
-                f"IvfIndex '{self.name}' was built with "
-                f"{ {k: s for k, (s, _) in diff.items()} }, but this "
-                f"instance uses { {k: m for k, (_, m) in diff.items()} } "
-                "— rebuild the index or match its layout"
-            )
+        stored = self._meta()
+        if stored is None:
+            return  # no meta row: nothing to check
+        self.store.check_identity(
+            stored,
+            {
+                "id_col": self.id_col,
+                "vec_col": self.vec_col,
+                "cell_col": self.cell_col,
+                "partitioned": self.partitioned,
+                "quantized": self.quantized,
+                "versioned": self.versioned,
+            },
+            "rebuild the index or match its layout",
+        )
         if frame is not None:
             d = self._frame_dim(frame, vec_col or self.vec_col)
             if d not in (-1, stored["dim"]):
@@ -698,6 +611,40 @@ class IvfIndex:
                     "input or rebuild the index"
                 )
 
+    def _write_cells(self, assigned, vec_t, cent_t, calibrate, seed):
+        """Write the assigned corpus to `vec_t` and its centroids to
+        `cent_t`; return (n_cells, dim, default_nprobe). Centroids are
+        the per-cell means of the PERSISTED (in quantized mode:
+        dequantized) vectors, so serving and quantizer see the same
+        vectors; the dim/ragged scan reads the same table and overlaps
+        the centroid job (guide §2.6). `calibrate` is a recall target
+        or None."""
+        from ..session import run_concurrently
+        from ..sources.warehouse import atomic_overwrite
+
+        parts = [self.cell_col] + (["__batch"] if self.partitioned else [])
+        atomic_overwrite(
+            self._store_cols(assigned), self.wh.path(vec_t),
+            partition_by=parts,
+        )
+        _, dim = run_concurrently(
+            lambda: self.wh.overwrite(
+                cent_t,
+                ivf_centroids(
+                    self._read_vectors(vec_t), self.cell_col, self.vec_col
+                ),
+            ),
+            lambda: self._frame_dim(self._read_vectors(vec_t), self.vec_col),
+        )
+        # one row per occupied cell, counted from the parquet footers
+        n_cells = self.wh.count_rows(cent_t)
+        nprobe = None
+        if calibrate is not None:
+            nprobe = self.calibrate_nprobe(
+                recall_target=calibrate, seed=seed, _tables=(vec_t, cent_t)
+            )["default_nprobe"]
+        return n_cells, dim, nprobe
+
     def build(
         self,
         corpus: DataFrame,
@@ -707,49 +654,26 @@ class IvfIndex:
         nprobe_recall_target: float | None = None,
         assigned: bool = False,
     ) -> None:
-        """Build the index. `nprobe_recall_target` (round 12, VERDICT
-        r11 item 5): when set, runs `calibrate_nprobe` against the
-        freshly written tables and stores the measured serving default
-        in meta — in versioned mode BEFORE the pointer flip, so the
-        calibrated default commits together with the geometry it was
-        measured on.
+        """Build the index. `nprobe_recall_target`: when set, runs
+        `calibrate_nprobe` against the freshly written tables and
+        stores the measured serving default in meta.
 
-        `assigned=True` (round 14) — bring-your-own-quantizer: the
-        corpus arrives with `cell_col` ALREADY populated (an external
-        partitioner — category/tenant/shard keys, an offline
-        clustering, a feature store's precomputed cells) and the
-        kmeans training is skipped entirely; n_cells is measured from
-        the data (the argument is ignored) and the serving centroids
-        derive as the per-cell means of the persisted assignment,
-        exactly as in the trained path — absorb() keeps assigning new
-        vectors to the nearest of those centroids, and topk() probes
-        them identically. The caller owns assignment quality: a
-        partitioner uncorrelated with the vector space degrades
-        recall gracefully (never silently wrong — the probed cells
-        still score exactly)."""
-        from ..sources.warehouse import (
-            atomic_overwrite,
-            guard_concurrent_writes,
-            guard_pointer_unmoved,
-            table_inventory,
+        `assigned=True` — bring-your-own-quantizer: the corpus arrives
+        with `cell_col` ALREADY populated (an external partitioner —
+        category/tenant/shard keys, an offline clustering) and the
+        kmeans training is skipped; the serving centroids derive as
+        the per-cell means of the persisted assignment, exactly as in
+        the trained path. The caller owns assignment quality: a
+        partitioner uncorrelated with the vector space degrades recall
+        gracefully (the probed cells still score exactly).
+
+        Versioned: the new version is written off to the side and
+        committed with one pointer flip, with no tombstones (a
+        rebuild's corpus is the caller's statement of record), and
+        the replay watermark resets."""
+        flip = self.store.begin(
+            f"IvfIndex('{self.name}').build", self.store.version_or_none()
         )
-
-        # VERDICT r15 #1: a versioned REBUILD (build() recommits v1)
-        # must not silently abandon a concurrent absorb/delete that
-        # lands in the currently-served version while it runs —
-        # snapshot that version's file inventory now, re-check before
-        # committing
-        guard_tables: tuple = ()
-        pre_inv: frozenset = frozenset()
-        if self.versioned and self.wh.exists(self.version_table):
-            _cur = self._current_version()
-            guard_tables = (
-                self._table_names(_cur)[0],
-                self._tombstones_table(_cur),
-            )
-            pre_inv = table_inventory(self.wh, guard_tables)
-            self._build_guard_cur = _cur
-
         if assigned:
             if self.cell_col not in corpus.columns:
                 raise ValueError(
@@ -757,98 +681,30 @@ class IvfIndex:
                     f"needs the corpus to carry '{self.cell_col}' — "
                     "the external quantizer's assignment column"
                 )
-            assigned_df = corpus
-            # n_cells derives from the persisted CENTROIDS table below
-            # (one row per occupied cell) instead of a corpus-wide
-            # distinct().count() — at 10^9 vectors that distinct is a
-            # real shuffle for a number the centroid aggregate already
-            # produces (r15)
-            n_cells = None
         else:
-            assigned_df = ivf_build(
+            corpus = ivf_build(
                 corpus, n_cells, self.vec_col, self.cell_col, seed,
                 max_iter,
             )
-        assigned = assigned_df
-        vec_t, cent_t = self._table_names(1) if self.versioned else self._table_names()
-        if guard_tables and self._build_guard_cur == 1:
-            # v1-over-v1 rebuild: the overwrite below targets the
-            # guarded table itself, so this pre-overwrite check is the
-            # LAST point the comparison is meaningful — it covers the
-            # long phase (training/assignment actions above); the
-            # write+rename window that remains is the same one the
-            # non-versioned layout always had
-            guard_concurrent_writes(
-                self.wh, guard_tables, pre_inv,
-                f"IvfIndex('{self.name}').build",
-            )
-        parts = [self.cell_col]
         if self.partitioned:
-            assigned = assigned.withColumn("__batch", F.lit("__build__"))
-            parts.append("__batch")
-        atomic_overwrite(
-            self._store_cols(assigned),
-            self.wh.path(vec_t),
-            partition_by=parts,
-        )
-        # centroids from the PERSISTED assignment so both tables agree
-        # (in quantized mode: from the DEQUANTIZED store — serving and
-        # quantizer see the same vectors). The dim/ragged validation
-        # scan reads the same persisted table independently — overlap
-        # the two jobs (guide §2.6)
-        from ..session import run_concurrently
+            corpus = corpus.withColumn("__batch", F.lit("__build__"))
+        vec_t, cent_t = self.store.tables(flip.version)
+        out = {}
 
-        _, dim = run_concurrently(
-            lambda: self.wh.overwrite(
-                cent_t,
-                ivf_centroids(
-                    self._read_vectors(vec_t), self.cell_col, self.vec_col
-                ),
-            ),
-            lambda: self._frame_dim(
-                self._read_vectors(vec_t), self.vec_col
-            ),
-        )
-        if n_cells is None:
-            # assigned=True: count the bounded centroids table (one
-            # row per occupied cell), not the corpus — from the
-            # parquet footers, no Spark job (r16)
-            n_cells = self.wh.count_rows(cent_t)
-        self._write_meta(n_cells, dim)
-        self._stored_meta = self.wh.read_rows(self.meta_table)[0]
-        if nprobe_recall_target is not None:
-            self.calibrate_nprobe(
-                recall_target=nprobe_recall_target,
-                seed=seed,
-                _tables=(vec_t, cent_t),
+        def _write():
+            counted, out["dim"], out["nprobe"] = self._write_cells(
+                corpus, vec_t, cent_t, nprobe_recall_target, seed
             )
-        if self.versioned:
-            if guard_tables and self._build_guard_cur != 1:
-                # full-window pre-flip re-check (the rebuild never
-                # touched version `cur`'s tables, so the inventory
-                # comparison stays valid right up to the flip)
-                guard_concurrent_writes(
-                    self.wh, guard_tables, pre_inv,
-                    f"IvfIndex('{self.name}').build",
-                )
-            # maintenance-vs-maintenance: the pointer must still be
-            # where this rebuild resolved it (a competing compact/
-            # retrain flip would be clobbered back to v1 otherwise)
-            guard_pointer_unmoved(
-                self._version_or_none(),
-                self._build_guard_cur if guard_tables else None,
-                f"IvfIndex('{self.name}').build",
-            )
-            # the commit point: v1 becomes visible only here
-            self._write_version(1, n_cells)
-        # a (re)build's corpus is the caller's statement of record:
-        # stale tombstones must not filter it (versioned build
-        # recommits v1, whose tombstone table may survive from the
-        # previous lineage). Removed LAST — a crash beforehand leaves
-        # the new corpus OVER-filtered (safe for takedowns, converges
-        # on re-run), never an un-filtered window for deleted docs.
-        self.wh.remove_table(
-            self._tombstones_table(1 if self.versioned else None)
+            # an external assignment's cell count is measured
+            out["n_cells"] = counted if assigned else n_cells
+
+        self.store.commit(
+            flip,
+            _write,
+            meta=lambda: self._write_meta(
+                out["n_cells"], out["dim"], default_nprobe=out["nprobe"]
+            ),
+            layout=out,
         )
 
     def absorb(self, new_vectors: DataFrame, batch=None) -> None:
@@ -863,46 +719,38 @@ class IvfIndex:
         centroids, so a replayed streaming epoch rewrites exactly the
         same rows instead of duplicating them.
 
-        Compacted stores (round 13, operators/epochs.py): an epoch
-        <= the recorded `compacted_through` watermark is a REPLAY of
-        rows already merged into the `__compacted__` partition —
-        absorb no-ops instead of duplicating them (the one fresh
-        one-row watermark read per call is noise next to the
-        centroid read)."""
+        Compacted stores (operators/epochs.py): an epoch <= the
+        recorded `compacted_through` watermark is a REPLAY of rows
+        already merged into the `__compacted__` partition — absorb
+        no-ops instead of duplicating them."""
         self._validate(new_vectors, self.vec_col)
         if batch is not None:
             guard_sentinel_batch(batch)
         # version, tables, tombstones AND the replay watermark all
-        # resolve from ONE pointer read (_version_row) so the skip
-        # decision and the tables it protects are jointly consistent
-        # across a concurrent compact(live=True) flip (ADVICE r13)
-        if self.versioned:
-            _v, _wm = self._version_row()
-            vec_t, cent_t = self._table_names(_v)
-            tomb_t = self._tombstones_table(_v)
-        else:
-            _wm = self._watermark()
-            vec_t, cent_t = self._table_names()
-            tomb_t = self._tombstones_table()
+        # resolve from ONE pointer read so the skip decision and the
+        # tables it protects are jointly consistent across a
+        # concurrent compact(live=True) flip
+        v, layout = self.store.resolve()
         if (
             batch is not None
             and self.partitioned
-            and replay_skippable(batch, _wm)
+            and replay_skippable(batch, layout.get("compacted_through"))
         ):
             return
+        vec_t, cent_t = self.store.tables(v)
         from .tombstones import anti_join_tombstones
 
         # a deleted id stays deleted until a purging compaction: the
         # ban is a size-gated anti-join against the tombstone id set
         # — deterministic, so replays converge
         new_vectors = anti_join_tombstones(
-            new_vectors, self.wh, tomb_t, self.id_col
+            new_vectors, self.wh, self.store.tombstones(v), self.id_col
         )
         cents = self.wh.read(cent_t)
         # assignment is per ROW, not per id: an id_col-partitioned
         # argmax window silently drops all but one row of a batch
-        # that repeats an id (round-13 self-review) — duplicate
-        # handling belongs to the caller (class docstring contract)
+        # that repeats an id — duplicate handling belongs to the
+        # caller (class docstring contract)
         w = Window.partitionBy("__row").orderBy(
             F.desc("__sim"), F.asc(self.cell_col)
         )
@@ -940,16 +788,14 @@ class IvfIndex:
             )
 
     def delete(self, ids: DataFrame) -> dict:
-        """Tombstone vectors (round 13 — deletion propagation):
-        takedowns on the immutable cell layout. `ids` holds
-        `self.id_col`; every stored occurrence of a tombstoned id is
-        filtered out of topk() by a broadcast anti-join over the
-        probed rows, and absorb() refuses to re-admit it. Exact
-        cosine results are unaffected for every surviving row (no
-        statistics depend on corpus size here — unlike Bm25Index,
-        whose delete() adjusts N/avgdl). cell_skew() keeps counting
-        tombstoned rows until they are purged — its skew verdict is
-        about the physical layout, which still holds them.
+        """Tombstone vectors: takedowns on the immutable cell layout.
+        `ids` holds `self.id_col`; every stored occurrence of a
+        tombstoned id is filtered out of topk() by a size-gated
+        anti-join over the probed rows, and absorb() refuses to
+        re-admit it. Exact cosine results are unaffected for every
+        surviving row. cell_skew() keeps counting tombstoned rows
+        until they are purged — its verdict is about the physical
+        layout, which still holds them.
 
         Idempotent; ids not in the store tombstone nothing. Physical
         purge happens at a FULL versioned compact() (atomic in the
@@ -959,48 +805,16 @@ class IvfIndex:
         Returns {"deleted_ids": n} — ids actually tombstoned by THIS
         call."""
         self._validate()
-        if self.versioned:
-            v = self._current_version()
-            vec_t, _ = self._table_names(v)
-            tomb_t = self._tombstones_table(v)
-        else:
-            vec_t, _ = self._table_names()
-            tomb_t = self._tombstones_table()
+        v = self.store.version_or_none()
+        vec_t = self.store.tables(v)[0]
         if not self.wh.exists(vec_t):
             # day-zero store: nothing indexed, nothing to tombstone
             return {"deleted_ids": 0}
-        new_tombs = (
-            self.wh.read(vec_t)
-            .select(self.id_col)
-            .join(
-                # hint-free: a mass delete must not force-broadcast
-                # an unbounded caller frame (the erase_keys convention)
-                ids.select(self.id_col).distinct(),
-                self.id_col,
-                "left_semi",
-            )
-            .distinct()
+        got = self.store.delete(
+            self.wh.read(vec_t).select(self.id_col), ids, self.id_col,
+            self.store.tombstones(v),
         )
-        if self.wh.exists(tomb_t):
-            new_tombs = new_tombs.join(
-                self.wh.read(tomb_t).select(self.id_col),
-                self.id_col,
-                "left_anti",
-            )
-        # r17 (VERDICT r16 item 5): the gate count rides the checkpoint
-        # materialization as an observed metric (exactly-once, computed
-        # inside the action) — the separate count() job is gone; see
-        # Bm25Index.delete for the full rationale.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        new_tombs = new_tombs.observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint()
-        n = obs.get["n"]
-        if n:
-            self.wh.append(tomb_t, new_tombs)
-        return {"deleted_ids": int(n)}
+        return {"deleted_ids": got["n"]}
 
     def compact(
         self,
@@ -1008,48 +822,28 @@ class IvfIndex:
         through: int | None = None,
         live: bool = False,
     ) -> dict:
-        """Epoch-partition maintenance (round 13, operators/epochs.py
-        has the full semantics): collapse every `__batch` partition
-        into one `__compacted__` stamp, preserving the cell level —
-        a pure LAYOUT rewrite (one shuffle keyed on the partition
-        columns; nothing is re-assigned or re-trained, unlike
-        retrain()), recording the `compacted_through` replay
-        watermark that absorb() skips against.
+        """Epoch-partition maintenance (operators/epochs.py has the
+        full semantics): collapse every `__batch` partition into one
+        `__compacted__` stamp, preserving the cell level — a pure
+        LAYOUT rewrite (one shuffle keyed on the partition columns;
+        nothing is re-assigned or re-trained, unlike retrain()),
+        recording the `compacted_through` replay watermark that
+        absorb() skips against. Serving output is bit-identical.
 
-        Why it matters at scale: a 1-minute streaming trigger writes
-        ~1,440 epoch directories a day under EVERY cell — after a
-        month, a 64-cell store lists ~2.7M partition directories and
-        opens millions of tiny files per probe; probing nprobe cells
-        is only file-level pruning if each cell is a handful of
-        well-sized files. Serving output is bit-identical (same rows,
-        same arithmetic) — only the file layout changes.
+        `through` bounds WHICH epochs merge (integer epoch ids
+        <= through; maintenance stamps always merge); `live=True`
+        derives `through = newest epoch - 1` for a LIVE stream. The
+        default (merge everything) is for a quiesced stream. A FULL
+        merge on a versioned store also purges tombstoned vectors.
 
-        `through` (round 13, the family-wide knob) bounds WHICH
-        epochs merge: integer epoch ids <= through (maintenance
-        stamps always merge); epochs above it keep their own
-        partitions and stay individually replayable. Structured
-        Streaming processes epochs serially, so every epoch below
-        the latest is fully committed — pass
-        `through = latest_epoch - 1` to compact under a LIVE stream.
-        The default (None, merge everything) is for a quiesced
-        stream: the newest epoch might be a partially-written crash
-        victim, and merging it bakes the partial rows in where the
-        replay can no longer repair them (epochs.py has the full
-        argument).
-
-        Non-versioned stores persist the watermark BEFORE the data
-        swap (either crash side is correct — see epochs.py);
-        versioned stores write the collapsed tables off to the side
-        and commit watermark + layout in the one pointer flip.
-
-        Returns {"stamps_merged", "compacted_through",
+        Returns {"stamps_merged", "compacted_through", "purged",
         "files_before", "files_after"}."""
         from ..sources.warehouse import atomic_overwrite
         from .epochs import (
-            SENTINEL_STAMPS,
             collapse_epochs,
-            epoch_watermark,
+            hive_partition_values,
             parquet_file_count,
+            plan_merge,
         )
 
         self._validate()
@@ -1059,34 +853,19 @@ class IvfIndex:
                 "maintenance — only a partitioned=True store "
                 "accumulates __batch partitions"
             )
-        if not hasattr(self, "_stored_meta"):
+        meta = self._meta()
+        if not meta:
             raise ValueError(
                 f"IvfIndex '{self.name}': compact() needs the meta "
-                "marker to record the replay watermark — pre-meta "
-                "stores must rebuild once"
+                "marker to record the replay watermark — stores without "
+                "one must rebuild once"
             )
-        meta = self._stored_meta
-        if self.versioned:
-            # one pointer read → jointly consistent (version, wm)
-            cur, prev_wm = self._version_row()
-            cur_vec, cur_cent = self._table_names(cur)
-            new_vec, new_cent = self._table_names(cur + 1)
-            cur_tomb = self._tombstones_table(cur)
-            new_tomb = self._tombstones_table(cur + 1)
-            # snapshot the current version's file inventory before any
-            # reads — the pre-flip guard refuses if a concurrent
-            # absorb/delete lands mid-compaction (VERDICT r15 #1)
-            from ..sources.warehouse import table_inventory
-
-            cur_tables = (cur_vec, cur_tomb)
-            pre_inv = table_inventory(self.wh, cur_tables)
-        else:
-            cur_vec = new_vec = self.vectors_table
-            cur_cent = new_cent = self.centroids_table
-            cur_tomb = new_tomb = self._tombstones_table()
-        tombs = (
-            self.wh.read(cur_tomb) if self.wh.exists(cur_tomb) else None
-        )
+        # one pointer (or meta) read → jointly consistent (version, wm)
+        v, layout = self.store.resolve()
+        flip = self.store.begin(f"IvfIndex('{self.name}').compact", v)
+        cur_vec, cur_cent = self.store.tables(v)
+        new_vec, new_cent = self.store.tables(flip.version)
+        cur_tomb = self.store.tombstones(v)
         # raw at-rest read: quantized stores keep their int8 codes
         # byte-identical through the rewrite. The stamp column is cast
         # to string up front — partition-type inference reads an
@@ -1095,48 +874,15 @@ class IvfIndex:
         vecs = self.wh.read(cur_vec).withColumn(
             "__batch", F.col("__batch").cast("string")
         )
-        # stamp enumeration from the hive directory names (r16): the
-        # same distinct set, driver-side — epochs.hive_partition_values
-        from .epochs import hive_partition_values
-
-        stamps = sorted(
-            hive_partition_values(self.wh.path(cur_vec), "__batch")
+        stamps = hive_partition_values(self.wh.path(cur_vec), "__batch")
+        merged, wm = plan_merge(
+            stamps, through, live, layout.get("compacted_through")
         )
-        # integer-orderability over ALL stamps first (loud failure on
-        # ad-hoc ids), then the merge subset and its watermark
-        epoch_watermark(stamps)
-        if live:
-            # live-stream mode: derive the bound from the scanned
-            # stamps — merge everything below the NEWEST integer
-            # epoch, which is the only one a crashed absorb may have
-            # left partially written (epochs.py)
-            if through is not None:
-                raise ValueError(
-                    "compact(live=True) derives its own bound — pass "
-                    "through= or live=True, not both"
-                )
-            ints = [int(s) for s in stamps if s not in SENTINEL_STAMPS]
-            through = max(ints) - 1 if ints else None
-        merged = sorted(
-            s
-            for s in stamps
-            if s in SENTINEL_STAMPS
-            or through is None
-            or int(s) <= int(through)
+        purge = (
+            self.versioned
+            and set(merged) == stamps
+            and self.wh.exists(cur_tomb)
         )
-        wm = epoch_watermark(
-            merged,
-            prev_wm if self.versioned else self._watermark(),
-        )
-        # physical deletion (round 13): a FULL merge on a VERSIONED
-        # store applies the tombstones — rows purged, and the new
-        # version simply has no tombstone table, so 'tombstones
-        # applied' commits atomically inside the pointer flip. A
-        # bounded merge keeps un-merged epochs' raw rows, so the
-        # tombstones carry live; a non-versioned store cannot purge
-        # atomically and keeps filtering at serve time.
-        full = set(merged) == set(stamps)
-        purge = self.versioned and full and tombs is not None
         files_before = parquet_file_count(self.wh.path(cur_vec))
         collapsed = collapse_epochs(
             vecs.filter(F.col("__batch").isin(merged)),
@@ -1146,71 +892,36 @@ class IvfIndex:
             files_per_partition,
         ).unionByName(vecs.filter(~F.col("__batch").isin(merged)))
         if purge:
-            # size-gated, like serving (ADVICE r13): a mass takedown
-            # followed by a full compaction must degrade to a shuffle
-            # anti-join, never a forced unbounded broadcast
+            # size-gated, like serving: a mass takedown followed by a
+            # full compaction degrades to a shuffle anti-join
             from .tombstones import anti_join_tombstones
 
             collapsed = anti_join_tombstones(
                 collapsed, self.wh, cur_tomb, self.id_col
             )
-        if self.versioned:
-            # EARLY maintenance-race check before the first write into
-            # the shared v(cur+1) paths (see guard_pointer_unmoved)
-            from ..sources.warehouse import guard_pointer_unmoved
 
-            guard_pointer_unmoved(
-                self._version_or_none(), cur,
-                f"IvfIndex('{self.name}').compact",
-            )
+        def _write():
             atomic_overwrite(
                 collapsed,
                 self.wh.path(new_vec),
                 partition_by=[self.cell_col, "__batch"],
             )
-            self.wh.copy_table(cur_cent, new_cent)
-            if tombs is not None and not purge:
-                # bounded merge: tombstones stay live on the new version
-                self.wh.overwrite(new_tomb, tombs)
-            # pre-flip re-check: a concurrent absorb/delete that landed
-            # in version `cur` after the snapshot would be abandoned by
-            # the flip — refuse loudly instead (VERDICT r15 #1)
-            from ..sources.warehouse import guard_concurrent_writes
+            if self.versioned:
+                self.wh.copy_table(cur_cent, new_cent)
 
-            guard_concurrent_writes(
-                self.wh, cur_tables, pre_inv,
-                f"IvfIndex('{self.name}').compact",
-            )
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), cur,
-                f"IvfIndex('{self.name}').compact",
-            )
-            # the commit point: collapsed tables + watermark flip as one
-            self._write_version(
-                cur + 1, meta["n_cells"], compacted_through=wm
-            )
-            self._write_meta(
+        self.store.commit(
+            flip,
+            _write,
+            meta=lambda: self._write_meta(
                 meta["n_cells"],
                 meta["dim"],
                 default_nprobe=meta.get("default_nprobe"),
                 compacted_through=wm,
-            )
-        else:
-            # watermark FIRST: a crash after it leaves replays
-            # skipping partitions that still exist with identical rows
-            self._write_meta(
-                meta["n_cells"],
-                meta["dim"],
-                default_nprobe=meta.get("default_nprobe"),
-                compacted_through=wm,
-            )
-            atomic_overwrite(
-                collapsed,
-                self.wh.path(cur_vec),
-                partition_by=[self.cell_col, "__batch"],
-            )
+            ),
+            layout={"n_cells": meta["n_cells"], "compacted_through": wm},
+            carry_tombstones=not purge,
+            meta_first=True,
+        )
         return {
             "stamps_merged": len(merged),
             "compacted_through": wm,
@@ -1220,70 +931,31 @@ class IvfIndex:
         }
 
     def cell_skew(self) -> dict:
-        """Measured cell-balance probe (VERDICT r10 item 5): one
-        bounded aggregate over the vectors table's cell ids —
-        (n_vectors, n_cells_stored, n_cells_occupied, max_cell_rows,
-        skew), where skew = max_cell_rows / (n_vectors /
-        n_cells_stored), i.e. how many times fatter than uniform the
-        fattest cell is. Absorb keeps centroids frozen forever, so a
-        drifting embedding distribution silently piles new vectors
-        into few cells — degrading both balance (one probe reads a
-        fat partition) and recall (nprobe cells cover less of the
-        true neighborhood). This probe is the measured trigger, in
-        the small_graph_max_edges / broadcast-gate tradition: never
-        assume drift, measure it. Cost: a column-pruned scan of cell
-        ids with map-side partial aggregation to <= n_cells rows.
-
-        Versioned consistency (round 12, ADVICE r11): the version
-        pointer row is read ONCE — both the vectors-table name and
-        n_cells derive from that same row — so a concurrent retrain
-        flip between two reads can no longer pair one version's
-        vector counts with another version's n_cells and report a
-        phantom skew verdict."""
+        """Measured cell-balance probe: (n_vectors, n_cells_stored,
+        n_cells_occupied, max_cell_rows, skew), where skew =
+        max_cell_rows / (n_vectors / n_cells_stored), i.e. how many
+        times fatter than uniform the fattest cell is. Absorb keeps
+        centroids frozen forever, so a drifting embedding distribution
+        silently piles new vectors into few cells — degrading both
+        balance and recall; this probe is the measured retrain
+        trigger. The vectors table and n_cells come from ONE pointer
+        read, so a concurrent retrain flip cannot produce a phantom
+        verdict."""
         self._validate()
-        if self.versioned:
-            vrow = self.wh.read_rows(self.version_table)[0]
-            vec_t = self._table_names(int(vrow["version"]))[0]
-        else:
-            vec_t = self.vectors_table
-        counts = (
-            self.wh.read(vec_t)
-            .groupBy(self.cell_col)
-            .agg(F.count(F.lit(1)).alias("__n"))
+        v, layout = self.store.resolve()
+        n_cells = layout.get("n_cells") if self.versioned else (
+            (self._meta() or {}).get("n_cells")
         )
-        row = counts.agg(
-            F.sum("__n").alias("total"),
-            F.count(F.lit(1)).alias("occupied"),
-            F.max("__n").alias("max_cell"),
-        ).first()
-        if self.versioned:
-            n_cells = int(vrow["n_cells"])
-        else:
-            n_cells = (
-                self._stored_meta["n_cells"]
-                if getattr(self, "_stored_meta", None)
-                else row["occupied"]
-            )
-        total = row["total"] or 0
-        max_cell = row["max_cell"] or 0
-        skew = (
-            max_cell / (total / n_cells) if total and n_cells else 0.0
+        return self.store.cell_skew(
+            self.store.tables(v)[0], self.cell_col, n_cells
         )
-        return {
-            "n_vectors": total,
-            "n_cells_stored": n_cells,
-            "n_cells_occupied": row["occupied"],
-            "max_cell_rows": max_cell,
-            "skew": skew,
-        }
 
     def needs_retrain(self, max_skew: float = 4.0) -> bool:
         """True when the measured cell skew exceeds `max_skew` (the
         fattest cell holds more than max_skew times the uniform
-        share). The default 4.0 tolerates healthy non-uniformity —
-        real corpora are never uniform — while catching the
-        absorb-under-drift failure mode where one frozen cell eats
-        most of the stream."""
+        share). The default 4.0 tolerates healthy non-uniformity
+        while catching the absorb-under-drift failure mode where one
+        frozen cell eats most of the stream."""
         return self.cell_skew()["skew"] > max_skew
 
     def calibrate_nprobe(
@@ -1294,39 +966,35 @@ class IvfIndex:
         seed: int = 42,
         _tables: tuple[str, str] | None = None,
     ) -> dict:
-        """Measured auto-nprobe (round 12, VERDICT r11 item 5 — the
-        gate-tradition answer to the one hand-set serving knob left):
-        derive the default probe width from a HELD-OUT probe set's
-        measured recall against exact brute force, instead of guessing.
+        """Measured auto-nprobe: derive the default probe width from a
+        HELD-OUT probe set's measured recall against exact brute
+        force, instead of guessing.
 
         Method: `n_probes` stored vectors are drawn deterministically
         (xxhash64 order, seeded) as queries; exact top-k over the full
-        stored corpus is the ground truth (ONE corpus scan — build-
-        time cost, the probe set is bounded by construction, so every
-        collect here is bounded); nprobe doubles from 1 until measured
-        recall@k reaches `recall_target` or every cell is probed. The
-        chosen value is stored in meta as `default_nprobe` — served by
+        stored corpus is the ground truth (ONE corpus scan — the probe
+        set is bounded by construction, so every collect here is
+        bounded); nprobe doubles from 1 until measured recall@k
+        reaches `recall_target` or every cell is probed. The chosen
+        value is stored in meta as `default_nprobe` — served by
         topk(nprobe=None) — and returned with the full
-        {nprobe: recall} trace for the caller's ledger. Both rankings
-        round similarity to 6 dp with id tie-breaks (the ivf oracle
-        convention) so the recall measurement is tie-stable.
+        {nprobe: recall} trace. Both rankings round similarity to 6 dp
+        with id tie-breaks so the recall measurement is tie-stable.
 
         build()/retrain() reset the stored default to NULL (new
         geometry invalidates the old measurement) unless called with
-        `nprobe_recall_target`, which re-runs this calibration on the
-        new tables — in versioned mode before the pointer flip, so a
-        committed version always carries the default measured on its
-        own geometry."""
+        `nprobe_recall_target`, which measures on the new tables
+        (`_tables`; the caller then persists the default with its own
+        commit)."""
         self._validate()
-        if not getattr(self, "_stored_meta", None):
+        persist = _tables is None
+        if persist and not self._meta():
             raise ValueError(
                 f"IvfIndex '{self.name}': calibrate_nprobe needs the "
-                "meta marker a build() writes — pre-meta stores have "
-                "no place to persist the measured default"
+                "meta marker a build() writes — there is no place to "
+                "persist the measured default"
             )
-        vec_t, cent_t = (
-            _tables if _tables is not None else self._table_names()
-        )
+        vec_t, cent_t = _tables if not persist else self.store.tables()
         corpus = self._read_vectors(vec_t)
         cents = self.wh.read(cent_t)
         n_cells = cents.count()
@@ -1385,13 +1053,14 @@ class IvfIndex:
             if recall >= recall_target or nprobe >= n_cells:
                 break
             nprobe = min(nprobe * 2, int(n_cells))
-        meta = self._stored_meta
-        self._write_meta(
-            meta["n_cells"],
-            meta["dim"],
-            default_nprobe=int(nprobe),
-            compacted_through=meta.get("compacted_through"),
-        )
+        if persist:
+            meta = self._stored_meta
+            self._write_meta(
+                meta["n_cells"],
+                meta["dim"],
+                default_nprobe=int(nprobe),
+                compacted_through=meta.get("compacted_through"),
+            )
         return {
             "default_nprobe": int(nprobe),
             "recall": trace[nprobe],
@@ -1411,170 +1080,59 @@ class IvfIndex:
         """Re-train centroids over the FULL stored corpus and rewrite
         the cell layout — the offline answer when `needs_retrain`
         trips. Reads the store dequantized, re-runs the KMeans coarse
-        quantizer, atomic-overwrites the vectors table re-partitioned
-        by the NEW cells (a partitioned index keeps each row's
-        __batch stamp, so epoch lineage and replay targeting survive
-        the re-shard), recomputes centroids from the persisted
-        assignment, and refreshes the meta (n_cells may change).
+        quantizer, rewrites the vectors table re-partitioned by the
+        NEW cells (a partitioned index keeps each row's __batch stamp,
+        so epoch lineage, replay targeting and the compaction
+        watermark survive the re-shard; tombstones carry too),
+        recomputes centroids from the persisted assignment, and
+        refreshes the meta (n_cells may change).
 
-        Consistency guarantee, stated honestly: each TABLE swap is
-        atomic (temp-dir + rename), but the vectors/centroids pair is
-        NOT jointly atomic — a crash between the two swaps, or a
-        concurrent topk() during a successful retrain, can pair the
-        new cell layout with the old centroid table. That mixed view
-        degrades RECALL only, never correctness: topk probes cells by
-        centroid similarity and then computes exact cosines over the
-        probed rows, so every returned (id, cos_sim) is true — stale
-        geometry just probes less-ideal cells, the accepted failure
-        mode of any IVF serving under absorb drift (which is milder
-        than the skew this method exists to fix). Recovery from a
-        crashed retrain is simply re-running retrain(): it reads
-        whatever vectors layout is on disk and rewrites both tables.
-        A jointly-atomic swap needs a versioned manifest/pointer
-        layout — IMPLEMENTED as `IvfIndex(versioned=True)` (round 11):
-        retrain then builds version N+1 entirely off to the side and
-        commits with one atomic pointer flip, serving resolves the
-        pointer once per query for a jointly consistent pair, and
-        `prune_versions()` garbage-collects superseded versions. Use
-        it when a deployment needs serve-during-retrain with zero
-        recall dip; the flat layout above stays the simpler default."""
-        from ..sources.warehouse import atomic_overwrite
-
+        Unversioned stores swap each TABLE atomically, but the
+        vectors/centroids pair is NOT jointly atomic — a crash between
+        the two swaps, or a concurrent topk() during a successful
+        retrain, can pair the new cell layout with the old centroid
+        table. That mixed view degrades RECALL only, never
+        correctness: topk probes cells by centroid similarity and then
+        computes exact cosines over the probed rows, so every returned
+        (id, cos_sim) is true. Recovery from a crashed retrain is
+        re-running it. `IvfIndex(versioned=True)` removes the recall
+        dip: version N+1 is written off to the side and committed with
+        one pointer flip."""
         self._validate()
         if n_cells is None:
-            n_cells = (
-                self._stored_meta["n_cells"]
-                if getattr(self, "_stored_meta", None)
-                else 16
-            )
-        # retrain PRESERVES row-level __batch stamps (docstring), so
-        # replay targeting — and therefore the compaction watermark —
-        # carries forward; only build() resets it (fresh lineage)
-        if self.versioned:
-            # one pointer read → jointly consistent (version, wm)
-            cur, wm = self._version_row()
-            cur_vec, _ = self._table_names(cur)
-            new_vec, new_cent = self._table_names(cur + 1)
-            # snapshot the current version's file inventory BEFORE the
-            # corpus read — the pre-flip guard refuses if a concurrent
-            # absorb/delete lands mid-retrain (VERDICT r15 #1)
-            from ..sources.warehouse import table_inventory
-
-            cur_tables = (cur_vec, self._tombstones_table(cur))
-            pre_inv = table_inventory(self.wh, cur_tables)
-        else:
-            wm = self._watermark()
-            cur_vec = new_vec = self.vectors_table
-            new_cent = self.centroids_table
+            n_cells = (self._meta() or {}).get("n_cells") or 16
+        # one pointer (or meta) read → jointly consistent (version, wm)
+        v, layout = self.store.resolve()
+        wm = layout.get("compacted_through")
+        flip = self.store.begin(f"IvfIndex('{self.name}').retrain", v)
+        cur_vec = self.store.tables(v)[0]
+        new_vec, new_cent = self.store.tables(flip.version)
         corpus = self._read_vectors(cur_vec).drop(self.cell_col)
         assigned = ivf_build(
             corpus, n_cells, self.vec_col, self.cell_col, seed, max_iter
         )
-        parts = [self.cell_col]
-        if self.partitioned:
-            parts.append("__batch")
-        if self.versioned:
-            # EARLY maintenance-race check, before the first write into
-            # the shared v(cur+1) table paths: a competing maintainer
-            # that already flipped would have its committed tables
-            # clobbered by the overwrite below — refuse now while its
-            # version is still intact. The pre-flip re-check further
-            # down covers the window between here and the flip (where
-            # a late competing flip loses only the refuser's scratch
-            # writes, which the winner's pointer never references —
-            # see guard_pointer_unmoved's docstring for the residual
-            # two-writers-in-the-write-window caveat).
-            from ..sources.warehouse import guard_pointer_unmoved
+        out = {"n_cells": n_cells, "compacted_through": wm}
 
-            guard_pointer_unmoved(
-                self._version_or_none(), cur,
-                f"IvfIndex('{self.name}').retrain",
+        def _write():
+            _, out["dim"], out["nprobe"] = self._write_cells(
+                assigned, new_vec, new_cent, nprobe_recall_target, seed
             )
-        atomic_overwrite(
-            self._store_cols(assigned),
-            self.wh.path(new_vec),
-            partition_by=parts,
-        )
-        self.wh.overwrite(
-            new_cent,
-            ivf_centroids(
-                self._read_vectors(new_vec), self.cell_col, self.vec_col
+
+        self.store.commit(
+            flip,
+            _write,
+            meta=lambda: self._write_meta(
+                n_cells, out["dim"], default_nprobe=out["nprobe"],
+                compacted_through=wm,
             ),
-        )
-        self._write_meta(
-            n_cells,
-            self._frame_dim(self._read_vectors(new_vec), self.vec_col),
-            compacted_through=wm,
-        )
-        if nprobe_recall_target is not None:
-            # re-measure the serving default on the NEW geometry (and
-            # in versioned mode commit it with the same pointer flip)
-            self.calibrate_nprobe(
-                recall_target=nprobe_recall_target,
-                seed=seed,
-                _tables=(new_vec, new_cent),
-            )
-        if self.versioned:
-            # retrain preserves rows, so live tombstones must survive
-            # the re-shard — copied BEFORE the flip, committed with it
-            cur_tomb = self._tombstones_table(cur)
-            if self.wh.exists(cur_tomb):
-                self.wh.copy_table(
-                    cur_tomb, self._tombstones_table(cur + 1)
-                )
-            # pre-flip re-check: a concurrent absorb/delete that landed
-            # in version `cur` after the snapshot would be abandoned by
-            # the flip — refuse loudly instead (VERDICT r15 #1)
-            from ..sources.warehouse import guard_concurrent_writes
-
-            guard_concurrent_writes(
-                self.wh, cur_tables, pre_inv,
-                f"IvfIndex('{self.name}').retrain",
-            )
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), cur,
-                f"IvfIndex('{self.name}').retrain",
-            )
-            # the single commit point: everything above wrote OFF TO
-            # THE SIDE; serving keeps reading version `cur` until this
-            # one-row atomic overwrite flips the pointer
-            self._write_version(cur + 1, n_cells, compacted_through=wm)
-
-    def _write_version(
-        self,
-        version: int,
-        n_cells: int,
-        compacted_through: int | None = None,
-    ) -> None:
-        self.wh.overwrite_rows(
-            self.version_table,
-            [(int(version), int(n_cells), compacted_through)],
-            "version int, n_cells int, compacted_through long",
+            layout=out,
+            carry_tombstones=True,
         )
 
     def prune_versions(self, keep: int = 1) -> list[str]:
-        '''Delete old versions' table directories (the versioned-
-        retrain garbage collector). `keep` retains the most recent
-        `keep` versions (default 1 = current only, the historical
-        behavior); pass keep=2 while lagging readers may still hold
-        plans resolved against the previous version — a lazy
-        DataFrame pins its resolved paths at plan time (the
-        Bm25Index/PqIndex knob, round 13: now uniform across the
-        family, which in-stream maintenance relies on). Returns the
-        removed table names.'''
-        if not self.versioned:
-            return []
-        if keep < 1:
-            raise ValueError("prune_versions keep must be >= 1")
-        cur = self._current_version()
-        removed = []
-        for v in range(1, cur - keep + 1):
-            for t in self._table_names(v) + (self._tombstones_table(v),):
-                if self.wh.remove_table(t):
-                    removed.append(t)
-        return removed
+        """Delete the table directories of every version but the
+        newest `keep` (see VersionedStore.prune_versions)."""
+        return self.store.prune_versions(keep)
 
     def topk(
         self,
@@ -1589,35 +1147,25 @@ class IvfIndex:
         centroids pick the probe cells, and the cell-partitioned
         vectors table is read partition-pruned.
 
-        nprobe=None (round 12) serves at the index's MEASURED default:
-        the `default_nprobe` that calibrate_nprobe stored in meta,
-        falling back to 2 when no calibration has run (the exact
-        pre-round-12 behavior, so existing stores and callers are
-        unchanged). An explicit int always wins."""
+        nprobe=None serves at the index's MEASURED default (the
+        `default_nprobe` calibrate_nprobe stored in meta), falling
+        back to 2 when no calibration has run. An explicit int always
+        wins."""
         self._validate(queries, query_vec_col)
         if nprobe is None:
-            nprobe = (
-                getattr(self, "_stored_meta", None) or {}
-            ).get("default_nprobe") or 2
+            nprobe = (self._meta() or {}).get("default_nprobe") or 2
         # one pointer resolution for ALL tables: in versioned mode a
         # concurrent retrain flip cannot hand this query v(N) vectors
-        # with v(N+1) centroids or tombstones (the joint-atomicity
-        # gap the unversioned layout documents)
-        if self.versioned:
-            _v = self._current_version()
-            vec_t, cent_t = self._table_names(_v)
-            tomb_t = self._tombstones_table(_v)
-        else:
-            vec_t, cent_t = self._table_names()
-            tomb_t = self._tombstones_table()
+        # with v(N+1) centroids or tombstones
+        v = self.store.version_or_none()
+        vec_t, cent_t = self.store.tables(v)
         from .tombstones import anti_join_tombstones
 
         # deletion tombstones: the size-gated anti-join drops deleted
-        # vectors from the probed rows (broadcast under the at-rest
-        # byte cap, Catalyst-decided above it); purge happens at full
-        # versioned compaction. No-op when no tombstone table exists.
+        # vectors from the probed rows; no-op without a tombstone table
         vectors = anti_join_tombstones(
-            self._read_vectors(vec_t), self.wh, tomb_t, self.id_col
+            self._read_vectors(vec_t), self.wh, self.store.tombstones(v),
+            self.id_col,
         )
         return ivf_topk(
             vectors,

@@ -191,7 +191,7 @@ def near_dedup_sink(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.epochs import replay_skippable
 
-        if replay_skippable(batch_id, idx._watermark()):
+        if replay_skippable(batch_id, idx.store.watermark()):
             return
         if batch_df.isEmpty():
             return

@@ -92,8 +92,12 @@ def written_and_replayed_report(job, dims: dict, date: str) -> tuple:
 def spark_jobs(spark):
     """Collects into the yielded list the ids of the Spark jobs started
     inside the block (a job group unique to the block; the listener bus
-    is drained before the ids are read)."""
+    is drained before the ids are read). Jobs the block submits from
+    other driver threads (`session.run_concurrently`) carry no job
+    group; those started after the block began are counted too."""
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    floor = max(tracker.getJobIdsForGroup(None), default=-1)
     group = f"count-jobs-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, "counted block")
     jobs: list[int] = []
@@ -103,7 +107,8 @@ def spark_jobs(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+        jobs.extend(tracker.getJobIdsForGroup(group))
+        jobs.extend(j for j in tracker.getJobIdsForGroup(None) if j > floor)
 
 
 def compare_with_oracle(spark, con, fn, sql, sf_dir, float_rel=1e-12):
@@ -207,7 +212,6 @@ SLOW_TESTS = {
     "test_training_job_emits_input_ids",
     # tests/test_compaction.py
     "test_bm25_compact_layout_stats_merge_and_replay",
-    "test_bm25_compact_legacy_store_without_stats_fails_guided",
     "test_bm25_compact_through_keeps_live_epochs_replayable",
     "test_bm25_versioned_compact_flips_pointer",
     "test_compact_files_per_partition_salts_fat_partitions",
@@ -317,7 +321,6 @@ SLOW_TESTS = {
     "test_bm25_index_absorb_equals_rebuild",
     "test_bm25_index_partitioned_absorb_is_replay_safe",
     "test_bm25_index_serves_parity_with_in_plan",
-    "test_bm25_legacy_store_absorb_backfills_stats",
     "test_bm25_partitioned_replay_does_not_double_count_stats",
     "test_bm25_stats_equal_doclens_aggregate_after_absorbs",
     "test_bm25_topk_docs_row_has_fusion_only_hits",

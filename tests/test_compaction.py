@@ -177,11 +177,11 @@ def test_ivf_versioned_compact_flips_pointer_and_retrain_carries_wm(
     for b in (1, 2):
         idx.absorb(_epoch(spark, [100 + b]), batch=b)
     before = _topk_snapshot(idx, spark)
-    v0 = idx._current_version()
+    v0 = idx.store.current()
 
     report = idx.compact()
-    assert idx._current_version() == v0 + 1
-    assert idx._watermark() == 2 == report["compacted_through"]
+    assert idx.store.current() == v0 + 1
+    assert idx.store.watermark() == 2 == report["compacted_through"]
     # old version intact until pruned (lagging readers)
     assert os.path.isdir(wh.path(f"{idx.name}_vectors_v{v0}"))
     assert _topk_snapshot(idx, spark) == before
@@ -191,17 +191,17 @@ def test_ivf_versioned_compact_flips_pointer_and_retrain_carries_wm(
 
     # retrain PRESERVES the watermark (stamps survive the re-shard)
     idx.retrain(n_cells=3, seed=7)
-    assert idx._watermark() == 2
+    assert idx.store.watermark() == 2
     idx.absorb(_epoch(spark, [102]), batch=2)  # still a replay
     assert wh.read(idx.vectors_table).count() == 8
 
     removed = idx.prune_versions()
     assert removed  # superseded versions collected
 
-    # build() resets the watermark: fresh lineage (versioned IvfIndex
-    # rebuilds go through retrain(); build() recommits v1)
+    # build() resets the watermark: fresh lineage (the rebuild commits
+    # the next version with no watermark)
     idx.build(_epoch(spark, [1, 2, 3, 4]), n_cells=2, seed=1)
-    assert idx._watermark() is None
+    assert idx.store.watermark() is None
     idx.absorb(_epoch(spark, [50]), batch=1)  # epoch ids start over
     assert 50 in {r.vec_id for r in wh.read(idx.vectors_table).collect()}
 
@@ -350,21 +350,21 @@ def test_bm25_versioned_compact_flips_pointer(spark, tmp_path):
     for b in (1, 2):
         idx.absorb(_bm_epoch(spark, [100 + b]), batch=b)
     before = _bm_snapshot(idx)
-    v0 = idx._current_version()
+    v0 = idx.store.current()
 
     report = idx.compact()
-    assert idx._current_version() == v0 + 1
-    assert idx._watermark() == 2 == report["compacted_through"]
+    assert idx.store.current() == v0 + 1
+    assert idx.store.watermark() == 2 == report["compacted_through"]
     # old version intact until pruned (lagging readers)
     assert os.path.isdir(wh.path(f"{idx.name}_postings_v{v0}"))
     assert _bm_snapshot(idx) == before
     # id_type carried through the flip: day-zero empty frame keeps type
-    assert idx._version_row()[1] == "int"
+    assert idx.store.version_row()[1]["id_type"] == "int"
     idx.absorb(_bm_epoch(spark, [101]), batch=1)  # replay: no-op
     assert _bm_snapshot(idx) == before
     # rebuild resets the watermark: fresh epoch lineage
     idx.build(_bm_epoch(spark, [1, 2, 3]))
-    assert idx._watermark() is None
+    assert idx.store.watermark() is None
     idx.absorb(_bm_epoch(spark, [50]), batch=1)
     assert 50 in {
         r["doc_id"] for r in wh.read(idx.postings_table).collect()
@@ -506,11 +506,11 @@ def test_pq_versioned_compact_flips_pointer_calibrate_preserves_wm(
     for b in (1, 2):
         idx.absorb(_pq_epoch(spark, rows, [10 + b]), batch=b)
     before = _pq_snapshot(idx, spark, rows)
-    v0 = idx._current_version()
+    v0 = idx.store.current()
 
     report = idx.compact()
-    assert idx._current_version() == v0 + 1
-    _, layout = idx._version_row()
+    assert idx.store.current() == v0 + 1
+    _, layout = idx.store.version_row()
     assert layout["compacted_through"] == 2 == report["compacted_through"]
     # old version intact until pruned (lagging readers)
     assert os.path.isdir(wh.path(f"{idx.name}_codes_v{v0}"))
@@ -524,7 +524,7 @@ def test_pq_versioned_compact_flips_pointer_calibrate_preserves_wm(
         rows, "vec_id: long, embedding: array<double>"
     )
     idx.calibrate_nprobe(corpus, recall_target=0.5, n_probes=4, k=3)
-    _, layout = idx._version_row()
+    _, layout = idx.store.version_row()
     assert layout["compacted_through"] == 2
     assert layout["default_nprobe"] is not None
     idx.absorb(_pq_epoch(spark, rows, [12]), batch=2)  # still a replay
@@ -532,7 +532,7 @@ def test_pq_versioned_compact_flips_pointer_calibrate_preserves_wm(
 
     # rebuild resets the watermark: fresh epoch lineage
     idx.build(corpus, m=4, n_codes=8, seed=2, max_iter=10, n_cells=2)
-    _, layout = idx._version_row()
+    _, layout = idx.store.version_row()
     assert layout["compacted_through"] is None
     idx.absorb(_pq_epoch(spark, rows, [20]), batch=1)
     assert 920 in {
@@ -692,7 +692,7 @@ def test_neardup_compact_watermark_and_asof_refusal(spark, tmp_path):
     idx.bootstrap(
         _nd_docs(spark, [(i, t) for i, t in enumerate(_ND_BASE)])
     )
-    assert idx._watermark() is None
+    assert idx.store.watermark() is None
 
 
 def test_neardup_sink_skips_replay_of_merged_epoch(spark, tmp_path):
@@ -713,7 +713,7 @@ def test_neardup_sink_skips_replay_of_merged_epoch(spark, tmp_path):
     assert out_before == [100]
 
     idx.compact()
-    assert idx._watermark() == 1
+    assert idx.store.watermark() == 1
     # replay of the merged epoch: out_table and index untouched
     sink(_nd_epoch(spark, 1), 1)
     assert (
@@ -866,7 +866,7 @@ def test_sink_prune_keep_bounds_versions_in_stream(spark, tmp_path):
     for b in (1, 2, 3, 4, 5, 6):
         sink(_bm_epoch(spark, [100 + b]), b)
     snap = _bm_snapshot(idx)
-    cur = idx._current_version()
+    cur = idx.store.current()
     assert cur == 4  # v1 build + 3 in-stream compaction flips
     dirs = {
         d
@@ -892,7 +892,7 @@ def test_ivf_prune_versions_keep(spark, tmp_path):
     wh, idx = _ivf(spark, tmp_path, versioned=True)
     idx.retrain(n_cells=3, seed=7)
     idx.retrain(n_cells=3, seed=8)
-    assert idx._current_version() == 3
+    assert idx.store.current() == 3
     removed = idx.prune_versions(keep=2)
     assert all("_v1" in t for t in removed)
     assert os.path.isdir(wh.path(f"{idx.name}_vectors_v2"))
@@ -901,29 +901,6 @@ def test_ivf_prune_versions_keep(spark, tmp_path):
     assert not os.path.isdir(wh.path(f"{idx.name}_vectors_v2"))
     with pytest.raises(ValueError, match=">= 1"):
         idx.prune_versions(keep=0)
-
-
-def test_bm25_compact_legacy_store_without_stats_fails_guided(
-    spark, tmp_path
-):
-    """ADVICE r13: a legacy pre-stats partitioned store (topk and
-    absorb handle it explicitly) must get a GUIDED error from
-    compact(), not a raw AnalysisException — and one absorb()
-    backfills the stats record, after which compact() works."""
-    import shutil
-
-    wh, idx = _bm25(spark, tmp_path)
-    idx.absorb(_bm_epoch(spark, [101]), batch=1)
-    # simulate the legacy layout: the stats table never existed
-    shutil.rmtree(wh.path(idx.stats_table))
-    spark.catalog.refreshByPath(wh.path(idx.stats_table))
-    with pytest.raises(ValueError, match="absorb"):
-        idx.compact()
-    # the prescribed recovery: one absorb backfills per-epoch stats
-    idx.absorb(_bm_epoch(spark, [102]), batch=2)
-    report = idx.compact()
-    assert report["stamps_merged"] >= 2
-    assert idx.topk({"q": ["word102"]}).count() > 0
 
 
 def test_ivf_absorb_resolves_pointer_in_one_read(spark, tmp_path):

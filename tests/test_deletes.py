@@ -104,11 +104,11 @@ def test_bm25_versioned_purge_is_atomic_in_the_pointer_flip(
     assert _served(idx) == _served(ref)
 
     # bounded compaction: tombstones carry to the new version LIVE
-    v0 = idx._current_version()
+    v0 = idx.store.current()
     report = idx.compact(through=0)
     assert report["purged"] is False
-    assert idx._current_version() == v0 + 1
-    assert wh.exists(idx._tombstones_table(v0 + 1))
+    assert idx.store.current() == v0 + 1
+    assert wh.exists(idx.store.tombstones(v0 + 1))
     assert _served(idx) == _served(ref)
     # doc 2's postings are still physically present (filtered only)
     assert (
@@ -118,8 +118,8 @@ def test_bm25_versioned_purge_is_atomic_in_the_pointer_flip(
     # FULL compaction: physical purge behind one pointer flip
     report = idx.compact()
     assert report["purged"] is True
-    v2 = idx._current_version()
-    assert not wh.exists(idx._tombstones_table(v2))
+    v2 = idx.store.current()
+    assert not wh.exists(idx.store.tombstones(v2))
     assert wh.read(idx.postings_table).filter("doc_id = 2").count() == 0
     assert wh.read(idx.doclens_table).filter("doc_id = 2").count() == 0
     # stats folded down exactly: one row, minus doc 2's dl
@@ -275,13 +275,13 @@ def test_ivf_delete_filter_ban_purge_and_retrain_carry(spark, tmp_path):
     report = idx.compact(through=0)
     assert report["purged"] is False
     assert served_ids() & {2, 7} == set()
-    v_bounded = idx._current_version()
+    v_bounded = idx.store.current()
     assert wh.exists(f"{idx.name}_tombstones_v{v_bounded}")
 
     # FULL compaction purges rows + tombstones behind the flip
     report = idx.compact()
     assert report["purged"] is True
-    v = idx._current_version()
+    v = idx.store.current()
     assert not wh.exists(f"{idx.name}_tombstones_v{v}")
     assert (
         wh.read(idx.vectors_table).filter("vec_id in (2, 7)").count() == 0
@@ -356,7 +356,7 @@ def test_pq_delete_filter_ban_and_versioned_purge(spark, tmp_path):
 
     report = idx.compact()
     assert report["purged"] is True
-    v, _ = idx._version_row()
+    v, _ = idx.store.version_row()
     assert not wh.exists(f"{idx.name}_tombstones_v{v}")
     assert (
         wh.read(idx.codes_table).filter("vec_id in (0, 100)").count() == 0

@@ -635,3 +635,53 @@ def test_fs_access_confined_to_warehouse_epochs_and_file_sources():
         "direct FS access outside the warehouse/epochs/file-source "
         "boundary:\n" + "\n".join(offenders)
     )
+
+
+def test_versioned_store_lifecycle_confined_to_store():
+    """The version-pointer lifecycle lives in ONE place,
+    operators/store.py: only it calls the flip guards
+    (`guard_pointer_unmoved`, `guard_concurrent_writes`) and the
+    inventory snapshot (`table_inventory`) — sources/warehouse.py
+    defines them — and no other module names or writes a `_version`
+    pointer row. An index family that copies the lifecycle back in
+    fails here."""
+    import os
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "etl_process_for_fraud_transactions_spark",
+    )
+    exempt = {
+        os.path.join("operators", "store.py"),
+        os.path.join("sources", "warehouse.py"),
+    }
+    guard_call = re.compile(
+        r"\b(?:guard_pointer_unmoved|guard_concurrent_writes"
+        r"|table_inventory)\s*\("
+    )
+    pointer_name = re.compile(r"_version[\"']")
+    pointer_write = re.compile(
+        r"\b(?:overwrite_rows|write_rows_atomic|overwrite|append)\s*\("
+        r"\s*[^,()]*version_table"
+    )
+    offenders = []
+    for dirpath, _, files in os.walk(pkg):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            rel = os.path.relpath(os.path.join(dirpath, fname), pkg)
+            if rel in exempt:
+                continue
+            with open(os.path.join(dirpath, fname)) as fh:
+                code = "\n".join(
+                    line.rstrip("\n").split("#", 1)[0] for line in fh
+                )
+            for rx in (guard_call, pointer_name, pointer_write):
+                for m in rx.finditer(code):
+                    line = code.count("\n", 0, m.start()) + 1
+                    offenders.append(f"{rel}:{line}: {m.group(0)!r}")
+    assert offenders == [], (
+        "version-pointer lifecycle outside operators/store.py:\n"
+        + "\n".join(offenders)
+    )

@@ -474,8 +474,7 @@ def test_residual_absorb_and_pointer_layout_atomicity(spark, tmp_path):
     against the frozen residual codebooks — an absorbed duplicate of a
     corpus vector is servable; (b) versioned layout atomicity (ADVICE
     r12): the pointer row carries the layout, so serving ignores a
-    stale/corrupted shared meta's layout fields; (c) a LEGACY pointer
-    (version-only row) falls back to the meta's layout."""
+    stale/corrupted shared meta's layout fields."""
     from etl_process_for_fraud_transactions_spark.operators.pq import PqIndex
     from etl_process_for_fraud_transactions_spark.sources.warehouse import (
         Warehouse,
@@ -533,18 +532,6 @@ def test_residual_absorb_and_pointer_layout_atomicity(spark, tmp_path):
         idx.meta_table,
         spark.createDataFrame([tuple(good_meta)], PqIndex._META_SCHEMA),
     )
-
-    # (c) legacy pre-round-13 pointer: version only — layout comes
-    # from the meta table and serving still works
-    wh.overwrite(
-        idx.version_table, spark.createDataFrame([(1,)], "version int")
-    )
-    legacy = sorted(
-        tuple(r) for r in idx.topk(queries, k=5, nprobe=4).collect()
-    )
-    # the absorbed duplicate may perturb ADC ties; compare the row set
-    # shape, not exact equality with `before`
-    assert len(legacy) == 5
 
 
 def test_sampled_codebook_training_parity(spark, tmp_path):
@@ -765,7 +752,7 @@ def test_pq_versioned_partitioned_residual_compose(spark, tmp_path):
         corpus, m=4, n_codes=8, seed=2, max_iter=10,
         n_cells=4, residual=True,
     )
-    v, layout = idx._version_row()
+    v, layout = idx.store.version_row()
     assert (v, layout["residual"], layout["n_cells"]) == (1, True, 4)
 
     sink = pq_absorb_sink(idx)
@@ -778,7 +765,7 @@ def test_pq_versioned_partitioned_residual_compose(spark, tmp_path):
 
     # layout-changing rebuild: flat raw codes, same instance
     idx.build(corpus, m=4, n_codes=8, seed=9, max_iter=10)
-    v, layout = idx._version_row()
+    v, layout = idx.store.version_row()
     assert (v, layout["residual"], layout["n_cells"]) == (2, False, None)
     assert idx.codes_table == "vpr_codes_v2"
     # v2 serves (raw arithmetic, no cells) and absorb lands in v2
@@ -854,7 +841,7 @@ def test_pq_calibrate_nprobe_measured_default(spark, tmp_path):
     assert calib["met_target"] and calib["default_nprobe"] > 1
     meta = wh.read(idx.meta_table).collect()[0].asDict()
     assert meta["default_nprobe"] == calib["default_nprobe"]
-    _, layout = idx._version_row()
+    _, layout = idx.store.version_row()
     assert layout["default_nprobe"] == calib["default_nprobe"]
 
     probes = corpus.filter(
@@ -879,12 +866,12 @@ def test_pq_calibrate_nprobe_measured_default(spark, tmp_path):
         corpus, m=2, n_codes=8, seed=9, max_iter=10, n_cells=4,
         nprobe_recall_target=0.95,
     )
-    v, layout = idx._version_row()
+    v, layout = idx.store.version_row()
     assert v == 2 and layout["default_nprobe"] is not None
 
     # a plain rebuild RESETS the default
     idx.build(corpus, m=2, n_codes=8, seed=11, max_iter=10, n_cells=4)
-    _, layout = idx._version_row()
+    _, layout = idx.store.version_row()
     assert layout["default_nprobe"] is None
     assert wh.read(idx.meta_table).collect()[0]["default_nprobe"] is None
 
@@ -1370,12 +1357,12 @@ def test_opq_rotation_refresh_on_drifted_stream(spark, tmp_path):
     rot2 = idx._rotation()
     rec_fresh = recall()
 
-    assert idx._current_version() == 2
+    assert idx.store.current() == 2
     assert rot2 != rot1, "rebuild must re-learn the rotation"
     assert rec_fresh >= rec_stale + 0.2, (rec_stale, rec_fresh)
     assert rec_fresh >= rec_plain + 0.05, (rec_plain, rec_fresh)
     # v1's rotation survives until prune (lagging-reader contract)
-    names_v1 = idx._table_names(1)
+    names_v1 = idx.store.tables(1)
     assert wh.exists(idx._rotation_table_for(names_v1[1]))
     idx.prune_versions()
     assert not wh.exists(idx._rotation_table_for(names_v1[1]))

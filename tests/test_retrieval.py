@@ -665,10 +665,7 @@ def test_bm25_topk_plan_has_no_doclens_scan(spark):
 
 def test_bm25_stats_equal_doclens_aggregate_after_absorbs(spark, tmp_path):
     """The stats rows must sum to EXACTLY the doclens aggregate they
-    replace (exact integer sums), across build + several absorbs —
-    and serving through them equals the legacy doclens path."""
-    import shutil
-
+    replace (exact integer sums), across build + several absorbs."""
     from pyspark.sql import functions as F
 
     from etl_process_for_fraud_transactions_spark.operators.retrieval import (
@@ -697,12 +694,6 @@ def test_bm25_stats_equal_doclens_aggregate_after_absorbs(spark, tmp_path):
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
     ).collect()[0]
     assert (stats.n, stats.s) == (dl.n, dl.s) == (7, 21)
-
-    served = _key(idx.topk({"q": ["hash", "probe", "scan"]}))
-    # legacy fallback: delete the stats table -> serving re-derives
-    # N/avgdl from doclens and produces the identical result
-    shutil.rmtree(wh.path(idx.stats_table))
-    assert _key(idx.topk({"q": ["hash", "probe", "scan"]})) == served
 
 
 def test_bm25_partitioned_replay_does_not_double_count_stats(spark, tmp_path):
@@ -807,68 +798,6 @@ def test_bm25_cache_tokens_mode_is_bit_identical(spark):
             docs, q, topk=10, max_df_frac=frac, cache_tokens=True
         )
         assert _key(lazy) == _key(cached), frac
-
-
-def test_bm25_legacy_store_absorb_backfills_stats(spark, tmp_path):
-    """Round-12 self-review bug, pinned: an index BUILT BEFORE the
-    stats table existed (simulated by deleting it) must not let the
-    first absorb create a batch-only stats table — topk would serve a
-    batch-sized N and silently wrong idf. absorb() backfills the
-    pre-append corpus first, in both layouts."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from etl_process_for_fraud_transactions_spark.operators.retrieval import (
-        Bm25Index,
-    )
-    from etl_process_for_fraud_transactions_spark.sources.warehouse import (
-        Warehouse,
-    )
-
-    b = spark.createDataFrame(
-        [(10, "hash probe")], "doc_id: int, text: string"
-    )
-    for partitioned in (False, True):
-        wh = Warehouse(spark, str(tmp_path / f"wh{partitioned}"))
-        idx = Bm25Index(wh, partitioned=partitioned)
-        idx.build(_corpus(spark))
-        shutil.rmtree(wh.path(idx.stats_table))  # legacy layout
-        idx.absorb(b, batch=7 if partitioned else None)
-        got = wh.read(idx.stats_table).agg(
-            F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s")
-        ).collect()[0]
-        assert (got.n, got.s) == (5, 17), partitioned  # corpus 4/15 + batch 1/2
-        ref = Bm25Index(Warehouse(spark, str(tmp_path / f"ref{partitioned}")))
-        ref.build(_corpus(spark).unionByName(b))
-        assert _key(idx.topk({"q": ["hash", "probe"]})) == _key(
-            ref.topk({"q": ["hash", "probe"]})
-        ), partitioned
-
-
-def test_bm25_legacy_versioned_pointer_falls_back_to_meta_id_type(
-    spark, tmp_path
-):
-    """ADVICE r12: a versioned store with a PRE-round-12 pointer row
-    (version only, no id_type column) must consult the meta table —
-    which records the real id type — before defaulting to 'bigint',
-    so a legacy string-keyed store's day-zero frame keeps its schema."""
-    from etl_process_for_fraud_transactions_spark.operators.retrieval import (
-        Bm25Index,
-    )
-    from etl_process_for_fraud_transactions_spark.sources.warehouse import (
-        Warehouse,
-    )
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    idx = Bm25Index(wh, versioned=True)
-    idx.build(spark.createDataFrame([], "doc_id string, text string"))
-    # simulate the legacy pointer layout: version only
-    wh.overwrite(
-        idx.version_table, spark.createDataFrame([(1,)], "version int")
-    )
-    empty = idx.topk({"q": ["hash"]})
-    assert dict(empty.dtypes)["doc_id"] == "string"
 
 
 def test_bm25_absorb_stats_survive_escaped_batch_names(spark, tmp_path):

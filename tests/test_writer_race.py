@@ -272,7 +272,7 @@ def test_pq_compact_refuses_concurrent_absorb(spark, tmp_path, monkeypatch):
     assert out["compacted_through"] == 2
     ids = {
         r["vec_id"]
-        for r in wh.read(a._table_names(2)[0]).select("vec_id").collect()
+        for r in wh.read(a.store.tables(2)[0]).select("vec_id").collect()
     }
     assert {50, 60} <= ids
 

@@ -102,7 +102,7 @@ def bench_bm25(spark, sf_dir: str) -> dict:
                 batch=e,
             )
             if e in CHECKPOINTS:
-                post_t = idx._table_names(idx._current_version())[0]
+                post_t = idx.store.tables()[0]
                 curve.append(
                     {
                         "epochs": e,
@@ -115,7 +115,7 @@ def bench_bm25(spark, sf_dir: str) -> dict:
         t0 = time.monotonic()
         report = idx.compact()
         compact_sec = time.monotonic() - t0
-        post_t = idx._table_names(idx._current_version())[0]
+        post_t = idx.store.tables()[0]
         after_files = parquet_file_count(wh.path(post_t))
         after_serve = round(_timed_serve(serve), 3)
         pruned = idx.prune_versions()
@@ -203,7 +203,7 @@ def bench_ivf(spark, sf_dir: str) -> dict:
                 batch=e,
             )
             if e in CHECKPOINTS:
-                vec_t = idx._table_names(idx._current_version())[0]
+                vec_t = idx.store.tables()[0]
                 curve.append(
                     {
                         "epochs": e,
@@ -216,7 +216,7 @@ def bench_ivf(spark, sf_dir: str) -> dict:
         t0 = time.monotonic()
         report = idx.compact()
         compact_sec = time.monotonic() - t0
-        vec_t = idx._table_names(idx._current_version())[0]
+        vec_t = idx.store.tables()[0]
         after_files = parquet_file_count(wh.path(vec_t))
         after_serve = round(_timed_serve(serve), 3)
         pruned = idx.prune_versions()

@@ -141,7 +141,7 @@ def run_arm(spark, sf_dir: str, staging: str, base_n: int, compact_every):
             idx.topk(QUERIES, topk=10, max_df_frac=0.8).count()
 
         serve_sec = round(_timed_serve(serve), 3)
-        post_t = idx._table_names(idx._current_version())[0]
+        post_t = idx.store.tables()[0]
 
         def _mean(xs):
             return round(sum(xs) / len(xs), 3) if xs else None
