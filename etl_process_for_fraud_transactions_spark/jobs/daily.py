@@ -53,8 +53,7 @@ class DailyFraudJob:
         # The reference re-scans the FULL transaction fact for every
         # daily report (main.py:544), re-flagging all history into each
         # new report_dt partition — O(total history) per day. The
-        # incremental mode restricts rules 1-3 and the final assembly
-        # to the batch date's partition (partition-pruned scan) while
+        # incremental mode reports only the batch date's rows, while
         # the self-join rules still see the full fact for window
         # context. At 100 TB the full-rescan mode is not viable; the
         # default stays reference-faithful.
@@ -193,25 +192,22 @@ class DailyFraudJob:
         if self.archive:
             archive_batch_files(self.input_dir, date)
 
-        # five-rule report over the full fact vs current dims (lazy
-        # current∪closed union — never materialized)
-        dims = {name: self.read_dim_history(name) for name in DIMENSIONS}
-        fact = self.wh.read("fact_transactions")
+        # five-rule report: the full fact against each dimension's
+        # current table. In this layout `_closed` holds only
+        # deleted_flg = true rows, so current() is the history the
+        # report filters to, without scanning the closed files.
+        dims = {name: self._dim(name).current() for name in DIMENSIONS}
         report = assemble_report(
-            fact.drop("batch_dt"),
+            self.wh.read("fact_transactions"),
             dims["cards"],
             dims["accounts"],
             dims["clients"],
             dims["terminals"],
             self.wh.read("fact_passport_blacklist"),
             report_dt=batch,
-            # incremental: only this batch's partition feeds the final
-            # assembly (pruned scan); rules keep full window context
-            report_trans=(
-                fact.filter(F.col("batch_dt") == batch).drop("batch_dt")
-                if self.incremental_report
-                else None
-            ),
+            # incremental: only this batch's rows are reported; the
+            # rules still see the full fact for window context
+            report_trans=(F.col("batch_dt") == batch) if self.incremental_report else None,
         )
         self.wh.append_partitioned("rep_fraud", report, "report_dt")
         return report

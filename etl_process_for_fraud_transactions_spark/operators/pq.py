@@ -1312,7 +1312,7 @@ class PqIndex:
                     recall_target=nprobe_recall_target,
                     seed=seed,
                     _tables=(codes_t, books_t, cells_t),
-                    _layout={"residual": bool(residual)},
+                    _layout=out,
                 )["default_nprobe"]
 
         # the replay watermark RESETS: a rebuild indexes a fresh corpus

@@ -1,21 +1,20 @@
-"""Final fraud-report assembly (reference main.py:531-560).
+"""Final fraud-report assembly (reference main.py:414-560) as one
+resolved frame.
 
-Left-joins the fact to the dimension chain, the passport blacklist and
-the rule-4/rule-5 outputs, applies the prioritized CASE, filters to
-rows firing at least one rule, and stamps report_dt.
-
-One path: each rule has one implementation (the sort-once window
-forms in operators.rules), and building the report runs no Spark job.
-The rule-hit join-backs carry no broadcast hint. The hit sets are a
-fraction of the fact and grow with it, so AQE picks the join strategy
-from runtime stats: broadcast while they are small, a shuffle join on
-a day whose hits outgrow the threshold, where a forced hint would
-abort instead.
+The fact is resolved once through the LEFT chain cards -> accounts ->
+clients plus the terminal city (main.py:544-550): a row that misses the
+chain still reaches the rule 1-3 probes. The reference's inner chain,
+which feeds rules 4 and 5, is exactly the rows with a client (the last
+join key is cl.client_id), so both rules run as window columns on this
+frame (operators.rules) and no hit set is joined back. Three exchanges:
+rule 4 by card, rule 5 by client, and the join-back's max over
+(client_id, trans_id), which reuses rule 5's partitioning. Dims and the
+blacklist broadcast, so building the report runs no Spark job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.core import null_safe_concat_ws
@@ -27,8 +26,8 @@ from .rules import (
     EV_INVALID_CONTRACT,
     attach_terminal_city,
     resolve_transactions,
-    rule_brute_force_20min_window,
-    rule_diff_city_1h_window,
+    with_brute_force_flags,
+    with_diff_city_flag,
 )
 
 
@@ -40,84 +39,53 @@ def assemble_report(
     terminals: DataFrame,
     blacklist: DataFrame,
     report_dt: Column,
-    report_trans: DataFrame | None = None,
+    report_trans: Column | None = None,
 ) -> DataFrame:
     """The full five-rule report (main.py:414-560) as one DataFrame.
 
-    The reference builds the same dim chain twice (CTEs at 415-427 and
-    437-443 — a missed reuse its own planner can't fix); here the
-    client-resolved chain is built once and feeds both self-join rules
-    (rule 4 adds the terminal city on top).
-
-    `report_trans` (incremental mode): the final assembly scans this
-    frame (e.g. just the batch-date partition) while the self-join
-    rules keep the full `trans` for window context — the reference's
-    full-fact daily rescan is O(total history) per day and not viable
-    at scale.
+    `report_trans` (incremental mode): a predicate over `trans` that
+    selects the rows to report (e.g. the batch date's partition). The
+    rule flags are still computed over all of `trans`, which is their
+    window context, and the predicate is applied after them — the
+    reference's full-fact daily rescan is O(total history) per day and
+    not viable at scale.
     """
-    resolved = resolve_transactions(trans, cards, accounts, clients, how="inner")
-
-    # Rule 4 needs the terminal city (city_of_transactions CTE,
-    # main.py:415-427); rule 5 deliberately does not join terminals
-    # (req_start_for_4_rule, main.py:437-443) — an inner terminal join
-    # there would drop transactions at unknown terminals from the
-    # brute-force scan, changing its semantics.
-    diff_city = rule_diff_city_1h_window(
-        attach_terminal_city(resolved, terminals)
-    ).alias("h")
-    brute = rule_brute_force_20min_window(resolved).alias("r")
-
-    # Final assembly uses LEFT joins (main.py:544-550): a transaction
-    # that misses the dim chain still reaches the rule-1 probe.
-    left = resolve_transactions(
-        report_trans if report_trans is not None else trans,
-        cards,
-        accounts,
-        clients,
-        how="left",
-    ).alias("t")
-    b = F.broadcast(blacklist.select("passport_num").distinct().alias("b"))
-
-    out = (
-        left.join(b, F.col("t.passport_num") == F.col("b.passport_num"), "left")
-        .join(
-            diff_city,
-            (F.col("h.client_id") == F.col("t.client_id"))
-            & (F.col("t.trans_id") == F.col("h.trans_id")),
-            "left",
-        )
-        .join(
-            brute,
-            (F.col("r.client_id") == F.col("t.client_id"))
-            & (F.col("t.trans_id") == F.col("r.trans_id")),
-            "left",
-        )
+    b = F.broadcast(blacklist.select(F.col("passport_num").alias("__listed")).distinct())
+    trans = trans.withColumn("__report", F.lit(True) if report_trans is None else report_trans)
+    rows = attach_terminal_city(resolve_transactions(trans, cards, accounts, clients), terminals)
+    # only what the rules and the output read crosses the exchanges
+    rows = rows.join(b, F.col("passport_num") == F.col("__listed"), "left").select(
+        "trans_id", "trans_date", "card_num", "client_id", "amt", "oper_result",
+        "terminal_city", "terminal_multi_city", "__report",
+        F.col("passport_num").alias("passport"),
+        null_safe_concat_ws(" ", "first_name", "patrinymic", "last_name").alias("fio"),
+        "phone",
+        F.col("__listed").isNotNull().alias("__blocked"),
+        (F.col("passport_valid_to") < F.col("trans_date")).alias("__expired"),
+        (F.col("account_valid_to") < F.col("trans_date")).alias("__invalid"),
     )
+    flagged = with_brute_force_flags(with_diff_city_flag(rows))
 
-    blocked = F.col("b.passport_num").isNotNull()
-    expired = F.col("t.passport_valid_to") < F.col("t.trans_date")
-    invalid = F.col("t.account_valid_to") < F.col("t.trans_date")
-    diff_city_hit = F.col("h.client_id").isNotNull()
-    brute_hit = F.col("r.client_id").isNotNull()
-
+    # the reference joins each hit set back on (client_id, trans_id):
+    # every row sharing a hit's key is flagged (a null key matches none)
+    same_key = Window.partitionBy("client_id", "trans_id")
+    flagged = flagged.select(
+        "*",
+        *[(F.col("trans_id").isNotNull() & F.max(f"{r}_hit").over(same_key)).alias(f"__{r}")
+          for r in ("diff_city", "brute_force")],
+    )
+    blocked, expired, invalid = F.col("__blocked"), F.col("__expired"), F.col("__invalid")
+    diff_city, brute = F.col("__diff_city"), F.col("__brute_force")
     event_type = (
         F.when(blocked, F.lit(EV_BLOCKED_PASSPORT))
         .when(expired, F.lit(EV_EXPIRED_PASSPORT))
         .when(invalid, F.lit(EV_INVALID_CONTRACT))
-        .when(diff_city_hit, F.lit(EV_DIFF_CITY))
-        .when(brute_hit, F.lit(EV_BRUTE_FORCE))
+        .when(diff_city, F.lit(EV_DIFF_CITY))
+        .when(brute, F.lit(EV_BRUTE_FORCE))
     )  # no otherwise -> NULL, matching the CASE with no ELSE (main.py:542)
 
-    return (
-        out.filter(blocked | expired | invalid | diff_city_hit | brute_hit)
-        .select(
-            F.col("t.trans_date").alias("event_dt"),
-            F.col("t.passport_num").alias("passport"),
-            null_safe_concat_ws(
-                " ", F.col("t.first_name"), F.col("t.patrinymic"), F.col("t.last_name")
-            ).alias("fio"),
-            F.col("t.phone").alias("phone"),
-            event_type.alias("event_type"),
-            report_dt.alias("report_dt"),
-        )
+    fired = blocked | expired | invalid | diff_city | brute
+    return flagged.filter(F.col("__report") & fired).select(
+        F.col("trans_date").alias("event_dt"), "passport", "fio", "phone",
+        event_type.alias("event_type"), report_dt.alias("report_dt"),
     )

@@ -24,15 +24,15 @@ Determinism deviations from the reference (documented, SURVEY.md §5.2):
 - event_type labels are stable ASCII constants instead of the
   reference's localized strings.
 
-One implementation per rule. The reference's two self-joins become
-windows that sort each key's rows and read them in one pass: `lag`
-and `lead`, plus frames that only grow (running from the partition
-start), which Spark folds row by row. Rule 4
-(`rule_diff_city_1h_window`) finds each row's nearest rows in another
-city before and after it; rule 5 (`brute_force_candidates`) reads the
-four rows that open each anchor's [t, t+20min] frame. A key of k rows
-costs O(k log k) sorting, with no pairs and no sliding frame, so no
-key needs a different route. Dimension chains broadcast (dims ≪ fact).
+One implementation per rule, as columns. The reference's two
+self-joins become windows that sort each key's rows and read them in
+one pass (`lag`, `lead`, and running frames Spark folds row by row):
+`with_diff_city_flag` (rule 4) and `with_brute_force_flags` (rule 5)
+add their flags to a frame that keeps its other columns, so the
+report computes both on its one resolved frame; the driver rows read
+the filters `rule_diff_city_1h_window`, `brute_force_candidates` and
+`rule_brute_force_20min_window`. A key of k rows costs O(k log k)
+sorting, with no pairs and no sliding frame. Dims broadcast.
 """
 
 from __future__ import annotations
@@ -66,56 +66,48 @@ def resolve_transactions(
     cards: DataFrame,
     accounts: DataFrame,
     clients: DataFrame,
-    how: str = "inner",
 ) -> DataFrame:
-    """3-hop snowflake resolution fact -> cards -> accounts -> clients,
-    the J1/J2 join chain (main.py:415-427, 437-443); rule 4 adds the
-    terminal city with `attach_terminal_city`.
+    """3-hop snowflake resolution fact -> cards -> accounts -> clients
+    with LEFT joins, the report's chain (main.py:544-550); rule 4 adds
+    the terminal city with `attach_terminal_city`. The reference's
+    inner chain (main.py:415-427, 437-443) is its rows with a client,
+    the only rows the rule flags let take part.
 
-    Dims are broadcast — they are orders of magnitude smaller than the
-    fact at any scale where this schema makes sense, so the fact never
-    shuffles here. Output is explicitly projected (Spark requires
-    disambiguation where the reference leaned on `SELECT *`).
+    Dims are broadcast (orders of magnitude smaller than the fact), so
+    the fact never shuffles here. The output keeps every fact column
+    plus the named dimension columns the rules read.
     """
     t = trans.alias("t")
     car = F.broadcast(_current(cards).alias("car"))
     acc = F.broadcast(_current(accounts).alias("acc"))
     cl = F.broadcast(_current(clients).alias("cl"))
     out = (
-        t.join(car, F.col("t.card_num") == F.col("car.card_num"), how)
-        .join(acc, F.col("car.account_num") == F.col("acc.account_num"), how)
-        .join(cl, F.col("acc.client") == F.col("cl.client_id"), how)
+        t.join(car, F.col("t.card_num") == F.col("car.card_num"), "left")
+        .join(acc, F.col("car.account_num") == F.col("acc.account_num"), "left")
+        .join(cl, F.col("acc.client") == F.col("cl.client_id"), "left")
     )
-    cols = [
-        F.col("t.trans_id").alias("trans_id"),
-        F.col("t.trans_date").alias("trans_date"),
-        F.col("t.card_num").alias("card_num"),
-        F.col("t.oper_type").alias("oper_type"),
-        F.col("t.amt").alias("amt"),
-        F.col("t.oper_result").alias("oper_result"),
-        F.col("t.terminal").alias("terminal"),
+    return out.select(
+        "t.*",
         F.col("acc.valid_to").alias("account_valid_to"),
-        F.col("cl.client_id").alias("client_id"),
-        F.col("cl.passport_num").alias("passport_num"),
-        F.col("cl.passport_valid_to").alias("passport_valid_to"),
-        F.col("cl.first_name").alias("first_name"),
-        F.col("cl.patrinymic").alias("patrinymic"),
-        F.col("cl.last_name").alias("last_name"),
-        F.col("cl.phone").alias("phone"),
-    ]
-    return out.select(*cols)
-
-
-def attach_terminal_city(resolved: DataFrame, terminals: DataFrame, how: str = "inner") -> DataFrame:
-    """Join terminal_city onto an already client-resolved frame
-    (broadcast). Lets the 3-hop chain be computed once and shared
-    between the terminal-needing rule 4 and the terminal-free rule 5
-    (the reference recomputes the chain per CTE — main.py:415-443)."""
-    term = F.broadcast(_current(terminals).alias("term"))
-    r = resolved.alias("rsv")
-    return r.join(term, F.col("rsv.terminal") == F.col("term.terminal_id"), how).select(
-        "rsv.*", F.col("term.terminal_city").alias("terminal_city")
+        *[F.col(f"cl.{c}") for c in (
+            "client_id", "passport_num", "passport_valid_to",
+            "first_name", "patrinymic", "last_name", "phone",
+        )],
     )
+
+
+def attach_terminal_city(resolved: DataFrame, terminals: DataFrame) -> DataFrame:
+    """Left-join each row's terminal city from the current terminals,
+    collapsed to one broadcast row per terminal_id so the join never
+    multiplies rows. `terminal_multi_city` marks a terminal with several
+    current cities, whose rows the reference's inner terminal join
+    copies once per city (main.py:415-427)."""
+    city = F.col("terminal_city")
+    term = _current(terminals).groupBy(F.col("terminal_id").alias("terminal")).agg(
+        F.min(city).alias("terminal_city"),
+        (F.min(city) != F.max(city)).alias("terminal_multi_city"),
+    )
+    return resolved.join(F.broadcast(term), "terminal", "left")
 
 
 def _running(w: Window) -> Window:
@@ -124,9 +116,10 @@ def _running(w: Window) -> Window:
     return w.rangeBetween(Window.unboundedPreceding, Window.currentRow)
 
 
-def rule_diff_city_1h_window(resolved: DataFrame) -> DataFrame:
-    """Rule 4: a transaction is a hit iff another transaction on the
-    same card within +/-1h sits in a different city (main.py:428-436).
+def with_diff_city_flag(rows: DataFrame) -> DataFrame:
+    """Rule 4 as a column: `diff_city_hit` is true iff another row of
+    the same card within +/-1h sits in a different city
+    (main.py:428-436). Every other column of `rows` is kept.
 
     Sort a card's rows by (ts, city); rows of one city then form runs.
     The nearest earlier row in another city is the last row of the
@@ -138,41 +131,58 @@ def rule_diff_city_1h_window(resolved: DataFrame) -> DataFrame:
     pass each: one card_num shuffle and two sorts per card, with no
     pairs and no sliding frame.
 
-    Rows with a null card, timestamp or city drop out: the reference's
-    predicates are null-unsafe, so they can be neither hits nor
-    witnesses. Equal (ts, city) peers share a run, and the running
-    frames take whole peer groups, so their order does not matter.
-    Property-pinned against the reference's SQL on DuckDB
-    (tests/test_properties.py)."""
-    us, city = F.col("__us"), F.col("terminal_city")
-    out = resolved.select(
-        "card_num", "trans_id", "client_id", "terminal_city",
-        epoch_us("trans_date").alias("__us"),
-    ).filter(F.col("card_num").isNotNull() & us.isNotNull() & city.isNotNull())
-    for name, order in (("__before", (us.asc(), city.asc())),
-                        ("__after", (us.desc(), city.desc()))):
-        w = Window.partitionBy("card_num").orderBy(*order)
-        out = out.withColumn(
-            "__edge", F.when(F.lag(city).over(w) != city, F.lag(us).over(w))
-        ).withColumn(name, F.last("__edge", ignorenulls=True).over(_running(w)))
-    hit = (F.col("__before") >= us - HOUR_US) | (F.col("__after") <= us + HOUR_US)
-    return out.filter(hit).select("trans_id", "client_id").distinct()
+    A row at a terminal with several cities (`terminal_multi_city`)
+    stands for one copy per city: it is a hit itself and a witness for
+    every row, so the row after it sees an edge too, and it sorts first
+    among its (ts, city) peers. Other peers share a run, and the running
+    frames take whole peer groups, so their order does not matter. Rows
+    with a null client, card, timestamp or city are neither hits nor
+    witnesses (null-unsafe predicates, inner chain); they sit in their
+    own window partition. Property-pinned against the reference's SQL
+    on DuckDB (tests/test_properties.py)."""
+    us, city, multi = F.col("__us"), F.col("terminal_city"), F.col("terminal_multi_city")
+    ok = F.col("client_id").isNotNull() & F.col("card_num").isNotNull() & city.isNotNull()
+    out = rows.withColumn("__us", epoch_us("trans_date")).withColumn("__ok", ok & us.isNotNull())
+    for name, order in (("__before", (us.asc(), city.asc(), multi.desc())),
+                        ("__after", (us.desc(), city.desc(), multi.desc()))):
+        w = Window.partitionBy("card_num", "__ok").orderBy(*order)
+        other = (F.lag(city).over(w) != city) | F.lag(multi).over(w)
+        out = out.withColumn("__edge", F.when(other, F.lag(us).over(w))).withColumn(
+            name, F.last("__edge", ignorenulls=True).over(_running(w))
+        )
+    hit = F.col("__ok") & (
+        multi | (F.col("__before") >= us - HOUR_US) | (F.col("__after") <= us + HOUR_US)
+    )
+    return out.select(*rows.columns, F.coalesce(hit, F.lit(False)).alias("diff_city_hit"))
+
+
+def rule_diff_city_1h_window(resolved: DataFrame) -> DataFrame:
+    """Rule 4's hits (trans_id, client_id), distinct as the reference's
+    one_hour_diff_city_transactions."""
+    hits = with_diff_city_flag(resolved).filter("diff_city_hit")
+    return hits.select("trans_id", "client_id").distinct()
+
+
+def _ahead(c: str, k: int) -> Column:
+    """Column `c` of the row k places later (k = 0: this row), as
+    projected by with_brute_force_flags."""
+    return F.col(f"__{c}{k}" if k else c)
 
 
 def _ranks_before(a: int, b: int) -> Column:
     """Row a precedes row b in (amt DESC NULLS LAST, trans_id ASC),
-    the order of the reference's rn_amt (main.py:475-482); rows are
-    named by their `lag` offset in brute_force_candidates."""
-    amt_a, amt_b = F.col(f"__amt{a}"), F.col(f"__amt{b}")
+    the order of the reference's rn_amt (main.py:475-482)."""
+    amt_a, amt_b = _ahead("amt", a), _ahead("amt", b)
     return F.coalesce(amt_a > amt_b, amt_a.isNotNull() & amt_b.isNull()) | (
-        amt_a.eqNullSafe(amt_b) & (F.col(f"__tid{a}") < F.col(f"__tid{b}"))
+        amt_a.eqNullSafe(amt_b) & (_ahead("trans_id", a) < _ahead("trans_id", b))
     )
 
 
-def brute_force_candidates(resolved: DataFrame) -> DataFrame:
-    """Rule 5 in one sort per client: one row per candidate anchor
-    (client_id, trans_id_start) with `is_hit` marking the anchors the
-    reference's full chain confirms (main.py:444-530).
+def with_brute_force_flags(rows: DataFrame) -> DataFrame:
+    """Rule 5 as two columns from one sort per client (main.py:444-530):
+    `brute_force_candidate` marks the rows that anchor a candidate
+    window, `brute_force_hit` the anchors the reference's full chain
+    confirms. Every other column of `rows` is kept.
 
     An anchor at ts t owns the frame [t, t+20min] of its client's rows
     in (ts, trans_id) order. The frame starts at the first row with
@@ -188,29 +198,26 @@ def brute_force_candidates(resolved: DataFrame) -> DataFrame:
     The rows are sorted once, newest first, so `lag(k)` is the k-th
     later row, and a running frame over ts covers every row at or
     after t: its minima give the next SUCCESS and REJECT, and its
-    last non-null head is the frame's first row. Null client or
-    timestamp rows drop out (null-unsafe predicates in the
-    reference). (client_id, trans_id) is taken as unique, as the
+    last non-null head is the frame's first row. Rows with a null
+    client or timestamp take no part (null-unsafe predicates): a null
+    timestamp sorts last (DESC NULLS LAST), outside the other rows'
+    lags and frames. (client_id, trans_id) is taken as unique, as the
     reference's GROUP BY on it assumes. Property-pinned against the
     reference's SQL on DuckDB (tests/test_properties.py)."""
     us, res = F.col("__us"), F.col("oper_result")
-    base = resolved.select(
-        "client_id", "trans_id", "amt", "oper_result",
-        epoch_us("trans_date").alias("__us"),
-    ).filter(F.col("client_id").isNotNull() & us.isNotNull())
+    base = rows.withColumn("__us", epoch_us("trans_date"))
     w = Window.partitionBy("client_id").orderBy(us.desc(), F.desc("trans_id"))
     ahead = base.select(
         "*",
-        *[(F.lag(c, k).over(w) if k else F.col(c)).alias(f"__{n}{k}")
-          for k in range(4)
-          for n, c in (("res", "oper_result"), ("amt", "amt"), ("tid", "trans_id"))],
+        *[F.lag(c, k).over(w).alias(f"__{c}{k}")
+          for k in range(1, 4) for c in ("oper_result", "amt", "trans_id")],
         F.lag(us, 3).over(w).alias("__us3"),
         # no earlier row shares this ts: the first row of its peers
         (~F.lead(us).over(w).eqNullSafe(us)).alias("__first"),
     )
     pattern = (
-        (F.col("__res0") == "REJECT") & (F.col("__res1") == "REJECT")
-        & (F.col("__res2") == "REJECT") & (F.col("__res3") == "SUCCESS")
+        (_ahead("oper_result", 0) == "REJECT") & (_ahead("oper_result", 1) == "REJECT")
+        & (_ahead("oper_result", 2) == "REJECT") & (_ahead("oper_result", 3) == "SUCCESS")
         & _ranks_before(0, 1) & _ranks_before(1, 2) & _ranks_before(2, 3)
     )
     head = F.when(
@@ -224,21 +231,30 @@ def brute_force_candidates(resolved: DataFrame) -> DataFrame:
         return F.min(F.when(res == result, us)).over(at_or_after)
 
     framed = ahead.select(
-        "client_id", "trans_id", "__us",
+        "*",
         F.last(head, ignorenulls=True).over(at_or_after).alias("__head"),
         next_ts("SUCCESS").alias("__next_s"),
         next_ts("REJECT").alias("__next_r"),
     )
     end = us + TWENTY_MIN_US
-    return framed.filter(
-        (F.col("__head.us3") <= end)
-        & (F.col("__next_s") <= end)
-        & (F.col("__next_r") <= end)
-    ).select(
-        "client_id",
-        F.col("trans_id").alias("trans_id_start"),
-        F.col("__head.hit").alias("is_hit"),
+    candidate = F.coalesce(
+        F.col("client_id").isNotNull() & (F.col("__head.us3") <= end)
+        & (F.col("__next_s") <= end) & (F.col("__next_r") <= end),
+        F.lit(False),
     )
+    return framed.select(
+        *rows.columns,
+        candidate.alias("brute_force_candidate"),
+        (candidate & F.col("__head.hit")).alias("brute_force_hit"),
+    )
+
+
+def brute_force_candidates(resolved: DataFrame) -> DataFrame:
+    """Rule 5's candidate anchors (client_id, trans_id_start) with
+    `is_hit` marking the confirmed ones (with_brute_force_flags)."""
+    cand = with_brute_force_flags(resolved).filter("brute_force_candidate")
+    return cand.select("client_id", F.col("trans_id").alias("trans_id_start"),
+                       F.col("brute_force_hit").alias("is_hit"))
 
 
 def rule_brute_force_20min_window(resolved: DataFrame) -> DataFrame:

@@ -279,6 +279,7 @@ SLOW_TESTS = {
     "test_celled_absorb_keeps_duplicate_id_rows",
     "test_hybrid_topk_composes_with_pq_index",
     "test_ivf_pq_composition",
+    "test_opq_build_calibrates_on_rotated_queries",
     "test_opq_composes_with_residual_ivf_pq",
     "test_opq_rotation_beats_raw_pq_on_anisotropic_corpus",
     "test_opq_rotation_refresh_on_drifted_stream",
@@ -298,6 +299,7 @@ SLOW_TESTS = {
     "test_sampled_codebook_training_parity",
     # tests/test_properties.py
     "test_asof_join_matches_naive",
+    "test_fraud_report_matches_sql_oracle",
     "test_prefix_filter_jaccard_matches_bruteforce",
     "test_rrf_fuse_matches_python_replay",
     "test_rule_brute_force_window_matches_sql_oracle",

@@ -460,10 +460,10 @@ def test_every_broadcast_hint_roots_at_a_bounded_frame(spark):
 
 
 def test_fraud_report_demo_hints_only_bounded_dims(spark):
-    """The registered fraud_report row and the flagship entry(): the
-    rule-hit join-backs (fact-scaled) carry NO hint; every remaining
-    hint roots at a spark.range dim / blacklist frame. AQE still
-    broadcasts the runtime-small hit sets at test scale."""
+    """The registered fraud_report row and the flagship entry(): every
+    broadcast hint roots at a spark.range dim / blacklist frame, never
+    at the fact-scaled side (the rule flags are window columns on the
+    resolved fact, so no fact-derived frame is joined at all)."""
     from etl_process_for_fraud_transactions_spark.plans.flagship import (
         flagship_report,
     )
@@ -501,27 +501,30 @@ def test_fraud_report_demo_hints_only_bounded_dims(spark):
         assert n_hints > 0  # the dim/blacklist hints are still there
 
 
-def test_fraud_report_aqe_converts_rule_hit_joins(spark):
-    """The unhinted rule-hit join-backs start as sort-merge in the
-    STATIC plan and AQE must convert them from runtime stats — the
-    no-abort degrade the missing hint buys may cost a shuffle at the
-    100x framing, but at test scale no SortMergeJoin survives the
-    final plan. (Read through the
-    DataFrame's OWN QueryExecution after collect(): a noop write
-    builds a separate one and silently reports the initial plan.)"""
+def test_fraud_report_is_one_resolved_frame(spark):
+    """The report resolves the fact once and flags rules 4 and 5 as
+    window columns on that frame, so the AQE final plan holds one
+    fact scan, one broadcast join per dimension (cards, accounts,
+    clients, terminals) plus the blacklist's, no sort-merge join and
+    no join on trans_id (no rule-hit set is joined back). Read through
+    the DataFrame's OWN QueryExecution after collect(): a noop write
+    builds a separate one and reports the initial plan."""
     df = QUERIES["fraud_report"](spark, SF_SMALL)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
     final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FileScan") == 1
     assert "SortMergeJoin" not in final
-    assert "BroadcastHashJoin" in final
+    joins = re.findall(r"(\w+Join) \[([^\]]*)\], \[([^\]]*)\]", final)
+    assert sorted(j for j, _, _ in joins) == ["BroadcastHashJoin"] * 5, joins
+    assert not [j for j in joins if "trans_id" in j[1] + j[2]], joins
 
 
 def test_fraud_report_builds_without_spark_jobs(spark):
     """Building the report is lazy: assemble_report runs no Spark job.
-    No rule probes its keys ahead of the report, and the rule-hit
-    join-backs are left to AQE, with no persist or count()."""
+    No rule probes its keys ahead of the report, and nothing is
+    persisted or counted."""
     from etl_process_for_fraud_transactions_spark.operators.report import (
         assemble_report,
     )

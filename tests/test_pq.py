@@ -1126,6 +1126,26 @@ def test_opq_rotation_beats_raw_pq_on_anisotropic_corpus(spark):
     assert r_opq >= 0.65, r_opq
 
 
+def test_opq_build_calibrates_on_rotated_queries(spark, tmp_path):
+    """build(nprobe_recall_target=) on an OPQ store measures recall with
+    the store's rotation, so the default it commits equals a direct
+    calibrate_nprobe on the same tables with the same parameters (an
+    unrotated measurement scores raw query LUTs against rotated codes
+    and under-reads recall)."""
+    from etl_process_for_fraud_transactions_spark.operators.pq import PqIndex
+    from etl_process_for_fraud_transactions_spark.sources.warehouse import (
+        Warehouse,
+    )
+
+    corpus = _anisotropic_corpus(spark, n=80, seed=3)
+    idx = PqIndex(Warehouse(spark, str(tmp_path / "wh")), name="opqcal", versioned=True)
+    idx.build(corpus, m=4, n_codes=4, seed=7, n_cells=4, opq_iters=2,
+              nprobe_recall_target=0.9)
+    _, layout = idx.store.version_row()
+    direct = idx.calibrate_nprobe(corpus, recall_target=0.9, seed=7)
+    assert layout["default_nprobe"] == direct["default_nprobe"], direct["trace"]
+
+
 def test_pq_index_opq_lifecycle(spark, tmp_path):
     """OPQ as a store layout: the rotation persists with the `opq`
     flag riding meta + pointer (the `residual` convention), serving

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_process_for_fraud_transactions_spark.operators.rules import (
@@ -25,7 +26,10 @@ def _city_df(spark, rows):
             T.StructField("client_id", T.LongType()),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    # one city per row: the rows of city_of_transactions, not terminals
+    return spark.createDataFrame(rows, schema).withColumn(
+        "terminal_multi_city", F.lit(False)
+    )
 
 
 def _bf_df(spark, rows):
@@ -207,8 +211,6 @@ def test_dense_driver_row_matches_sql_oracle_at_sf001(spark, duck):
     Both rule-5 stages equal the reference's SQL chain on DuckDB row
     for row: every candidate window with its hit flag, and the row's
     hits against its registered oracle."""
-    from pyspark.sql import functions as F
-
     from etl_process_for_fraud_transactions_spark.operators import rules as R
     from etl_process_for_fraud_transactions_spark.plans import ORACLE, QUERIES
     from etl_process_for_fraud_transactions_spark.plans.queries import _DENSE_CHAIN

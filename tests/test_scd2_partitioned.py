@@ -299,6 +299,39 @@ def test_partitioned_matches_driver_model(spark, tmp_path):
     assert empty_current and no_closing
 
 
+def test_current_is_history_minus_closed_rows(spark, tmp_path, monkeypatch):
+    """current() holds exactly the history's deleted_flg = false rows
+    (as a multiset) after every batch of a churning run, and also when
+    a batch dies between its `_closed` append and its `_current` swap.
+    The daily report reads current() on the strength of this, without
+    scanning the closed files."""
+    import pytest
+
+    from etl_process_for_fraud_transactions_spark.sources import warehouse
+
+    part = PartitionedScd2(Warehouse(spark, str(tmp_path)), "dim", ["k"], ["a", "b"])
+
+    def check():
+        live = part.history().filter(~F.col("deleted_flg")).collect()
+        assert _counter(part.current().collect()) == _counter(live)
+
+    for j, staged in enumerate(FIXED_HISTORY):
+        part.apply_batch(spark.createDataFrame(staged, MODEL_DDL),
+                         F.lit(dt.date(2024, 1, 1) + dt.timedelta(days=j)))
+        check()
+    n_closed = part.history().count() - part.current().count()
+
+    def crash(*args):
+        raise RuntimeError("crash before the swap")
+
+    monkeypatch.setattr(warehouse, "_swap_in", crash)
+    with pytest.raises(RuntimeError):
+        part.apply_batch(spark.createDataFrame([(1, "z", 0), (3, "z", 0)], MODEL_DDL),
+                         F.lit(dt.date(2024, 2, 1)))
+    assert part.history().count() - part.current().count() > n_closed  # appended
+    check()
+
+
 def test_warm_apply_batch_runs_at_most_two_jobs(spark, tmp_path):
     """A warm batch is one shuffle and one write: the current table's
     schema comes from its footer and the plan has no broadcasts."""
