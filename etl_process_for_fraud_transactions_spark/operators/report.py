@@ -6,10 +6,10 @@ clients plus the terminal city (main.py:544-550): a row that misses the
 chain still reaches the rule 1-3 probes. The reference's inner chain,
 which feeds rules 4 and 5, is exactly the rows with a client (the last
 join key is cl.client_id), so both rules run as window columns on this
-frame (operators.rules) and no hit set is joined back. Three exchanges:
-rule 4 by card, rule 5 by client, and the join-back's max over
-(client_id, trans_id), which reuses rule 5's partitioning. Dims and the
-blacklist broadcast, so building the report runs no Spark job.
+frame (operators.rules) and no hit set is joined back. The fact crosses
+two exchanges, rule 4's by card and rule 5's by client; the join-back
+becomes a max over (client_id, trans_id) that reuses rule 5's. Dims and
+the blacklist broadcast, so building the report runs no Spark job.
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.core import null_safe_concat_ws
 from .rules import (
+    BY_CLIENT,
     EV_BLOCKED_PASSPORT,
     EV_BRUTE_FORCE,
     EV_DIFF_CITY,
@@ -53,22 +54,24 @@ def assemble_report(
     b = F.broadcast(blacklist.select(F.col("passport_num").alias("__listed")).distinct())
     trans = trans.withColumn("__report", F.lit(True) if report_trans is None else report_trans)
     rows = attach_terminal_city(resolve_transactions(trans, cards, accounts, clients), terminals)
-    # only what the rules and the output read crosses the exchanges
+    # only what the rules read, and the output of reported rows, is exchanged
+    report = F.col("__report")
     rows = rows.join(b, F.col("passport_num") == F.col("__listed"), "left").select(
         "trans_id", "trans_date", "card_num", "client_id", "amt", "oper_result",
         "terminal_city", "terminal_multi_city", "__report",
-        F.col("passport_num").alias("passport"),
-        null_safe_concat_ws(" ", "first_name", "patrinymic", "last_name").alias("fio"),
-        "phone",
+        F.when(report, F.col("passport_num")).alias("passport"),
+        F.when(report, null_safe_concat_ws(" ", "first_name", "patrinymic", "last_name"))
+        .alias("fio"),
+        F.when(report, F.col("phone")).alias("phone"),
         F.col("__listed").isNotNull().alias("__blocked"),
         (F.col("passport_valid_to") < F.col("trans_date")).alias("__expired"),
         (F.col("account_valid_to") < F.col("trans_date")).alias("__invalid"),
     )
     flagged = with_brute_force_flags(with_diff_city_flag(rows))
 
-    # the reference joins each hit set back on (client_id, trans_id):
-    # every row sharing a hit's key is flagged (a null key matches none)
-    same_key = Window.partitionBy("client_id", "trans_id")
+    # the reference's join-back flags every row sharing a hit's (client_id,
+    # trans_id), a null key matching none; BY_CLIENT reuses rule 5's exchange
+    same_key = Window.partitionBy(*BY_CLIENT, "trans_id")
     flagged = flagged.select(
         "*",
         *[(F.col("trans_id").isNotNull() & F.max(f"{r}_hit").over(same_key)).alias(f"__{r}")
@@ -85,7 +88,7 @@ def assemble_report(
     )  # no otherwise -> NULL, matching the CASE with no ELSE (main.py:542)
 
     fired = blocked | expired | invalid | diff_city | brute
-    return flagged.filter(F.col("__report") & fired).select(
+    return flagged.filter(report & fired).select(
         F.col("trans_date").alias("event_dt"), "passport", "fio", "phone",
         event_type.alias("event_type"), report_dt.alias("report_dt"),
     )

@@ -110,6 +110,13 @@ def attach_terminal_city(resolved: DataFrame, terminals: DataFrame) -> DataFrame
     return resolved.join(F.broadcast(term), "terminal", "left")
 
 
+def _apart(eligible: Column) -> Column:
+    """A window key, null on eligible rows and non-null on the others:
+    each ineligible row sits apart, by its trans_id, not in one
+    null-key task with all the others and never with eligible rows."""
+    return F.when(~eligible, F.struct("trans_id"))
+
+
 def _running(w: Window) -> Window:
     """`w`'s rows from the partition start through the current row's
     peers: the growing frame Spark folds in one pass."""
@@ -137,15 +144,16 @@ def with_diff_city_flag(rows: DataFrame) -> DataFrame:
     among its (ts, city) peers. Other peers share a run, and the running
     frames take whole peer groups, so their order does not matter. Rows
     with a null client, card, timestamp or city are neither hits nor
-    witnesses (null-unsafe predicates, inner chain); they sit in their
-    own window partition. Property-pinned against the reference's SQL
-    on DuckDB (tests/test_properties.py)."""
+    witnesses (null-unsafe predicates, inner chain); each sits in a
+    window partition of its own (`_apart`). Property-pinned against the
+    reference's SQL on DuckDB (tests/test_properties.py)."""
     us, city, multi = F.col("__us"), F.col("terminal_city"), F.col("terminal_multi_city")
     ok = F.col("client_id").isNotNull() & F.col("card_num").isNotNull() & city.isNotNull()
     out = rows.withColumn("__us", epoch_us("trans_date")).withColumn("__ok", ok & us.isNotNull())
+    out = out.withColumn("__apart", _apart(F.col("__ok")))
     for name, order in (("__before", (us.asc(), city.asc(), multi.desc())),
                         ("__after", (us.desc(), city.desc(), multi.desc()))):
-        w = Window.partitionBy("card_num", "__ok").orderBy(*order)
+        w = Window.partitionBy("card_num", "__apart").orderBy(*order)
         other = (F.lag(city).over(w) != city) | F.lag(multi).over(w)
         out = out.withColumn("__edge", F.when(other, F.lag(us).over(w))).withColumn(
             name, F.last("__edge", ignorenulls=True).over(_running(w))
@@ -178,11 +186,17 @@ def _ranks_before(a: int, b: int) -> Column:
     )
 
 
+#: rule 5's window key; a later window keyed on these columns (plus any)
+#: reuses its exchange, as a key expression would get its own
+BY_CLIENT = ("client_id", "__no_client")
+
+
 def with_brute_force_flags(rows: DataFrame) -> DataFrame:
     """Rule 5 as two columns from one sort per client (main.py:444-530):
     `brute_force_candidate` marks the rows that anchor a candidate
     window, `brute_force_hit` the anchors the reference's full chain
-    confirms. Every other column of `rows` is kept.
+    confirms. Every other column of `rows` is kept, and so is the
+    window key's `__no_client` (BY_CLIENT).
 
     An anchor at ts t owns the frame [t, t+20min] of its client's rows
     in (ts, trans_id) order. The frame starts at the first row with
@@ -199,14 +213,16 @@ def with_brute_force_flags(rows: DataFrame) -> DataFrame:
     later row, and a running frame over ts covers every row at or
     after t: its minima give the next SUCCESS and REJECT, and its
     last non-null head is the frame's first row. Rows with a null
-    client or timestamp take no part (null-unsafe predicates): a null
-    timestamp sorts last (DESC NULLS LAST), outside the other rows'
-    lags and frames. (client_id, trans_id) is taken as unique, as the
+    client or timestamp take no part (null-unsafe predicates): a row
+    without a client sits apart (`_apart`), and a null timestamp
+    sorts last (DESC NULLS LAST), outside the other rows' lags and
+    frames. (client_id, trans_id) is taken as unique, as the
     reference's GROUP BY on it assumes. Property-pinned against the
     reference's SQL on DuckDB (tests/test_properties.py)."""
     us, res = F.col("__us"), F.col("oper_result")
     base = rows.withColumn("__us", epoch_us("trans_date"))
-    w = Window.partitionBy("client_id").orderBy(us.desc(), F.desc("trans_id"))
+    base = base.withColumn("__no_client", _apart(F.col("client_id").isNotNull()))
+    w = Window.partitionBy(*BY_CLIENT).orderBy(us.desc(), F.desc("trans_id"))
     ahead = base.select(
         "*",
         *[F.lag(c, k).over(w).alias(f"__{c}{k}")
@@ -225,7 +241,7 @@ def with_brute_force_flags(rows: DataFrame) -> DataFrame:
         F.struct(F.col("__us3").alias("us3"),
                  F.coalesce(pattern, F.lit(False)).alias("hit")),
     )
-    at_or_after = _running(Window.partitionBy("client_id").orderBy(us.desc()))
+    at_or_after = _running(Window.partitionBy(*BY_CLIENT).orderBy(us.desc()))
 
     def next_ts(result: str) -> Column:
         return F.min(F.when(res == result, us)).over(at_or_after)
@@ -243,7 +259,7 @@ def with_brute_force_flags(rows: DataFrame) -> DataFrame:
         F.lit(False),
     )
     return framed.select(
-        *rows.columns,
+        *rows.columns, "__no_client",
         candidate.alias("brute_force_candidate"),
         (candidate & F.col("__head.hit")).alias("brute_force_hit"),
     )

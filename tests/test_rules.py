@@ -11,6 +11,8 @@ from pyspark.sql import types as T
 from etl_process_for_fraud_transactions_spark.operators.rules import (
     rule_brute_force_20min_window,
     rule_diff_city_1h_window,
+    with_brute_force_flags,
+    with_diff_city_flag,
 )
 
 T0 = dt.datetime(2024, 1, 1, 12, 0, 0)
@@ -201,6 +203,29 @@ class TestDenseKey:
         )
         # each client fires on its run's first attempt
         assert got == [(1, 100), (2, 9000)]
+
+
+def test_rows_without_a_client_do_not_share_one_task(spark):
+    """Rows that miss the card -> account -> client chain take part in
+    neither window rule. Each rule keys such a row by its trans_id, so
+    they spread over the shuffle partitions instead of all sorting in
+    the one task of a null key."""
+    rows = [(None, 100 + i, _mins(i), "CITY_A" if i % 2 else "CITY_B", None) for i in range(64)]
+    df = _city_df(spark, rows).select(
+        "*", F.lit(1.0).alias("amt"),
+        F.when(F.col("trans_id") % 4 == 3, "SUCCESS").otherwise("REJECT").alias("oper_result"),
+    )
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        for flagged, hit in ((with_diff_city_flag(df), "diff_city_hit"),
+                             (with_brute_force_flags(df), "brute_force_candidate")):
+            got = flagged.select(F.spark_partition_id().alias("part"), hit).collect()
+            assert len(got) == 64 and not any(r[hit] for r in got)
+            assert len({r.part for r in got}) > 1
+    finally:
+        spark.conf.set(conf, prev)
 
 
 def test_dense_driver_row_matches_sql_oracle_at_sf001(spark, duck):

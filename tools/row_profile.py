@@ -11,12 +11,14 @@ own session).
       plan, and exec (noop sink). The noop write builds its own
       QueryExecution, so exec repeats analysis and planning: the
       phases are a breakdown, not additive accounting.
-  python tools/row_profile.py plans SF_DIR [row ...] [--out PATH] [--formatted DIR]
+  python tools/row_profile.py plans SF_DIR [row ...] [--formatted DIR]
       Facts from each row's AQE-final plan (joins by strategy,
-      exchanges, pushed filters, read schemas) as markdown in PATH
-      (default PLANS.md at the repo root), for the headline rows when
-      none is named. --formatted DIR also writes each row's full
-      formatted plan to DIR/<row>.txt, for before/after comparisons.
+      exchanges, pushed filters, read schemas) as markdown in PLANS.md
+      at the repo root, for the headline rows when none is named.
+      --formatted DIR also writes each row's full formatted plan to
+      DIR/<row>.txt, for before/after comparisons. The plans are the
+      ones the driver-like session picks (default 200 shuffle
+      partitions, AQE on), not those under the engine's get_spark.
 """
 
 from __future__ import annotations
@@ -101,7 +103,9 @@ def plans(spark, queries, args) -> None:
     out = io.StringIO()
     out.write(
         "# PLANS — physical-plan evidence for the headline queries\n\n"
-        f"Generated by `python tools/row_profile.py plans {args.sf_dir}`.\n"
+        "Generated by `python tools/row_profile.py plans <sf_dir>` at\n"
+        f"{os.path.basename(os.path.normpath(args.sf_dir))} under a driver-like plain session\n"
+        "(local[8], default confs).\n"
         "Summary counts come from the executed (AQE-final) plan; the\n"
         "excerpts show scan pushdown and join strategies.\n"
     )
@@ -136,9 +140,11 @@ def plans(spark, queries, args) -> None:
             os.makedirs(args.formatted, exist_ok=True)
             with open(os.path.join(args.formatted, f"{name}.txt"), "w") as f:
                 f.write(_printable(qe.explainString(explain_mode) + "\n\n== AQE final ==\n" + final))
-    with open(args.out, "w") as f:
-        f.write(_printable(out.getvalue()))
-    print(f"wrote {args.out}")
+    path = os.path.join(ROOT, "PLANS.md")
+    with open(path, "w") as f:
+        # scan locations name the data directory, not this checkout's
+        f.write(_printable(out.getvalue().replace(os.path.abspath(args.sf_dir), "<sf_dir>")))
+    print(f"wrote {path}")
 
 
 def main() -> None:
@@ -150,7 +156,6 @@ def main() -> None:
         p.add_argument("sf_dir")
         p.add_argument("rows", nargs="+" if cmd == "phases" else "*")
         if cmd == "plans":
-            p.add_argument("--out", default=os.path.join(ROOT, "PLANS.md"))
             p.add_argument("--formatted", metavar="DIR")
         else:
             p.add_argument("--reps", type=int, default=1 if cmd == "time" else 3)
