@@ -18,15 +18,25 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.core import ddmmyyyy_to_date
 from ..functions.observability import observed_counts
 from ..operators.report import assemble_report
 from ..operators.scd2_partitioned import PartitionedScd2
-from ..schemas import DIMENSIONS
+from ..schemas import DIMENSIONS, STG_ACCOUNTS, STG_CARDS, STG_CLIENTS
 from ..sources.files import archive_batch_files, discover_batch_dates
-from ..sources.ingest import read_excel_sheet, read_semicolon_csv
+from ..sources.ingest import read_excel_sheet, read_semicolon_csv, read_string_csv
 from ..sources.warehouse import Warehouse
+
+#: the source DB's tables: their staging contract (main.ddl:2-48) and
+#: the source names of the contract columns that the source calls
+#: otherwise (reference main.py:75-92)
+_SOURCES = {
+    "clients": (STG_CLIENTS, {"patrinymic": "patronymic"}),
+    "accounts": (STG_ACCOUNTS, {"account_num": "account"}),
+    "cards": (STG_CARDS, {"account_num": "account"}),
+}
 
 
 class DailyFraudJob:
@@ -94,10 +104,7 @@ class DailyFraudJob:
         xlsx = os.path.join(self.input_dir, f"{stem}_{date}.xlsx")
         if os.path.exists(xlsx):
             return read_excel_sheet(self.spark, xlsx, sheet, date_cols=date_cols)
-        csv = os.path.join(self.input_dir, f"{stem}_{date}.csv")
-        return (
-            self.spark.read.option("header", "true").option("inferSchema", "false").csv(csv)
-        )
+        return read_string_csv(self.spark, os.path.join(self.input_dir, f"{stem}_{date}.csv"))
 
     def _stage_terminals(self, date: str) -> DataFrame:
         return self._stage_sheet(date, "terminals", "terminals")
@@ -113,25 +120,16 @@ class DailyFraudJob:
         )
 
     def _stage_source_table(self, name: str) -> DataFrame:
-        df = self.spark.read.parquet(os.path.join(self.source_dir, f"{name}.parquet"))
-        if name == "clients":
-            return df.select(
-                "client_id",
-                "last_name",
-                "first_name",
-                F.col("patronymic").alias("patrinymic"),
-                "date_of_birth",
-                "passport_num",
-                "passport_valid_to",
-                "phone",
-            )
-        if name == "accounts":
-            return df.select(
-                F.col("account").alias("account_num"), "valid_to", "client"
-            )
-        if name == "cards":
-            return df.select("card_num", F.col("account").alias("account_num"))
-        raise ValueError(name)
+        """A source-DB table read with its staging contract as the
+        schema (no footer inference job), under the source's column
+        names, then renamed into the contract."""
+        contract, renamed = _SOURCES[name]
+        source = {f.name: renamed.get(f.name, f.name) for f in contract}
+        schema = T.StructType([T.StructField(source[f.name], f.dataType) for f in contract])
+        df = self.spark.read.schema(schema).parquet(
+            os.path.join(self.source_dir, f"{name}.parquet")
+        )
+        return df.select(*[F.col(src).alias(stg) for stg, src in source.items()])
 
     def _dim(self, name: str) -> PartitionedScd2:
         keys, attrs = DIMENSIONS[name]

@@ -7,9 +7,11 @@ chain still reaches the rule 1-3 probes. The reference's inner chain,
 which feeds rules 4 and 5, is exactly the rows with a client (the last
 join key is cl.client_id), so both rules run as window columns on this
 frame (operators.rules) and no hit set is joined back. The fact crosses
-two exchanges, rule 4's by card and rule 5's by client; the join-back
-becomes a max over (client_id, trans_id) that reuses rule 5's. Dims and
-the blacklist broadcast, so building the report runs no Spark job.
+one exchange, rule 5's by client: rule 4's (client_id, card_num) windows
+and the join-back, a max over (client_id, trans_id), nest in its key
+and only sort. Dims and the blacklist broadcast, each side reduced in
+one partition inside its broadcast job, so building the report runs no
+Spark job and running it shuffles nothing but the fact.
 """
 
 from __future__ import annotations
@@ -51,7 +53,9 @@ def assemble_report(
     reference's full-fact daily rescan is O(total history) per day and
     not viable at scale.
     """
-    b = F.broadcast(blacklist.select(F.col("passport_num").alias("__listed")).distinct())
+    listed = blacklist.select(F.col("passport_num").alias("__listed"))
+    # distinct in one partition: no exchange ahead of the broadcast
+    b = F.broadcast(listed.coalesce(1).distinct())
     trans = trans.withColumn("__report", F.lit(True) if report_trans is None else report_trans)
     rows = attach_terminal_city(resolve_transactions(trans, cards, accounts, clients), terminals)
     # only what the rules read, and the output of reported rows, is exchanged
@@ -67,7 +71,9 @@ def assemble_report(
         (F.col("passport_valid_to") < F.col("trans_date")).alias("__expired"),
         (F.col("account_valid_to") < F.col("trans_date")).alias("__invalid"),
     )
-    flagged = with_brute_force_flags(with_diff_city_flag(rows))
+    # rule 5 first: its client exchange also clusters rule 4's windows,
+    # exactly, as a card's rows all resolve to the same clients
+    flagged = with_diff_city_flag(with_brute_force_flags(rows), within=BY_CLIENT)
 
     # the reference's join-back flags every row sharing a hit's (client_id,
     # trans_id), a null key matching none; BY_CLIENT reuses rule 5's exchange

@@ -37,6 +37,8 @@ sorting, with no pairs and no sliding frame. Dims broadcast.
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -103,7 +105,10 @@ def attach_terminal_city(resolved: DataFrame, terminals: DataFrame) -> DataFrame
     current cities, whose rows the reference's inner terminal join
     copies once per city (main.py:415-427)."""
     city = F.col("terminal_city")
-    term = _current(terminals).groupBy(F.col("terminal_id").alias("terminal")).agg(
+    # one partition: the side goes to the driver whole, so the group-by
+    # runs inside the broadcast's job instead of behind an exchange
+    one_part = _current(terminals).coalesce(1)
+    term = one_part.groupBy(F.col("terminal_id").alias("terminal")).agg(
         F.min(city).alias("terminal_city"),
         (F.min(city) != F.max(city)).alias("terminal_multi_city"),
     )
@@ -123,7 +128,7 @@ def _running(w: Window) -> Window:
     return w.rangeBetween(Window.unboundedPreceding, Window.currentRow)
 
 
-def with_diff_city_flag(rows: DataFrame) -> DataFrame:
+def with_diff_city_flag(rows: DataFrame, within: Sequence[str] = ()) -> DataFrame:
     """Rule 4 as a column: `diff_city_hit` is true iff another row of
     the same card within +/-1h sits in a different city
     (main.py:428-436). Every other column of `rows` is kept.
@@ -135,8 +140,18 @@ def with_diff_city_flag(rows: DataFrame) -> DataFrame:
     first row of the next run, found the same way in the reverse
     order. A row is a hit iff the earlier ts is >= t-1h or the later
     ts is <= t+1h. Both frames only grow, so Spark folds them in one
-    pass each: one card_num shuffle and two sorts per card, with no
-    pairs and no sliding frame.
+    pass each: one card_num shuffle (none under `within`, below) and
+    two sorts per card, with no pairs and no sliding frame.
+
+    `within` nests the card key in columns the rows are already
+    clustered by: the report passes BY_CLIENT after
+    with_brute_force_flags, so the windows only sort under rule 5's
+    client exchange. That is exact only when every row of a card
+    carries the same set of `within` values, so that each value's
+    share of a card holds a copy of all of the card's rows. A frame
+    resolved through the chain (resolve_transactions) has this: its
+    clients are a function of card_num. Other frames keep the
+    default.
 
     A row at a terminal with several cities (`terminal_multi_city`)
     stands for one copy per city: it is a hit itself and a witness for
@@ -153,7 +168,7 @@ def with_diff_city_flag(rows: DataFrame) -> DataFrame:
     out = out.withColumn("__apart", _apart(F.col("__ok")))
     for name, order in (("__before", (us.asc(), city.asc(), multi.desc())),
                         ("__after", (us.desc(), city.desc(), multi.desc()))):
-        w = Window.partitionBy("card_num", "__apart").orderBy(*order)
+        w = Window.partitionBy(*within, "card_num", "__apart").orderBy(*order)
         other = (F.lag(city).over(w) != city) | F.lag(multi).over(w)
         out = out.withColumn("__edge", F.when(other, F.lag(us).over(w))).withColumn(
             name, F.last("__edge", ignorenulls=True).over(_running(w))
@@ -220,8 +235,8 @@ def with_brute_force_flags(rows: DataFrame) -> DataFrame:
     reference's GROUP BY on it assumes. Property-pinned against the
     reference's SQL on DuckDB (tests/test_properties.py)."""
     us, res = F.col("__us"), F.col("oper_result")
-    base = rows.withColumn("__us", epoch_us("trans_date"))
-    base = base.withColumn("__no_client", _apart(F.col("client_id").isNotNull()))
+    base = rows.withColumn("__no_client", _apart(F.col("client_id").isNotNull()))
+    base = base.withColumn("__us", epoch_us("trans_date"))
     w = Window.partitionBy(*BY_CLIENT).orderBy(us.desc(), F.desc("trans_id"))
     ahead = base.select(
         "*",

@@ -598,7 +598,7 @@ def scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     close-out + insert semantics.
 
     Round 14 (VERDICT r13 item 7 — right-to-erasure under the hash):
-    the replayed dimension is persisted to a deterministic scratch
+    the replayed dimension is persisted to a per-call scratch
     warehouse and erased through the REAL `Warehouse.erase_keys`
     (sources/warehouse.py); the served frame is the read-back of the
     rewritten table, so a skipped, partial, or resurrecting erasure
@@ -651,19 +651,12 @@ def scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # right-to-erasure through the real operator (round 14; round 15:
     # the PARTITIONED branch): persist the dim hive-partitioned by
     # segment, erase through the partition-pruned rewrite, serve the
-    # read-back — overwrite is atomic and re-runs converge (the
-    # erased keys are simply absent again)
-    import os
-    import re
-    import tempfile
-
+    # read-back. The returned frame reads the store lazily, so each
+    # call gets its own scratch warehouse: a later call (or another
+    # process) never deletes the files under an earlier frame
     from ..sources.warehouse import Warehouse, atomic_overwrite
 
-    scratch = os.path.join(
-        tempfile.gettempdir(),
-        "scd2_wh_" + re.sub(r"\W+", "_", sf_dir).strip("_"),
-    )
-    wh = Warehouse(spark, scratch)
+    wh = Warehouse.scratch(spark, "scd2_wh_")
     atomic_overwrite(
         dim, wh.path("dim_clients"), partition_by=["segment"]
     )

@@ -4,9 +4,11 @@ Reference behaviors covered (SURVEY.md §2.1 S3-S5):
 - transactions_{date}.txt : CSV `sep=';'`, `decimal=','` (main.py:103)
 - terminals_{date}.xlsx / passport_blacklist_{date}.xlsx (main.py:98,111)
 
-The CSV path is fully distributed (`spark.read.csv`); Spark's CSV
-reader has no comma-decimal option, so amounts are read as string and
-parsed with functions.comma_decimal — still JVM-side codegen.
+The CSV path is fully distributed (`spark.read.csv`) under an
+all-string schema declared from the header line, read on the driver
+(`csv_header`), so no Spark job probes the file. Spark's CSV reader has
+no comma-decimal option, so amounts are read as string and parsed with
+functions.comma_decimal — still JVM-side codegen.
 
 The xlsx path is driver-side (xlsx is not a distributed format — the
 reference reads it with pandas too, and these are small daily dimension
@@ -21,9 +23,48 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.core import comma_decimal
+
+
+def csv_header(path: str, sep: str) -> list[str]:
+    """The column names Spark's CSV reader takes from the header of the
+    local file `path`, read on the driver: the first non-blank line
+    (a UTF-8 BOM dropped), split on `sep` with `"` quotes and `\\`
+    escapes inside them; an empty name becomes `_c<i>` and names that
+    repeat (case-insensitively) get their index appended, as Spark
+    makes a header safe. Declaring them as the schema saves the Spark
+    job that the reader's own header probe would start."""
+    import csv
+
+    with open(path, encoding="utf-8-sig", newline="") as f:
+        line = next((ln for ln in f if ln.strip()), "")
+    names = next(csv.reader([line], delimiter=sep, doublequote=False, escapechar="\\"), [])
+    lower = [n.lower() for n in names if n]
+    dup = {n for n in lower if lower.count(n) > 1}
+    return [f"_c{i}" if not n else f"{n}{i}" if n.lower() in dup else n
+            for i, n in enumerate(names)]
+
+
+def read_string_csv(
+    spark: SparkSession, path: str, sep: str = ",", quarantine: bool = False
+) -> DataFrame:
+    """A headed CSV file as all-string columns, its schema declared
+    from `csv_header`, so building the frame starts no Spark job.
+
+    `quarantine=True` adds a `_corrupt_record` column capturing rows
+    that fail to parse instead of silently null-filling them (Spark's
+    default PERMISSIVE mode); the column only materializes when it is
+    part of an explicit schema."""
+    fields = [T.StructField(c, T.StringType()) for c in csv_header(path, sep)]
+    reader = spark.read.option("header", "true").option("sep", sep)
+    if quarantine:
+        fields.append(T.StructField("_corrupt_record", T.StringType()))
+        reader = reader.option("mode", "PERMISSIVE").option(
+            "columnNameOfCorruptRecord", "_corrupt_record"
+        )
+    return reader.schema(T.StructType(fields)).csv(path)
 
 
 def read_semicolon_csv(
@@ -39,45 +80,18 @@ def read_semicolon_csv(
     `renames` applies the staging-contract projection
     (e.g. transaction_id -> trans_id).
 
-    `quarantine=True` adds a `_corrupt_record` column capturing rows
-    that fail to parse instead of silently null-filling them (Spark's
-    default PERMISSIVE mode) — audit-friendly at scale, where a bad
-    upstream export should be quantified, not swallowed. Spark refuses
-    scans whose pruned column set is ONLY the corrupt column (e.g. a
-    bare corrupt-row count), so the quarantined frame is returned
-    cached, per Spark's documented workaround; staging batches are
-    bounded, and the consumer may unpersist after auditing."""
-    reader = (
-        spark.read.option("header", "true")
-        .option("sep", ";")
-        .option("inferSchema", "false")
-    )
-    if quarantine:
-        # the corrupt-record column only materializes when it is part
-        # of an EXPLICIT schema — the option alone is silently ignored
-        # under a header-derived schema. Probe the header (cheap: reads
-        # one file's first line) and declare string columns + the
-        # quarantine column.
-        from pyspark.sql import types as T
-
-        header_cols = spark.read.option("header", "true").option("sep", ";").csv(path).columns
-        schema = T.StructType(
-            [T.StructField(c, T.StringType()) for c in header_cols]
-            + [T.StructField("_corrupt_record", T.StringType())]
-        )
-        reader = (
-            reader.schema(schema)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt_record")
-        )
-    df = reader.csv(path)
+    `quarantine=True` keeps a `_corrupt_record` column (read_string_csv)
+    — audit-friendly at scale, where a bad upstream export should be
+    quantified, not swallowed. Spark refuses scans whose pruned column
+    set is ONLY the corrupt column (e.g. a bare corrupt-row count), so
+    the quarantined frame is returned cached, per Spark's documented
+    workaround; staging batches are bounded, and the consumer may
+    unpersist after auditing."""
+    df = read_string_csv(spark, path, ";", quarantine)
     if quarantine:
         df = df.cache()
     if select:
-        keep = list(select) + (
-            ["_corrupt_record"] if quarantine and "_corrupt_record" in df.columns else []
-        )
-        df = df.select(*keep)
+        df = df.select(*select, *(["_corrupt_record"] if quarantine else []))
     for c in decimal_cols:
         df = df.withColumn(c, comma_decimal(c))
     if renames:

@@ -15,9 +15,11 @@ engine dependency-free.
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -436,6 +438,15 @@ class Warehouse:
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
+
+    @classmethod
+    def scratch(cls, spark: SparkSession, prefix: str) -> "Warehouse":
+        """A warehouse in a fresh temporary directory of its own, removed
+        when the process exits: for a frame that reads its tables lazily
+        after the call that wrote them has returned."""
+        root = tempfile.mkdtemp(prefix=prefix)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        return cls(spark, root)
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)

@@ -174,6 +174,9 @@ CORE_TESTS = {
     # the daily job's SCD2 apply: semantics against a model, job count
     "test_partitioned_matches_driver_model",
     "test_warm_apply_batch_runs_at_most_two_jobs",
+    # the daily batch's job count, and staging that starts no job
+    "test_warm_batch_job_count",
+    "test_staging_reads_run_no_spark_job",
     # cap_per_domain releases its private-API checkpoint handle
     "test_cap_per_domain_return_persisted_tuple",
 }

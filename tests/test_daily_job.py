@@ -227,3 +227,48 @@ def test_warehouse_read_schema_matches_inference(spark, fixture_dirs):
         assert got == spark.read.parquet(os.path.join(wh_dir, t)).schema, t
     assert job.wh.read("fact_transactions").schema["batch_dt"].dataType == T.DateType()
     assert job.wh.read("rep_fraud").schema["report_dt"].dataType == T.DateType()
+
+
+def test_staging_reads_run_no_spark_job(spark, fixture_dirs):
+    """Staging is lazy and declares its schemas: the source-DB reads
+    take the staging contract, the transactions CSV and the CSV
+    fallback of the terminals and blacklist sheets take their header
+    from a driver-side read of the first line, so none of them starts
+    a Spark job (no parquet footer or CSV header probe)."""
+    from etl_process_for_fraud_transactions_spark.sources.ingest import read_semicolon_csv
+
+    from .conftest import spark_jobs
+
+    input_dir, source_dir, wh_dir, write_batch = fixture_dirs
+    job = DailyFraudJob(spark, input_dir, source_dir, wh_dir)
+    path = os.path.join(input_dir, "transactions_01012024.txt")
+    with spark_jobs(spark) as jobs:
+        staged = [job._stage_source_table(n) for n in ("clients", "accounts", "cards")]
+        staged += [job._stage_transactions("01012024"), job._stage_terminals("01012024"),
+                   job._stage_blacklist("01012024")]
+        quarantined = read_semicolon_csv(spark, path, quarantine=True)
+    assert jobs == []
+    assert [df.count() for df in staged] == [3, 3, 3, 3, 2, 1]
+    assert quarantined.columns[-1] == "_corrupt_record"
+    quarantined.unpersist()
+
+
+def test_warm_batch_job_count(spark, fixture_dirs):
+    """A warm batch on this fixture runs at most 18 Spark jobs: two per
+    SCD2 dimension, three for the facts, and the report's five
+    broadcasts, its one client_id exchange and its write. No job
+    probes a schema."""
+    from .conftest import spark_jobs
+
+    input_dir, source_dir, wh_dir, write_batch = fixture_dirs
+    job = DailyFraudJob(spark, input_dir, source_dir, wh_dir)
+    job.run()
+    write_batch(
+        "02012024",
+        ["tx4;2024-01-02 09:00:00;card3;PAY;10,00;SUCCESS;t1",
+         "tx5;2024-01-02 09:20:00;card1;PAY;20,00;SUCCESS;t2"],
+        ["P200,2024-01-01"],
+    )
+    with spark_jobs(spark) as jobs:
+        job.run_batch("02012024")
+    assert len(jobs) <= 18, jobs

@@ -199,25 +199,35 @@ def test_scd2_replay_row_erases_through_partitioned_branch(spark, duck):
     erased) must be REMOVED outright — dynamic overwrite alone would
     leave its old files serving. Pin the layout and both outcomes on
     the scratch store the row just wrote."""
-    import os
-    import re
-    import tempfile
+    from urllib.parse import urlparse
 
     from etl_process_for_fraud_transactions_spark.plans import QUERIES
 
     from .conftest import SF_SMALL
 
-    rows = QUERIES["scd2_replay"](spark, SF_SMALL).collect()
+    df = QUERIES["scd2_replay"](spark, SF_SMALL)
+    rows = df.collect()
     assert rows
     assert all(r.ckey != 7 for r in rows), "key 7's history must be gone"
     assert all(r.segment != "FRESH" for r in rows)
 
-    store = os.path.join(
-        tempfile.gettempdir(),
-        "scd2_wh_" + re.sub(r"\W+", "_", SF_SMALL).strip("_"),
-        "dim_clients",
-    )
+    # the store the frame reads: <scratch>/dim_clients/segment=*/part-*
+    store = os.path.dirname(os.path.dirname(urlparse(df.inputFiles()[0]).path))
+    assert os.path.basename(store) == "dim_clients"
     parts = {d for d in os.listdir(store) if d.startswith("segment=")}
     assert parts, "dim must be hive-partitioned by segment"
     assert "segment=FRESH" not in parts, "all-erased partition removed"
     assert "segment=SEGMENT_X" in parts, "rewritten partition survives"
+
+
+def test_scd2_replay_frames_keep_their_own_store(spark):
+    """Each scd2_replay call persists to its own scratch warehouse: a
+    second call on the same sf_dir leaves the files an earlier, still
+    uncollected frame reads in place."""
+    from etl_process_for_fraud_transactions_spark.plans import QUERIES
+
+    from .conftest import SF_SMALL
+
+    first = QUERIES["scd2_replay"](spark, SF_SMALL)
+    second = QUERIES["scd2_replay"](spark, SF_SMALL)
+    assert sorted(first.collect()) == sorted(second.collect())

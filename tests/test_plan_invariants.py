@@ -506,12 +506,13 @@ def test_fraud_report_is_one_resolved_frame(spark):
     window columns on that frame, so the AQE final plan holds one
     fact scan, one broadcast join per dimension (cards, accounts,
     clients, terminals) plus the blacklist's, no sort-merge join and
-    no join on trans_id (no rule-hit set is joined back). Three hash
-    exchanges: the blacklist's distinct, rule 4 by card and rule 5 by
-    client; the join-back's max over (client_id, trans_id) reuses rule
-    5's. Read through the DataFrame's OWN QueryExecution after
-    collect(): a noop write builds a separate one and reports the
-    initial plan."""
+    no join on trans_id (no rule-hit set is joined back). One hash
+    exchange, rule 5's on (client_id, __no_client): rule 4's windows
+    and the join-back's max over (client_id, trans_id) nest in its key
+    and reuse it, and the broadcast sides reduce in one partition with
+    no exchange of their own. Read through the DataFrame's OWN
+    QueryExecution after collect(): a noop write builds a separate one
+    and reports the initial plan."""
     df = QUERIES["fraud_report"](spark, SF_SMALL)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -523,7 +524,9 @@ def test_fraud_report_is_one_resolved_frame(spark):
     assert sorted(j for j, _, _ in joins) == ["BroadcastHashJoin"] * 5, joins
     assert not [j for j in joins if "trans_id" in j[1] + j[2]], joins
     exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", final)
-    assert len(exchanges) == 3, exchanges
+    assert len(exchanges) == 1, exchanges
+    keys = [re.sub(r"#\d+L?", "", k).strip() for k in exchanges[0].split(",")[:-1]]
+    assert keys == ["client_id", "__no_client"], exchanges
 
 
 def test_fraud_report_builds_without_spark_jobs(spark):

@@ -631,6 +631,25 @@ REPORT_SHARED_TRANS_ID = dict(
           (8, 0, 600, 1, "SUCCESS", 1)],
 )
 
+#: card 0 has two current rows, whose accounts belong to clients 0 and
+#: 1, so each of its rows resolves to both clients; its two rows 30 min
+#: apart in cities A and B are a rule-4 hit for each client. Rule 4's
+#: window keys a card's rows by client within rule 5's client exchange,
+#: which is exact only because every row of a card resolves to the same
+#: clients. Client 0's card 1 row in city A, 37 min after card 0's city-B
+#: row, is no hit: the key keeps the card
+REPORT_CARD_TWO_CLIENTS = dict(
+    cards=[(0, 0, False), (0, 1, False), (1, 0, False)],
+    accounts=[(0, D0 + dt.timedelta(days=1), 0, False),
+              (1, D0 + dt.timedelta(days=1), 1, False)],
+    clients=[(0, "PA", D0 + dt.timedelta(days=1), False),
+             (1, "PB", D0 + dt.timedelta(days=1), False)],
+    terminals=[(0, "A", False), (1, "B", False)],
+    blacklist=[],
+    fact=[(0, 0, 0, 1, "SUCCESS", 0), (1, 0, 1_800, 1, "SUCCESS", 1),
+          (2, 1, 4_000, 1, "SUCCESS", 0)],
+)
+
 #: the rule-5 frame merge (CHANGES.md FOUND): the SUCCESS at 5000 s
 #: reuses the first REJECT's trans_id, so the reference's GROUP BY
 #: (client_id, trans_id_start) merges the two rows' frames into one
@@ -722,6 +741,7 @@ def _check_report_matches_sql_oracle(spark, **world):
 @example(**REPORT_ACCOUNT_NO_CLIENT)
 @example(**REPORT_TERMINAL_DUPLICATES)
 @example(**REPORT_SHARED_TRANS_ID)
+@example(**REPORT_CARD_TWO_CLIENTS)
 @settings(
     max_examples=30,
     deadline=None,
@@ -735,7 +755,8 @@ def test_fraud_report_matches_sql_oracle(spark, cards, accounts, clients, termin
     the chain at any hop, carry null timestamps, or sit at terminals
     with several current rows. The examples pin each chain miss, an
     account without a client, duplicated terminals with one and two
-    cities, and a (client_id, trans_id) shared by two cards."""
+    cities, a (client_id, trans_id) shared by two cards, and a card
+    whose rows resolve to two clients."""
     _check_report_matches_sql_oracle(
         spark, cards=cards, accounts=accounts, clients=clients,
         terminals=terminals, blacklist=blacklist, fact=fact,

@@ -87,6 +87,30 @@ def test_csv_quarantine(spark, tmp_path):
     df.unpersist()
 
 
+def test_csv_header_parses_as_spark_does(spark, tmp_path):
+    """The driver-side header read gives the columns Spark's own
+    header probe gives: a UTF-8 BOM, a quoted name holding the
+    separator, an escaped quote, an empty name, names repeated up to
+    case, and blank lines ahead of the header."""
+    from etl_process_for_fraud_transactions_spark.sources.ingest import csv_header
+
+    files = {
+        "bom.txt": '\ufeff"x;y";"c\\"d";Amt;;amt;z\n1;2;3;4;5;6\n',
+        "blank.txt": "\n  \na;b;c;d;e;f\n1;2;3;4;5;6\n",
+    }
+    for name, text in files.items():
+        p = str(tmp_path / name)
+        with open(p, "w", encoding="utf-8") as f:
+            f.write(text)
+        probed = spark.read.option("header", "true").option("sep", ";").csv(p).columns
+        assert csv_header(p, ";") == probed, name
+        df = read_semicolon_csv(spark, p)
+        assert df.columns == probed, name
+        assert [tuple(r) for r in df.collect()] == [("1", "2", "3", "4", "5", "6")], name
+    assert probed == list("abcdef")
+    assert csv_header(str(tmp_path / "bom.txt"), ";") == ["x;y", 'c"d', "Amt2", "_c3", "amt4", "z"]
+
+
 def test_atomic_overwrite_same_path(spark, tmp_path):
     path = str(tmp_path / "dim")
     spark.range(5).write.parquet(path)
